@@ -292,45 +292,15 @@ object Fusion {
         "among several would mask a misconfiguration")
     require(mode == "rrf" || mode == "linear",
       s"""mode must be "rrf" or "linear", got "$mode"""")
-    // planPar > 0 routes the lexical leg through the plan-parallel
-    // grouped entry ([[Retrieval.bm25ShardedQueryGrouped]]) — identical
-    // rows (spec-pinned), but the S shard legs plan in ⌈S/planPar⌉
-    // driver-thread groups instead of one serial S-leg Catalyst plan:
-    // the high-S interactive-fusion form. EAGER on the lexical leg
-    // (bounded kPerLeg·|queries| rows through the driver); 0 keeps the
-    // lazy single-plan composition.
-    // lexMaxScore routes the sharded lexical leg through
-    // [[Retrieval.bm25ShardedQueryMaxScore]] — bit-identical rows
-    // (t45/t47), head postings doc-gated to essential candidates per
-    // shard leg; EAGER like planPar (bounded control collects).
-    // BOTH dials set compose (round 18, t48):
-    // [[Retrieval.bm25ShardedQueryMaxScoreGrouped]] runs each MaxScore
-    // pass as a plan-parallel grouped stage — grouped planning for the
-    // S ≥ 32 leg count, pruning for the per-leg scoring cost.
-    val lex = (lexMaxScore match {
-      case Some(dl) if planPar > 0 =>
-        Retrieval.bm25ShardedQueryMaxScoreGrouped(spark, bm25Tables,
-          queries, qidCol, textCol, kPerLeg, maxDfFrac = maxDfFrac,
-          essentialDfFrac = dl.essentialDfFrac,
-          maxCandBroadcast = dl.maxCandBroadcast,
-          gateMinHeadMass = dl.gateMinHeadMass,
-          gateCandFrac = dl.gateCandFrac,
-          parallelism = planPar)
-      case Some(dl) =>
-        Retrieval.bm25ShardedQueryMaxScore(spark, bm25Tables, queries,
-          qidCol, textCol, kPerLeg, maxDfFrac = maxDfFrac,
-          essentialDfFrac = dl.essentialDfFrac,
-          maxCandBroadcast = dl.maxCandBroadcast,
-          gateMinHeadMass = dl.gateMinHeadMass,
-          gateCandFrac = dl.gateCandFrac)
-      case None if planPar > 0 =>
-        Retrieval.bm25ShardedQueryGrouped(spark, bm25Tables, queries,
-          qidCol, textCol, kPerLeg, maxDfFrac = maxDfFrac,
-          parallelism = planPar)
-      case None =>
-        Retrieval.bm25ShardedQuery(spark, bm25Tables, queries,
-          qidCol, textCol, kPerLeg, maxDfFrac = maxDfFrac)
-    }).select(col("qid"), col("doc_id").as("id"), col("rnk").as("rank"),
+    // the lexical leg: bit-identical rows on every route (t45/t47/t48).
+    // planPar > 0 plans it in ⌈S/planPar⌉ shard groups on driver threads
+    // (the high-S form, EAGER: kPerLeg·|queries| rows per group through
+    // the driver); 0 keeps the lazy single-plan composition. lexMaxScore
+    // prunes head terms per shard leg; the two dials compose.
+    val lex = Retrieval.bm25Family(spark, bm25Tables, queries, qidCol,
+        textCol, kPerLeg, maxDfFrac = maxDfFrac, maxScore = lexMaxScore,
+        parallelism = Some(planPar).filter(_ > 0))
+      .select(col("qid"), col("doc_id").as("id"), col("rnk").as("rank"),
         col("score_micro").cast("double").as("score"))
     val vec = ((pqIndexes, vecIndexes) match {
       case (Some(ts), _) =>

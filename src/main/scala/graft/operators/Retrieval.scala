@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -465,15 +466,11 @@ object Retrieval {
 
   /** BM25 top-k over the persisted index. Output: (qid, doc_id,
     * score_micro, rnk) — micro-unit integer scores (see the object doc),
-    * ranked (score desc, doc_id asc), ranks 1-based.
+    * ranked (score desc, doc_id asc), ranks 1-based. The one-index
+    * family of [[bm25Family]], which carries the plan, the control read
+    * and the exactness notes.
     *
-    * Plan: the tokenized query terms shuffle TO the term buckets; the
-    * dictionary fold (sum of df deltas) and both index joins are
-    * zero-exchange over the index scans; partial scores move as
-    * 24-byte rows into the same bounded top-k aggregate the ANN path
-    * uses. The one driver-side action is the one-row stats fold.
-    */
-  /** `maxDfFrac` (default 1.0 = exact scoring over every query term):
+    * `maxDfFrac` (default 1.0 = exact scoring over every query term):
     * query terms whose df exceeds `maxDfFrac · N` are PRUNED before the
     * postings join — static stop-term pruning, the classic lexical-
     * serving scale dial (the dynamic form is WAND). A term with df ≈ N
@@ -494,105 +491,19 @@ object Retrieval {
   def bm25Query(spark: SparkSession, table: String, queries: DataFrame,
                 qidCol: String, textCol: String, k: Int,
                 k1: Double = 1.2, b: Double = 0.75,
-                maxDfFrac: Double = 1.0): DataFrame = {
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    GraftFunctions.ensureRegistered(spark)
-    healFold(spark, table)
-    val qt = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    // ---- FUSED control read (round 20, guide §2.4/§5): the pushable
-    // term list and the corrected (N, Σdl) stats ride in ONE bounded
-    // driver job — the pre-fusion form paid two (the pushableTerms
-    // collect, then bm25Partials' stats read), each a fixed-latency
-    // Spark job on the serving path. Same values, same fallbacks: an
-    // over-cap term list still yields qterms = None (unpruned scans),
-    // and an empty term list leaves the stats to the scoring path's
-    // own read (degenerate batch, empty result either way).
-    val (qterms, preStats) = ctrlTermsStats(spark, table, qt)
-    bm25QueryPre(spark, table, qt, k, k1, b, maxDfFrac, qterms, preStats)
-  }
+                maxDfFrac: Double = 1.0): DataFrame =
+    bm25Family(spark, Seq(table), queries, qidCol, textCol, k, k1, b,
+      maxDfFrac)
 
-  /** [[bm25Query]] after the control reads are in hand — the entry the
-    * MaxScore fallbacks route through so an exact-routed batch never
-    * re-pays the term-list and stats jobs its caller already ran
-    * (round-20 control-plane fusion). Semantics identical to
-    * [[bm25Query]] with the same (qt, qterms, stats) facts. */
-  private def bm25QueryPre(spark: SparkSession, table: String,
-                           qt: DataFrame, k: Int, k1: Double, b: Double,
-                           maxDfFrac: Double, qterms: Option[Seq[String]],
-                           preStats: Option[(Long, Long)]): DataFrame =
-    Similarity.rankTopK(
-        bm25Scored(spark, table, qt, k1, b, maxDfFrac, qterms,
-          preStats = preStats), k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
-
-  /** ONE bounded control job for the bag-of-words entry points: the
-    * distinct query terms (capped like [[pushableTerms]]) crossJoined
-    * with the one-row corrected stats frame, so both control facts
-    * arrive in a single driver action. Empty term set → stats stay
-    * unread (None), preserving the pre-fusion degenerate-path
-    * behavior. */
-  private def ctrlTermsStats(spark: SparkSession, table: String,
-                             qt: DataFrame, maxPushTerms: Int = 1 << 12)
-      : (Option[Seq[String]], Option[(Long, Long)]) = {
-    val rows = qt.select("term").distinct().limit(maxPushTerms + 1)
-      .crossJoin(correctedStatsFrame(spark, table))
-      .collect()
-    if (rows.isEmpty) (Some(Nil), None)
-    else {
-      val terms = rows.map(_.getString(0)).toSeq
-      val stats = Some((rows.head.getLong(1), rows.head.getLong(2)))
-      (if (terms.size > maxPushTerms) None else Some(terms), stats)
-    }
-  }
-
-  /** The sharded form of [[ctrlTermsStats]]: pushed terms + the global
-    * corrected stats fold in ONE bounded driver job, returning the
-    * (N, avgdl, capped dict) triple [[shardedScored]] consumes. A
-    * degenerate batch (no query terms) returns preFold = None and the
-    * caller's [[foldShardStats]] fallback preserves the pre-fusion
-    * behavior (including its empty-shards require). */
-  private def ctrlTermsStatsSharded(spark: SparkSession,
-                                    tables: Seq[String], qt: DataFrame,
-                                    maxDfFrac: Double,
-                                    maxPushTerms: Int = 1 << 12)
-      : (Option[Seq[String]], Option[(Long, Double, DataFrame)]) = {
-    GraftFunctions.unionGuard(spark)
-    val statsF = tables.map(correctedStatsFrame(spark, _))
-      .reduce(_.unionByName(_))
-      .agg(coalesce(sum("n"), lit(0L)).as("n"),
-        coalesce(sum("s"), lit(0L)).as("s"))
-    val rows = qt.select("term").distinct().limit(maxPushTerms + 1)
-      .crossJoin(statsF).collect()
-    if (rows.isEmpty) (Some(Nil), None)
-    else {
-      val terms = rows.map(_.getString(0)).toSeq
-      val qterms =
-        if (terms.size > maxPushTerms) None else Some(terms)
-      val nDocs = rows.head.getLong(1)
-      require(nDocs > 0, s"sharded query: every shard of $tables is empty")
-      val avgdl = rows.head.getLong(2).toDouble / nDocs.toDouble
-      val dict1 = foldShardDict(spark, tables, qterms)
-      val dict = if (maxDfFrac < 1.0)
-        dict1.filter(col("df") <= lit((maxDfFrac * nDocs).toLong))
-      else dict1
-      (qterms, Some((nDocs, avgdl, dict)))
-    }
-  }
-
-  /** The MaxScore dial bundle — the four cost dials of
-    * [[bm25QueryMaxScore]]/[[bm25ShardedQueryMaxScore]] as one value,
-    * for callers that ROUTE through the pruned entry points rather
-    * than call them directly (e.g. [[graft.operators.Fusion]]'s
-    * `lexMaxScore` leg selector). Defaults are the entry points'
+  /** The MaxScore dial bundle — the four cost dials of the pruned
+    * entry points as one value, and the dial value of [[bm25Family]].
+    * Callers that ROUTE through the pruned path rather than call an
+    * entry directly (e.g. [[graft.operators.Fusion]]'s `lexMaxScore`
+    * leg selector) pass it as is. Defaults are the entry points'
     * defaults; every dial is cost-only — any setting is exact.
     */
   // The four MaxScore cost-dial defaults, defined ONCE — referenced by
-  // [[MaxScoreDials]] and both pruned entry points so a future change to
+  // [[MaxScoreDials]] and the pruned entry points so a future change to
   // one cannot silently diverge from the others (Fusion's
   // `lexMaxScore = Some(MaxScoreDials())` is documented to mean "the
   // entry points' defaults").
@@ -614,44 +525,8 @@ object Retrieval {
     * the partial-score shuffle and aggregate — the round-17-adjudicated
     * dominant cost of the scoring leg (BASELINE.md: the pushed scan →
     * partials → top-k machinery is 58% of bench_phrase and all of
-    * bench_bm25).
-    *
-    * How the pruning stays exact. Per query, terms split into ESSENTIAL
-    * (df ≤ `essentialDfFrac`·N, always at least the rarest term) and
-    * NON-ESSENTIAL (the head). Every term's per-doc contribution is
-    * bounded above by ub(t) = ⌈idf(t)·(k1+1)·10⁶⌉ micro-units (w < k1+1
-    * for every tf, dl). Pass 1 scores the essential terms alone — rare
-    * lists, cheap by construction — and one bounded control read takes
-    * each query's k-th best essential-only sum L. If Σ_{t∈head} ub(t) <
-    * L strictly, then at least k documents carrying an essential term
-    * have FULL score ≥ L (full ≥ essential-only per doc), while any
-    * document with NO essential term scores ≤ Σ ub < L — so the true
-    * top-k live entirely inside pass 1's candidate docs, regardless of
-    * tie-breaking. Pass 2 then scores ALL terms with the postings
-    * doc-gated to those candidates (the phrase path's `docFilter`
-    * semi-join, broadcast under `maxCandBroadcast`): the head terms'
-    * partial mass shrinks from their df to the candidate count. Queries
-    * that FAIL the check (all-head batches, fewer than k candidates, a
-    * head mass too large to bound) fall back to the exact ungated plan
-    * IN THE SAME JOB — per-query, not per-batch — and a batch with
-    * nothing to prune short-circuits to [[bm25Query]] verbatim.
-    *
-    * Control plane: one bounded (qid, term, df) collect against the
-    * tombstone-CORRECTED dictionary (corrections raise idf, so the
-    * bound must use the corrected df — the same value scoring uses),
-    * then ONE pass-1 execution. When the pass-1 output is provably
-    * control-plane sized (Σ_engaged candBound ≤ `maxCandBroadcast`),
-    * its (qid, nid, cos) rows collect ONCE and the k-th-best
-    * threshold, the tightened candidate set, and the block-UB
-    * refinement all derive locally — the round-20 fusion of what were
-    * three separate pass-1 re-executions (BASELINE.md round-19: at the
-    * 1e7 decade the engaged path was bound by per-batch driver control
-    * latency, a third of it recomputation of this same aggregate).
-    * Past that bound, a distributed top-k takes the k-th score and
-    * pass 2 gates via shuffle semi-joins. Both control reads sit under
-    * the [[maxControlRows]] cap, overflow → [[bm25Query]] fallback.
-    * The collected dictionary slice is re-injected as a literal frame,
-    * so neither pass re-plans the dictionary fold.
+    * bench_bm25). The two-pass plan, its threshold proof and its
+    * control plane live on [[bm25Family]].
     *
     * Dials: `essentialDfFrac` positions the essential/head split — it
     * is a COST dial only (any split is exact; too low starves pass 1 of
@@ -659,7 +534,8 @@ object Retrieval {
     * expensive). The default 0.01 matches the measured df≤1% serving
     * knee (round-12 curve). `maxDfFrac` keeps [[bm25Query]]'s stop-term
     * contract: over-cap terms are DROPPED before anything else, so the
-    * result equals bm25Query's at the same dial.
+    * result equals bm25Query's at the same dial. `maxCandBroadcast`
+    * bounds the candidate sets the driver collects and broadcasts.
     *
     * COST GATE (all driver-side, from the already-collected control
     * rows — exactness never depends on it): a query only ENGAGES the
@@ -686,112 +562,422 @@ object Retrieval {
                         maxCandBroadcast: Long = DefaultMaxCandBroadcast,
                         gateMinHeadMass: Long = DefaultGateMinHeadMass,
                         gateCandFrac: Double = DefaultGateCandFrac): DataFrame = {
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    require(essentialDfFrac > 0.0 && essentialDfFrac <= 1.0,
-      s"essentialDfFrac must be in (0, 1], got $essentialDfFrac")
-    require(k >= 1, s"k must be positive, got $k")
     require(gateMinHeadMass >= 0,
       s"gateMinHeadMass must be non-negative, got $gateMinHeadMass")
     require(gateCandFrac > 0.0,
       s"gateCandFrac must be positive, got $gateCandFrac")
+    bm25Family(spark, Seq(table), queries, qidCol, textCol, k, k1, b,
+      maxDfFrac, Some(MaxScoreDials(essentialDfFrac, maxCandBroadcast,
+        gateMinHeadMass, gateCandFrac)))
+  }
+
+  /** Multi-shard BM25 serving — the layout for a corpus whose index
+    * cannot live in one table (measured: BASELINE.md round-15 — at 10⁸
+    * docs the postings+positional index extrapolates to ~73 GB against
+    * this box's 38 GB free; a 1000-executor cluster holds the same
+    * index as per-executor-group shards). `tables` are independent
+    * [[bm25Build]] indexes over a DOC-DISJOINT partition of the corpus
+    * (a doc id must live in exactly one shard — the sharding contract).
+    *
+    * Results are EXACTLY the single whole-corpus index's (oracle-gated
+    * at t32; the argument is on [[bm25Family]]). Scale shape: the stats
+    * fold reads S tiny tables, the dict fold S dictionary slices pruned
+    * to the query terms, and each shard's postings scan is the
+    * single-index plan verbatim (pushed-term pruning included) — cost
+    * ≡ Σ shard serving costs, wall-clock ≡ max on a cluster where
+    * shards are separate executor groups.
+    */
+  def bm25ShardedQuery(spark: SparkSession, tables: Seq[String],
+                       queries: DataFrame, qidCol: String, textCol: String,
+                       k: Int, k1: Double = 1.2, b: Double = 0.75,
+                       maxDfFrac: Double = 1.0): DataFrame = {
+    require(tables.nonEmpty, "bm25ShardedQuery needs at least one shard")
+    bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac)
+  }
+
+  /** [[bm25ShardedQuery]] with the MaxScore two-pass pruning of
+    * [[bm25QueryMaxScore]] — the sharded serving layer's head-term
+    * dial. Same dials, same per-query fallback, same
+    * bit-identical-to-[[bm25ShardedQuery]] contract (gated at t45);
+    * the candidate doc-gate applies per shard leg, and the head-mass
+    * gate scales with S (see [[bm25Family]]).
+    */
+  def bm25ShardedQueryMaxScore(spark: SparkSession, tables: Seq[String],
+                               queries: DataFrame, qidCol: String,
+                               textCol: String, k: Int,
+                               k1: Double = 1.2, b: Double = 0.75,
+                               maxDfFrac: Double = 1.0,
+                               essentialDfFrac: Double = DefaultEssentialDfFrac,
+                               maxCandBroadcast: Long = DefaultMaxCandBroadcast,
+                               gateMinHeadMass: Long = DefaultGateMinHeadMass,
+                               gateCandFrac: Double = DefaultGateCandFrac): DataFrame = {
+    require(tables.nonEmpty,
+      "bm25ShardedQueryMaxScore needs at least one shard")
+    bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac,
+      Some(MaxScoreDials(essentialDfFrac, maxCandBroadcast,
+        gateMinHeadMass, gateCandFrac)))
+  }
+
+  /** [[bm25ShardedQuery]] with the S shard legs PLANNED AND EXECUTED in
+    * parallel driver-thread groups — the answer to the measured per-leg
+    * Catalyst planning residual (BASELINE.md round-16 plan addendum:
+    * ~0.24-0.35 s of PURE PLANNING per shard leg, because an S-table
+    * union is ONE Catalyst plan built serially on the driver — at
+    * O(100) shards that is ~25-35 s per query batch no matter how many
+    * executors the scans parallelize over; the reference's JobConf-is-
+    * the-plan never paid a per-query planning tax, SURVEY §3.1). The
+    * shards partition into ⌈S/parallelism⌉-leg groups, each ranked to
+    * its exact local top-k in its own thread and merged (the merge
+    * argument is on [[bm25Family]]). Results are EXACTLY
+    * [[bm25ShardedQuery]]'s, row for row (spec-pinned).
+    *
+    * EAGER, by design: this entry executes at call time and returns the
+    * merged top-k as a LOCAL frame (k·|queries|·⌈S/parallelism⌉ rows
+    * pass through the driver — with the default k this is control-plane
+    * mass). The lazy S-leg entry remains the right form when composing
+    * into a larger plan or when a single plan per batch amortizes fine;
+    * this one is for interactive/small-batch serving at high S, where
+    * serial planning dominates.
+    */
+  def bm25ShardedQueryGrouped(spark: SparkSession, tables: Seq[String],
+                              queries: DataFrame, qidCol: String,
+                              textCol: String, k: Int,
+                              k1: Double = 1.2, b: Double = 0.75,
+                              maxDfFrac: Double = 1.0,
+                              parallelism: Int = 8): DataFrame = {
+    require(tables.nonEmpty, "bm25ShardedQueryGrouped needs at least one shard")
+    bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac,
+      parallelism = Some(parallelism))
+  }
+
+  /** [[bm25ShardedQueryMaxScore]] × [[bm25ShardedQueryGrouped]] — the
+    * composition the 100 TB serving story needs at high S:
+    * plan-parallel grouped legs (the S ≥ 32 planning-cost fix) AND
+    * MaxScore head-term pruning (the per-leg scoring-cost fix) on the
+    * SAME query batch; both MaxScore passes run grouped. Per-query
+    * fallback, dial semantics, over-cap chunking, the block-UB
+    * refinement and the bit-identical-to-[[bm25ShardedQuery]] contract
+    * (gated at t48) are the core's ([[bm25Family]]). EAGER like the
+    * grouped entries (bounded collects: queries·k rows per group per
+    * pass).
+    */
+  def bm25ShardedQueryMaxScoreGrouped(spark: SparkSession,
+                                      tables: Seq[String],
+                                      queries: DataFrame, qidCol: String,
+                                      textCol: String, k: Int,
+                                      k1: Double = 1.2, b: Double = 0.75,
+                                      maxDfFrac: Double = 1.0,
+                                      essentialDfFrac: Double =
+                                        DefaultEssentialDfFrac,
+                                      maxCandBroadcast: Long =
+                                        DefaultMaxCandBroadcast,
+                                      gateMinHeadMass: Long =
+                                        DefaultGateMinHeadMass,
+                                      gateCandFrac: Double =
+                                        DefaultGateCandFrac,
+                                      parallelism: Int = 8): DataFrame = {
+    require(tables.nonEmpty,
+      "bm25ShardedQueryMaxScoreGrouped needs at least one shard")
+    bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac,
+      Some(MaxScoreDials(essentialDfFrac, maxCandBroadcast,
+        gateMinHeadMass, gateCandFrac)), Some(parallelism))
+  }
+
+  /** THE bag-of-words serving core: every entry above is a thin wrapper
+    * over it. `tables` is a family of S ≥ 1 [[bm25Build]] indexes over
+    * a doc-disjoint partition of the corpus (a single index is the
+    * one-shard family); `maxScore` selects the two-pass MaxScore plan
+    * at the given dials (None = the exact single-pass plan);
+    * `parallelism` selects how each pass EXECUTES (None = one lazy plan
+    * over every shard leg; Some(p) = ⌈S/p⌉-leg shard groups planned,
+    * ranked and collected eagerly on [[fanOut]] threads).
+    *
+    * Plan: the tokenized query terms shuffle TO the term buckets; the
+    * dictionary fold (sum of df deltas) and both index joins are
+    * zero-exchange over the index scans; partial scores move as
+    * 24-byte rows into the same bounded top-k aggregate the ANN path
+    * uses. At S = 1 the family constants ARE the table's own
+    * [[correctedStatsFrame]] and [[correctedDict]] — no union, no fold
+    * aggregate — so the one-index plan is the plain single-table plan.
+    *
+    * Control plane: ONE bounded driver job ([[controlRead]]) carries
+    * the family's tombstone-corrected (N, Σdl) crossJoined onto the
+    * bounded control frame — the distinct query terms (pushed into
+    * every scan, or None past the push cap) on the exact plan; on the
+    * MaxScore plan the per-(qid, term) corrected df rows, after one
+    * [[pushableTerms]] read, with the stop-term dial applied in-plan so
+    * capped rows never consume the budget. A batch whose control rows
+    * pass [[maxControlRows]] (up to [[msOverflowFactor]]×) packs per
+    * qid into ≤ maxControlRows-row chunks ([[chunkRowsByQid]]), each
+    * served by the two-pass plan with a chunk-local exact fallback on
+    * the [[fanOut]] threads — per-query results are independent of
+    * batching, so the chunk union equals the one-shot plan's rows.
+    *
+    * Exactness, three arguments:
+    *
+    *  1. DOC-DISJOINT SHARDS NEVER SPLIT A (qid, doc) SUM. Corpus
+    *     constants fold ACROSS shards — N and Σdl from the shard stats
+    *     rows, df as the sum of the shard dictionaries' counts, both
+    *     tombstone-corrected per shard — and every shard scores its own
+    *     postings against those GLOBAL constants. A doc's postings live
+    *     in one shard, so the per-(qid, doc) sum over the union of
+    *     shard partials is the whole-index value, term for term; the
+    *     integer micro-unit partials make it bit-identical.
+    *
+    *  2. THE MAXSCORE THRESHOLD. Per query, terms split into ESSENTIAL
+    *     (df ≤ `essentialDfFrac`·N, always at least the rarest term)
+    *     and NON-ESSENTIAL (the head). Every term's per-doc
+    *     contribution is bounded above by ub(t) = ⌈idf(t)·(k1+1)·10⁶⌉
+    *     micro-units (w < k1+1 for every tf, dl). Pass 1 scores the
+    *     essential terms alone and takes each query's k-th best
+    *     essential-only sum L. If Σ_{head} ub(t) < L strictly, then at
+    *     least k documents carrying an essential term have FULL score ≥
+    *     L, while any document with NO essential term scores ≤ Σ ub <
+    *     L — so the true top-k live inside pass 1's candidates,
+    *     whatever the tie-break. Tighter still, per doc: a candidate
+    *     whose essential sum is below L − Σ ub sits strictly below the
+    *     final k-th best, and with the block-max layout each
+    *     candidate's head bound sharpens to the (max_tf, min_dl) of the
+    *     block it lives in (monotone bounds, [[bm25Build]]). Pass 2
+    *     then scores ALL terms with the postings doc-gated to the
+    *     surviving candidates. Queries that fail the check run the
+    *     exact ungated leg in the same plan, and a batch with nothing
+    *     to prune runs the exact plan verbatim. The bound reads the
+    *     corrected df — the value scoring uses.
+    *
+    *  3. THE GROUPED TOP-K MERGE. Groups partition the doc-disjoint
+    *     shards and score against the same injected global constants
+    *     under one total order (score desc, doc_id asc), so each
+    *     global top-k member survives its own group's local top-k and
+    *     the merge of the bounded group lists re-ranks it into place
+    *     (the [[Similarity.mergeShardTopK]] argument). Applied to pass
+    *     1, the merged k-th best IS the global L; applied to pass 2, a
+    *     group's own candidates are the global candidate set restricted
+    *     to its docs, so gating each group by them equals the
+    *     one-plan gate.
+    *
+    * Cost notes. When the pass-1 output is provably control-plane
+    * sized (Σ_engaged candBound ≤ `maxCandBroadcast`) its (qid, nid,
+    * cos) rows collect ONCE per group and the threshold, the tightened
+    * candidates and the block refinement all derive locally — one job
+    * instead of one pass-1 execution per consumer; past it, the
+    * per-group top-k gives L and pass 2 gates through shuffle
+    * semi-joins. Broadcast candidate sets are MATERIALIZED as a literal
+    * per group, which keeps pass 2 O(S) plans (a plan-side candidate
+    * set embeds the S-leg pass-1 union in every leg — an S² planning
+    * hang at S = 32, BASELINE.md round-18). The head-mass gate scales
+    * with S: each leg prunes only its 1/S share of a head list while
+    * paying its own two-pass overhead (DevShardGrowth `ms`, 1e6 × S=32).
+    */
+  private[operators] def bm25Family(spark: SparkSession, tables: Seq[String],
+                                    queries: DataFrame, qidCol: String,
+                                    textCol: String, k: Int,
+                                    k1: Double = 1.2, b: Double = 0.75,
+                                    maxDfFrac: Double = 1.0,
+                                    maxScore: Option[MaxScoreDials] = None,
+                                    parallelism: Option[Int] = None)
+      : DataFrame = {
+    require(tables.nonEmpty, "a BM25 family needs at least one index")
+    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
+      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
+    maxScore.foreach { d =>
+      require(d.essentialDfFrac > 0.0 && d.essentialDfFrac <= 1.0,
+        s"essentialDfFrac must be in (0, 1], got ${d.essentialDfFrac}")
+      require(k >= 1, s"k must be positive, got $k")
+    }
+    val passes = Passes(tables.size, parallelism)
     GraftFunctions.ensureRegistered(spark)
-    healFold(spark, table)
+    tables.foreach(healFold(spark, _))
     val qt = queries
       .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
       .distinct()
+    // the exact leg; `stats` None (a batch with no control rows) reads
+    // the family stats itself
+    def exact(q: DataFrame, qterms: Option[Seq[String]],
+              stats: Option[(Long, Long)]): DataFrame = {
+      val c = consts(spark, tables, qterms, maxDfFrac, stats)
+      passes.rank(spark, k)(g => sumParts(g.map(i => partialsWith(spark,
+        tables(i), q, k1, b, c.nDocs, c.avgdl, c.dict, qterms, None,
+        broadcastDocs = false)).reduce(_.unionByName(_))))
+    }
+    val d = maxScore match {
+      case None =>
+        val (qterms, stats) = ctrlTermsStats(spark, tables, qt)
+        return exact(qt, qterms, stats)
+      case Some(d) => d
+    }
     val qterms = pushableTerms(spark, qt)
-    // (round 21, the exact-cliff fix) an over-push-cap term list no
-    // longer routes straight to the unpruned exact plan: the control
-    // read below runs against the unpruned dictionary fold (the
-    // term-bucketed `_terms` aggregate — vocabulary-bounded, one job)
-    // and the batch chunks per qid below, each chunk re-deriving its
-    // own pushed term list from the rows in hand.
-    // ---- FUSED control read #1 (round 20, guide §2.4/§5): the
-    // per-(qid, term) CORRECTED df rows AND the one-row corrected
-    // stats in ONE bounded driver job (the stats frame crossJoins the
-    // limited control frame — pre-fusion this was a separate action).
-    // The fallback leg reuses qt/qterms/stats too, so an exact-routed
-    // batch no longer re-pays the control jobs inside bm25Query.
-    val qdf = qt.join(correctedDict(spark, table, qterms), Seq("term"))
+    val qdf = qt.join(familyDict(spark, tables, qterms), Seq("term"))
       .select(col("qid"), col("term"), col("df"))
-    // capped rows consume the control budget when the dial is on (round
-    // 21, the sharded-form ADVICE fix applied here symmetrically): the
-    // in-plan filter reads N from the same one-row stats frame — still
-    // one driver job, and a batch whose CAPPED rows fit no longer
-    // routes to the exact plan because its pruned head overflowed.
     val softCap = maxControlRows * msOverflowFactor
-    val ctrlRows = (if (maxDfFrac < 1.0)
-        qdf.crossJoin(correctedStatsFrame(spark, table))
-          .filter(col("df") <= (lit(maxDfFrac) * col("n")).cast("long"))
-          .limit(softCap + 1)
-      else qdf.limit(softCap + 1)
-        .crossJoin(correctedStatsFrame(spark, table)))
-      .collect()
-    val preStats = ctrlRows.headOption.map(r =>
-      (r.getLong(3), r.getLong(4)))
-    def exact() = bm25QueryPre(spark, table, qt, k, k1, b, maxDfFrac,
-      qterms, preStats)
-    if (ctrlRows.length > softCap) return exact()
-    if (ctrlRows.isEmpty) return exact() // no indexed term anywhere
-    val qdfRows = ctrlRows.map(r =>
-      org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2)))
-    val (nDocs, dlSum) = preStats.get
-    require(nDocs > 0, s"bm25QueryMaxScore: index $table is empty")
+    val (ctrlRows, stats) = controlRead(spark, tables, qdf, softCap, maxDfFrac)
+    if (ctrlRows.isEmpty) return exact(qt, qterms, None) // nothing indexed
+    if (ctrlRows.length > softCap) return exact(qt, qterms, stats)
+    val (nDocs, dlSum) = stats.get
+    require(nDocs > 0, emptyMsg(tables))
     val avgdl = dlSum.toDouble / nDocs.toDouble
-    // the stop-term dial, applied exactly where bm25Query applies it
+    // the stop-term dial, applied exactly where the exact leg applies it
     val capDf = if (maxDfFrac < 1.0) (maxDfFrac * nDocs).toLong
       else Long.MaxValue
-    val rows = qdfRows.filter(_.getLong(2) <= capDf).toSeq
-    // block-max layout facts, LAZY — forced only when pass 2 actually
-    // engages with a materialized candidate set (an exact-routed batch,
-    // plain or blockMax, pays zero control reads for the layout); the
-    // fetch is the bounded (term, blk) → (max_tf, min_dl) slice the
-    // refinement consumes
-    lazy val bw = blockMeta(spark, table)
-    def rank(chunkRows: Seq[org.apache.spark.sql.Row],
-             chunkExact: () => DataFrame): DataFrame =
-      maxScoreRank(spark, chunkRows, qdf.schema, k, k1, nDocs,
-        essentialDfFrac, maxCandBroadcast, gateMinHeadMass, gateCandFrac,
-        partials = (qtF, dictF, terms, docFilter, bcast, docVals) =>
-          partialsWith(spark, table, qtF, k1, b, nDocs, avgdl, dictF,
-            terms, docFilter, bcast, docVals,
-            if (docVals.isDefined) bw else None),
-        exact = chunkExact,
-        b = b, avgdl = avgdl,
-        blkInfoFn = () =>
-          bw.map(w => (w, blkBoundsFetch(spark, Seq(table), _, _))))
-    if (rows.length <= maxControlRows) rank(rows, () => exact())
+    val capped = ctrlRows.iterator.map(r => Row(r.get(0), r.get(1), r.get(2)))
+      .filter(_.getLong(2) <= capDf).toSeq
+    // block-max layout facts, LAZY — read only when pass 2 engages with
+    // a materialized candidate set; the refinement needs ONE family-wide
+    // width (mixed or absent widths disable it, the per-leg scan push
+    // still engages wherever a shard carries the layout)
+    lazy val bws = blockMetas(spark, tables)
+    def uniW = if (bws.forall(_.isDefined) && bws.flatten.distinct.size == 1)
+      bws.head else None
+    // literal re-injection of collected control rows: a LOCAL relation
+    // Catalyst sizes, from which both passes draw their (qid, term)
+    // pairs and dictionary slices without re-planning the dictionary
+    def litFrame(rs: Seq[Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), qdf.schema)
+    // one pass's shard legs over group g for the control rows `rs`
+    def scored(g: Seq[Int], rs: Seq[Row], docFilter: Option[DataFrame] = None,
+               bcast: Boolean = false,
+               docVals: Option[Seq[Any]] = None): DataFrame = {
+      val qtF = litFrame(rs).select("qid", "term")
+      val dictF = litFrame(rs.groupBy(_.getString(1)).map(_._2.head).toSeq)
+        .select("term", "df")
+      val terms = Some(rs.map(_.getString(1)).distinct)
+      g.map(i => partialsWith(spark, tables(i), qtF, k1, b, nDocs, avgdl,
+          dictF, terms, docFilter, bcast, docVals,
+          if (docVals.isDefined) bws(i) else None))
+        .reduce(_.unionByName(_))
+    }
+    // the two-pass plan over one chunk of control rows (argument 2)
+    def twoPass(rows: Seq[Row], fallback: () => DataFrame): DataFrame = {
+      if (rows.isEmpty) return fallback() // every term over the dial
+      val plans = maxScorePlans(rows, nDocs, k1, d.essentialDfFrac)
+      def engages(p: MsPlan): Boolean = p.neSum > 0L &&
+        p.headMass >= d.gateMinHeadMass * tables.size &&
+        p.candBound.toDouble <= d.gateCandFrac * p.headMass.toDouble
+      if (!plans.valuesIterator.exists(engages)) return fallback()
+      val pruneQids = plans.filter(p => engages(p._2)).keySet
+      val essRows = rows.filter(r =>
+        pruneQids(r.get(0)) && plans(r.get(0)).ess(r.getString(1)))
+      def pass1(g: Seq[Int]): DataFrame = sumParts(scored(g, essRows))
+      // fused control plane: bounded pass-1 rows collect once per group
+      val p1Bound = pruneQids.iterator.map(q => plans(q).candBound).sum
+      val p1Local =
+        if (p1Bound <= d.maxCandBroadcast) Some(passes.collect(spark)(pass1))
+        else None
+      val l1 = kthBest(p1Local.getOrElse(passes.topK(spark, k)(pass1))
+        .flatMap(_._2), k)
+      val safeQids: Set[Any] = pruneQids.filter(q =>
+        l1.get(q).exists(_ > plans(q).neSum)).toSet
+      if (safeQids.isEmpty) return fallback() // no query verified
+      val safeRows = rows.filter(r => safeQids(r.get(0)))
+      val otherRows = rows.filterNot(r => safeQids(r.get(0)))
+      def thresh(q: Any): Long = l1(q) - plans(q).neSum
+      // block-UB refinement: keep a candidate unless essSum + Σ_head
+      // bub(t, blk(d)) misses its query's L; None = keep everything
+      // (no uniform layout, or a slice past the control cap)
+      def refine(cand: => Option[Seq[Row]], nCand: Int): Option[Seq[Any]] =
+        uniW.filter(_ => nCand <= maxControlRows).flatMap { bw =>
+          cand.flatMap { cs =>
+            val headDf: Map[Any, Seq[(String, Long)]] =
+              safeRows.filter(r => !plans(r.get(0)).ess(r.getString(1)))
+                .groupBy(_.get(0))
+                .map { case (q, rs) =>
+                  q -> rs.map(r => (r.getString(1), r.getLong(2))) }
+            val headTerms = headDf.valuesIterator.flatMap(_.map(_._1))
+              .toSeq.distinct
+            val blks = cs.map(r => blkOf(r.get(1), bw)).distinct
+            blkBoundsFetch(spark, tables, headTerms, blks).map { bounds =>
+              def ubMicro(df: Long, maxTf: Long, minDl: Long): Long = {
+                val idf = math.log((nDocs.toDouble - df + 0.5)
+                  / (df + 0.5) + 1.0)
+                val w = maxTf * (k1 + 1.0) /
+                  (maxTf + k1 * (1.0 - b + b * minDl / avgdl))
+                math.ceil(idf * w * 1000000.0).toLong
+              }
+              cs.iterator.filter { r =>
+                val (q, doc, ess) = (r.get(0), r.get(1), r.getDouble(2).toLong)
+                val blk = blkOf(doc, bw)
+                ess + headDf.getOrElse(q, Nil).iterator.map {
+                  case (t, df) => bounds.get((t, blk))
+                    .map { case (mt, md) => ubMicro(df, mt, md) }
+                    .getOrElse(0L) // no block row — no posting, 0
+                }.sum >= l1(q) // keep unless strictly below
+              }.map(_.get(1)).toSeq.distinct
+            }
+          }
+        }
+      val candBound = safeQids.iterator.map(q => plans(q).candBound).sum
+      val bcastCand = p1Local.isDefined || candBound <= d.maxCandBroadcast
+      // fused flow: every group's candidates derive from its own
+      // collected rows — no additional pass-1 work
+      val fused = p1Local.map { parts =>
+        val candRows = parts.map(_._2.toSeq.filter(r => safeQids(r.get(0)) &&
+          r.getDouble(2) >= thresh(r.get(0)).toDouble))
+        val vals = candRows.map(_.map(_.get(1)).distinct)
+        val n = vals.iterator.map(_.size).sum // groups are doc-disjoint
+        val nid = parts.head._1("nid")
+        (StructField("doc_id", nid.dataType, nid.nullable),
+          refine(Some(candRows.flatten), n) match {
+            case Some(kept) if kept.size < n =>
+              val keep = kept.toSet
+              vals.map(_.filter(keep))
+            case _ => vals
+          })
+      }
+      lazy val threshF = spark.createDataFrame(
+        java.util.Arrays.asList(safeQids.toSeq.map(q =>
+          Row(q, java.lang.Long.valueOf(thresh(q)))): _*),
+        StructType(Seq(qdf.schema.head,
+          StructField("thresh", LongType, nullable = false))))
+      def candidates(g: Seq[Int]): (DataFrame, Option[Seq[Any]]) = fused match {
+        case Some((docF, vals)) =>
+          val v = vals(passes.groups.indexOf(g))
+          (idFrame(spark, v, docF), Some(v))
+        case None =>
+          // the inner join against the tiny thresh frame both restricts
+          // to the safe qids and applies each query's bar
+          def candEss() = pass1(g).join(threshF, Seq("qid"))
+            .filter(col("cos") >= col("thresh").cast("double"))
+          val plan = candEss().select(col("nid").as("doc_id")).distinct()
+          if (!bcastCand) (plan, None) else {
+            val (f0, vals0) = materializeIds(spark, plan)
+            // the refinement re-reads pass 1 hard-bounded
+            refine({
+              val cap = maxControlRows * 8
+              val rs = candEss().select("qid", "nid", "cos")
+                .limit(cap + 1).collect()
+              if (rs.length > cap) None else Some(rs.toSeq)
+            }, vals0.size) match {
+              case Some(kept) if kept.size < vals0.size =>
+                (idFrame(spark, kept, plan.schema.head), Some(kept))
+              case _ => (f0, Some(vals0))
+            }
+          }
+      }
+      passes.rank(spark, k) { g =>
+        val (cand, vals) = candidates(g)
+        val safe = scored(g, safeRows, Some(cand), bcastCand, vals)
+        sumParts(if (otherRows.isEmpty) safe
+          else safe.unionByName(scored(g, otherRows)))
+      }
+    }
+    if (capped.length <= maxControlRows)
+      twoPass(capped, () => exact(qt, qterms, stats))
     else {
-      // ---- CHUNKED over-cap serving (round 21, the exact-cliff fix):
-      // the batch packs into ≤ maxControlRows-row chunks per qid; each
-      // chunk runs the verbatim two-pass machinery with its own pushed
-      // term list and a chunk-local exact fallback (the chunk's
-      // (qid, term) pairs re-injected as a literal frame — unindexed
-      // terms contribute nothing either way, so the chunk plan's rows
-      // equal the one-shot plan's for those qids).
-      val (chunks, exactRows) = chunkRowsByQid(rows, maxControlRows)
-      def chunkExact(rs: Seq[org.apache.spark.sql.Row]): DataFrame = {
-        val qtLit = spark.createDataFrame(java.util.Arrays.asList(
-          rs.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1)))
-            .distinct: _*),
-          org.apache.spark.sql.types.StructType(qdf.schema.take(2)))
-        bm25QueryPre(spark, table, qtLit, k, k1, b, maxDfFrac,
-          Some(rs.map(_.getString(1)).distinct), preStats)
-      }
-      if (chunks.isEmpty) chunkExact(exactRows)
-      else {
-        val engaged = unionChunked(chunks,
-          c => rank(c, () => chunkExact(c)))
-        if (exactRows.isEmpty) engaged
-        else engaged.unionByName(chunkExact(exactRows))
-      }
+      val (chunks, exactRows) = chunkRowsByQid(capped, maxControlRows)
+      def chunkExact(rs: Seq[Row]): DataFrame = exact(
+        spark.createDataFrame(java.util.Arrays.asList(
+          rs.map(r => Row(r.get(0), r.get(1))).distinct: _*),
+          StructType(qdf.schema.take(2))),
+        Some(rs.map(_.getString(1)).distinct), stats)
+      (fanOut(spark, chunks, 4)(c => twoPass(c, () => chunkExact(c))) ++
+          Some(exactRows).filter(_.nonEmpty).map(chunkExact))
+        .reduce(_.unionByName(_))
     }
   }
 
   /** The bounded `(term, blk) → (max_tf, min_dl)` control slice behind
-    * the block-UB refinement ([[maxScoreRank]]): the `_blkmax` deltas
-    * of `tables`, pruned to the head terms and candidate blocks, folded
+    * the block-UB refinement ([[bm25Family]]): the `_blkmax` deltas of
+    * `tables`, pruned to the head terms and candidate blocks, folded
     * max/min — across shards the fold is still a valid upper bound (a
     * doc lives in ONE shard, and max-over-shards ≥ its own shard's
     * max). None when the slice exceeds [[maxControlRows]] (the
@@ -814,18 +1000,6 @@ object Retrieval {
       (r.getLong(2), r.getLong(3))).toMap)
   }
 
-  /** The shared two-pass MaxScore core behind [[bm25QueryMaxScore]] and
-    * [[bm25ShardedQueryMaxScore]] — everything after the control rows
-    * are in hand: per-query essential/head split, the cost gate, pass
-    * 1, the threshold verification, pass 2 with the candidate doc-gate,
-    * the exact leg for everyone else, final top-k. `rows` are the
-    * collected (qid, term, df) control rows AFTER the stop-term dial;
-    * `partials(qt, dict, qterms, docFilter, broadcastDocs)` is the
-    * caller's scoring-leg builder (single table or shard union —
-    * doc-disjoint shards make the per-(qid, doc) sums identical either
-    * way, the t32 argument). `exact` is the caller's untouched
-    * single-pass plan, returned whenever nothing engages or verifies.
-    */
   /** One query's MaxScore plan facts, computed from the bounded
     * (qid, term, df) control rows: the essential term set (df ≤
     * essCap, always at least the rarest term), the head terms' summed
@@ -836,8 +1010,7 @@ object Retrieval {
   private final case class MsPlan(ess: Set[String], neSum: Long,
                                   candBound: Long, headMass: Long)
 
-  private def maxScorePlans(rows: Seq[org.apache.spark.sql.Row],
-                            nDocs: Long, k1: Double,
+  private def maxScorePlans(rows: Seq[Row], nDocs: Long, k1: Double,
                             essentialDfFrac: Double): Map[Any, MsPlan] = {
     val essCap = math.max(1L, (essentialDfFrac * nDocs).toLong)
     def ubMicro(df: Long): Long = math.ceil(
@@ -858,690 +1031,49 @@ object Retrieval {
     }
   }
 
-  /** The COST GATE (entry-point scaladocs): a query engages the
-    * two-pass plan only when its head mass is material and its
-    * candidate set shrinks it; no query engaging → the single-pass
-    * plan IS the right plan. */
-  private def msEngages(p: MsPlan, gateMinHeadMass: Long,
-                        gateCandFrac: Double): Boolean =
-    p.neSum > 0L && p.headMass >= gateMinHeadMass &&
-      p.candBound.toDouble <= gateCandFrac * p.headMass.toDouble
+  /** Each query's k-th best score from (qid, nid, cos) rows — a
+    * group-merged top-k or a full pass-1 collect give the same value
+    * (the k-th VALUE is order-insensitive under ties); queries with
+    * fewer than k rows have none. */
+  private def kthBest(rows: Seq[Row], k: Int): Map[Any, Long] =
+    rows.groupBy(_.get(0)).flatMap { case (q, qr) =>
+      val top = qr.map(_.getDouble(2)).sorted(Ordering[Double].reverse)
+      if (top.length >= k) Some(q -> top(k - 1).toLong) else None
+    }
 
-  private def maxScoreRank(spark: SparkSession,
-      rows: Seq[org.apache.spark.sql.Row],
-      qdfSchema: org.apache.spark.sql.types.StructType,
-      k: Int, k1: Double, nDocs: Long,
-      essentialDfFrac: Double, maxCandBroadcast: Long,
-      gateMinHeadMass: Long, gateCandFrac: Double,
-      partials: (DataFrame, DataFrame, Option[Seq[String]],
-        Option[DataFrame], Boolean, Option[Seq[Any]]) => DataFrame,
-      exact: () => DataFrame,
-      b: Double = 0.75, avgdl: Double = 0.0,
-      blkInfoFn: () => Option[(Long, (Seq[String], Seq[Long]) =>
-        Option[Map[(String, Long), (Long, Long)]])] = () => None)
-      : DataFrame = {
-    if (rows.isEmpty) return exact() // every term over the dial
-    val plans = maxScorePlans(rows, nDocs, k1, essentialDfFrac)
-    def engages(p: MsPlan): Boolean =
-      msEngages(p, gateMinHeadMass, gateCandFrac)
-    if (!plans.valuesIterator.exists(engages)) return exact()
-    // literal re-injection of the collected control rows: a LOCAL
-    // relation (bounded by maxControlRows; Catalyst sees its size, so
-    // the tiny query/dict sides broadcast into the postings joins)
-    // from which both passes draw their query pairs and dictionary
-    // slices without re-planning the dictionary fold
-    def litFrame(rs: Seq[org.apache.spark.sql.Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rs: _*), qdfSchema)
-    def dictOf(rs: Seq[org.apache.spark.sql.Row]): DataFrame =
-      litFrame(rs.groupBy(_.getString(1)).map(_._2.head).toSeq)
-        .select("term", "df")
-    // ---- pass 1: exact essential-only sums for the queries that
-    // engage (pruned-scan pushdown narrowed to essential terms)
-    val pruneQids = plans.filter(p => engages(p._2)).keySet
-    val essRows = rows.filter(r =>
-      pruneQids(r.get(0)) && plans(r.get(0)).ess(r.getString(1)))
-    val essTerms = essRows.map(_.getString(1)).distinct
-    val p1F = partials(litFrame(essRows).select("qid", "term"),
-        dictOf(essRows), Some(essTerms), None, false, None)
-      .groupBy("qid", "nid")
-      .agg(sum("partial").cast("double").as("cos"))
-    // ---- FUSED CONTROL PLANE (round 20): the engaged path's dominant
-    // serving cost at the 1e7 decade is per-batch DRIVER CONTROL
-    // LATENCY, not scan mass (BASELINE.md round-19 adjudication) — and
-    // pass 1 was re-planned and re-EXECUTED up to three times per
-    // batch: the k-th-score collect, the candidate materialization,
-    // and the block-UB refinement's re-collect. Every one of those
-    // facts is a function of the same (qid, nid, cos) set, so when
-    // that set is PROVABLY control-plane sized (Σ_engaged candBound ≤
-    // maxCandBroadcast — the dial under which the candidate ids were
-    // going to be collected and broadcast anyway, so the triples cost
-    // at most 3× the bytes the old path already pulled), collect pass
-    // 1 ONCE and derive the threshold, the tightened candidate set,
-    // and the refinement rows locally. One Spark job replaces three.
-    // Batches past the bound keep the lazy plan-side flow below (they
-    // route toward shuffle semi-joins, where per-consumer re-execution
-    // is the price of staying distributed).
-    val p1Bound = pruneQids.iterator.map(q => plans(q).candBound).sum
-    val p1Local: Option[Array[org.apache.spark.sql.Row]] =
-      if (p1Bound <= maxCandBroadcast) Some(p1F.collect()) else None
-    // each query's k-th best pass-1 sum: local top-k over the fused
-    // collect, or the bounded control read #2 of the lazy flow (the
-    // k-th VALUE is order-insensitive under ties, so both forms read
-    // the same L)
-    val l1: Map[Any, Long] = p1Local match {
-      case Some(rs) => rs.groupBy(_.get(0)).flatMap { case (q, qr) =>
-        val top = qr.map(_.getDouble(2)).sorted(Ordering[Double].reverse)
-        if (top.length >= k) Some(q -> top(k - 1).toLong) else None
-      }
-      case None => Similarity.rankTopK(p1F, k)
-        .filter(col("rank") === k).select("qid", "cos")
-        .collect().map(r => r.get(0) -> r.getDouble(1).toLong).toMap
-    }
-    val safeQids: Set[Any] = pruneQids.filter(q =>
-      l1.get(q).exists(_ > plans(q).neSum)).toSet
-    if (safeQids.isEmpty) return exact() // no query verified — one pass
-    // ---- pass 2: safe queries score ALL their terms doc-gated to the
-    // pass-1 candidates; everyone else runs the exact ungated plan in
-    // the same job
-    val safeRows = rows.filter(r => safeQids(r.get(0)))
-    val otherRows = rows.filterNot(r => safeQids(r.get(0)))
-    val safeTerms = safeRows.map(_.getString(1)).distinct
-    // pass-2 candidate TIGHTENING (round 19): the per-doc MaxScore
-    // test. A verified query's final k-th best score is >= its pass-1
-    // threshold L (at least k docs already reach L on essential terms
-    // alone), and a candidate's full score is bounded by essSum +
-    // neSum — so a pass-1 doc with essSum < L − neSum sits STRICTLY
-    // below the final k-th best and cannot place under any tie-break.
-    // The k docs that set L survive by construction (essSum >= L >=
-    // L − neSum), so every verified query keeps >= k candidates.
-    // Everything downstream — the semi-join, the doc/blk scan push,
-    // the block-UB refinement — operates on this smaller, still-exact
-    // set; before round 19 EVERY pass-1 doc (bounded only by Σ
-    // essential df) flowed into pass 2.
-    def thresh(q: Any): Long = l1(q) - plans(q).neSum
-    // BLOCK-UB REFINEMENT (blkInfo, block-max layout only), shared by
-    // both candidate flows below: with the per-(query, candidate)
-    // essential sums in hand, each candidate's bound sharpens from
-    // essSum + Σ_head ub(t) to essSum + Σ_head bub(t, blk(d)) — the
-    // block the doc actually lives in, whose (max_tf, min_dl) caps
-    // the head contribution below the global ub. Drop d when even
-    // that bound misses EVERY safe query's bar; exact by the same
-    // monotonicity argument as the layout doc on [[bm25Build]]. The
-    // one remaining control job here is the bounded `_blkmax` slice
-    // fetch — the (qid, nid, cos) rows themselves arrive from the
-    // caller (free on the fused path; one bounded collect on the lazy
-    // one).
-    def refineByBlocks(essRows2Opt: => Option[Array[org.apache.spark.sql.Row]],
-                       nCand: Int): Option[Seq[Any]] =
-      blkInfoFn().flatMap { case (bw, fetch) =>
-        require(avgdl > 0.0, "maxScoreRank: blkInfoFn needs the " +
-          "caller's avgdl (the refinement bound uses scoring's constants)")
-        if (nCand > maxControlRows) None
-        else essRows2Opt.flatMap { essRows2 =>
-          val headDf: Map[Any, Seq[(String, Long)]] =
-            rows.filter(r => safeQids(r.get(0)) &&
-                !plans(r.get(0)).ess(r.getString(1)))
-              .groupBy(_.get(0))
-              .map { case (q, rs) =>
-                q -> rs.map(r => (r.getString(1), r.getLong(2))) }
-          val headTerms = headDf.valuesIterator.flatMap(_.map(_._1))
-            .toSeq.distinct
-          val blks = essRows2.map(r => blkOf(r.get(1), bw)).distinct.toSeq
-          fetch(headTerms, blks).map { bounds =>
-            def ubMicro(df: Long, maxTf: Long, minDl: Long): Long = {
-              val idf = math.log((nDocs.toDouble - df + 0.5)
-                / (df + 0.5) + 1.0)
-              val w = maxTf * (k1 + 1.0) /
-                (maxTf + k1 * (1.0 - b + b * minDl / avgdl))
-              math.ceil(idf * w * 1000000.0).toLong
-            }
-            essRows2.iterator.filter { r =>
-              val (q, d, ess) = (r.get(0), r.get(1), r.getDouble(2).toLong)
-              val blk = blkOf(d, bw)
-              val headBound = headDf.getOrElse(q, Nil).iterator.map {
-                case (t, df) => bounds.get((t, blk))
-                  .map { case (mt, md) => ubMicro(df, mt, md) }
-                  .getOrElse(0L) // no block row — no posting, 0
-              }.sum
-              ess + headBound >= l1(q) // keep unless strictly below
-            }.map(_.get(1)).toSeq.distinct
-          }
-        }
-      }
-    val candBound = safeQids.iterator.map(q => plans(q).candBound).sum
-    val bcastCand = p1Local.isDefined || candBound <= maxCandBroadcast
-    // On the broadcast path, MATERIALIZE the candidate set once (it is
-    // ≤ candBound ≤ maxCandBroadcast rows of one long by construction)
-    // instead of handing the plan to the partials callback: a sharded
-    // caller embeds the docFilter into EVERY shard leg, so the
-    // plan-side form carries S copies of the S-leg pass-1 union —
-    // an S² plan/execution blowup, invisible at the S=2 gates and
-    // measured as a multi-minute single-core planning hang at S=32
-    // (BASELINE.md round-18, DevShardGrowth `ms`). The literal keeps
-    // pass 2's legs O(S) total. Over-cap batches keep the lazy plan
-    // (they route to shuffle semi-joins, where the join input is
-    // computed once per leg by necessity).
-    val (candDocs, candVals) = p1Local match {
-      case Some(rs) =>
-        // fused flow — zero additional pass-1 work: the round-19
-        // per-doc tightening (cos ≥ L − neSum, the same bar the lazy
-        // flow's thresh-join applies) and the refinement both run on
-        // the already-collected rows
-        val candRows = rs.filter(r => safeQids(r.get(0)) &&
-          r.getDouble(2) >= thresh(r.get(0)).toDouble)
-        val vals0: Seq[Any] = candRows.map(_.get(1)).toSeq.distinct
-        val docF = org.apache.spark.sql.types.StructField("doc_id",
-          p1F.schema("nid").dataType, p1F.schema("nid").nullable)
-        refineByBlocks(Some(candRows), vals0.size) match {
-          case Some(kept) if kept.size < vals0.size =>
-            (idFrame(spark, kept, docF), Some(kept))
-          case _ => (idFrame(spark, vals0, docF), Some(vals0))
-        }
-      case None =>
-        val threshRows = safeQids.iterator.map { q =>
-          org.apache.spark.sql.Row(q, java.lang.Long.valueOf(thresh(q)))
-        }.toSeq
-        val threshF = spark.createDataFrame(
-          java.util.Arrays.asList(threshRows: _*),
-          org.apache.spark.sql.types.StructType(Seq(qdfSchema.head,
-            org.apache.spark.sql.types.StructField("thresh",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-        // the inner join against the tiny thresh frame both restricts
-        // to the safe qids (the old left_semi) and attaches each
-        // query's bar
-        def candEss() = p1F.join(threshF, Seq("qid"))
-          .filter(col("cos") >= col("thresh").cast("double"))
-        val candDocsPlan = candEss().select(col("nid").as("doc_id"))
-          .distinct()
-        if (!bcastCand) (candDocsPlan, None) else {
-          // ids first, primitives ([[materializeIds]]); the refinement
-          // only RE-reads pass 1 when the tightened set is small
-          // enough that the extra control job is noise — and the
-          // collect itself is hard-bounded (the rows scale as
-          // Σ_q candidates(q), which safeQids × a large batch can push
-          // past what the per-doc gate alone implies)
-          val (f0, vals0) = materializeIds(spark, candDocsPlan)
-          val refined: Option[Seq[Any]] = refineByBlocks({
-            val cap = maxControlRows * 8
-            val essRows2 = candEss().select("qid", "nid", "cos")
-              .limit(cap + 1).collect()
-            if (essRows2.length > cap) None else Some(essRows2)
-          }, vals0.size)
-          refined match {
-            case Some(kept) if kept.size < vals0.size =>
-              (idFrame(spark, kept, candDocsPlan.schema.head), Some(kept))
-            case _ => (f0, Some(vals0))
-          }
-        }
-    }
-    val scoredSafe = partials(litFrame(safeRows).select("qid", "term"),
-      dictOf(safeRows), Some(safeTerms), Some(candDocs), bcastCand,
-      candVals)
-    val scored = if (otherRows.isEmpty) scoredSafe else {
-      val otherTerms = otherRows.map(_.getString(1)).distinct
-      scoredSafe.unionByName(partials(
-        litFrame(otherRows).select("qid", "term"), dictOf(otherRows),
-        Some(otherTerms), None, false, None))
-    }
-    Similarity.rankTopK(
-        scored.groupBy("qid", "nid")
-          .agg(sum("partial").cast("double").as("cos")), k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
-  }
-
-  /** [[bm25ShardedQuery]] with the MaxScore two-pass pruning of
-    * [[bm25QueryMaxScore]] — the sharded serving layer's head-term
-    * dial. The control plane stays the t32 shape: ONE global stats+df
-    * fold across the shard dictionaries ([[foldShardStats]]), one
-    * bounded control collect from the folded (therefore
-    * tombstone-corrected, dial-filtered) dictionary; both passes union
-    * per-shard [[partialsWith]] legs scored against the injected
-    * GLOBAL constants, so every per-(query, doc) sum is the
-    * whole-index value and the exactness argument of the single-index
-    * form carries over verbatim (doc-disjoint shards never split a
-    * document's sum). The candidate doc-gate applies per shard leg —
-    * each shard's head postings semi-join down to the candidates that
-    * live in THAT shard, which is exactly where the saved aggregate
-    * mass was. Same dials, same per-query fallback, same
-    * bit-identical-to-[[bm25ShardedQuery]] contract (gated at t45).
-    */
-  def bm25ShardedQueryMaxScore(spark: SparkSession, tables: Seq[String],
-                               queries: DataFrame, qidCol: String,
-                               textCol: String, k: Int,
-                               k1: Double = 1.2, b: Double = 0.75,
-                               maxDfFrac: Double = 1.0,
-                               essentialDfFrac: Double = DefaultEssentialDfFrac,
-                               maxCandBroadcast: Long = DefaultMaxCandBroadcast,
-                               gateMinHeadMass: Long = DefaultGateMinHeadMass,
-                               gateCandFrac: Double = DefaultGateCandFrac): DataFrame = {
-    require(tables.nonEmpty,
-      "bm25ShardedQueryMaxScore needs at least one shard")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    require(essentialDfFrac > 0.0 && essentialDfFrac <= 1.0,
-      s"essentialDfFrac must be in (0, 1], got $essentialDfFrac")
-    require(k >= 1, s"k must be positive, got $k")
-    GraftFunctions.ensureRegistered(spark)
-    tables.foreach(healFold(spark, _))
-    val qt = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val qterms = pushableTerms(spark, qt)
-    def exactPre(preFold: Option[(Long, Double, DataFrame)]) =
-      bm25ShardedQueryPre(spark, tables, qt, k, k1, b, maxDfFrac,
-        qterms, preFold)
-    // (round 21, the exact-cliff fix) over-push-cap term lists proceed
-    // to the control read (unpruned dict fold, vocabulary-bounded) and
-    // chunk per qid below instead of routing straight to exact.
-    // the t32 global fold: (N, avgdl) across shard stats, per-term df
-    // across shard dictionaries — FUSED (round 20): the one-row stats
-    // frame crossJoins the bounded qdf control frame so both control
-    // facts arrive in ONE driver job (pre-fusion: a separate stats
-    // action). The stop-term dial applies locally post-collect — the
-    // single-index pattern, row-identical to the dict-side filter.
-    val (statsF, dict) = foldShardStatsFrame(spark, tables, qterms)
-    val qdf = qt.join(dict, Seq("term"))
-      .select(col("qid"), col("term"), col("df"))
-    // The maxControlRows limit applies to the CAPPED rows when the
-    // stop-term dial is on (round 21, ADVICE): the dial's pruned head
-    // terms must not consume the control budget and silently route a
-    // servable batch to the exact plan — the in-plan filter reads N
-    // from the same one-row stats frame, so it is still ONE driver job
-    // and row-identical to the pre-fusion capped-dict join.
-    val softCapS = maxControlRows * msOverflowFactor
-    val ctrlRows = (if (maxDfFrac < 1.0)
-        qdf.crossJoin(statsF)
+  /** THE control read of the bag-of-words family: ONE bounded driver
+    * job collecting ≤ `cap` + 1 rows of the control frame `ctl` with
+    * the family's corrected (N, Σdl) ([[familyStats]]) crossJoined on
+    * — every separate bounded driver read is a full Spark job of
+    * ~0.3-0.5 s fixed latency at the 1e7 decade (round 20), so the
+    * stats ride along. `maxDfFrac` < 1 applies the stop-term dial
+    * in-plan to `ctl`'s `df` column BEFORE the limit, so capped rows
+    * never consume the budget. Returns the rows (stats columns
+    * appended) and the stats, None when no row came back. */
+  private def controlRead(spark: SparkSession, tables: Seq[String],
+                          ctl: DataFrame, cap: Int, maxDfFrac: Double = 1.0)
+      : (Array[Row], Option[(Long, Long)]) = {
+    val statsF = familyStats(spark, tables)
+    val rows = (if (maxDfFrac < 1.0)
+        ctl.crossJoin(statsF)
           .filter(col("df") <= (lit(maxDfFrac) * col("n")).cast("long"))
-          .limit(softCapS + 1)
-      else qdf.limit(softCapS + 1).crossJoin(statsF))
-      .collect()
-    if (ctrlRows.isEmpty) return exactPre(None)
-    val nDocs = ctrlRows.head.getLong(3)
-    require(nDocs > 0, s"sharded query: every shard of $tables is empty")
-    val avgdl = ctrlRows.head.getLong(4).toDouble / nDocs.toDouble
-    val capDfS = if (maxDfFrac < 1.0) (maxDfFrac * nDocs).toLong
-      else Long.MaxValue
-    val cappedDict = if (maxDfFrac < 1.0)
-      dict.filter(col("df") <= lit(capDfS)) else dict
-    // fallback legs reuse the fold (capped dict where the dial is on) —
-    // including the OVER-CAP route (round 21, ADVICE): the global
-    // (N, Σdl) already sits in ctrlRows.head, so the exact fallback
-    // must not re-pay the foldShardStats driver job the fused read ran.
-    def exact() = exactPre(Some((nDocs, avgdl, cappedDict)))
-    if (ctrlRows.length > softCapS) return exact()
-    val qdfRows = ctrlRows.iterator
-      .map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2)))
-      .filter(_.getLong(2) <= capDfS).toArray
-    // the head-mass knee is PER SHARD LEG: each leg prunes only its own
-    // 1/S share of a head term's postings while paying its own
-    // two-pass overhead, so the GLOBAL engagement threshold scales
-    // with S. Measured (DevShardGrowth `ms`, 1e6 × S=32 mixed batch):
-    // with the unscaled gate the global mass engages but per-leg head
-    // lists are ~1/32 of the single-index knee — pruning read 1.26×
-    // the exact leg and 1.79× the grouped one; the scaled gate routes
-    // that batch to the exact plan. At production shard sizes (per-leg
-    // head mass over the knee) the gate engages exactly as before.
-    // per-shard block-max facts (one batched control job, zero on
-    // plain layouts, LAZY — forced only when pass 2 engages); the UB
-    // refinement needs ONE family-wide block width — mixed or absent
-    // widths disable it (the per-leg scan push still engages wherever
-    // a shard carries the layout)
-    lazy val bws = blockMetas(spark, tables)
-    def uniW = if (bws.forall(_.isDefined) && bws.flatten.distinct.size == 1)
-      bws.head else None
-    def rank(chunkRows: Seq[org.apache.spark.sql.Row],
-             chunkExact: () => DataFrame): DataFrame =
-      maxScoreRank(spark, chunkRows, qdf.schema, k, k1, nDocs,
-        essentialDfFrac, maxCandBroadcast,
-        gateMinHeadMass * tables.size, gateCandFrac,
-        partials = (qtF, dictF, terms, docFilter, bcast, docVals) =>
-          tables.zipWithIndex.map { case (t, i) =>
-            partialsWith(spark, t, qtF, k1, b, nDocs,
-              avgdl, dictF, terms, docFilter, bcast, docVals,
-              if (docVals.isDefined) bws(i) else None) }
-            .reduce(_.unionByName(_)),
-        exact = chunkExact,
-        b = b, avgdl = avgdl,
-        blkInfoFn = () =>
-          uniW.map(w => (w, blkBoundsFetch(spark, tables, _, _))))
-    if (qdfRows.length <= maxControlRows) rank(qdfRows.toSeq, () => exact())
-    else {
-      // CHUNKED over-cap serving — the single-index form's round-21
-      // exact-cliff fix applied to the sharded entry: per-qid chunks,
-      // each with a chunk-local exact fallback reusing the fused fold.
-      val (chunks, exactRows) = chunkRowsByQid(qdfRows.toSeq, maxControlRows)
-      def chunkExact(rs: Seq[org.apache.spark.sql.Row]): DataFrame = {
-        val qtLit = spark.createDataFrame(java.util.Arrays.asList(
-          rs.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1)))
-            .distinct: _*),
-          org.apache.spark.sql.types.StructType(qdf.schema.take(2)))
-        bm25ShardedQueryPre(spark, tables, qtLit, k, k1, b, maxDfFrac,
-          Some(rs.map(_.getString(1)).distinct),
-          Some((nDocs, avgdl, cappedDict)))
-      }
-      if (chunks.isEmpty) chunkExact(exactRows)
-      else {
-        val engaged = unionChunked(chunks,
-          c => rank(c, () => chunkExact(c)))
-        if (exactRows.isEmpty) engaged
-        else engaged.unionByName(chunkExact(exactRows))
-      }
-    }
+          .limit(cap + 1)
+      else ctl.limit(cap + 1).crossJoin(statsF)).collect()
+    val w = ctl.columns.length
+    (rows, rows.headOption.map(r => (r.getLong(w), r.getLong(w + 1))))
   }
 
-  /** [[bm25ShardedQueryMaxScore]] × [[bm25ShardedQueryGrouped]] — the
-    * round-18 composition the 100 TB serving story needs at high S:
-    * plan-parallel grouped legs (the S ≥ 32 planning-cost fix, round
-    * 17's superlinear-in-S measurement) AND MaxScore head-term pruning
-    * (the per-leg scoring-cost fix) on the SAME query batch. Until
-    * this entry the two dials were mutually exclusive
-    * (Fusion loudly rejected the pair).
-    *
-    * Mechanism: the control plane is [[bm25ShardedQueryMaxScore]]'s
-    * verbatim (ONE global stats+df fold, one bounded control collect,
-    * per-query plans and the cost gate computed from GLOBAL df) —
-    * then each of the two passes runs as a plan-parallel grouped
-    * stage ([[groupedTopKRows]]): every shard group plans its own
-    * essential-sum (pass 1) and candidate-gated full-sum (pass 2)
-    * legs in its own driver thread and collects an exact group-local
-    * top-k. Exactness composes from the two standing arguments:
-    *  - doc-disjoint shards never split a (query, doc) sum, so a
-    *    group's per-doc sums are the whole-index values and a group
-    *    top-k preserves every global winner (the
-    *    [[bm25ShardedQueryGrouped]] merge argument) — applied to
-    *    pass 1, the merged per-query k-th best IS the global k-th
-    *    best essential-only score, the only fact the MaxScore
-    *    threshold verification reads;
-    *  - the pass-2 candidate gate is per-group the intersection of
-    *    the global candidate set with the group's docs (again
-    *    disjointness), so gating each group's head postings by its
-    *    OWN pass-1 candidates equals the single-plan form's global
-    *    gate.
-    * Per-query fallback, dial semantics, and the bit-identical-to-
-    * [[bm25ShardedQuery]] contract all carry over (gated at t48).
-    * EAGER like the grouped entries (bounded collects: queries·k rows
-    * per group per pass).
-    */
-  def bm25ShardedQueryMaxScoreGrouped(spark: SparkSession,
-                                      tables: Seq[String],
-                                      queries: DataFrame, qidCol: String,
-                                      textCol: String, k: Int,
-                                      k1: Double = 1.2, b: Double = 0.75,
-                                      maxDfFrac: Double = 1.0,
-                                      essentialDfFrac: Double =
-                                        DefaultEssentialDfFrac,
-                                      maxCandBroadcast: Long =
-                                        DefaultMaxCandBroadcast,
-                                      gateMinHeadMass: Long =
-                                        DefaultGateMinHeadMass,
-                                      gateCandFrac: Double =
-                                        DefaultGateCandFrac,
-                                      parallelism: Int = 8): DataFrame = {
-    require(tables.nonEmpty,
-      "bm25ShardedQueryMaxScoreGrouped needs at least one shard")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    require(essentialDfFrac > 0.0 && essentialDfFrac <= 1.0,
-      s"essentialDfFrac must be in (0, 1], got $essentialDfFrac")
-    require(k >= 1, s"k must be positive, got $k")
-    GraftFunctions.ensureRegistered(spark)
-    tables.foreach(healFold(spark, _))
-    def exactG() = bm25ShardedQueryGrouped(spark, tables, queries,
-      qidCol, textCol, k, k1, b, maxDfFrac, parallelism)
-    val qt = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val qterms = pushableTerms(spark, qt)
-    if (qterms.isEmpty) return exactG()
-    // FUSED control read (round 20): stats frame crossJoined onto the
-    // bounded qdf collect — one driver job for both control facts,
-    // the bm25ShardedQueryMaxScore pattern (dial cap applied locally)
-    val (statsF, dict) = foldShardStatsFrame(spark, tables, qterms)
-    val qdf = qt.join(dict, Seq("term"))
-      .select(col("qid"), col("term"), col("df"))
-    // capped rows consume the control budget when the dial is on — the
-    // bm25ShardedQueryMaxScore fix (round 21, ADVICE), same one job
-    val ctrlRows = (if (maxDfFrac < 1.0)
-        qdf.crossJoin(statsF)
-          .filter(col("df") <= (lit(maxDfFrac) * col("n")).cast("long"))
-          .limit(maxControlRows + 1)
-      else qdf.limit(maxControlRows + 1).crossJoin(statsF))
-      .collect()
-    if (ctrlRows.length > maxControlRows || ctrlRows.isEmpty)
-      return exactG()
-    val nDocs = ctrlRows.head.getLong(3)
-    require(nDocs > 0, s"sharded query: every shard of $tables is empty")
-    val avgdl = ctrlRows.head.getLong(4).toDouble / nDocs.toDouble
-    val capDfS = if (maxDfFrac < 1.0) (maxDfFrac * nDocs).toLong
-      else Long.MaxValue
-    val qdfRows = ctrlRows.iterator
-      .map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2)))
-      .filter(_.getLong(2) <= capDfS).toArray
-    // per-leg head-mass knee, as in [[bm25ShardedQueryMaxScore]];
-    // per-shard block-max widths feed each leg's scan push (lazy —
-    // exact-routed batches never read them)
-    lazy val bws = blockMetas(spark, tables)
-    maxScoreRankGrouped(spark, qdfRows.toSeq, qdf.schema, k, k1, nDocs,
-      essentialDfFrac, maxCandBroadcast,
-      gateMinHeadMass * tables.size, gateCandFrac,
-      shardGroups(tables.size, parallelism),
-      partialsFor = (i, qtF, dictF, terms, docFilter, bcast, docVals) =>
-        partialsWith(spark, tables(i), qtF, k1, b, nDocs, avgdl, dictF,
-          terms, docFilter, bcast, docVals,
-          if (docVals.isDefined) bws(i) else None),
-      exact = () => exactG())
-  }
-
-  /** The grouped two-pass core behind
-    * [[bm25ShardedQueryMaxScoreGrouped]] — [[maxScoreRank]]'s exact
-    * flow with each pass run as a [[groupedTopKRows]] stage (plan
-    * parallelism) instead of one S-leg union plan. `partialsFor`
-    * builds ONE shard's partials frame; grouping composes the legs
-    * per driver thread. See the entry point's scaladoc for the
-    * exactness argument.
-    */
-  private def maxScoreRankGrouped(spark: SparkSession,
-      rows: Seq[org.apache.spark.sql.Row],
-      qdfSchema: org.apache.spark.sql.types.StructType,
-      k: Int, k1: Double, nDocs: Long,
-      essentialDfFrac: Double, maxCandBroadcast: Long,
-      gateMinHeadMass: Long, gateCandFrac: Double,
-      groups: Seq[Seq[Int]],
-      partialsFor: (Int, DataFrame, DataFrame, Option[Seq[String]],
-        Option[DataFrame], Boolean, Option[Seq[Any]]) => DataFrame,
-      exact: () => DataFrame): DataFrame = {
-    if (rows.isEmpty) return exact()
-    val plans = maxScorePlans(rows, nDocs, k1, essentialDfFrac)
-    def engages(p: MsPlan): Boolean =
-      msEngages(p, gateMinHeadMass, gateCandFrac)
-    if (!plans.valuesIterator.exists(engages)) return exact()
-    def litFrame(rs: Seq[org.apache.spark.sql.Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rs: _*), qdfSchema)
-    def dictOf(rs: Seq[org.apache.spark.sql.Row]): DataFrame =
-      litFrame(rs.groupBy(_.getString(1)).map(_._2.head).toSeq)
-        .select("term", "df")
-    val pruneQids = plans.filter(p => engages(p._2)).keySet
-    val essRows = rows.filter(r =>
-      pruneQids(r.get(0)) && plans(r.get(0)).ess(r.getString(1)))
-    val essTerms = essRows.map(_.getString(1)).distinct
-    def p1group(g: Seq[Int]): DataFrame =
-      g.map(i => partialsFor(i, litFrame(essRows).select("qid", "term"),
-          dictOf(essRows), Some(essTerms), None, false, None))
-        .reduce(_.unionByName(_))
-        .groupBy("qid", "nid")
-        .agg(sum("partial").cast("double").as("cos"))
-    // ---- FUSED CONTROL PLANE, grouped form (round 20 — see
-    // [[maxScoreRank]]): when the pass-1 output is provably
-    // control-plane sized, each group collects its FULL bounded
-    // (qid, nid, cos) rows ONCE — the merged rows give the global
-    // k-th best (by doc-disjointness, same value the per-group top-k
-    // merge read), and each group's pass-2 candidate set derives
-    // locally from its own rows instead of re-planning and
-    // re-executing the group's pass-1 union inside p2group. One
-    // pass-1 execution per group instead of two.
-    val p1Bound = pruneQids.iterator.map(q => plans(q).candBound).sum
-    val p1ByGroup: Option[(org.apache.spark.sql.types.StructType,
-        Map[Seq[Int], Array[org.apache.spark.sql.Row]])] =
-      if (p1Bound <= maxCandBroadcast)
-        Some(groupedCollectRows(groups)(g =>
-          p1group(g).select(col("qid"), col("nid"), col("cos"))))
-      else None
-    // ---- pass 1 (grouped): each group's exact local top-k of the
-    // essential-only sums; the merged per-query k-th best is the
-    // GLOBAL k-th best (each global top-k member survives its own
-    // group's top-k), the only fact the threshold verification reads
-    val p1rows: Seq[org.apache.spark.sql.Row] = p1ByGroup match {
-      case Some((_, m)) => m.valuesIterator.flatten.toSeq
-      case None => groupedTopKRows(k, groups)(p1group)._2
-    }
-    val l1: Map[Any, Long] = p1rows.groupBy(_.get(0)).flatMap {
-      case (q, rs) =>
-        val top = rs.map(_.getDouble(2)).sorted(Ordering[Double].reverse)
-        if (top.length >= k) Some(q -> top(k - 1).toLong) else None
-    }
-    val safeQids: Set[Any] = pruneQids.filter(q =>
-      l1.get(q).exists(_ > plans(q).neSum)).toSet
-    if (safeQids.isEmpty) return exact()
-    val safeRows = rows.filter(r => safeQids(r.get(0)))
-    val otherRows = rows.filterNot(r => safeQids(r.get(0)))
-    val safeTerms = safeRows.map(_.getString(1)).distinct
-    val candBound = safeQids.iterator.map(q => plans(q).candBound).sum
-    // the round-19 per-doc tightening, grouped form (see
-    // [[maxScoreRank]]): L is the GLOBAL k-th best (merged above), so
-    // the same essSum >= L − neSum bar applies within each group —
-    // a group doc below it is below the global bar a fortiori
-    val threshRows = safeQids.iterator.map { q =>
-      org.apache.spark.sql.Row(q,
-        java.lang.Long.valueOf(l1(q) - plans(q).neSum))
-    }.toSeq
-    val threshF = spark.createDataFrame(
-      java.util.Arrays.asList(threshRows: _*),
-      org.apache.spark.sql.types.StructType(Seq(qdfSchema.head,
-        org.apache.spark.sql.types.StructField("thresh",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // ---- pass 2 (grouped): a group's head postings gate to its OWN
-    // pass-1 candidates — by doc-disjointness exactly the global
-    // candidate set restricted to the group's docs; unverified
-    // queries run their exact ungated legs in the same group job
-    val bcastCand = p1ByGroup.isDefined || candBound <= maxCandBroadcast
-    def p2group(g: Seq[Int]): DataFrame = {
-      // materialized per group on the broadcast path — the same S²
-      // plan-blowup guard as [[maxScoreRank]]'s pass 2 (each group leg
-      // would otherwise embed the group's whole pass-1 union). On the
-      // fused path the group's candidates derive locally from its
-      // already-collected pass-1 rows (zero additional pass-1 work);
-      // otherwise ids collect as primitives. Either way the literal
-      // feeds the per-leg scan push.
-      val (candDocsG, candValsG) = p1ByGroup match {
-        case Some((schema1, m)) =>
-          val candRows = m(g).filter(r => safeQids(r.get(0)) &&
-            r.getDouble(2) >= (l1(r.get(0)) - plans(r.get(0)).neSum)
-              .toDouble)
-          val vals: Seq[Any] = candRows.map(_.get(1)).toSeq.distinct
-          val docF = org.apache.spark.sql.types.StructField("doc_id",
-            schema1("nid").dataType, schema1("nid").nullable)
-          (idFrame(spark, vals, docF), Some(vals))
-        case None =>
-          val candDocsGPlan = p1group(g)
-            .join(threshF, Seq("qid"))
-            .filter(col("cos") >= col("thresh").cast("double"))
-            .select(col("nid").as("doc_id")).distinct()
-          if (bcastCand) {
-            val (f0, vals0) = materializeIds(spark, candDocsGPlan)
-            (f0, Some(vals0))
-          } else (candDocsGPlan, None)
-      }
-      val scoredSafe = g.map(i => partialsFor(i,
-          litFrame(safeRows).select("qid", "term"), dictOf(safeRows),
-          Some(safeTerms), Some(candDocsG), bcastCand, candValsG))
-        .reduce(_.unionByName(_))
-      val scored = if (otherRows.isEmpty) scoredSafe else {
-        val otherTerms = otherRows.map(_.getString(1)).distinct
-        scoredSafe.unionByName(g.map(i => partialsFor(i,
-            litFrame(otherRows).select("qid", "term"), dictOf(otherRows),
-            Some(otherTerms), None, false, None))
-          .reduce(_.unionByName(_)))
-      }
-      scored.groupBy("qid", "nid")
-        .agg(sum("partial").cast("double").as("cos"))
-    }
-    val (schema2, p2rows) = groupedTopKRows(k, groups)(p2group)
-    val merged = spark.createDataFrame(
-      java.util.Arrays.asList(p2rows: _*), schema2)
-    Similarity.rankTopK(merged, k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
-  }
-
-  /** Multi-shard BM25 serving — the layout for a corpus whose index
-    * cannot live in one table (measured: BASELINE.md round-15 — at 10⁸
-    * docs the postings+positional index extrapolates to ~73 GB against
-    * this box's 38 GB free; a 1000-executor cluster holds the same
-    * index as per-executor-group shards). `tables` are independent
-    * [[bm25Build]] indexes over a DOC-DISJOINT partition of the corpus
-    * (a doc id must live in exactly one shard — the sharding contract).
-    *
-    * Results are EXACTLY the single whole-corpus index's (oracle-gated
-    * at t32): corpus-level constants fold ACROSS shards — N and Σdl
-    * from the shard stats rows (tombstone-corrected per shard), df as
-    * the sum of the shard dictionaries' per-term counts — then every
-    * shard scores its own postings against the GLOBAL constants and
-    * the per-(query, doc) partials union (a doc's postings live in one
-    * shard, so the union never splits a document's sum). The merge is
-    * the same bounded top-k aggregate every serving path here uses —
-    * per-shard candidate lists, k·|queries| rows, never corpus mass.
-    * Scale shape: the stats fold reads S tiny tables, the dict fold S
-    * dictionary slices pruned to the query terms, and each shard's
-    * postings scan is the single-index plan verbatim (pushed-term
-    * pruning included) — cost ≡ Σ shard serving costs, wall-clock ≡
-    * max on a cluster where shards are separate executor groups.
-    */
-  def bm25ShardedQuery(spark: SparkSession, tables: Seq[String],
-                       queries: DataFrame, qidCol: String, textCol: String,
-                       k: Int, k1: Double = 1.2, b: Double = 0.75,
-                       maxDfFrac: Double = 1.0): DataFrame = {
-    require(tables.nonEmpty, "bm25ShardedQuery needs at least one shard")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    GraftFunctions.ensureRegistered(spark)
-    tables.foreach(healFold(spark, _))
-    val qt = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    // FUSED control read (round 20): pushed terms + the global stats
-    // fold in ONE driver job; the dict fold stays plan-side
-    val (qterms, preFold) = ctrlTermsStatsSharded(spark, tables, qt,
-      maxDfFrac)
-    val scored = shardedScored(spark, tables, qt, k1, b, maxDfFrac, qterms,
-      docFilters = tables.map(_ => None), bcasts = tables.map(_ => false),
-      preFold = preFold)
-    Similarity.rankTopK(scored, k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
-  }
-
-  /** [[bm25ShardedQuery]] after the control reads are in hand — the
-    * sharded-MaxScore fallback route (round-20 control-plane fusion):
-    * an exact-routed batch reuses the caller's qt / pushed terms /
-    * (N, avgdl, dict) fold instead of re-paying their driver jobs. */
-  private def bm25ShardedQueryPre(spark: SparkSession,
-                                  tables: Seq[String], qt: DataFrame,
-                                  k: Int, k1: Double, b: Double,
-                                  maxDfFrac: Double,
-                                  qterms: Option[Seq[String]],
-                                  preFold: Option[(Long, Double, DataFrame)])
-      : DataFrame = {
-    val scored = shardedScored(spark, tables, qt, k1, b, maxDfFrac, qterms,
-      docFilters = tables.map(_ => None), bcasts = tables.map(_ => false),
-      preFold = preFold)
-    Similarity.rankTopK(scored, k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
+  /** [[controlRead]] of the distinct query terms: the pushed term list
+    * (None past `maxPushTerms` — unpruned scans, see [[pushableTerms]])
+    * and the family stats in one job. An empty batch leaves the stats
+    * unread (None). */
+  private def ctrlTermsStats(spark: SparkSession, tables: Seq[String],
+                             qt: DataFrame, maxPushTerms: Int = 1 << 12)
+      : (Option[Seq[String]], Option[(Long, Long)]) = {
+    val (rows, stats) = controlRead(spark, tables,
+      qt.select("term").distinct(), maxPushTerms)
+    (if (rows.length > maxPushTerms) None
+     else Some(rows.map(_.getString(0)).toSeq), stats)
   }
 
   /** [[bm25PhraseQuery]] over doc-disjoint shards — per-shard phrase
@@ -1571,8 +1103,9 @@ object Retrieval {
       (qoff, aligned.select(col("qid"), col("doc_id").as("nid")).distinct(),
         candFilter, bcast, qterms)
     }
-    shardedPosRank(spark, tables, legs.head._1.select("qid", "term").distinct(),
-      legs.map(l => (l._2, l._3, l._4)), legs.head._5, k, k1, b)
+    posFamilyRank(spark, tables, legs.head._1.select("qid", "term").distinct(),
+      legs.head._5, k, k1, b, Passes(tables.size, None))(
+      _.map(i => (legs(i)._2, legs(i)._3, legs(i)._4)))
   }
 
   /** [[bm25ProximityQuery]] over doc-disjoint shards — per-shard window
@@ -1625,69 +1158,8 @@ object Retrieval {
       (proximityMatched(anchorsInput, qlenD, window), candFilter, bcast,
         qterms)
     }
-    shardedPosRank(spark, tables, qt0,
-      legs.map(l => (l._1, l._2, l._3)), legs.head._4, k, k1, b)
-  }
-
-  /** [[bm25ShardedQuery]] with the S shard legs PLANNED AND EXECUTED in
-    * parallel driver-thread groups — the answer to the measured per-leg
-    * Catalyst planning residual (BASELINE.md round-16 plan addendum:
-    * ~0.24-0.35 s of PURE PLANNING per shard leg, because an S-table
-    * union is ONE Catalyst plan built serially on the driver — at
-    * O(100) shards that is ~25-35 s per query batch no matter how many
-    * executors the scans parallelize over; the reference's JobConf-is-
-    * the-plan never paid a per-query planning tax, SURVEY §3.1).
-    *
-    * Mechanics: the corpus constants (N, Σdl → avgdl, per-term df) fold
-    * ONCE across ALL shards ([[foldShardStats]] — one Spark job), then
-    * the shards partition into ⌈S/parallelism⌉-leg GROUPS, each of
-    * which becomes its OWN plan: scored against the injected GLOBAL
-    * constants (so every per-(query, doc) score is the single-index
-    * value), ranked to the exact group-local top-k, and COLLECTED
-    * (k·|queries| rows — bounded) in its own driver thread. Planning
-    * and execution of the groups overlap across threads; the final
-    * merge re-ranks the bounded union under the identical
-    * (score desc, doc_id asc) total order — the
-    * [[Similarity.mergeShardTopK]] exactness argument applied to
-    * doc-disjoint GROUPS instead of shards. Results are EXACTLY
-    * [[bm25ShardedQuery]]'s, row for row (spec-pinned).
-    *
-    * EAGER, by design: this entry executes at call time and returns the
-    * merged top-k as a LOCAL frame (k·|queries|·⌈S/parallelism⌉ rows
-    * pass through the driver — with the default k this is control-plane
-    * mass). The lazy S-leg entry remains the right form when composing
-    * into a larger plan or when a single plan per batch amortizes fine;
-    * this one is for interactive/small-batch serving at high S, where
-    * serial planning dominates.
-    */
-  def bm25ShardedQueryGrouped(spark: SparkSession, tables: Seq[String],
-                              queries: DataFrame, qidCol: String,
-                              textCol: String, k: Int,
-                              k1: Double = 1.2, b: Double = 0.75,
-                              maxDfFrac: Double = 1.0,
-                              parallelism: Int = 8): DataFrame = {
-    require(tables.nonEmpty, "bm25ShardedQueryGrouped needs at least one shard")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    GraftFunctions.ensureRegistered(spark)
-    tables.foreach(healFold(spark, _))
-    val qt = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    // FUSED control read (round 20): pushed terms + global stats fold
-    // in ONE driver job (foldShardStats fallback on degenerate
-    // batches); the dict fold stays plan-side
-    val (qterms, preFold) = ctrlTermsStatsSharded(spark, tables, qt,
-      maxDfFrac)
-    val (nDocs, avgdl, dict) = preFold.getOrElse(
-      foldShardStats(spark, tables, qterms, maxDfFrac))
-    groupedRankMerge(spark, tables.size, parallelism, k) { g =>
-      g.map(i => partialsWith(spark, tables(i), qt, k1, b, nDocs, avgdl,
-          dict, qterms, docFilter = None, broadcastDocs = false))
-        .reduce(_.unionByName(_))
-        .groupBy("qid", "nid")
-        .agg(sum("partial").cast("double").as("cos"))
-    }
+    posFamilyRank(spark, tables, qt0, legs.head._4, k, k1, b,
+      Passes(tables.size, None))(_.map(i => (legs(i)._1, legs(i)._2, legs(i)._3)))
   }
 
   /** [[bm25ShardedPhraseQuery]] in the plan-parallel grouped form (see
@@ -1712,18 +1184,15 @@ object Retrieval {
       .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
       .distinct()
     val ctl = shardControlRows(spark, tables, qt0)
-    val qterms = pushableTerms(spark, qt0)
-    val (nDocs, avgdl, dict) = foldShardStats(spark, tables, qterms, 1.0)
-    groupedRankMerge(spark, tables.size, parallelism, k) { g =>
-      val legs = g.map { i =>
+    posFamilyRank(spark, tables, qt0, pushableTerms(spark, qt0), k, k1, b,
+        Passes(tables.size, Some(parallelism))) {
+      _.map { i =>
         val (_, aligned, candFilter, bcast, _, _) = phraseAligned(spark,
           tables(i), queries, qidCol, textCol, 1.0, maxCandBroadcast,
           gateMinPosMass, preQdfRows = Some(ctl(i)))
         (aligned.select(col("qid"), col("doc_id").as("nid")).distinct(),
           candFilter, bcast)
       }
-      groupScored(spark, g.map(tables), qt0, k1, b, nDocs, avgdl, dict,
-        qterms, legs)
     }
   }
 
@@ -1756,10 +1225,9 @@ object Retrieval {
     val qlenD = qt0.groupBy("qid").agg(count(lit(1)).as("qlen"))
     val ctl = shardControlRows(spark, tables, qt0)
     val stats = shardStatRows(spark, tables)
-    val qterms = pushableTerms(spark, qt0)
-    val (nDocs, avgdl, dict) = foldShardStats(spark, tables, qterms, 1.0)
-    groupedRankMerge(spark, tables.size, parallelism, k) { g =>
-      val legs = g.map { i =>
+    posFamilyRank(spark, tables, qt0, pushableTerms(spark, qt0), k, k1, b,
+        Passes(tables.size, Some(parallelism))) {
+      _.map { i =>
         val (anchorsInput, candFilter, bcast, _, _) = posGatedProbe(spark,
           tables(i), qt0,
           s"bm25ShardedProximityQueryGrouped(shard=${tables(i)})", 1.0,
@@ -1768,60 +1236,28 @@ object Retrieval {
           preStats = Some(stats(i)))
         (proximityMatched(anchorsInput, qlenD, window), candFilter, bcast)
       }
-      groupScored(spark, g.map(tables), qt0, k1, b, nDocs, avgdl, dict,
-        qterms, legs)
     }
   }
 
-  /** One group's scored frame for the grouped positional entries:
-    * global-stats partials per group shard gated by that shard's
-    * candidate filter, union, per-(qid, doc) sum, keep only matched
-    * docs — [[shardedPosRank]]'s body restricted to a group. */
-  private def groupScored(spark: SparkSession, groupTables: Seq[String],
-                          qt: DataFrame, k1: Double, b: Double,
-                          nDocs: Long, avgdl: Double, dict: DataFrame,
-                          qterms: Option[Seq[String]],
-                          legs: Seq[(DataFrame, Option[DataFrame], Boolean)])
-      : DataFrame = {
-    val matchedU = legs.map(_._1).reduce(_.unionByName(_))
-    groupTables.indices.map(j => partialsWith(spark, groupTables(j), qt,
-        k1, b, nDocs, avgdl, dict, qterms, legs(j)._2, legs(j)._3))
-      .reduce(_.unionByName(_))
-      .groupBy("qid", "nid")
-      .agg(sum("partial").cast("double").as("cos"))
-      .join(matchedU, Seq("qid", "nid"), "left_semi")
-  }
-
-  /** The grouped entries' shared tail: plan + rank + collect each shard
-    * group's exact local top-k in its own driver thread, then re-rank
-    * the bounded union. Thread-safety notes: concurrent actions on one
-    * SparkSession are supported; the only session mutation on these
-    * paths is [[raiseInFilterThreshold]], which is monotone by contract
-    * (concurrent raisers compose). Group-level exactness is the
-    * [[Similarity.mergeShardTopK]] argument: groups partition the
-    * doc-disjoint shards, every score is computed against the SAME
-    * injected global constants, and the comparator is identical — so
-    * each global winner survives its group's top-k and the merge keeps
-    * it. */
-  private def groupedRankMerge(spark: SparkSession, nShards: Int,
-                               parallelism: Int, k: Int)
-                              (scored: Seq[Int] => DataFrame): DataFrame = {
-    val groups = shardGroups(nShards, parallelism)
-    val (schema, rows) = groupedTopKRows(k, groups)(scored)
-    val merged = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
-    Similarity.rankTopK(merged, k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
-  }
-
-  /** Shard indices chunked into ⌈S/parallelism⌉-sized plan groups. */
-  private def shardGroups(nShards: Int, parallelism: Int): Seq[Seq[Int]] = {
-    require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
-    val par = math.max(1, math.min(parallelism, nShards))
-    (0 until nShards)
-      .grouped(math.ceil(nShards.toDouble / par).toInt).map(_.toSeq).toSeq
+  /** The sharded positional entries' scoring tail: family-constant
+    * partials per shard leg gated by that leg's candidate filter,
+    * per-(qid, doc) sum, keep only the matched docs, rank top-k — the
+    * legs of group g come from `legs(g)` as (matched, candidate filter,
+    * broadcast) per shard, in group order. */
+  private def posFamilyRank(spark: SparkSession, tables: Seq[String],
+                            qt: DataFrame, qterms: Option[Seq[String]],
+                            k: Int, k1: Double, b: Double, passes: Passes)
+                           (legs: Seq[Int] => Seq[(DataFrame,
+                              Option[DataFrame], Boolean)]): DataFrame = {
+    val c = consts(spark, tables, qterms, 1.0, None)
+    passes.rank(spark, k) { g =>
+      val ls = legs(g)
+      sumParts(g.indices.map(j => partialsWith(spark, tables(g(j)), qt, k1,
+          b, c.nDocs, c.avgdl, c.dict, qterms, ls(j)._2, ls(j)._3))
+        .reduce(_.unionByName(_)))
+        .join(ls.map(_._1).reduce(_.unionByName(_)), Seq("qid", "nid"),
+          "left_semi")
+    }
   }
 
   /** Test-only plan probe: the grouped entries are EAGER (per-thread
@@ -1835,194 +1271,134 @@ object Retrieval {
     .AtomicReference[java.util.concurrent.ConcurrentLinkedQueue[
       (Seq[Int], String)]](null)
 
-  /** One plan-parallel grouped STAGE: plan + rank + collect each shard
-    * group's exact local top-k in its own driver thread, return the
-    * bounded (qid, nid, cos) row union. The two-stage
-    * [[maxScoreRankGrouped]] runs this once per pass; the single-stage
-    * entries wrap it in [[groupedRankMerge]]. */
-  private def groupedTopKRows(k: Int, groups: Seq[Seq[Int]])
-                             (scored: Seq[Int] => DataFrame)
-      : (org.apache.spark.sql.types.StructType,
-         Seq[org.apache.spark.sql.Row]) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(groups.size)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val proto = new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.types.StructType]()
-      val futs = groups.map { g =>
-        scala.concurrent.Future {
-          val df = Similarity.rankTopK(scored(g), k)
-            .select(col("qid"), col("nid"), col("cos"))
-          proto.compareAndSet(null, df.schema)
-          val probe = groupPlanProbe.get()
-          if (probe != null)
-            probe.add((g, df.queryExecution.executedPlan.toString))
-          df.collect()
-        }
+  /** How a family pass executes: lazily as ONE plan over every shard
+    * leg (`groups` = the one all-shard group), or eagerly per shard
+    * group — each group's plan built, run and collected on its own
+    * [[fanOut]] thread, the per-leg Catalyst planning cost overlapping
+    * across threads. Concurrent actions on one SparkSession are
+    * supported; the only session mutations on these paths are the
+    * monotone [[raiseInFilterThreshold]] and the idempotent
+    * [[GraftFunctions.unionGuard]]. */
+  private final case class Passes(groups: Seq[Seq[Int]], eager: Boolean) {
+
+    /** Every group's frame, collected in full (callers bound it). */
+    def collect(spark: SparkSession)(frame: Seq[Int] => DataFrame)
+        : Seq[(StructType, Array[Row])] =
+      fanOut(spark, groups, groups.size) { g =>
+        val df = frame(g)
+        val probe = groupPlanProbe.get()
+        if (eager && probe != null)
+          probe.add((g, df.queryExecution.executedPlan.toString))
+        (df.schema, df.collect())
       }
-      val rows = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf).flatten
-      (proto.get, rows)
-    } finally pool.shutdown()
+
+    /** Every group's exact local top-k (qid, nid, cos) rows. */
+    def topK(spark: SparkSession, k: Int)(frame: Seq[Int] => DataFrame)
+        : Seq[(StructType, Array[Row])] =
+      collect(spark)(g => Similarity.rankTopK(frame(g), k)
+        .select(col("qid"), col("nid"), col("cos")))
+
+    /** The family top-k of the scored (qid, nid, cos) frames: the lazy
+      * plan, or the re-ranked union of the bounded group top-ks. */
+    def rank(spark: SparkSession, k: Int)(frame: Seq[Int] => DataFrame)
+        : DataFrame =
+      if (!eager) rankOut(frame(groups.head), k)
+      else {
+        val parts = topK(spark, k)(frame)
+        rankOut(spark.createDataFrame(
+          java.util.Arrays.asList(parts.flatMap(_._2): _*), parts.head._1), k)
+      }
   }
 
-  /** One plan-parallel grouped COLLECT stage: each group's frame plans
-    * and collects IN FULL in its own driver thread (no top-k — the
-    * fused MaxScore control plane wants every bounded pass-1 row, from
-    * which the threshold, candidates, and refinement all derive
-    * locally). Callers gate on a proven row bound before invoking;
-    * returns the common schema plus the per-group row arrays. */
-  private def groupedCollectRows(groups: Seq[Seq[Int]])
-                                (frame: Seq[Int] => DataFrame)
-      : (org.apache.spark.sql.types.StructType,
-         Map[Seq[Int], Array[org.apache.spark.sql.Row]]) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(groups.size)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val proto = new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.types.StructType]()
-      val futs = groups.map { g =>
-        scala.concurrent.Future {
-          val df = frame(g)
-          proto.compareAndSet(null, df.schema)
-          val probe = groupPlanProbe.get()
-          if (probe != null)
-            probe.add((g, df.queryExecution.executedPlan.toString))
-          g -> df.collect()
-        }
+  /** A family of `nShards` runs lazily without `parallelism`, else in
+    * ⌈S/parallelism⌉-shard groups. */
+  private object Passes {
+    def apply(nShards: Int, parallelism: Option[Int]): Passes =
+      parallelism match {
+        case None => Passes(Seq(0 until nShards), eager = false)
+        case Some(p) =>
+          require(p >= 1, s"parallelism must be >= 1, got $p")
+          val par = math.max(1, math.min(p, nShards))
+          Passes((0 until nShards)
+            .grouped(math.ceil(nShards.toDouble / par).toInt).toSeq,
+            eager = true)
       }
-      val rows = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf).toMap
-      (proto.get, rows)
-    } finally pool.shutdown()
   }
 
-  /** Shared tail of the sharded positional entry points: global-stats
-    * partials per shard gated by that shard's candidate filter, union,
-    * per-(qid, doc) sum, keep only matched docs, rank top-k. */
-  private def shardedPosRank(spark: SparkSession, tables: Seq[String],
-                             qt: DataFrame,
-                             legs: Seq[(DataFrame, Option[DataFrame], Boolean)],
-                             qterms: Option[Seq[String]], k: Int,
-                             k1: Double, b: Double): DataFrame = {
-    val matchedU = legs.map(_._1).reduce(_.unionByName(_))
-    val scored = shardedScored(spark, tables, qt, k1, b, 1.0, qterms,
-        docFilters = legs.map(_._2), bcasts = legs.map(_._3))
-      .join(matchedU, Seq("qid", "nid"), "left_semi")
+  /** Top-k of a scored (qid, nid, cos) frame in the output schema
+    * (qid, doc_id, score_micro, rnk). */
+  private def rankOut(scored: DataFrame, k: Int): DataFrame =
     Similarity.rankTopK(scored, k)
       .select(col("qid"), col("nid").as("doc_id"),
         col("cos").cast("long").as("score_micro"),
         col("rank").as("rnk"))
-  }
 
-  /** Global-stats scoring across shards (see [[bm25ShardedQuery]]):
-    * fold (N, Σdl) and the query terms' df across the shard tables,
-    * then union each shard's [[partialsWith]] partials computed against
-    * the folded constants and sum per (qid, doc). */
-  private def shardedScored(spark: SparkSession, tables: Seq[String],
-                            qt: DataFrame, k1: Double, b: Double,
-                            maxDfFrac: Double, qterms: Option[Seq[String]],
-                            docFilters: Seq[Option[DataFrame]],
-                            bcasts: Seq[Boolean],
-                            preFold: Option[(Long, Double, DataFrame)] =
-                              None): DataFrame = {
-    // `preFold`: a caller that already folded (N, avgdl, capped dict)
-    // in its own fused control job passes the triple here — the
-    // MaxScore fallback path's dedup (round 20); values identical to
-    // the fold below by construction
-    val (nDocs, avgdl, dict) = preFold.getOrElse(
-      foldShardStats(spark, tables, qterms, maxDfFrac))
-    tables.indices.map { i =>
-      partialsWith(spark, tables(i), qt, k1, b, nDocs, avgdl, dict,
-        qterms, docFilters(i), bcasts(i))
-    }.reduce(_.unionByName(_))
-      .groupBy("qid", "nid")
+  /** Per-(qid, doc) sum of micro-unit partials: an exact long sum,
+    * viewed as the double `cos` the ranker reads. */
+  private def sumParts(partials: DataFrame): DataFrame =
+    partials.groupBy("qid", "nid")
       .agg(sum("partial").cast("double").as("cos"))
+
+  /** A family's corpus constants: N, avgdl and the query terms'
+    * corrected df with the `maxDfFrac` stop-term dial applied to the
+    * FAMILY df (global semantics, matching the single index). */
+  private final case class Consts(nDocs: Long, avgdl: Double,
+                                  dict: DataFrame)
+
+  /** [[Consts]] from already-read (N, Σdl) `stats`, or one driver read
+    * of [[familyStats]]. The exactness-critical fold lives HERE only —
+    * scoring and snippet argmax must never disagree on it. */
+  private def consts(spark: SparkSession, tables: Seq[String],
+                     qterms: Option[Seq[String]], maxDfFrac: Double,
+                     stats: Option[(Long, Long)]): Consts = {
+    val (nDocs, dlSum) = stats.getOrElse(readStats(spark, tables))
+    require(nDocs > 0, emptyMsg(tables))
+    val dict = familyDict(spark, tables, qterms)
+    // exact long sum over exact long sum — both engines divide the
+    // same two numbers, so avgdl is bit-identical cross-engine
+    Consts(nDocs, dlSum.toDouble / nDocs.toDouble,
+      if (maxDfFrac < 1.0)
+        dict.filter(col("df") <= lit((maxDfFrac * nDocs).toLong))
+      else dict)
   }
 
-  /** The sharded entry points' shared global-stats control plane: fold
-    * (N, Σdl → avgdl) across the shard stats rows and the query terms'
-    * tombstone-corrected df across the shard dictionaries (term-pruned
-    * — tiny frames), with the `maxDfFrac` stop-term dial applied to
-    * the FOLDED df (global semantics, matching the single index). The
-    * exactness-critical fold lives HERE only — scoring
-    * ([[shardedScored]]) and snippet argmax
-    * ([[attachBestTermSnippetsSharded]]) must never disagree on it.
-    * Also re-asserts [[GraftFunctions.unionGuard]]: every fold below
-    * unions co-bucketed tables.
-    */
-  private def foldShardStats(spark: SparkSession, tables: Seq[String],
-                             qterms: Option[Seq[String]],
-                             maxDfFrac: Double): (Long, Double, DataFrame) = {
-    GraftFunctions.unionGuard(spark)
-    // ONE driver action for every shard's corpus constants: each
-    // shard's one-row stats aggregate (and, where a shard has
-    // tombstones, its one-row deletion-correction aggregate, sign −1)
-    // unions into a single job. The per-shard [[correctedStats]] form
-    // paid 1-2 SERIALIZED driver actions per shard — measured
-    // (DevShardGrowth `plan` mode) at ~0.25 s of job latency per
-    // shard, 9 s of driver time at S = 32 before any posting moved;
-    // an O(100)-shard deployment's control plane must be O(1) jobs.
-    val statRows = tables.zipWithIndex.map { case (t, i) =>
-      val base = spark.table(s"${t}_stats")
-        .agg(coalesce(sum("n_docs"), lit(0L)).as("n"),
-          coalesce(sum("dl_sum"), lit(0L)).as("s"))
-        .select(lit(1L).as("_sign"), col("n"), col("s"))
-      deletedRows(spark, t) match {
-        case Some(del) =>
-          base.unionByName(del.select("doc_id", "dl").distinct()
-            .agg(count(lit(1)).as("n"),
-              coalesce(sum("dl"), lit(0L)).as("s"))
-            .select(lit(-1L).as("_sign"), col("n"), col("s")))
-        case None => base
-      }
-    }.reduce(_.unionByName(_))
-      .select((col("_sign") * col("n")).as("n"),
-        (col("_sign") * col("s")).as("s"))
-      .agg(coalesce(sum("n"), lit(0L)), coalesce(sum("s"), lit(0L)))
-      .head()
-    val nDocs = statRows.getLong(0)
-    require(nDocs > 0, s"sharded query: every shard of $tables is empty")
-    val avgdl = statRows.getLong(1).toDouble / nDocs.toDouble
-    val dict1 = foldShardDict(spark, tables, qterms)
-    val dict = if (maxDfFrac < 1.0)
-      dict1.filter(col("df") <= lit((maxDfFrac * nDocs).toLong))
-    else dict1
-    (nDocs, avgdl, dict)
+  private def emptyMsg(tables: Seq[String]): String =
+    if (tables.size == 1) s"bm25Query: index ${tables.head} is empty"
+    else s"sharded query: every shard of $tables is empty"
+
+  /** The family's tombstone-corrected (N docs, Σ dl) as a ONE-ROW
+    * FRAME: the table's own [[correctedStatsFrame]] at S = 1, else
+    * every shard's frame unioned and summed — still one driver job
+    * when read (the per-shard form paid ~0.25 s of job latency per
+    * shard, DevShardGrowth `plan`). */
+  private def familyStats(spark: SparkSession,
+                          tables: Seq[String]): DataFrame =
+    if (tables.size == 1) correctedStatsFrame(spark, tables.head)
+    else {
+      GraftFunctions.unionGuard(spark)
+      tables.map(correctedStatsFrame(spark, _)).reduce(_.unionByName(_))
+        .agg(coalesce(sum("n"), lit(0L)).as("n"),
+          coalesce(sum("s"), lit(0L)).as("s"))
+    }
+
+  /** [[familyStats]] read: one driver job. */
+  private def readStats(spark: SparkSession,
+                        tables: Seq[String]): (Long, Long) = {
+    val r = familyStats(spark, tables).head()
+    (r.getLong(0), r.getLong(1))
   }
 
-  /** The shard dictionaries' term-pruned, tombstone-corrected global
-    * df fold as a FRAME (no driver action) — shared by
-    * [[foldShardStats]] and the fused sharded-MaxScore control plane.
-    */
-  private def foldShardDict(spark: SparkSession, tables: Seq[String],
-                            qterms: Option[Seq[String]]): DataFrame =
-    tables.map(correctedDict(spark, _, qterms))
-      .reduce(_.unionByName(_))
-      .groupBy("term").agg(sum("df").as("df")).filter(col("df") > 0)
-
-  /** [[foldShardStats]] with the stats as a ONE-ROW FRAME instead of a
-    * driver action (round-20 control-plane fusion): the sharded
-    * MaxScore entries crossJoin it onto the bounded qdf control frame
-    * they collect anyway, saving one fixed-latency Spark job per
-    * batch. The returned dict is UNCAPPED — callers apply the
-    * `maxDfFrac` cap locally post-collect (the single-index pattern),
-    * which is row-identical. */
-  private def foldShardStatsFrame(spark: SparkSession,
-                                  tables: Seq[String],
-                                  qterms: Option[Seq[String]])
-      : (DataFrame, DataFrame) = {
-    GraftFunctions.unionGuard(spark)
-    val statsF = tables.map(correctedStatsFrame(spark, _))
-      .reduce(_.unionByName(_))
-      .agg(coalesce(sum("n"), lit(0L)).as("n"),
-        coalesce(sum("s"), lit(0L)).as("s"))
-    (statsF, foldShardDict(spark, tables, qterms))
-  }
+  /** The family's term-pruned, tombstone-corrected df as a FRAME (no
+    * driver action): the table's own [[correctedDict]] at S = 1, else
+    * the shard dictionaries summed per term. */
+  private def familyDict(spark: SparkSession, tables: Seq[String],
+                         qterms: Option[Seq[String]]): DataFrame =
+    if (tables.size == 1) correctedDict(spark, tables.head, qterms)
+    else {
+      GraftFunctions.unionGuard(spark)
+      tables.map(correctedDict(spark, _, qterms)).reduce(_.unionByName(_))
+        .groupBy("term").agg(sum("df").as("df")).filter(col("df") > 0)
+    }
 
   /** Heal a crashed tombstone fold before serving (see
     * [[bm25FoldTombstones]]'s crash-window note): an abandoned foldlock
@@ -2153,27 +1529,46 @@ object Retrieval {
     (chunks.toSeq, exactRows.toSeq)
   }
 
-  /** Run one DataFrame-building body per chunk in a bounded thread
-    * pool (guide §2.6 — each chunk's control plane does its own eager
-    * bounded collects; overlapping them back-fills the executor tail)
-    * and union the results. Chunk order is deterministic; per-query
-    * rows are chunk-independent, so the union equals the one-shot
-    * plan's rows. */
-  private def unionChunked(chunks: Seq[Seq[org.apache.spark.sql.Row]],
-                           serve: Seq[org.apache.spark.sql.Row] => DataFrame)
-      : DataFrame = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, chunks.size))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futs = chunks.map(c => scala.concurrent.Future(serve(c)))
-      scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
-        .reduce(_.unionByName(_))
-    } finally pool.shutdown()
-  }
+  /** Run `body` over `items` on up to `threads` daemon threads (guide
+    * §2.6 — each item's control plane does its own eager bounded
+    * collects; overlapping them back-fills the executor tail) and
+    * return the results in item order; a single item runs inline.
+    * FAIL-FAST: every worker tags its Spark jobs with one per-call job
+    * tag (`addJobTag` — the caller's job group and other local
+    * properties are inherited untouched, so outside job attribution
+    * still sees the work), and the first failed item cancels the
+    * siblings' jobs (`cancelJobsWithTag`) and interrupts their threads
+    * (`shutdownNow`) before its exception is rethrown. There is no
+    * timeout: a bounded wait would be one more dial. */
+  private[graft] def fanOut[A, B](spark: SparkSession, items: Seq[A],
+                                  threads: Int)(body: A => B): Seq[B] =
+    if (items.size <= 1) items.map(body)
+    else {
+      import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+      val sc = spark.sparkContext
+      val tag = s"graft-fanout-${java.util.UUID.randomUUID()}"
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(threads, items.size), { (r: Runnable) =>
+          val t = new Thread(r, "graft-fanout")
+          t.setDaemon(true)
+          t
+        })
+      val ec = ExecutionContext.fromExecutorService(pool)
+      val futs = items.map(a => Future { sc.addJobTag(tag); body(a) }(ec))
+      val done = Promise[Seq[B]]()
+      locally {
+        implicit val now: ExecutionContext = ExecutionContext.parasitic
+        futs.foreach(_.failed.foreach(done.tryFailure))
+        Future.sequence(futs).foreach(done.trySuccess)
+      }
+      try Await.result(done.future, scala.concurrent.duration.Duration.Inf)
+      catch {
+        case e: Throwable =>
+          sc.cancelJobsWithTag(tag)
+          pool.shutdownNow()
+          throw e
+      } finally pool.shutdown()
+    }
 
   /** Exact value-pruned scan at ANY list size — the stack-safe form of
     * the per-value parquet pushdown, two regimes:
@@ -2324,65 +1719,6 @@ object Retrieval {
   private val dfTermOrdering: Ordering[(Long, String)] =
     Ordering.Tuple2(Ordering.Long, utf8Ordering)
 
-  /** The shared scoring pipeline behind [[bm25Query]] and
-    * [[bm25PhraseQuery]]: `qt` is the distinct (qid, term) frame;
-    * returns (qid, nid, cos) where cos is the double view of the exact
-    * micro-unit long sum (see the object doc).
-    *
-    * `qterms` is the caller's ONE [[pushableTerms]] result (both public
-    * entry points collect it exactly once and thread it everywhere —
-    * the positional scan, the dictionary scan, and this scoring pass
-    * all narrow to the same pushed term list). `docFilter` restricts
-    * the scored postings to a document set BEFORE the aggregate — the
-    * phrase path passes its rarest-term candidate docs so the partial-
-    * score shuffle is bounded by the candidate set, not by the head
-    * terms' full posting lists; `broadcastDocs` picks the broadcast
-    * form when the caller knows the set is small. Scores for the docs
-    * that survive the filter are bit-identical to the unfiltered run
-    * (the aggregate is per-(qid, doc); dropping other docs' groups
-    * changes nothing).
-    */
-  private def bm25Scored(spark: SparkSession, table: String, qt: DataFrame,
-                         k1: Double, b: Double, maxDfFrac: Double,
-                         qterms: Option[Seq[String]],
-                         docFilter: Option[DataFrame] = None,
-                         broadcastDocs: Boolean = false,
-                         preStats: Option[(Long, Long)] = None): DataFrame =
-    bm25Partials(spark, table, qt, k1, b, maxDfFrac, qterms, docFilter,
-        broadcastDocs, preStats)
-      .groupBy("qid", "nid")
-      .agg(sum("partial").cast("double").as("cos"))
-
-  /** The pre-aggregation form of [[bm25Scored]]: one row per (qid, nid,
-    * term) carrying that term's micro-rounded BM25 contribution — the
-    * frame [[bm25Scored]] sums and [[bm25Snippets]] reads per-term to
-    * pick each hit's best-scoring term.
-    */
-  private def bm25Partials(spark: SparkSession, table: String, qt: DataFrame,
-                           k1: Double, b: Double, maxDfFrac: Double,
-                           qterms: Option[Seq[String]],
-                           docFilter: Option[DataFrame] = None,
-                           broadcastDocs: Boolean = false,
-                           preStats: Option[(Long, Long)] = None): DataFrame = {
-    // `preStats`: callers that already read the corrected (N, Σdl) in
-    // their own fused control job pass it here, eliminating this
-    // path's separate one-row driver action (round-20 control-plane
-    // fusion; the values are the SAME corrected pair either way)
-    val (nDocs, dlSum) = preStats.getOrElse(correctedStats(spark, table))
-    require(nDocs > 0, s"bm25Query: index $table is empty")
-    // exact long sum over exact long sum — both engines divide the
-    // same two numbers, so avgdl is bit-identical cross-engine
-    val avgdl = dlSum.toDouble / nDocs.toDouble
-    val dict1 = correctedDict(spark, table, qterms)
-    // stop-term pruning (see param doc): a dict-side filter, so the
-    // pruned terms never reach the postings join at all
-    val dict = if (maxDfFrac < 1.0)
-      dict1.filter(col("df") <= lit((maxDfFrac * nDocs).toLong))
-    else dict1
-    partialsWith(spark, table, qt, k1, b, nDocs, avgdl, dict, qterms,
-      docFilter, broadcastDocs)
-  }
-
   /** Deletion support shared by the stats/dict derivations: when a
     * tombstone set exists, df/N/avgdl are corrected at QUERY time from
     * `postings ∩ tombstones` (one extra broadcast semi-join scan of the
@@ -2406,7 +1742,7 @@ object Retrieval {
     * serving cost). Callers `crossJoin` this frame onto whatever
     * bounded control frame they were collecting anyway, so the stats
     * ride along in the SAME job. The tombstone correction folds in as
-    * a sign-tagged union (the [[foldShardStats]] discipline) instead
+    * a sign-tagged union (the [[familyStats]] discipline) instead
     * of a second driver action.
     */
   private def correctedStatsFrame(spark: SparkSession,
@@ -2427,15 +1763,6 @@ object Retrieval {
         (col("_sign") * col("s")).as("s"))
       .agg(coalesce(sum("n"), lit(0L)).as("n"),
         coalesce(sum("s"), lit(0L)).as("s"))
-  }
-
-  /** The index's tombstone-corrected corpus stats: (N docs, Σ dl) —
-    * ONE one-row driver read (the pre-round-20 form paid a second
-    * action for the tombstone-correction aggregate). */
-  private def correctedStats(spark: SparkSession,
-                             table: String): (Long, Long) = {
-    val r = correctedStatsFrame(spark, table).head()
-    (r.getLong(0), r.getLong(1))
   }
 
   /** The index's tombstone-corrected document frequencies, narrowed to
@@ -2460,8 +1787,8 @@ object Retrieval {
 
   /** The scoring tail with the corpus constants INJECTED — what lets
     * [[bm25ShardedQuery]]'s shards score against GLOBAL (N, avgdl, df)
-    * while each shard scans only its own postings. Single-index callers
-    * pass their own table's stats ([[bm25Partials]]).
+    * while each shard scans only its own postings ([[Consts]]; a
+    * single index passes its own table's constants).
     *
     * `docVals` + `blockW` engage the BLOCK-MAX SCAN SKIP (layout doc on
     * [[bm25Build]]): when the caller has the candidate ids driver-side
@@ -2946,14 +2273,11 @@ object Retrieval {
     // FUSED control read (round 20): one job for the pushed terms +
     // corrected stats, shared by BOTH scoring passes (ranking and the
     // snippet argmax) — pre-fusion this entry paid three driver
-    // actions (pushableTerms + two bm25Partials stats reads)
-    val (qterms, preStats) = ctrlTermsStats(spark, table, qt)
-    val ranked = Similarity.rankTopK(
-        bm25Scored(spark, table, qt, k1, b, maxDfFrac, qterms,
-          preStats = preStats), k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
+    // actions (pushableTerms + two stats reads)
+    val (qterms, preStats) = ctrlTermsStats(spark, Seq(table), qt)
+    val c = consts(spark, Seq(table), qterms, maxDfFrac, preStats)
+    val ranked = rankOut(sumParts(partialsWith(spark, table, qt, k1, b,
+      c.nDocs, c.avgdl, c.dict, qterms, None, broadcastDocs = false)), k)
     attachBestTermSnippets(spark, table, qt, ranked, docs, docIdCol,
       docTextCol, context, k1, b, maxDfFrac, qterms, preStats)
   }
@@ -2992,9 +2316,9 @@ object Retrieval {
     // (term, doc_id)-sorted layout).
     val (rankedL, rankedRows) = literalizeBounded(spark, ranked)
     val rankedDocs = rankedL.select("doc_id").distinct()
-    val partials = bm25Partials(spark, table, qt, k1, b, maxDfFrac, qterms,
-      docFilter = Some(rankedDocs), broadcastDocs = true,
-      preStats = preStats)
+    val c = consts(spark, Seq(table), qterms, maxDfFrac, preStats)
+    val partials = partialsWith(spark, table, qt, k1, b, c.nDocs, c.avgdl,
+      c.dict, qterms, Some(rankedDocs), broadcastDocs = true)
     val docIdx = ranked.schema.fieldIndex("doc_id")
     val pos = Tombstones.filterOut(spark, table,
       rankedRows.fold(pruneToTerms(spark.table(s"${table}_pos"), qterms))(
@@ -3031,17 +2355,16 @@ object Retrieval {
     // keeps the span pass O(S) total instead of O(S × ranking)
     val (rankedL, rankedRows) = literalizeBounded(spark, ranked)
     val rankedDocs = rankedL.select("doc_id").distinct()
-    val (nDocs, avgdl, dict) = foldShardStats(spark, tables, qterms,
-      maxDfFrac)
-    val partials = tables.map(partialsWith(spark, _, qt, k1, b, nDocs,
-        avgdl, dict, qterms, Some(rankedDocs), true))
+    val c = consts(spark, tables, qterms, maxDfFrac, None)
+    val partials = tables.map(partialsWith(spark, _, qt, k1, b, c.nDocs,
+        c.avgdl, c.dict, qterms, Some(rankedDocs), true))
       .reduce(_.unionByName(_))
     val docIdx = ranked.schema.fieldIndex("doc_id")
     val pos = tables.map(t => Tombstones.filterOut(spark, t,
         rankedRows.fold(pruneToTerms(spark.table(s"${t}_pos"), qterms))(
           rs => prunedByDocs(
             pruneToTerms(spark.table(s"${t}_pos"), qterms),
-            rs.map(_.get(docIdx)).toSeq.distinct, nDocs)), "doc_id"))
+            rs.map(_.get(docIdx)).toSeq.distinct, c.nDocs)), "doc_id"))
       .reduce(_.unionByName(_))
     snippetsFromPartials(partials, pos, rankedL, docs, docIdCol,
       docTextCol, context)
@@ -3108,18 +2431,14 @@ object Retrieval {
     // aggregate mass it removes. The lever that WOULD cut this cost is
     // a different index layout (impact-ordered/quantized posting
     // blocks), not a tighter doc gate on this one.
-    val scored = bm25Scored(spark, table, qt, k1, b, maxDfFrac = 1.0,
-        qterms, docFilter = candFilter, broadcastDocs = bcast,
-        preStats = preStats)
-      .join(matched, Seq("qid", "nid"), "left_semi")
-    Similarity.rankTopK(scored, k)
-      .select(col("qid"), col("nid").as("doc_id"),
-        col("cos").cast("long").as("score_micro"),
-        col("rank").as("rnk"))
+    val c = consts(spark, Seq(table), qterms, 1.0, preStats)
+    rankOut(sumParts(partialsWith(spark, table, qt, k1, b, c.nDocs,
+        c.avgdl, c.dict, qterms, candFilter, bcast))
+      .join(matched, Seq("qid", "nid"), "left_semi"), k)
   }
 
   /** Every shard's bounded positional-control rows in ONE Spark job —
-    * the [[foldShardStats]] batching discipline applied to
+    * the [[familyStats]] batching discipline applied to
     * [[posGatedProbe]]'s collect: S per-shard-LIMITED (qid, term, df)
     * legs union with a shard tag and collect once, instead of one
     * serialized driver collect per shard (measured at ~0.25 s of job
@@ -3240,7 +2559,7 @@ object Retrieval {
       .select(col("qid"), col("term"), coalesce(col("df"), lit(0L)).as("df"))
     // round-20 control-plane fusion: on the single-index path the
     // CORRECTED one-row stats frame crossJoins the bounded collect, so
-    // the scoring stage downstream ([[posScoreRank]] → bm25Scored)
+    // the scoring stage downstream ([[posScoreRank]])
     // reuses them instead of paying its own driver action; the sharded
     // (preQdfRows) path keeps its batched form and scoring fold.
     val (qdfRows, scoreStats): (Array[org.apache.spark.sql.Row],
@@ -3267,14 +2586,14 @@ object Retrieval {
     // CORRECTED on EVERY path (round 21 unification): the fused fast
     // path has carried corrected stats since round 20, the sharded
     // preStats are corrected in [[shardStatRows]], and the lazy
-    // fallback below reads [[correctedStats]] — so truncation routing
+    // fallback below reads [[readStats]] — so truncation routing
     // is path-independent on tombstone-bearing indexes. Cost-only
     // dials; corrected values are if anything tighter.
     lazy val (nDocsStat, avgdlCeil) = preStats
       .orElse(scoreStats.map { case (n, s) =>
         (n, math.max(1L, if (n > 0) (s + n - 1) / n else 1L)) })
       .getOrElse {
-        val (n, s) = correctedStats(spark, table)
+        val (n, s) = readStats(spark, Seq(table))
         (n, math.max(1L, if (n > 0) (s + n - 1) / n else 1L))
       }
     val capDocs0: Long = if (maxDfFrac < 1.0)

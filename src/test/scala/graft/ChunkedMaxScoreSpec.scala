@@ -17,17 +17,7 @@ import graft.operators.Retrieval
 class ChunkedMaxScoreSpec extends AnyFunSuite {
   import SharedSpark.spark
   import spark.implicits._
-
-  private def withControlCap[A](cap: Int)(body: => A): A = {
-    val key = "graft.maxControlRows"
-    val prev = sys.props.get(key)
-    sys.props(key) = cap.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props -= key
-    }
-  }
+  import TestProps.withControlCap
 
   // the bm25QueryMaxScore spec corpus: head terms aaa/bbb (df = N),
   // rare w-terms (essential at the toy dial), mid-df x-terms

@@ -210,19 +210,15 @@ object DevMsJobs {
     //    the exact plan the over-cap batch used to fall to
     //    (bm25Query — byte-identical to what bm25QueryMaxScore
     //    returned past the cap before this round); ONE timed pass.
-    def withCap[A](cap: Int)(body: => A): A = {
-      sys.props("graft.maxControlRows") = cap.toString
-      try body finally sys.props -= "graft.maxControlRows"
-    }
     arm("naturalMs") {
       Retrieval.bm25QueryMaxScore(spark, table, natural, "qid", "qtext", 5) }
-    arm("overcap") { withCap(128) {
+    arm("overcap") { TestProps.withControlCap(128) {
       Retrieval.bm25QueryMaxScore(spark, table, natural, "qid", "qtext", 5) } }
     // the MIXED batch (every query carries the df≈N head term — the
     // 22× cliff's shape) forced over-cap: pre-round-21 this routed to
     // the exact arm above (~140 s measured this session); chunked it
     // serves engaged per chunk
-    arm("overcapMixed") { withCap(128) {
+    arm("overcapMixed") { TestProps.withControlCap(128) {
       Retrieval.bm25QueryMaxScore(spark, table, mixed, "qid", "qtext", 5,
         gateMinHeadMass = 1L, gateCandFrac = 1.0) } }
     arm("overcapExact", timedRuns = 1, warm = false) {
