@@ -390,6 +390,7 @@ object LangModel {
     require(v > 0, s"LangModel.score: model $table has an empty " +
       "vocabulary (trained on an empty or whitespace-only corpus, " +
       "or fully removed)")
+    Retrieval.raiseInFilterThreshold(spark, Retrieval.maxInPushValues)
     val bg = bigrams(docs, idCol, textCol)
     val w1s = pushableW1(bg, docs, maxPushTerms, maxPushDocs)
     val idx = w1s.map(Retrieval.prunedByValues(spark.table(table), "w1", _))
@@ -441,6 +442,7 @@ object LangModel {
     require(v > 0, s"LangModel.scoreSharded: shards $tables fold to an " +
       "empty vocabulary (trained on empty or whitespace-only corpora, " +
       "or fully removed)")
+    Retrieval.raiseInFilterThreshold(spark, Retrieval.maxInPushValues)
     val bg = bigrams(docs, idCol, textCol)
     val w1s = pushableW1(bg, docs, maxPushTerms, maxPushDocs)
     val cnt = tables.map { t =>

@@ -232,8 +232,8 @@ object Retrieval {
     else Some(spark.table(s"${table}_blkmeta").head().getLong(0))
 
   /** [[blockMeta]] for a shard family, batched: ONE job reads every
-    * present `_blkmeta` row (the per-call control-read discipline of
-    * [[shardControlRows]] — S separate head() reads would pay S job
+    * present `_blkmeta` row (the one-job control-read discipline of
+    * [[controlRead]] — S separate head() reads would pay S job
     * launches per query batch). Zero jobs when no shard has the
     * layout. */
   private def blockMetas(spark: SparkSession,
@@ -787,6 +787,7 @@ object Retrieval {
     }
     val passes = Passes(tables.size, parallelism)
     GraftFunctions.ensureRegistered(spark)
+    raiseInFilterThreshold(spark, maxInPushValues)
     tables.foreach(healFold(spark, _))
     val qt = queries
       .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
@@ -810,7 +811,8 @@ object Retrieval {
     val qdf = qt.join(familyDict(spark, tables, qterms), Seq("term"))
       .select(col("qid"), col("term"), col("df"))
     val softCap = maxControlRows * msOverflowFactor
-    val (ctrlRows, stats) = controlRead(spark, tables, qdf, softCap, maxDfFrac)
+    val (ctrlRows, stats) =
+      controlRead(spark, Seq(tables -> qdf), softCap, maxDfFrac).head
     if (ctrlRows.isEmpty) return exact(qt, qterms, None) // nothing indexed
     if (ctrlRows.length > softCap) return exact(qt, qterms, stats)
     val (nDocs, dlSum) = stats.get
@@ -1041,26 +1043,41 @@ object Retrieval {
       if (top.length >= k) Some(q -> top(k - 1).toLong) else None
     }
 
-  /** THE control read of the bag-of-words family: ONE bounded driver
-    * job collecting ≤ `cap` + 1 rows of the control frame `ctl` with
-    * the family's corrected (N, Σdl) ([[familyStats]]) crossJoined on
-    * — every separate bounded driver read is a full Spark job of
-    * ~0.3-0.5 s fixed latency at the 1e7 decade (round 20), so the
-    * stats ride along. `maxDfFrac` < 1 applies the stop-term dial
-    * in-plan to `ctl`'s `df` column BEFORE the limit, so capped rows
-    * never consume the budget. Returns the rows (stats columns
-    * appended) and the stats, None when no row came back. */
-  private def controlRead(spark: SparkSession, tables: Seq[String],
-                          ctl: DataFrame, cap: Int, maxDfFrac: Double = 1.0)
-      : (Array[Row], Option[(Long, Long)]) = {
-    val statsF = familyStats(spark, tables)
-    val rows = (if (maxDfFrac < 1.0)
+  /** THE control read of both serving cores: ONE bounded driver job
+    * collecting, per leg `(tables, ctl)`, ≤ `cap` + 1 rows of the
+    * control frame `ctl` with the leg's corrected (N, Σdl)
+    * ([[familyStats]] of `tables`) crossJoined on — every separate
+    * bounded driver read is a full Spark job of ~0.3-0.5 s fixed
+    * latency at the 1e7 decade (round 20), so the stats ride along.
+    * [[bm25Family]] reads one leg (the family's terms, the family's
+    * stats); [[posFamily]] reads one leg per shard (that shard's df
+    * rows and stats), unioned under a leg tag with the `limit` inside
+    * each leg, so every leg's rows and overflow decision are those of
+    * its own read. `maxDfFrac` < 1 applies the stop-term dial in-plan
+    * to `ctl`'s `df` column BEFORE the limit, so capped rows never
+    * consume the budget. Returns per leg the rows (stats columns
+    * appended) and the stats, None when the leg returned no row. */
+  private def controlRead(spark: SparkSession,
+                          legs: Seq[(Seq[String], DataFrame)], cap: Int,
+                          maxDfFrac: Double = 1.0)
+      : Seq[(Array[Row], Option[(Long, Long)])] = {
+    val frames = legs.map { case (tables, ctl) =>
+      val statsF = familyStats(spark, tables)
+      if (maxDfFrac < 1.0)
         ctl.crossJoin(statsF)
           .filter(col("df") <= (lit(maxDfFrac) * col("n")).cast("long"))
           .limit(cap + 1)
-      else ctl.limit(cap + 1).crossJoin(statsF)).collect()
-    val w = ctl.columns.length
-    (rows, rows.headOption.map(r => (r.getLong(w), r.getLong(w + 1))))
+      else ctl.limit(cap + 1).crossJoin(statsF)
+    }
+    val w = legs.head._2.columns.length
+    val rows = if (frames.size == 1) Seq(frames.head.collect()) else {
+      GraftFunctions.unionGuard(spark)
+      val byLeg = frames.zipWithIndex.map { case (f, i) =>
+        f.withColumn("_leg", lit(i)) }.reduce(_.unionByName(_)).collect()
+        .groupBy(_.getInt(w + 2))
+      legs.indices.map(byLeg.getOrElse(_, Array.empty[Row]))
+    }
+    rows.map(rs => (rs, rs.headOption.map(r => (r.getLong(w), r.getLong(w + 1)))))
   }
 
   /** [[controlRead]] of the distinct query terms: the pushed term list
@@ -1070,18 +1087,17 @@ object Retrieval {
   private def ctrlTermsStats(spark: SparkSession, tables: Seq[String],
                              qt: DataFrame, maxPushTerms: Int = 1 << 12)
       : (Option[Seq[String]], Option[(Long, Long)]) = {
-    val (rows, stats) = controlRead(spark, tables,
-      qt.select("term").distinct(), maxPushTerms)
+    val (rows, stats) = controlRead(spark,
+      Seq(tables -> qt.select("term").distinct()), maxPushTerms).head
     (if (rows.length > maxPushTerms) None
      else Some(rows.map(_.getString(0)).toSeq), stats)
   }
 
-  /** [[bm25PhraseQuery]] over doc-disjoint shards — per-shard phrase
-    * alignment (the match is doc-local, so a shard sees every
-    * occurrence of its own docs), global-stats scoring, bounded top-k
-    * merge. Same exactness contract as [[bm25ShardedQuery]]. The
-    * truncation dial stays off (exact matching): per-shard df-based
-    * sampling would diverge from the whole-index dial's semantics.
+  /** [[bm25PhraseQuery]] over doc-disjoint shards: the shard family
+    * of [[posFamily]], which carries the plan and the exactness
+    * argument (oracle-gated at t32). The truncation dial stays off
+    * (exact matching): per-shard df-based sampling would diverge from
+    * the whole-index dial's semantics.
     */
   def bm25ShardedPhraseQuery(spark: SparkSession, tables: Seq[String],
                              queries: DataFrame, qidCol: String,
@@ -1090,27 +1106,13 @@ object Retrieval {
                              maxCandBroadcast: Long = 4L << 20,
                              gateMinPosMass: Long = 1L << 22): DataFrame = {
     require(tables.nonEmpty, "bm25ShardedPhraseQuery needs at least one shard")
-    // batched control plane: every shard's bounded control rows in ONE
-    // job (shardControlRows); each leg then runs collect-free
-    val qt0 = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val ctl = shardControlRows(spark, tables, qt0)
-    val legs = tables.zipWithIndex.map { case (t, i) =>
-      val (qoff, aligned, candFilter, bcast, qterms, _) = phraseAligned(spark,
-        t, queries, qidCol, textCol, 1.0, maxCandBroadcast, gateMinPosMass,
-        preQdfRows = Some(ctl(i)))
-      (qoff, aligned.select(col("qid"), col("doc_id").as("nid")).distinct(),
-        candFilter, bcast, qterms)
-    }
-    posFamilyRank(spark, tables, legs.head._1.select("qid", "term").distinct(),
-      legs.head._5, k, k1, b, Passes(tables.size, None))(
-      _.map(i => (legs(i)._2, legs(i)._3, legs(i)._4)))
+    posFamily(spark, tables, queries, qidCol, textCol,
+      "bm25ShardedPhraseQuery", None, k, k1, b, 1.0, maxCandBroadcast,
+      gateMinPosMass).ranked
   }
 
-  /** [[bm25ProximityQuery]] over doc-disjoint shards — per-shard window
-    * covers (doc-local predicate), global-stats scoring, bounded top-k
-    * merge (oracle-gated at t33). Same contracts as
+  /** [[bm25ProximityQuery]] over doc-disjoint shards: the shard family
+    * of [[posFamily]] (oracle-gated at t33). Same contracts as
     * [[bm25ShardedPhraseQuery]].
     *
     * `maxPosMass` is by default the FAMILY budget — each shard's gated
@@ -1136,39 +1138,17 @@ object Retrieval {
                                 perShardBudget: Boolean = false): DataFrame = {
     require(tables.nonEmpty,
       "bm25ShardedProximityQuery needs at least one shard")
-    require(window >= 1 && window <= 256,
-      s"window must be in [1, 256], got $window")
-    val shardPosMass =
-      if (perShardBudget || maxPosMass == Long.MaxValue) maxPosMass
-      else math.max(1L, maxPosMass / tables.size)
-    val qt0 = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val qlenD = qt0.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    // batched control plane: one job for every shard's control rows,
-    // one for every shard's stats (the NEAR budget's dial facts)
-    val ctl = shardControlRows(spark, tables, qt0)
-    val stats = shardStatRows(spark, tables)
-    val legs = tables.zipWithIndex.map { case (t, i) =>
-      val (anchorsInput, candFilter, bcast, qterms, _) = posGatedProbe(spark,
-        t, qt0, s"bm25ShardedProximityQuery(shard=$t)", 1.0,
-        maxCandBroadcast, gateMinPosMass, window = window,
-        maxPosMass = shardPosMass, preQdfRows = Some(ctl(i)),
-        preStats = Some(stats(i)))
-      (proximityMatched(anchorsInput, qlenD, window), candFilter, bcast,
-        qterms)
-    }
-    posFamilyRank(spark, tables, qt0, legs.head._4, k, k1, b,
-      Passes(tables.size, None))(_.map(i => (legs(i)._1, legs(i)._2, legs(i)._3)))
+    posFamily(spark, tables, queries, qidCol, textCol,
+      "bm25ShardedProximityQuery", Some(window), k, k1, b, 1.0,
+      maxCandBroadcast, gateMinPosMass, maxPosMass, perShardBudget).ranked
   }
 
   /** [[bm25ShardedPhraseQuery]] in the plan-parallel grouped form (see
     * [[bm25ShardedQueryGrouped]] — the positional legs carry the
     * heaviest per-leg planning, ~0.35 s each, so grouping pays off
-    * most here). Control collects stay batched up front (ONE job for
-    * all shards' control rows); each group's phrase alignment +
-    * global-stats scoring plans in its own thread. EAGER; results
-    * exactly [[bm25ShardedPhraseQuery]]'s.
+    * most here): [[posFamily]] with each group's phrase alignment and
+    * global-stats scoring planned on its own thread after the one
+    * control read. EAGER; results exactly [[bm25ShardedPhraseQuery]]'s.
     */
   def bm25ShardedPhraseQueryGrouped(spark: SparkSession,
                                     tables: Seq[String],
@@ -1180,26 +1160,15 @@ object Retrieval {
                                     parallelism: Int = 8): DataFrame = {
     require(tables.nonEmpty,
       "bm25ShardedPhraseQueryGrouped needs at least one shard")
-    val qt0 = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val ctl = shardControlRows(spark, tables, qt0)
-    posFamilyRank(spark, tables, qt0, pushableTerms(spark, qt0), k, k1, b,
-        Passes(tables.size, Some(parallelism))) {
-      _.map { i =>
-        val (_, aligned, candFilter, bcast, _, _) = phraseAligned(spark,
-          tables(i), queries, qidCol, textCol, 1.0, maxCandBroadcast,
-          gateMinPosMass, preQdfRows = Some(ctl(i)))
-        (aligned.select(col("qid"), col("doc_id").as("nid")).distinct(),
-          candFilter, bcast)
-      }
-    }
+    posFamily(spark, tables, queries, qidCol, textCol,
+      "bm25ShardedPhraseQueryGrouped", None, k, k1, b, 1.0, maxCandBroadcast,
+      gateMinPosMass, parallelism = Some(parallelism)).ranked
   }
 
   /** [[bm25ShardedProximityQuery]] in the plan-parallel grouped form
-    * (see [[bm25ShardedQueryGrouped]]). Same divided `maxPosMass`
-    * family-budget semantics as the lazy entry. EAGER; results exactly
-    * [[bm25ShardedProximityQuery]]'s.
+    * (see [[bm25ShardedQueryGrouped]] and [[posFamily]]). Same divided
+    * `maxPosMass` family-budget semantics as the lazy entry. EAGER;
+    * results exactly [[bm25ShardedProximityQuery]]'s.
     */
   def bm25ShardedProximityQueryGrouped(spark: SparkSession,
                                        tables: Seq[String],
@@ -1214,50 +1183,10 @@ object Retrieval {
                                        parallelism: Int = 8): DataFrame = {
     require(tables.nonEmpty,
       "bm25ShardedProximityQueryGrouped needs at least one shard")
-    require(window >= 1 && window <= 256,
-      s"window must be in [1, 256], got $window")
-    val shardPosMass =
-      if (perShardBudget || maxPosMass == Long.MaxValue) maxPosMass
-      else math.max(1L, maxPosMass / tables.size)
-    val qt0 = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val qlenD = qt0.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    val ctl = shardControlRows(spark, tables, qt0)
-    val stats = shardStatRows(spark, tables)
-    posFamilyRank(spark, tables, qt0, pushableTerms(spark, qt0), k, k1, b,
-        Passes(tables.size, Some(parallelism))) {
-      _.map { i =>
-        val (anchorsInput, candFilter, bcast, _, _) = posGatedProbe(spark,
-          tables(i), qt0,
-          s"bm25ShardedProximityQueryGrouped(shard=${tables(i)})", 1.0,
-          maxCandBroadcast, gateMinPosMass, window = window,
-          maxPosMass = shardPosMass, preQdfRows = Some(ctl(i)),
-          preStats = Some(stats(i)))
-        (proximityMatched(anchorsInput, qlenD, window), candFilter, bcast)
-      }
-    }
-  }
-
-  /** The sharded positional entries' scoring tail: family-constant
-    * partials per shard leg gated by that leg's candidate filter,
-    * per-(qid, doc) sum, keep only the matched docs, rank top-k — the
-    * legs of group g come from `legs(g)` as (matched, candidate filter,
-    * broadcast) per shard, in group order. */
-  private def posFamilyRank(spark: SparkSession, tables: Seq[String],
-                            qt: DataFrame, qterms: Option[Seq[String]],
-                            k: Int, k1: Double, b: Double, passes: Passes)
-                           (legs: Seq[Int] => Seq[(DataFrame,
-                              Option[DataFrame], Boolean)]): DataFrame = {
-    val c = consts(spark, tables, qterms, 1.0, None)
-    passes.rank(spark, k) { g =>
-      val ls = legs(g)
-      sumParts(g.indices.map(j => partialsWith(spark, tables(g(j)), qt, k1,
-          b, c.nDocs, c.avgdl, c.dict, qterms, ls(j)._2, ls(j)._3))
-        .reduce(_.unionByName(_)))
-        .join(ls.map(_._1).reduce(_.unionByName(_)), Seq("qid", "nid"),
-          "left_semi")
-    }
+    posFamily(spark, tables, queries, qidCol, textCol,
+      "bm25ShardedProximityQueryGrouped", Some(window), k, k1, b, 1.0,
+      maxCandBroadcast, gateMinPosMass, maxPosMass, perShardBudget,
+      Some(parallelism)).ranked
   }
 
   /** Test-only plan probe: the grouped entries are EAGER (per-thread
@@ -1276,9 +1205,10 @@ object Retrieval {
     * group — each group's plan built, run and collected on its own
     * [[fanOut]] thread, the per-leg Catalyst planning cost overlapping
     * across threads. Concurrent actions on one SparkSession are
-    * supported; the only session mutations on these paths are the
-    * monotone [[raiseInFilterThreshold]] and the idempotent
-    * [[GraftFunctions.unionGuard]]. */
+    * supported. The workers raise no conf: every serving entry raises
+    * the IN-pushdown threshold ([[raiseInFilterThreshold]]) on its
+    * caller thread before it fans out; the one write left on these
+    * paths is the idempotent [[GraftFunctions.unionGuard]]. */
   private final case class Passes(groups: Seq[Seq[Int]], eager: Boolean) {
 
     /** Every group's frame, collected in full (callers bound it). */
@@ -1421,20 +1351,8 @@ object Retrieval {
     * range misses the batch — serving cost then tracks the query terms'
     * posting lists instead of the index scan. The collect is a bounded
     * control value (≤ maxPushTerms + 1 rows), the mf1 point-lookup
-    * discipline.
-    *
-    * SESSION-WIDE SIDE EFFECT, by design: [[prunedByValues]] raises
-    * `spark.sql.parquet.pushdown.inFilterThreshold` to
-    * [[maxInPushValues]] and the raise is NOT restored. The term
-    * list is pushed into a plan the CALLER executes later (lazily), so
-    * a save-and-restore would revert the conf before the scan ever
-    * plans — the raise must outlive the call. It is monotone (only
-    * ever raises, never lowers, so repeated/concurrent callers
-    * compose), affects plan SHAPE only, and is capped at the measured
-    * stack-safe depth (256 — 4× margin under the 1024-value in-vivo
-    * failure) — never raise it further: deeper per-value IN lists
-    * overflow the executor stack inside parquet-mr (DevPushProbe; the
-    * round-15 LM incident).
+    * discipline. The per-value regime needs the threshold raise of
+    * [[raiseInFilterThreshold]], which the serving entry has made.
     */
   private[operators] def pushableTerms(spark: SparkSession, qt: DataFrame,
                                        maxPushTerms: Int = 1 << 12)
@@ -1444,8 +1362,22 @@ object Retrieval {
     if (terms.size > maxPushTerms) None else Some(terms)
   }
 
-  /** Monotone raise of the parquet IN-pushdown threshold (see the
-    * session-wide-side-effect note on [[pushableTerms]]). */
+  /** Monotone raise of `spark.sql.parquet.pushdown.inFilterThreshold`
+    * to `target` — a SESSION-WIDE side effect, by design, made ONCE in
+    * the prologue of every entry whose plans carry [[prunedByValues]]/
+    * [[prunedByDocs]]/[[partialsWith]] pushes, on the CALLER thread
+    * before any [[fanOut]] (the helpers themselves change no conf, so
+    * worker threads never write the session). The raise is NOT
+    * restored: the pushed lists land in a plan the caller executes
+    * later (lazily), and parquet reads the threshold when the scan
+    * executes, so the raise must outlive the call. It is monotone (only
+    * ever raises, never lowers, so repeated/concurrent callers
+    * compose), affects plan SHAPE only, and the entries raise to
+    * EXACTLY [[maxInPushValues]]: Spark pushes per-value when a list
+    * has ≤ threshold values, so a 257-value list keeps the range-only
+    * regime. Never raise it further: deeper per-value IN lists overflow
+    * the executor stack inside parquet-mr (DevPushProbe; the round-15
+    * LM incident). */
   private[operators] def raiseInFilterThreshold(spark: SparkSession,
                                                 target: Int): Unit = {
     val key = "spark.sql.parquet.pushdown.inFilterThreshold"
@@ -1468,10 +1400,9 @@ object Retrieval {
     */
   private[operators] val maxInPushValues = 256
 
-  /** Bounded control-read cap shared by [[posGatedProbe]]'s per-call
-    * collect and [[shardControlRows]]'s batched form: a positional
-    * control plane reads at most this many (qid, term, df) rows per
-    * index; batches past it fall back to frame-only plans. The
+  /** Bounded control-read cap of [[posFamily]]'s control read: a
+    * positional control plane reads at most this many (qid, term, df)
+    * rows per shard; batches past it fall back to frame-only plans. The
     * `graft.maxControlRows` system property exists for TESTS and dev
     * probes only (forcing the overflow routes at toy batch sizes); the
     * production default is the measured 2^13. */
@@ -1594,13 +1525,6 @@ object Retrieval {
                                         values: Seq[String]): DataFrame = {
     if (values.isEmpty) df.filter(lit(false))
     else {
-      // raise to EXACTLY the cap: Spark pushes per-value when
-      // values.length <= threshold, so maxInPushValues keeps the
-      // per-value regime aligned with the documented 256 bound (a
-      // +1 here would let a later 257-value list build the per-value
-      // tree — one over the stated cap)
-      if (values.size <= maxInPushValues)
-        raiseInFilterThreshold(df.sparkSession, maxInPushValues)
       df.filter(col(colName).isin(values: _*))
     }
   }
@@ -1652,13 +1576,11 @@ object Retrieval {
     *    = unknown corpus size: per-value only;
     *  - otherwise: unchanged scan (semi-join gating only).
     */
-  private def prunedByDocs(df: DataFrame, vals: Seq[Any],
+  private[operators] def prunedByDocs(df: DataFrame, vals: Seq[Any],
                            corpusN: Long): DataFrame = {
     if (vals.isEmpty) return df.filter(lit(false))
-    if (vals.size <= maxInPushValues) {
-      raiseInFilterThreshold(df.sparkSession, maxInPushValues)
+    if (vals.size <= maxInPushValues)
       return df.filter(col("doc_id").isin(vals: _*))
-    }
     val longs = vals.flatMap {
       case l: java.lang.Long => Some(l.longValue())
       case i: java.lang.Integer => Some(i.longValue())
@@ -1831,7 +1753,6 @@ object Retrieval {
           case (Some(vals), Some(_)) if vals.isEmpty =>
             postings0.filter(lit(false)) // constant-folds away
           case (Some(vals), Some(_)) if vals.size <= maxInPushValues =>
-            raiseInFilterThreshold(spark, maxInPushValues)
             postings0.filter(col("doc_id").isin(vals: _*))
           case (Some(vals), Some(bw)) =>
             val blks = vals.map(blkOf(_, bw)).distinct
@@ -1841,11 +1762,9 @@ object Retrieval {
             // anything — pure predicate overhead (measured at 1e6,
             // round 19: 29 queries' candidates covered all 244 blocks)
             val totalBlks = math.max(1L, nDocs / math.max(1L, bw))
-            if (blks.size <= maxInPushValues &&
-                blks.size * 2 <= totalBlks) {
-              raiseInFilterThreshold(spark, maxInPushValues)
+            if (blks.size <= maxInPushValues && blks.size * 2 <= totalBlks)
               semi(postings0.filter(col("blk").isin(blks: _*)))
-            } else semi(postings0)
+            else semi(postings0)
           case _ => semi(postings0)
         }
       case None => postings0
@@ -1865,6 +1784,8 @@ object Retrieval {
     * [[bm25Query]] score of the phrase's DISTINCT terms — same integer
     * micro-unit contract, same output schema (qid, doc_id, score_micro,
     * rnk). Queries with no tokens or no matching document emit nothing.
+    * The one-index family of [[posFamily]], which carries the control
+    * read and the exactness arguments.
     *
     * Plan: the phrase's (offset, term) pairs shuffle TO the
     * term-bucketed `<table>_pos` lists; each posting explodes to
@@ -1936,49 +1857,27 @@ object Retrieval {
                       k: Int, k1: Double = 1.2, b: Double = 0.75,
                       maxDfFrac: Double = 1.0,
                       maxCandBroadcast: Long = 4L << 20,
-                      gateMinPosMass: Long = 1L << 22): DataFrame = {
-    val (qoff, aligned, candFilter, bcast, qterms, scoreStats) =
-      phraseAligned(spark,
-        table, queries, qidCol, textCol, maxDfFrac, maxCandBroadcast,
-        gateMinPosMass)
-    val matched = aligned.select(col("qid"), col("doc_id").as("nid"))
-      .distinct()
-    posScoreRank(spark, table, qoff, matched, candFilter, bcast, qterms,
-      k, k1, b, scoreStats)
-  }
+                      gateMinPosMass: Long = 1L << 22): DataFrame =
+    posFamily(spark, Seq(table), queries, qidCol, textCol, "bm25PhraseQuery",
+      None, k, k1, b, maxDfFrac, maxCandBroadcast, gateMinPosMass).ranked
 
   /** The phrase match set WITH its start offsets: (qid, doc_id, start,
-    * qlen) — one row per aligned phrase occurrence. Shared by
-    * [[bm25PhraseQuery]] (which only needs membership) and
-    * [[bm25PhraseSnippets]] (which slices around min(start)).
+    * qlen) — one row per aligned phrase occurrence in the gated probe
+    * rows (`input`: one per (qid, doc, off, term) with the term's
+    * delta-encoded positions). Membership ranks [[bm25PhraseQuery]];
+    * [[bm25PhraseSnippets]] slices around min(start).
     */
-  private def phraseAligned(spark: SparkSession, table: String,
-                            queries: DataFrame, qidCol: String,
-                            textCol: String, maxDfFrac: Double,
-                            maxCandBroadcast: Long, gateMinPosMass: Long,
-                            preQdfRows: Option[Array[org.apache.spark.sql.Row]] = None)
-      : (DataFrame, DataFrame, Option[DataFrame], Boolean,
-         Option[Seq[String]], Option[(Long, Long)]) = {
-    val qoff = queries
-      .select(col(qidCol).as("qid"), posexplode(toks(col(textCol))))
-      .select(col("qid"), col("pos").as("off"), col("col").as("term"))
-    val qlen = qoff.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    val (startsInput, candFilter, bcast, qterms, scoreStats) =
-      posGatedProbe(spark,
-        table, qoff, "bm25PhraseQuery", maxDfFrac, maxCandBroadcast,
-        gateMinPosMass, preQdfRows = preQdfRows)
-    val starts = startsInput
+  private def phraseAligned(input: DataFrame, qlen: DataFrame): DataFrame =
+    input
       .select(col("qid"), col("doc_id"), col("off"),
         explode(GraftFunctions.deltaDec(col("positions"))).as("p"))
       .select(col("qid"), col("doc_id"),
         (col("p") - col("off")).as("start"), col("off"))
       .groupBy("qid", "doc_id", "start")
       .agg(count_distinct(col("off")).as("nhit"))
-    val aligned = starts.join(broadcast(qlen), Seq("qid"))
+      .join(broadcast(qlen), Seq("qid"))
       .filter(col("nhit") === col("qlen"))
       .select(col("qid"), col("doc_id"), col("start"), col("qlen"))
-    (qoff, aligned, candFilter, bcast, qterms, scoreStats)
-  }
 
   /** [[bm25PhraseQuery]] + passage extraction: the top-k ranked matches
     * carrying each document's FIRST aligned occurrence (`start`, the
@@ -2004,15 +1903,11 @@ object Retrieval {
                          maxCandBroadcast: Long = 4L << 20,
                          gateMinPosMass: Long = 1L << 22): DataFrame = {
     require(context >= 0, s"context must be non-negative, got $context")
-    val (qoff, aligned, candFilter, bcast, qterms, scoreStats) =
-      phraseAligned(spark,
-        table, queries, qidCol, textCol, maxDfFrac, maxCandBroadcast,
-        gateMinPosMass)
-    val matched = aligned.select(col("qid"), col("doc_id").as("nid"))
-      .distinct()
-    val ranked = posScoreRank(spark, table, qoff, matched, candFilter,
-      bcast, qterms, k, k1, b, scoreStats)
-    val firstStart = aligned.groupBy("qid", "doc_id")
+    val served = posFamily(spark, Seq(table), queries, qidCol, textCol,
+      "bm25PhraseSnippets", None, k, k1, b, maxDfFrac, maxCandBroadcast,
+      gateMinPosMass)
+    val ranked = served.ranked
+    val firstStart = served.hits.head.groupBy("qid", "doc_id")
       .agg(min("start").as("start"), first("qlen").as("qlen"))
     val corpusToks = docs.select(col(docIdCol).as("doc_id"),
       toks(col(docTextCol)).as("_ws"))
@@ -2039,8 +1934,9 @@ object Retrieval {
     * rnk). Phrase is the ordered, gap-free special case (offsets must
     * align at one start); NEAR relaxes both order and adjacency.
     *
-    * Plan: shares [[bm25PhraseQuery]]'s ENTIRE control plane via
-    * [[posGatedProbe]] — one bounded control collect, pushed-term scan
+    * Plan: the one-index family of [[posFamily]], sharing
+    * [[bm25PhraseQuery]]'s ENTIRE control plane ([[posGatedProbe]]) —
+    * one bounded control collect, pushed-term scan
     * pruning, rarest-term candidate doc-gating (broadcast/shuffle
     * semi-joins), the `maxDfFrac` truncation dial (same contract:
     * phrases whose rarest term is under the cap stay exact; all-head
@@ -2084,23 +1980,10 @@ object Retrieval {
                          maxDfFrac: Double = 1.0,
                          maxCandBroadcast: Long = 4L << 20,
                          gateMinPosMass: Long = 1L << 22,
-                         maxPosMass: Long = 1L << 31): DataFrame = {
-    require(window >= 1 && window <= 256,
-      s"window must be in [1, 256], got $window")
-    require(maxPosMass > 0,
-      s"maxPosMass must be positive, got $maxPosMass")
-    val qt0 = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val qlenD = qt0.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    val (anchorsInput, candFilter, bcast, qterms, scoreStats) =
-      posGatedProbe(spark,
-        table, qt0, "bm25ProximityQuery", maxDfFrac, maxCandBroadcast,
-        gateMinPosMass, window = window, maxPosMass = maxPosMass)
-    val matched = proximityMatched(anchorsInput, qlenD, window)
-    posScoreRank(spark, table, qt0, matched, candFilter, bcast, qterms,
-      k, k1, b, scoreStats)
-  }
+                         maxPosMass: Long = 1L << 31): DataFrame =
+    posFamily(spark, Seq(table), queries, qidCol, textCol,
+      "bm25ProximityQuery", Some(window), k, k1, b, maxDfFrac,
+      maxCandBroadcast, gateMinPosMass, maxPosMass).ranked
 
   /** The NEAR match predicate, evaluated set-at-a-time on the STORED
     * position arrays: the gated probe rows (one per (qid, doc, term),
@@ -2168,20 +2051,10 @@ object Retrieval {
                             maxCandBroadcast: Long = 4L << 20,
                             gateMinPosMass: Long = 1L << 22,
                             maxPosMass: Long = 1L << 31): DataFrame = {
-    require(window >= 1 && window <= 256,
-      s"window must be in [1, 256], got $window")
     require(context >= 0, s"context must be non-negative, got $context")
-    require(maxPosMass > 0,
-      s"maxPosMass must be positive, got $maxPosMass")
-    val qt0 = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    val qlenD = qt0.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    val (anchorsInput, candFilter, bcast, qterms, scoreStats) =
-      posGatedProbe(spark,
-        table, qt0, "bm25ProximitySnippets", maxDfFrac, maxCandBroadcast,
-        gateMinPosMass, window = window, maxPosMass = maxPosMass)
-    val matched = proximityMatched(anchorsInput, qlenD, window)
+    val served = posFamily(spark, Seq(table), queries, qidCol, textCol,
+      "bm25ProximitySnippets", Some(window), k, k1, b, maxDfFrac,
+      maxCandBroadcast, gateMinPosMass, maxPosMass)
     // round 21 (VERDICT r20 ask #4): the ranked frame is ≤ k·|queries|
     // rows, but as a lazy plan the FULL t21 ranking subtree executed
     // twice — once on the output spine and once inside the
@@ -2190,24 +2063,16 @@ object Retrieval {
     // frame across both consumers, and the collected ids push into the
     // cover pass's positional scan ([[prunedByDocs]] — page-skip on
     // the (term, doc_id)-sorted round-21 layout).
-    val (ranked, rankedRows) = literalizeBounded(spark,
-      posScoreRank(spark, table, qt0, matched, candFilter,
-        bcast, qterms, k, k1, b, scoreStats))
+    val (ranked, rankedRows) = literalizeBounded(spark, served.ranked)
     // leftmost cover, derived occurrence-anchored over ONLY the ranked
     // docs: every ranked doc has one (see the scaladoc equivalence), so
     // the inner joins below drop nothing
     val rankedDocs = ranked.select("qid", "doc_id").distinct()
-    val posSpan = rankedRows.fold(
-        Tombstones.filterOut(spark, table,
-          pruneToTerms(spark.table(s"${table}_pos"), qterms), "doc_id")) {
-      rs =>
-        Tombstones.filterOut(spark, table,
-          prunedByDocs(
-            pruneToTerms(spark.table(s"${table}_pos"), qterms),
-            rs.map(_.get(1)).toSeq.distinct,
-            scoreStats.map(_._1).getOrElse(0L)), "doc_id")
-    }
-    val occ = qt0
+    val posTerms = pruneToTerms(spark.table(s"${table}_pos"), served.qterms)
+    val posSpan = Tombstones.filterOut(spark, table, rankedRows.fold(posTerms)(
+      rs => prunedByDocs(posTerms, rs.map(_.get(1)).toSeq.distinct,
+        served.nDocs)), "doc_id")
+    val occ = served.probe
       .join(posSpan, Seq("term"))
       .join(broadcast(rankedDocs), Seq("qid", "doc_id"), "left_semi")
       .select(col("qid"), col("doc_id"), col("term"),
@@ -2219,7 +2084,7 @@ object Retrieval {
         col("p") <= col("ap") + lit(window - 1))
       .groupBy("qid", "doc_id", "ap")
       .agg(count_distinct(col("term")).as("nhit"))
-    val firstStart = covers.join(broadcast(qlenD), Seq("qid"))
+    val firstStart = covers.join(broadcast(served.qlen), Seq("qid"))
       .filter(col("nhit") === col("qlen"))
       .groupBy("qid", "doc_id").agg(min("ap").as("start"))
     val corpusToks = docs.select(col(docIdCol).as("doc_id"),
@@ -2263,6 +2128,7 @@ object Retrieval {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     GraftFunctions.ensureRegistered(spark)
+    raiseInFilterThreshold(spark, maxInPushValues)
     healFold(spark, table)
     require(tableExists(spark, s"${table}_pos"),
       s"bm25Snippets: $table has no positional table — " +
@@ -2274,12 +2140,12 @@ object Retrieval {
     // corrected stats, shared by BOTH scoring passes (ranking and the
     // snippet argmax) — pre-fusion this entry paid three driver
     // actions (pushableTerms + two stats reads)
-    val (qterms, preStats) = ctrlTermsStats(spark, Seq(table), qt)
-    val c = consts(spark, Seq(table), qterms, maxDfFrac, preStats)
+    val (qterms, stats) = ctrlTermsStats(spark, Seq(table), qt)
+    val c = consts(spark, Seq(table), qterms, maxDfFrac, stats)
     val ranked = rankOut(sumParts(partialsWith(spark, table, qt, k1, b,
       c.nDocs, c.avgdl, c.dict, qterms, None, broadcastDocs = false)), k)
     attachBestTermSnippets(spark, table, qt, ranked, docs, docIdCol,
-      docTextCol, context, k1, b, maxDfFrac, qterms, preStats)
+      docTextCol, context, k1, b, maxDfFrac, qterms, stats)
   }
 
   /** The best-term passage pass behind [[bm25Snippets]] — and, via
@@ -2304,10 +2170,11 @@ object Retrieval {
       docs: DataFrame, docIdCol: String, docTextCol: String,
       context: Int, k1: Double, b: Double, maxDfFrac: Double,
       qterms: Option[Seq[String]],
-      preStats: Option[(Long, Long)] = None): DataFrame = {
+      stats: Option[(Long, Long)] = None): DataFrame = {
     require(tableExists(spark, s"${table}_pos"),
       s"snippet extraction: $table has no positional table — " +
         "build the index with positions = true")
+    raiseInFilterThreshold(spark, maxInPushValues)
     // round 21 (VERDICT r20 ask #4): one scored frame, many consumers —
     // the ranked plan fed the output spine AND the rankedDocs broadcast
     // gating the partials recompute, re-executing the whole ranking per
@@ -2316,7 +2183,7 @@ object Retrieval {
     // (term, doc_id)-sorted layout).
     val (rankedL, rankedRows) = literalizeBounded(spark, ranked)
     val rankedDocs = rankedL.select("doc_id").distinct()
-    val c = consts(spark, Seq(table), qterms, maxDfFrac, preStats)
+    val c = consts(spark, Seq(table), qterms, maxDfFrac, stats)
     val partials = partialsWith(spark, table, qt, k1, b, c.nDocs, c.avgdl,
       c.dict, qterms, Some(rankedDocs), broadcastDocs = true)
     val docIdx = ranked.schema.fieldIndex("doc_id")
@@ -2325,7 +2192,7 @@ object Retrieval {
         rs => prunedByDocs(
           pruneToTerms(spark.table(s"${table}_pos"), qterms),
           rs.map(_.get(docIdx)).toSeq.distinct,
-          preStats.map(_._1).getOrElse(0L))), "doc_id")
+          stats.map(_._1).getOrElse(0L))), "doc_id")
     snippetsFromPartials(partials, pos, rankedL, docs, docIdCol,
       docTextCol, context)
   }
@@ -2349,6 +2216,7 @@ object Retrieval {
     tables.foreach(t => require(tableExists(spark, s"${t}_pos"),
       s"snippet extraction: $t has no positional table — " +
         "build the index with positions = true"))
+    raiseInFilterThreshold(spark, maxInPushValues)
     // same literal-sharing as the single-index form (round 21) — here
     // the lazy ranked plan was re-executed per SHARD leg (S partials
     // legs each embedding the rankedDocs broadcast), so the literal
@@ -2408,198 +2276,161 @@ object Retrieval {
           .as("snippet"): _*)
   }
 
-  /** Shared tail of the positional entry points: BM25-score the
-    * query's distinct terms with the candidate doc-gate threaded into
-    * the postings scan, keep exactly the matched docs, rank top-k. */
-  private def posScoreRank(spark: SparkSession, table: String,
-                           probe: DataFrame, matched: DataFrame,
-                           candFilter: Option[DataFrame], bcast: Boolean,
-                           qterms: Option[Seq[String]], k: Int,
-                           k1: Double, b: Double,
-                           preStats: Option[(Long, Long)] = None)
-      : DataFrame = {
-    val qt = probe.select("qid", "term").distinct()
-    // Round-18 note (measured, then REVERTED): gating the scoring
-    // stage's postings to the collected MATCHED set — the MaxScore
-    // lesson applied to positional ranking — was built, hash-gated
-    // green (t20/t21 unchanged), and then A/B'd at median-of-3 on the
-    // bench kernels: phrase +21%, NEAR +53% SLOWER gated (BASELINE.md
-    // round-18 "match-gated scoring" section). The ranking stage is
-    // SCAN-bound: the term-bucketed postings are read per query term
-    // regardless of any doc gate, the aggregate is already
-    // candidate-gated, and the extra control job costs more than the
-    // aggregate mass it removes. The lever that WOULD cut this cost is
-    // a different index layout (impact-ordered/quantized posting
-    // blocks), not a tighter doc gate on this one.
-    val c = consts(spark, Seq(table), qterms, 1.0, preStats)
-    rankOut(sumParts(partialsWith(spark, table, qt, k1, b, c.nDocs,
-        c.avgdl, c.dict, qterms, candFilter, bcast))
-      .join(matched, Seq("qid", "nid"), "left_semi"), k)
-  }
+  /** What one positional serve hands back: the ranked top-k and, for
+    * the snippet tails, the probe and per-query length frames, each
+    * shard's match rows ((qid, doc_id, start, qlen) phrase occurrences,
+    * or NEAR's (qid, nid)), the pushed terms and the family's
+    * corrected N. */
+  private final case class PosServed(ranked: DataFrame, probe: DataFrame,
+                                     qlen: DataFrame, hits: Seq[DataFrame],
+                                     qterms: Option[Seq[String]],
+                                     nDocs: Long)
 
-  /** Every shard's bounded positional-control rows in ONE Spark job —
-    * the [[familyStats]] batching discipline applied to
-    * [[posGatedProbe]]'s collect: S per-shard-LIMITED (qid, term, df)
-    * legs union with a shard tag and collect once, instead of one
-    * serialized driver collect per shard (measured at ~0.25 s of job
-    * latency per shard — linear driver time an O(100)-shard
-    * deployment's control plane cannot afford). The `limit` lives
-    * INSIDE each union leg, so every shard's row set — and its
-    * collected/overflow decision — is byte-identical to the per-call
-    * form.
+  /** THE positional serving core: all eight phrase/NEAR entries are thin
+    * wrappers over it. `tables` is a family of S ≥ 1 positional
+    * [[bm25Build]] indexes over a doc-disjoint partition of the corpus
+    * (a single index is the one-shard family); `near` selects the match
+    * (None = exact phrase, Some(w) = NEAR/w); `parallelism` selects how
+    * the pass executes ([[Passes]]: one lazy plan, or eager shard groups
+    * on [[fanOut]] threads).
     *
-    * Driver residency: the batched collect holds S·(maxControlRows+1)
-    * rows AT ONCE where the serialized form held one shard's at a time
-    * — at S = 100 that is ~820k tiny (qid, term, df) rows, ~25-50 MB,
-    * control-plane sized for any driver that can run 100-leg plans at
-    * all (the per-leg Catalyst state dwarfs it). The bound is a
-    * worst-case: a shard contributes maxControlRows+1 rows only when
-    * its (qid, term) frame overflows, and overflow also disables its
-    * pushdown — real batches sit far under the cap. If a deployment
-    * ever needs S ≫ 100 with full caps, chunk this collect into
-    * ⌈S/100⌉ jobs; until measured, one job is the right default. */
-  private def shardControlRows(spark: SparkSession, tables: Seq[String],
-                               qt: DataFrame)
-      : Seq[Array[org.apache.spark.sql.Row]] = {
-    GraftFunctions.unionGuard(spark)
-    val rows = tables.zipWithIndex.map { case (t, i) =>
-      qt.join(spark.table(s"${t}_terms")
-          .groupBy("term").agg(sum("df").as("df")), Seq("term"), "left")
-        .select(col("qid"), col("term"),
-          coalesce(col("df"), lit(0L)).as("df"))
-        .limit(maxControlRows + 1)
-        .select(lit(i).as("_sh"), col("qid"), col("term"), col("df"))
-    }.reduce(_.unionByName(_)).collect()
-    val bySh = rows.groupBy(_.getInt(0))
-    tables.indices.map(i =>
-      bySh.getOrElse(i, Array.empty[org.apache.spark.sql.Row])
-        .map(r => org.apache.spark.sql.Row(r.get(1), r.get(2), r.get(3))))
-  }
-
-  /** Every shard's (n_docs, avgdl-ceiling) stats in ONE job — the
-    * dial facts [[posGatedProbe]]'s NEAR budget reads per shard,
-    * batched like [[shardControlRows]]. Tombstone-CORRECTED (round 21,
-    * the dial-fact unification): each shard's deletion-correction
-    * aggregate rides the same union sign-tagged (the
-    * [[correctedStatsFrame]] discipline), so truncation caps are
-    * path-independent — the single-index path's fused read has been
-    * corrected since round 20, and a raw sharded read would route the
-    * same tombstone-bearing batch differently. Corrected values only
-    * tighten cost dials; exactness never depends on them. */
-  private def shardStatRows(spark: SparkSession, tables: Seq[String])
-      : Seq[(Long, Long)] = {
-    GraftFunctions.unionGuard(spark)
-    val rows = tables.zipWithIndex.map { case (t, i) =>
-      val base = spark.table(s"${t}_stats")
-        .agg(coalesce(sum("n_docs"), lit(0L)).as("n"),
-          coalesce(sum("dl_sum"), lit(0L)).as("s"))
-        .select(lit(i).as("_sh"), lit(1L).as("_sign"), col("n"), col("s"))
-      deletedRows(spark, t) match {
-        case Some(del) => base.unionByName(
-          del.select("doc_id", "dl").distinct()
-            .agg(count(lit(1)).as("n"),
-              coalesce(sum("dl"), lit(0L)).as("s"))
-            .select(lit(i).as("_sh"), lit(-1L).as("_sign"),
-              col("n"), col("s")))
-        case None => base
-      }
-    }.reduce(_.unionByName(_))
-      .groupBy("_sh")
-      .agg(coalesce(sum(col("_sign") * col("n")), lit(0L)).as("n"),
-        coalesce(sum(col("_sign") * col("s")), lit(0L)).as("s"))
-      .collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    tables.indices.map { i =>
-      val (n, s) = rows.getOrElse(i, (0L, 0L))
-      (n, math.max(1L, if (n > 0) (s + n - 1) / n else 1L))
+    * Control plane: ONE driver job ([[controlRead]], one leg per shard)
+    * collects every shard's bounded raw (qid, term, df) rows with that
+    * shard's tombstone-corrected (N, Σdl) crossJoined on — at S = 1 the
+    * single-index fused read. The family stats are the sum of the shard
+    * stats; the pushed terms are the family rows' distinct terms (None
+    * past 4096 terms). Each shard's gated probe ([[posGatedProbe]]) then
+    * derives its candidate plane from its own rows and stats, with no
+    * further control read. Only a batch past the control cap pays one
+    * more job, [[pushableTerms]], so its scans stay term-pruned.
+    *
+    * Exactness, three arguments:
+    *
+    *  1. THE MATCH IS DOC-LOCAL. Phrase alignment and the NEAR window
+    *     cover read one document's position lists only, so a shard sees
+    *     every occurrence of its own docs and the union of the shards'
+    *     match sets is the whole-index match set. The candidate plane is
+    *     a superset per shard whatever df it ranks terms by: every match
+    *     carries each query term, the shard's rarest one included.
+    *
+    *  2. SCORING USES GLOBAL STATS. Every shard scores its postings
+    *     against the family's (N, avgdl, df) — the [[bm25Family]]
+    *     argument 1 — and a (qid, doc) sum never crosses shards, so the
+    *     matched docs' scores are the whole-index values, bit for bit;
+    *     the grouped merge is [[bm25Family]] argument 3.
+    *
+    *  3. BUDGETS ARE PER SHARD. The NEAR position-mass budget is
+    *     `maxPosMass` divided over the S shards (`perShardBudget` keeps
+    *     it whole per shard), checked against each shard's own
+    *     candidate bound and avgdl; an over-budget shard routes to
+    *     truncated matching on its own. Truncation is hash-sampled per
+    *     doc, so "sharded ≡ whole" holds only while NO shard routes —
+    *     and the `maxDfFrac` dial (shard N) is exact only at S = 1,
+    *     which is why the sharded entries keep it off.
+    */
+  private def posFamily(spark: SparkSession, tables: Seq[String],
+                        queries: DataFrame, qidCol: String, textCol: String,
+                        caller: String, near: Option[Int], k: Int,
+                        k1: Double, b: Double, maxDfFrac: Double,
+                        maxCandBroadcast: Long, gateMinPosMass: Long,
+                        maxPosMass: Long = Long.MaxValue,
+                        perShardBudget: Boolean = false,
+                        parallelism: Option[Int] = None): PosServed = {
+    near.foreach { w =>
+      require(w >= 1 && w <= 256, s"window must be in [1, 256], got $w")
+      require(maxPosMass > 0, s"maxPosMass must be positive, got $maxPosMass")
     }
-  }
-
-  /** The shared positional control plane behind [[bm25PhraseQuery]]
-    * and [[bm25ProximityQuery]] (the plan notes live on the phrase
-    * scaladoc): takes the per-(qid, …, term) probe frame, returns the
-    * probe joined to the (tombstone-filtered, term-pruned, candidate-
-    * doc-gated) positional scan, plus the candidate doc filter /
-    * broadcast decision / pushed-term list the caller threads into
-    * scoring. */
-  private def posGatedProbe(spark: SparkSession, table: String,
-                            probe: DataFrame, caller: String,
-                            maxDfFrac: Double, maxCandBroadcast: Long,
-                            gateMinPosMass: Long, window: Int = 0,
-                            maxPosMass: Long = Long.MaxValue,
-                            preQdfRows: Option[Array[org.apache.spark.sql.Row]] = None,
-                            preStats: Option[(Long, Long)] = None)
-      : (DataFrame, Option[DataFrame], Boolean, Option[Seq[String]],
-         Option[(Long, Long)]) = {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
+    val passes = Passes(tables.size, parallelism)
     GraftFunctions.ensureRegistered(spark)
-    healFold(spark, table)
-    require(tableExists(spark, s"${table}_pos"),
-      s"$caller: $table has no positional table — " +
-        "build the index with positions = true")
-    val qt = probe.select("qid", "term").distinct()
-    // ---- ONE bounded control read: the per-(qid, term) df frame.
-    // Everything the control plane needs — the pushdown term list, the
-    // rarest term per phrase, the candidate-set bound Σ_q min_t df(t),
-    // the total posting mass Σ df, and the broadcast decision — derives
-    // from this single collect (≤ maxControlRows rows, the mf1
-    // point-lookup discipline). The dictionary aggregate it reads is
-    // term-bucketed and tiny relative to any posting scan. Batches past
-    // the cap fall back to frame-only plans (no collect, no pushdown).
-    // `preQdfRows`/`preStats`: the SHARDED entry points collect every
-    // shard's control rows / stats row in ONE batched job
-    // ([[shardControlRows]]/[[shardStatRows]] — per-shard limits
-    // preserved inside the union, so the semantics per shard are
-    // byte-identical to collecting here) and pass each shard its
-    // slice; the per-call collect below is the single-index path.
-    val qdf = qt
-      .join(spark.table(s"${table}_terms")
-        .groupBy("term").agg(sum("df").as("df")), Seq("term"), "left")
-      .select(col("qid"), col("term"), coalesce(col("df"), lit(0L)).as("df"))
-    // round-20 control-plane fusion: on the single-index path the
-    // CORRECTED one-row stats frame crossJoins the bounded collect, so
-    // the scoring stage downstream ([[posScoreRank]])
-    // reuses them instead of paying its own driver action; the sharded
-    // (preQdfRows) path keeps its batched form and scoring fold.
-    val (qdfRows, scoreStats): (Array[org.apache.spark.sql.Row],
-        Option[(Long, Long)]) = preQdfRows match {
-      case Some(rs) => (rs, None)
-      case None =>
-        val cr = qdf.limit(maxControlRows + 1)
-          .crossJoin(correctedStatsFrame(spark, table)).collect()
-        (cr.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1),
-          r.get(2))),
-         cr.headOption.map(r => (r.getLong(3), r.getLong(4))))
+    raiseInFilterThreshold(spark, maxInPushValues)
+    tables.foreach { t =>
+      healFold(spark, t)
+      require(tableExists(spark, s"${t}_pos"), s"$caller: $t has no " +
+        "positional table — build the index with positions = true")
     }
-    val collected = qdfRows.length <= maxControlRows
-    val maxPushTerms = 1 << 12
-    val qterms: Option[Seq[String]] = if (collected) {
-      val ts = qdfRows.map(_.getString(1)).toSeq.distinct
-      // no threshold raise here: [[prunedByValues]] pushes the list
-      // stack-safely (per-value only up to [[maxInPushValues]] = 256)
-      if (ts.size <= maxPushTerms) Some(ts) else None
-    } else None
-    // truncation cap in documents (Long.MaxValue = exact; stats are
-    // read only when a dial needs corpus facts — the maxDfFrac cap and
-    // the NEAR anchor budget both do). Dial facts are tombstone-
-    // CORRECTED on EVERY path (round 21 unification): the fused fast
-    // path has carried corrected stats since round 20, the sharded
-    // preStats are corrected in [[shardStatRows]], and the lazy
-    // fallback below reads [[readStats]] — so truncation routing
-    // is path-independent on tombstone-bearing indexes. Cost-only
-    // dials; corrected values are if anything tighter.
-    lazy val (nDocsStat, avgdlCeil) = preStats
-      .orElse(scoreStats.map { case (n, s) =>
-        (n, math.max(1L, if (n > 0) (s + n - 1) / n else 1L)) })
-      .getOrElse {
-        val (n, s) = readStats(spark, Seq(table))
-        (n, math.max(1L, if (n > 0) (s + n - 1) / n else 1L))
+    // phrase probes carry every token's offset; NEAR probes the
+    // distinct terms (proximity is a distinct-term predicate)
+    val probe = near match {
+      case None => queries
+        .select(col(qidCol).as("qid"), posexplode(toks(col(textCol))))
+        .select(col("qid"), col("pos").as("off"), col("col").as("term"))
+      case Some(_) => queries
+        .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
+        .distinct()
+    }
+    val qlen = probe.groupBy("qid").agg(count(lit(1)).as("qlen"))
+    val qt = probe.select("qid", "term").distinct()
+    val qdfs = tables.map(t => qt
+      .join(spark.table(s"${t}_terms")
+        .groupBy("term").agg(sum("df").as("df")), Seq("term"), "left")
+      .select(col("qid"), col("term"), coalesce(col("df"), lit(0L)).as("df")))
+    val read = controlRead(spark, tables.map(Seq(_)).zip(qdfs), maxControlRows)
+    val rows = read.map(_._1.map(r => Row(r.get(0), r.get(1), r.get(2))))
+    val collected = rows.forall(_.length <= maxControlRows)
+    val qterms =
+      if (collected) Some(rows.flatMap(_.map(_.getString(1))).distinct)
+        .filter(_.size <= (1 << 12))
+      else pushableTerms(spark, qt)
+    val stats = Option.when(read.forall(_._2.isDefined))(
+      read.map(_._2.get).reduce((x, y) => (x._1 + y._1, x._2 + y._2)))
+    val c = consts(spark, tables, qterms, 1.0, stats)
+    val shardMass = if (perShardBudget || maxPosMass == Long.MaxValue)
+      maxPosMass else math.max(1L, maxPosMass / tables.size)
+    val hits = new Array[DataFrame](tables.size) // filled by the pass
+    val ranked = passes.rank(spark, k) { g =>
+      val legs = g.map { i =>
+        val (input, cand, bcast) = posGatedProbe(spark, tables(i), probe,
+          qdfs(i), rows(i), qterms, read(i)._2.getOrElse((0L, 0L)),
+          if (tables.size == 1) caller else s"$caller(shard=${tables(i)})",
+          maxDfFrac, maxCandBroadcast, gateMinPosMass, near.getOrElse(0),
+          shardMass)
+        hits(i) = near.fold(phraseAligned(input, qlen))(
+          proximityMatched(input, qlen, _))
+        (if (near.isDefined) hits(i)
+         else hits(i).select(col("qid"), col("doc_id").as("nid")).distinct(),
+         cand, bcast)
       }
+      sumParts(g.indices.map(j => partialsWith(spark, tables(g(j)), qt, k1,
+          b, c.nDocs, c.avgdl, c.dict, qterms, legs(j)._2, legs(j)._3))
+        .reduce(_.unionByName(_)))
+        .join(legs.map(_._1).reduce(_.unionByName(_)), Seq("qid", "nid"),
+          "left_semi")
+    }
+    PosServed(ranked, probe, qlen, hits.toSeq, qterms, c.nDocs)
+  }
+
+  /** One shard's gated positional probe (the plan notes live on the
+    * [[bm25PhraseQuery]] scaladoc): from the shard's collected control
+    * rows `rows` (its (qid, term, df) frame `qdf`, bounded at
+    * [[maxControlRows]] + 1 — past the cap only the plan is used) and
+    * its corrected (N, Σdl) `stats`, returns the probe joined to the
+    * (tombstone-filtered, term-pruned, candidate-doc-gated) positional
+    * scan, plus the candidate doc filter and broadcast decision the
+    * caller threads into scoring. Everything the control plane needs —
+    * the rarest term per query, the candidate bound Σ_q min_t df(t),
+    * the posting mass Σ df, the truncation and NEAR budget caps —
+    * derives from those arguments; the one driver action left is the
+    * literal candidate collect (and, past the cap, the bound read). */
+  private def posGatedProbe(spark: SparkSession, table: String,
+                            probe: DataFrame, qdf: DataFrame,
+                            rows: Array[Row], qterms: Option[Seq[String]],
+                            stats: (Long, Long), caller: String,
+                            maxDfFrac: Double, maxCandBroadcast: Long,
+                            gateMinPosMass: Long, window: Int,
+                            maxPosMass: Long)
+      : (DataFrame, Option[DataFrame], Boolean) = {
+    val collected = rows.length <= maxControlRows
+    // dial facts are the shard's tombstone-CORRECTED stats on every
+    // path, so truncation routing is path-independent; cost-only
+    val (nDocsStat, dlSum) = stats
+    val avgdlCeil = math.max(1L,
+      if (nDocsStat > 0) (dlSum + nDocsStat - 1) / nDocsStat else 1L)
     val capDocs0: Long = if (maxDfFrac < 1.0)
       math.max(1L, (maxDfFrac * nDocsStat).toLong)
     else Long.MaxValue
-    val perQid = qdfRows.groupBy(_.get(0))
+    val perQid = rows.groupBy(_.get(0))
     val (candBound0, nQ): (Long, Long) =
       if (collected)
         (perQid.valuesIterator.map(rs =>
@@ -2641,7 +2472,7 @@ object Retrieval {
         } else (capDocs0, candBound0)
       } else (capDocs0, candBound0)
     val totalBound: Long =
-      if (collected) qdfRows.iterator.map(_.getLong(2)).sum
+      if (collected) rows.iterator.map(_.getLong(2)).sum
       else Long.MaxValue
     // ---- COST GATE on the rarest-term doc-gating. The gating plan
     // (doc-level + per-qid semi-joins bounding the intersection by the
@@ -2674,26 +2505,20 @@ object Retrieval {
         // aggregate and paid a window sort inside the candidate
         // subplan for rows the driver already holds; same rows by the
         // same (df, term) order.
-        val rarest = if (collected)
-          spark.createDataFrame(java.util.Arrays.asList(
-            perQid.valuesIterator.map(rs =>
-              rs.minBy(r => (r.getLong(2), r.getString(1)))(dfTermOrdering))
-              .toSeq: _*),
-            org.apache.spark.sql.types.StructType(qdf.schema))
-        else qdf.withColumn("rn",
+        val rarestRows = Option.when(collected)(perQid.valuesIterator
+          .map(_.minBy(r => (r.getLong(2), r.getString(1)))(dfTermOrdering))
+          .toSeq)
+        val rarest = rarestRows.fold(qdf.withColumn("rn",
             row_number().over(org.apache.spark.sql.expressions.Window
               .partitionBy("qid").orderBy(col("df"), col("term"))))
-          .filter(col("rn") === 1).select("qid", "term", "df")
+          .filter(col("rn") === 1).select("qid", "term", "df"))(rs =>
+          spark.createDataFrame(java.util.Arrays.asList(rs: _*),
+            StructType(qdf.schema)))
         // collected rarest terms prune the candidate-generation scan to
         // ONLY the rarest terms' row groups — without this the subplan
         // reads every query term's position list, head terms included,
         // just to derive the candidates it exists to bound
-        val rarestTerms: Option[Seq[String]] =
-          if (collected) Some(perQid.valuesIterator.map(rs =>
-            rs.minBy(r => (r.getLong(2), r.getString(1)))(dfTermOrdering)
-              .getString(1))
-            .toSeq.distinct)
-          else None
+        val rarestTerms = rarestRows.map(_.map(_.getString(1)).distinct)
         val posRarest = Tombstones.filterOut(spark, table,
           pruneToTerms(spark.table(s"${table}_pos"),
             rarestTerms.orElse(qterms)), "doc_id")
@@ -2732,13 +2557,12 @@ object Retrieval {
           // sample filter is a deterministic xxhash test, so collected
           // rows == plan rows.
           val candRows = cand.collect()
-          val docF = org.apache.spark.sql.types.StructField("doc_id",
-            cand.schema("doc_id").dataType, cand.schema("doc_id").nullable)
+          val docF = StructField("doc_id", cand.schema("doc_id").dataType,
+            cand.schema("doc_id").nullable)
           val candVals: Seq[Any] = candRows.map(_.get(1)).toSeq.distinct
           val candDocsF = idFrame(spark, candVals, docF)
           val candF = spark.createDataFrame(
-            java.util.Arrays.asList(candRows.toSeq: _*),
-            org.apache.spark.sql.types.StructType(cand.schema))
+            java.util.Arrays.asList(candRows.toSeq: _*), cand.schema)
           val posCand = prunedByDocs(pos, candVals, nDocsStat)
             .join(broadcast(candDocsF), Seq("doc_id"), "left_semi")
           (probe.join(posCand, Seq("term"))
@@ -2754,7 +2578,7 @@ object Retrieval {
             Some(candDocs))
         }
       } else (probe.join(pos, Seq("term")), None)
-    (startsInput, candFilter, bcast, qterms, scoreStats)
+    (startsInput, candFilter, bcast)
   }
 
   /** Grow one BM25 shard into two: rehash the parent's index rows into
