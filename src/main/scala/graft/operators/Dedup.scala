@@ -338,8 +338,8 @@ object Dedup {
     * [[minhashDedupAgainstSharded]] over the family with the parent
     * replaced by its children finds EXACTLY the same pairs (candidate
     * generation and verification are per-doc-row facts; the split
-    * moves rows, never changes them). Same build → marker → retire
-    * crash protocol and chaos boundaries as the other families.
+    * moves rows, never changes them). The one reshard protocol and
+    * crash contract ([[Sharding]]).
     */
   def splitShard(spark: org.apache.spark.sql.SparkSession, parent: String,
                  child0: String, child1: String,
@@ -351,103 +351,36 @@ object Dedup {
   private[graft] def splitShardImpl(spark: org.apache.spark.sql.SparkSession,
                                     parent: String, child0: String,
                                     child1: String, shardIndex: Int,
-                                    nShards: Int, failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    require(nShards >= 1 && shardIndex >= 0 && shardIndex < nShards,
-      s"splitShard: shardIndex $shardIndex out of range for $nShards shards")
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${parent}_splitdone"
-    if (!exists(marker)) {
-      require(exists(s"${parent}_sigs"),
-        s"splitShard: ${parent}_sigs does not exist (and no _splitdone " +
-          "marker — nothing to resume)")
-      minhashFoldTombstones(spark, parent)
-      boundary(0)
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(s"${parent}_sigs"))
-        .bucketSpec.map(_.numBuckets).getOrElse(8)
-      val first = Sharding.staysInFirstChild(col("id"), shardIndex, nShards)
-      def build(child: String, pred: org.apache.spark.sql.Column): Unit = {
-        BucketedJoin.writeBucketed(
-          spark.table(s"${parent}_sigs").filter(pred),
-          s"${child}_sigs", "id", buckets)
-        BucketedJoin.writeBucketed(
-          spark.table(s"${parent}_bands").filter(pred),
-          s"${child}_bands", "bandkey", buckets)
-        Tombstones.clear(spark, child)
-      }
-      build(child0, first)
-      boundary(1)
-      build(child1, !first)
-      boundary(2)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(3)
-    }
-    for (s <- Seq("_sigs", "_bands"); t = parent + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Tombstones.clear(spark, parent)
-    boundary(4)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+                                    nShards: Int, failAt: Int): Unit =
+    Sharding.split(spark, reshard, parent, child0, child1, shardIndex,
+      nShards, failAt)
 
   /** The inverse of [[splitShard]] — fold two doc-disjoint minhash
     * ADMISSION shards into one (the shrink path): tombstones fold
     * first, then the merged signature/band tables are the row UNIONS
     * rebucketed (per-doc facts — doc-disjointness makes the union
     * exact, and the sharded check over the family with the parents
-    * replaced finds identical pairs). Same build → marker → retire
-    * crash protocol as the splits.
+    * replaced finds identical pairs).
     */
   def mergeShards(spark: org.apache.spark.sql.SparkSession,
                   parent0: String, parent1: String,
                   merged: String): Unit =
     mergeShardsImpl(spark, parent0, parent1, merged, failAt = -1)
 
-  /** [[mergeShards]] with the [[Retrieval.InjectedSplitCrash]] seam —
-    * boundaries 0 (tombstone folds), 1 (built), 2 (marker), 3
-    * (parents retired). */
+  /** [[mergeShards]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def mergeShardsImpl(spark: org.apache.spark.sql.SparkSession,
                                      parent0: String, parent1: String,
-                                     merged: String, failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    graft.functions.GraftFunctions.unionGuard(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${merged}_mergedone"
-    if (!exists(marker)) {
-      require(exists(s"${parent0}_sigs") && exists(s"${parent1}_sigs"),
-        s"mergeShards: both $parent0 and $parent1 must exist " +
-          "(no _mergedone marker — nothing to resume)")
-      Seq(parent0, parent1).foreach(minhashFoldTombstones(spark, _))
-      boundary(0)
-      val buckets = BucketedJoin.mergedBucketCount(spark,
-        s"${parent0}_sigs", s"${parent1}_sigs")
-      BucketedJoin.writeBucketed(
-        spark.table(s"${parent0}_sigs")
-          .unionByName(spark.table(s"${parent1}_sigs")),
-        s"${merged}_sigs", "id", buckets)
-      BucketedJoin.writeBucketed(
-        spark.table(s"${parent0}_bands")
-          .unionByName(spark.table(s"${parent1}_bands")),
-        s"${merged}_bands", "bandkey", buckets)
-      Tombstones.clear(spark, merged)
-      boundary(1)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(2)
-    }
-    for (p <- Seq(parent0, parent1); s <- Seq("_sigs", "_bands");
-         t = p + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Seq(parent0, parent1).foreach(Tombstones.clear(spark, _))
-    boundary(3)
-    BucketedJoin.dropWithLocation(spark, marker)
+                                     merged: String, failAt: Int): Unit =
+    Sharding.merge(spark, reshard, parent0, parent1, merged, failAt)
+
+  /** The minhash admission family's reshard layout: signature and band
+    * rows are per-doc; tombstones fold before a split or merge. */
+  private[graft] object reshard extends Sharding.Family("_sigs", Seq(
+      Sharding.Part("_sigs", "id", Sharding.Rows("id")),
+      Sharding.Part("_bands", "bandkey", Sharding.Rows("id")))) {
+    override def prepare(spark: org.apache.spark.sql.SparkSession,
+                         table: String): Unit =
+      minhashFoldTombstones(spark, table)
   }
 
   /** Physically fold [[Tombstones]] into a [[minhashIndexBuild]] index:

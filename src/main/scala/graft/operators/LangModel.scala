@@ -498,25 +498,18 @@ object LangModel {
   }
 
   /** Grow one LM shard into two doc-disjoint children under the
-    * hierarchical router ([[Sharding.staysInFirstChild]] — the
-    * [[Retrieval.splitShard]] reshard contract applied to the LM
-    * family). The bigram/vocab tables are COUNT AGGREGATES with no doc
-    * attribution — a doc-routed split cannot be derived from the index
-    * alone — so the split re-trains the children from `docs`, which
-    * MUST be exactly the documents the parent absorbed (minus removals),
-    * with identical text: the corpus is the system of record, and the
-    * cost is O(parent shard's corpus), other shards untouched. Count
+    * hierarchical router ([[Sharding.staysInFirstChild]]) through the
+    * one reshard protocol and its crash contract ([[Sharding]]). The
+    * bigram/vocab tables are COUNT AGGREGATES with no doc attribution —
+    * a doc-routed split cannot be derived from the index alone — so the
+    * split re-trains the children from `docs`, which MUST be exactly
+    * the documents the parent absorbed (minus removals), with identical
+    * text: the corpus is the system of record, and the cost is
+    * O(parent shard's corpus), other shards untouched. Count
     * additivity makes the children's union the parent's counts exactly,
     * so sharded scoring over the family with the parent replaced by its
     * children is numerically IDENTICAL (gated at t41); takedown keeps
     * working because each doc's counts still live in exactly one child.
-    *
-    * Crash contract: the [[Retrieval.splitShard]] build-then-retire
-    * shape — children train completely (idempotent overwrites), a
-    * `<parent>_splitdone` marker lands, then the parent retires; a
-    * re-run resumes from the marker and never rebuilds from a
-    * half-dropped parent. Serve the parent family until the call
-    * returns; re-run after a crash before serving either family.
     */
   def splitShard(spark: SparkSession, parent: String,
                  child0: String, child1: String,
@@ -525,48 +518,14 @@ object LangModel {
     splitShardImpl(spark, parent, child0, child1, docs, idCol, textCol,
       shardIndex, nShards, failAt = -1)
 
-  /** [[splitShard]] with the [[Retrieval.InjectedSplitCrash]] chaos
-    * seam — boundaries 0 (entry heal), 1 (child0 trained), 2 (child1
-    * trained), 3 (marker landed), 4 (parent retired). */
+  /** [[splitShard]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def splitShardImpl(spark: SparkSession, parent: String,
                                     child0: String, child1: String,
                                     docs: DataFrame, idCol: String,
                                     textCol: String, shardIndex: Int,
-                                    nShards: Int, failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    require(nShards >= 1 && shardIndex >= 0 && shardIndex < nShards,
-      s"splitShard: shardIndex $shardIndex out of range for $nShards shards")
-    GraftFunctions.ensureRegistered(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${parent}_splitdone"
-    if (!exists(marker)) {
-      require(exists(parent),
-        s"splitShard: $parent does not exist (and no _splitdone marker " +
-          "— nothing to resume)")
-      Seq(parent, s"${parent}_vocab", s"${parent}_stats", s"${parent}_gen")
-        .foreach(BucketedJoin.recoverCompacted(spark, _))
-      boundary(0)
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(parent))
-        .bucketSpec.map(_.numBuckets).getOrElse(8)
-      val first = Sharding.staysInFirstChild(col(idCol), shardIndex,
-        nShards)
-      train(docs.filter(first), idCol, textCol, child0, buckets)
-      boundary(1)
-      train(docs.filter(!first), idCol, textCol, child1, buckets)
-      boundary(2)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(3)
-    }
-    for (s <- Seq("", "_vocab", "_stats", "_gen"); t = parent + s
-         if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    boundary(4)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+                                    nShards: Int, failAt: Int): Unit =
+    Sharding.split(spark, new Reshard(Some((docs, idCol, textCol))), parent,
+      child0, child1, shardIndex, nShards, failAt)
 
   /** The inverse of [[splitShard]] — fold two doc-disjoint LM shards
     * into one ([[Retrieval.mergeShards]]' shrink path for the LM
@@ -578,60 +537,48 @@ object LangModel {
     * count paid at merge time; the generation ledger starts fresh (a
     * new table is a new generation — stats caches refold on first
     * use). Sharded scoring over the family with the parents replaced
-    * by the merge is numerically identical. Same
-    * build → marker → retire crash protocol.
+    * by the merge is numerically identical.
     */
   def mergeShards(spark: SparkSession, parent0: String, parent1: String,
                   merged: String): Unit =
     mergeShardsImpl(spark, parent0, parent1, merged, failAt = -1)
 
-  /** [[mergeShards]] with the [[Retrieval.InjectedSplitCrash]] seam —
-    * boundaries 0 (entry heal), 1 (merged tables built), 2 (marker),
-    * 3 (parents retired). */
+  /** [[mergeShards]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def mergeShardsImpl(spark: SparkSession, parent0: String,
                                      parent1: String, merged: String,
-                                     failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    GraftFunctions.ensureRegistered(spark)
-    GraftFunctions.unionGuard(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${merged}_mergedone"
-    if (!exists(marker)) {
-      require(exists(parent0) && exists(parent1),
-        s"mergeShards: both $parent0 and $parent1 must exist " +
-          "(no _mergedone marker — nothing to resume)")
-      for (p <- Seq(parent0, parent1);
-           s <- Seq("", "_vocab", "_stats", "_gen"))
-        BucketedJoin.recoverCompacted(spark, p + s)
-      boundary(0)
-      val buckets = BucketedJoin.mergedBucketCount(spark, parent0, parent1)
+                                     failAt: Int): Unit =
+    Sharding.merge(spark, reshard, parent0, parent1, merged, failAt)
+
+  /** The LM family's reshard layout; `corpus` = (the parent's absorbed
+    * docs, idCol, textCol) — only a split needs it (see
+    * [[splitShard]]). */
+  private[graft] final class Reshard(
+      corpus: Option[(DataFrame, String, String)])
+      extends Sharding.Family("", Seq(
+        Sharding.Part("", "w1", Sharding.Counts),
+        Sharding.Part("_vocab", "w", Sharding.Counts),
+        Sharding.Part("_stats", "v"), Sharding.Part("_gen", "g"))) {
+    override def buildChild(spark: SparkSession, parent: String,
+                            child: String, keep: String => Column,
+                            buckets: Int): Unit = {
+      val (docs, idCol, textCol) = corpus.getOrElse(throw
+        new IllegalArgumentException("an LM split re-trains the children " +
+          "from the parent's absorbed corpus (docs, idCol, textCol)"))
+      train(docs.filter(keep(idCol)), idCol, textCol, child, buckets)
+    }
+    override def derive(spark: SparkSession, table: String,
+                        parents: Seq[String], buckets: Int): Unit = {
       BucketedJoin.writeBucketed(
-        spark.table(parent0).unionByName(spark.table(parent1)),
-        merged, "w1", buckets)
-      BucketedJoin.writeBucketed(
-        spark.table(s"${parent0}_vocab")
-          .unionByName(spark.table(s"${parent1}_vocab")),
-        s"${merged}_vocab", "w", buckets)
-      BucketedJoin.writeBucketed(
-        spark.table(s"${merged}_vocab")
+        spark.table(s"${table}_vocab")
           .groupBy("w").agg(sum("c").as("c")).filter(col("c") > 0)
           .agg(count(lit(1)).as("v")).withColumn("epoch", lit(-1L)),
-        s"${merged}_stats", "v", 1)
-      BucketedJoin.writeBucketed(genRow(spark, -1L), s"${merged}_gen",
-        "g", 1)
-      boundary(1)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(2)
+        s"${table}_stats", "v", 1)
+      BucketedJoin.writeBucketed(genRow(spark, -1L), s"${table}_gen", "g", 1)
     }
-    for (p <- Seq(parent0, parent1);
-         s <- Seq("", "_vocab", "_stats", "_gen"); t = p + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    boundary(3)
-    BucketedJoin.dropWithLocation(spark, marker)
   }
+
+  /** The LM layout for merges and liveness probes. */
+  private[graft] val reshard: Reshard = new Reshard(None)
 
   /** The two-step scan-narrowing gate shared by [[score]] and
     * [[scoreSharded]] (see [[score]]'s SCAN NARROWING note): None ⇒

@@ -1047,23 +1047,23 @@ object ProductQuant {
   /** Grow one IVFPQ shard into two doc-disjoint children —
     * [[Similarity.splitShard]]'s contract extended to the quantized
     * family: code lists and the raw-vector table rehash by `nid`,
-    * while the coarse quantizer, PQ codebook, meta, and drift
-    * reference (`_cents`/`_pq`/`_meta`/`_stats`) copy verbatim (the
-    * frozen-quantizer contract [[ivfPqAppend]] proves; existing codes
-    * stay byte-valid because they were encoded against exactly these
-    * centroids and codebook — nothing re-encodes). Serving the family
-    * with the parent replaced by its children probes the SAME lists
-    * with the SAME ADC estimates; the one shard-count-sensitive stage
-    * is the per-shard `refineK` TRUNCATION, which RELAXES across a
-    * split (each parent refine candidate ranks at least as high inside
-    * its own child, so the children's union refine pool ⊇ the
-    * parent's) — post-split results are row-identical whenever the
-    * refine pool covers the contenders (spec-pinned at a covering
-    * refineK) and can only IMPROVE recall otherwise, never degrade.
-    * Tombstoned rows drop during the rehash. Same
-    * build → marker → retire crash contract and chaos boundaries as
-    * [[Similarity.splitShardImpl]]; a parent mid-[[ivfPqRetrain]]
-    * (live `_vecs_retrainsrc`) is rejected loudly.
+    * while the coarse quantizer, PQ codebook, meta, drift reference and
+    * OPQ rotation (`_cents`/`_pq`/`_meta`/`_stats`/`_rot`) copy
+    * verbatim (the frozen-quantizer contract [[ivfPqAppend]] proves;
+    * existing codes stay byte-valid because they were encoded against
+    * exactly these centroids, codebook and rotation — nothing
+    * re-encodes). Serving the family with the parent replaced by its
+    * children probes the SAME lists with the SAME ADC estimates; the
+    * one shard-count-sensitive stage is the per-shard `refineK`
+    * TRUNCATION, which RELAXES across a split (each parent refine
+    * candidate ranks at least as high inside its own child, so the
+    * children's union refine pool ⊇ the parent's) — post-split results
+    * are row-identical whenever the refine pool covers the contenders
+    * (spec-pinned at a covering refineK) and can only IMPROVE recall
+    * otherwise, never degrade. Tombstoned rows drop during the rehash.
+    * The one reshard protocol and crash contract ([[Sharding]]); a
+    * parent mid-[[ivfPqRetrain]] (live `_vecs_retrainsrc`) is rejected
+    * loudly.
     */
   def splitShard(spark: SparkSession, parent: String,
                  child0: String, child1: String,
@@ -1075,134 +1075,60 @@ object ProductQuant {
   private[graft] def splitShardImpl(spark: SparkSession, parent: String,
                                     child0: String, child1: String,
                                     shardIndex: Int, nShards: Int,
-                                    failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    require(nShards >= 1 && shardIndex >= 0 && shardIndex < nShards,
-      s"splitShard: shardIndex $shardIndex out of range for $nShards shards")
-    GraftFunctions.ensureRegistered(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    require(!exists(s"${parent}_vecs_retrainsrc"),
-      s"splitShard: $parent has a live retrain rename-aside " +
-        s"(${parent}_vecs_retrainsrc) — finish or heal the retrain first")
-    val marker = s"${parent}_splitdone"
-    if (!exists(marker)) {
-      require(exists(parent),
-        s"splitShard: $parent does not exist (and no _splitdone marker " +
-          "— nothing to resume)")
-      Seq(parent, s"${parent}_vecs", s"${parent}_cents", s"${parent}_pq",
-          s"${parent}_meta", s"${parent}_stats", s"${parent}_rot")
-        .filter(exists).foreach(BucketedJoin.recoverCompacted(spark, _))
-      boundary(0)
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(parent))
-        .bucketSpec.map(_.numBuckets).getOrElse(8)
-      val first = Sharding.staysInFirstChild(col("nid"), shardIndex,
-        nShards)
-      def build(child: String, pred: org.apache.spark.sql.Column): Unit = {
-        BucketedJoin.writeBucketed(
-          Tombstones.filterOut(spark, parent, spark.table(parent), "nid")
-            .filter(pred),
-          child, "cid", buckets)
-        BucketedJoin.writeBucketed(
-          Tombstones.filterOut(spark, parent,
-            spark.table(s"${parent}_vecs"), "nid").filter(pred),
-          s"${child}_vecs", "nid", buckets)
-        BucketedJoin.writeBucketed(spark.table(s"${parent}_cents"),
-          s"${child}_cents", "cid", 1)
-        BucketedJoin.writeBucketed(spark.table(s"${parent}_pq"),
-          s"${child}_pq", "sub", 1)
-        BucketedJoin.writeBucketed(spark.table(s"${parent}_meta"),
-          s"${child}_meta", "m", 1)
-        if (exists(s"${parent}_stats"))
-          BucketedJoin.writeBucketed(spark.table(s"${parent}_stats"),
-            s"${child}_stats", "built_n", 1)
-        // the OPQ rotation copies verbatim like the quantizer it
-        // parameterizes: children's codes were encoded in its space
-        if (exists(s"${parent}_rot"))
-          BucketedJoin.writeBucketed(spark.table(s"${parent}_rot"),
-            s"${child}_rot", "dim", 1)
-        Tombstones.clear(spark, child)
-      }
-      build(child0, first)
-      boundary(1)
-      build(child1, !first)
-      boundary(2)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(3)
-    }
-    for (s <- Seq("", "_vecs", "_cents", "_pq", "_meta", "_stats", "_rot");
-         t = parent + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Tombstones.clear(spark, parent)
-    boundary(4)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+                                    failAt: Int): Unit =
+    Sharding.split(spark, reshard, parent, child0, child1, shardIndex,
+      nShards, failAt)
 
   /** Merge two IVFPQ shards by RETRAINING on the union of their raw
     * vectors ([[Similarity.mergeIvfShards]]' contract for the
     * quantized family: coarse centroids AND codebooks differ across
     * shards, so row unions cannot mix; the id-bucketed `_vecs` tables
-    * are the full raw copies and the merged index trains whole —
-    * `m` taken from `parent0` unless overridden). O(merged corpus),
-    * maintenance-cadence; marker-gated retire, re-run converges.
+    * are the full raw copies and the merged index trains whole at the
+    * build defaults, `m` and the OPQ mode taken from `parent0`).
+    * O(merged corpus), maintenance-cadence.
     */
   def mergeShards(spark: SparkSession, parent0: String, parent1: String,
-                  merged: String, m: Int = 0, nassign: Int = 2,
-                  seed: Long = 42L, pqIters: Int = 3): Unit =
-    mergeShardsImpl(spark, parent0, parent1, merged, m, nassign, seed,
-      pqIters, failAt = -1)
+                  merged: String): Unit =
+    mergeShardsImpl(spark, parent0, parent1, merged, failAt = -1)
 
-  /** [[mergeShards]] with the [[Retrieval.InjectedSplitCrash]] seam —
-    * boundaries 0 (entry checks), 1 (merged index retrained), 2 (marker
-    * landed), 3 (parents retired, before the marker clears). */
+  /** [[mergeShards]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def mergeShardsImpl(spark: SparkSession, parent0: String,
                                      parent1: String, merged: String,
-                                     m: Int, nassign: Int, seed: Long,
-                                     pqIters: Int, failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    GraftFunctions.ensureRegistered(spark)
-    graft.functions.GraftFunctions.unionGuard(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${merged}_mergedone"
-    if (!exists(marker)) {
-      require(exists(s"${parent0}_vecs") && exists(s"${parent1}_vecs"),
-        s"mergeShards: both $parent0 and $parent1 must exist " +
-          "(no _mergedone marker — nothing to resume)")
-      boundary(0)
-      val mEff = if (m > 0) m
-                 else spark.table(s"${parent0}_meta").head().getInt(0)
-      val buckets = BucketedJoin.mergedBucketCount(spark,
-        s"${parent0}_vecs", s"${parent1}_vecs")
-      val corpus = Seq(parent0, parent1).map { p =>
+                                     failAt: Int): Unit =
+    Sharding.merge(spark, reshard, parent0, parent1, merged, failAt)
+
+  /** The IVFPQ family's reshard layout: code lists and raw vectors
+    * split by `nid`, the quantizer tables copy; a merge retrains on the
+    * union ([[mergeShards]]). */
+  private[graft] object reshard extends Sharding.Family("", Seq(
+      Sharding.Part("", "cid", Sharding.Rows("nid")),
+      Sharding.Part("_vecs", "nid", Sharding.Rows("nid")),
+      Sharding.Part("_cents", "cid", Sharding.Copy),
+      Sharding.Part("_pq", "sub", Sharding.Copy),
+      Sharding.Part("_meta", "m", Sharding.Copy),
+      Sharding.Part("_stats", "built_n", Sharding.Copy),
+      Sharding.Part("_rot", "dim", Sharding.Copy))) {
+    import Sharding.exists
+    override def prepare(spark: SparkSession, table: String): Unit =
+      require(!exists(spark, s"${table}_vecs_retrainsrc"),
+        s"$table has a live retrain rename-aside " +
+          s"(${table}_vecs_retrainsrc) — finish or heal the retrain first")
+    override def buildMerged(spark: SparkSession, parents: Seq[String],
+                             merged: String, buckets: Int): Unit = {
+      val corpus = parents.map { p =>
         Tombstones.filterOut(spark, p, spark.table(s"${p}_vecs"), "nid")
       }.reduce(_.unionByName(_))
       // retrain-on-union keeps the family's quantization mode: the
       // merge is OPQ iff parent0 is (a mode mismatch gets the
       // mergedBucketCount treatment — proceed, but say so)
-      val opqEff = exists(s"${parent0}_rot")
-      if (opqEff != exists(s"${parent1}_rot"))
-        System.err.println(s"[graft] mergeShards: $parent0 and " +
-          s"$parent1 disagree on OPQ rotation — merging with " +
-          s"parent0's mode (opq=$opqEff)")
-      ivfPqBuild(corpus, "nid", "nvec", merged, m = mEff,
-        nassign = nassign, buckets = buckets, seed = seed,
-        pqIters = pqIters, opq = opqEff)
-      boundary(1)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(2)
+      val opq = exists(spark, s"${parents.head}_rot")
+      if (parents.exists(p => exists(spark, s"${p}_rot") != opq))
+        System.err.println(s"[graft] mergeShards: " +
+          s"${parents.mkString(" and ")} disagree on OPQ rotation — " +
+          s"merging with ${parents.head}'s mode (opq=$opq)")
+      ivfPqBuild(corpus, "nid", "nvec", merged,
+        m = spark.table(s"${parents.head}_meta").head().getInt(0),
+        buckets = buckets, opq = opq)
     }
-    for (p <- Seq(parent0, parent1);
-         s <- Seq("", "_vecs", "_cents", "_pq", "_meta", "_stats", "_rot");
-         t = p + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Seq(parent0, parent1).foreach(Tombstones.clear(spark, _))
-    boundary(3)
-    BucketedJoin.dropWithLocation(spark, marker)
   }
 }

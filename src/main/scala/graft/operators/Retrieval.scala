@@ -72,7 +72,7 @@ object Retrieval {
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val postings = tf.join(dl, Seq("doc_id"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-    val dfDelta = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val dfDelta = dictOf(tf)
     val statsDelta = dl.agg(count(lit(1)).as("n_docs"),
       coalesce(sum("dl"), lit(0L)).as("dl_sum"))
     (postings, dfDelta, statsDelta)
@@ -165,9 +165,7 @@ object Retrieval {
         expr(s"CAST(doc_id AS BIGINT) div $blockWidth"))
       BucketedJoin.writeBucketed(withBlk, table, "term", buckets,
         sortCols = Seq("blk", "doc_id"), options = blockMaxWriteOptions)
-      BucketedJoin.writeBucketed(
-        withBlk.groupBy("term", "blk")
-          .agg(max("tf").as("max_tf"), min("dl").as("min_dl")),
+      BucketedJoin.writeBucketed(blkBounds(withBlk),
         s"${table}_blkmax", "term", buckets)
       import spark.implicits._
       BucketedJoin.writeBucketed(Seq(blockWidth).toDF("block_w"),
@@ -316,8 +314,6 @@ object Retrieval {
     val blkW = blockMeta(spark, table)
     val postings = blkW.map(w => postings0.withColumn("blk",
       expr(s"CAST(doc_id AS BIGINT) div $w"))).getOrElse(postings0)
-    def blkDelta(p: DataFrame): DataFrame = p.groupBy("term", "blk")
-      .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
     if (repair && tableExists(spark, table)) {
       val missing = postings.join(
         spark.table(table).select("term", "doc_id"),
@@ -327,13 +323,13 @@ object Retrieval {
         // dictionary below) — recompute the bounds from the one
         // authoritative table; exact, O(index), crash-recovery only
         BucketedJoin.rewriteBucketed(spark, s"${table}_blkmax", "term") {
-          _ => blkDelta(spark.table(table).unionByName(missing))
+          _ => blkBounds(spark.table(table).unionByName(missing))
         }
       BucketedJoin.appendBucketed(missing, table, "term")
       rebuildDerived(spark, table)
     } else {
       if (blkW.isDefined)
-        BucketedJoin.appendBucketed(blkDelta(postings),
+        BucketedJoin.appendBucketed(blkBounds(postings),
           s"${table}_blkmax", "term")
       BucketedJoin.appendBucketed(postings, table, "term",
         options = if (blkW.isDefined) blockMaxWriteOptions else Map.empty)
@@ -365,14 +361,29 @@ object Retrieval {
     */
   private def rebuildDerived(spark: SparkSession, table: String): Unit = {
     BucketedJoin.rewriteBucketed(spark, s"${table}_terms", "term") { _ =>
-      spark.table(table).groupBy("term").agg(count(lit(1)).as("df"))
+      dictOf(spark.table(table))
     }
     BucketedJoin.rewriteBucketed(spark, s"${table}_stats", "n_docs") { _ =>
-      spark.table(table).select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0L)).as("dl_sum"))
+      statsOf(spark.table(table))
     }
   }
+
+  /** The derived rows of a postings frame: the dictionary (df = posting
+    * rows per term), the one-row stats (n_docs, dl_sum over distinct
+    * (doc, dl)) and the block-max bounds (max tf, min dl per
+    * (term, blk)) — shared by the build, append, derived rebuild,
+    * tombstone fold and reshard paths. */
+  private def dictOf(postings: DataFrame): DataFrame =
+    postings.groupBy("term").agg(count(lit(1)).as("df"))
+
+  private def statsOf(postings: DataFrame): DataFrame =
+    postings.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum("dl"), lit(0L)).as("dl_sum"))
+
+  private def blkBounds(postings: DataFrame): DataFrame =
+    postings.groupBy("term", "blk")
+      .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
 
   /** Delete documents from the index: records their ids in the
     * [[Tombstones]] set — nothing else is written, which is the whole
@@ -440,13 +451,11 @@ object Retrieval {
         def retained() = Tombstones.filterOut(spark, table,
           spark.table(table), "doc_id")
         BucketedJoin.rewriteBucketed(spark, s"${table}_terms", "term") { _ =>
-          retained().groupBy("term").agg(count(lit(1)).as("df"))
+          dictOf(retained())
         }
         boundary(1)
         BucketedJoin.rewriteBucketed(spark, s"${table}_stats", "n_docs") { _ =>
-          retained().select("doc_id", "dl").distinct()
-            .agg(count(lit(1)).as("n_docs"),
-              coalesce(sum("dl"), lit(0L)).as("dl_sum"))
+          statsOf(retained())
         }
         boundary(2)
         BucketedJoin.rewriteBucketed(spark, table, "term") { df =>
@@ -2581,39 +2590,21 @@ object Retrieval {
     (startsInput, candFilter, bcast)
   }
 
-  /** Grow one BM25 shard into two: rehash the parent's index rows into
-    * doc-disjoint children under the hierarchical router
-    * ([[Sharding.staysInFirstChild]] — splitting shard `shardIndex` of
-    * an `nShards`-family puts each doc at index `shardIndex` or
-    * `shardIndex + nShards` of the doubled family), recompute each
-    * child's derived dictionary/stats from its own postings, and retire
-    * the parent. Cost is O(parent shard): the OTHER shards of the
-    * family never move — the operational migration story for a
-    * deployment whose per-shard index outgrew its box (splitting all S
-    * shards yields exactly the canonical 2S family
-    * [[graft.streaming.RefreshLoop.shardOf]] routes to). Serving the
-    * family with the parent replaced by the two children is EXACTLY
-    * the pre-split ranking ([[bm25ShardedQuery]] folds global stats
-    * regardless of which shard holds which doc — gated at t40); any
-    * parent built from a doc-disjoint slice splits correctly, router-
-    * routed or not.
-    *
-    * Tombstones fold FIRST ([[bm25FoldTombstones]]), so the children
-    * are born tombstone-free and their derived tables are pure
-    * recomputations of their postings.
-    *
-    * Crash contract (the rename-aside discipline, adapted to a
-    * build-then-retire shape): both children build COMPLETELY from the
-    * live parent (idempotent overwrites — a crash mid-build leaves the
-    * parent serving and the re-run rebuilds), then a
-    * `<parent>_splitdone` marker lands, and only then does the parent
-    * retire. A re-run after ANY kill first consults the marker: present
-    * ⇒ the children are complete and only the retire resumes (the
-    * parent may be half-dropped — rebuilding from it would corrupt the
-    * children, which is exactly what the marker exists to prevent);
-    * absent ⇒ rebuild from the intact parent. Serve the PARENT family
-    * until splitShard returns; after a crash, re-run it before serving
-    * either family.
+  /** Grow one BM25 shard into two doc-disjoint children under the
+    * hierarchical router ([[Sharding.staysInFirstChild]] — splitting
+    * shard `shardIndex` of an `nShards`-family puts each doc at index
+    * `shardIndex` or `shardIndex + nShards` of the doubled family) and
+    * retire the parent, through the one reshard protocol and its crash
+    * contract ([[Sharding]]). Cost is O(parent shard): the OTHER shards
+    * never move, and splitting all S shards yields exactly the
+    * canonical 2S family [[graft.streaming.RefreshLoop.shardOf]] routes
+    * to. Serving the family with the parent replaced by the two
+    * children is EXACTLY the pre-split ranking ([[bm25ShardedQuery]]
+    * folds global stats regardless of which shard holds which doc —
+    * gated at t40); any parent built from a doc-disjoint slice splits
+    * correctly, router-routed or not. Tombstones fold first, so the
+    * children are born tombstone-free; their layout is the parent's
+    * ([[reshard]]).
     */
   def splitShard(spark: SparkSession, parent: String,
                  child0: String, child1: String,
@@ -2621,152 +2612,79 @@ object Retrieval {
     splitShardImpl(spark, parent, child0, child1, shardIndex, nShards,
       failAt = -1)
 
-  /** Crash injected by the split test seam ([[splitShardImpl]] and the
-    * LangModel/Similarity/ProductQuant twins). */
+  /** Crash injected by the reshard test seam ([[Sharding]]'s
+    * boundaries, reached through every family's `…Impl` twin). */
   private[graft] final class InjectedSplitCrash(val at: Int)
     extends RuntimeException(s"injected split crash after boundary $at")
 
-  /** [[splitShard]] with a crash seam: `failAt` ≥ 0 throws
-    * [[InjectedSplitCrash]] AFTER boundary 0 (tombstone fold), 1
-    * (child0 built), 2 (child1 built), 3 (marker landed), 4 (parent
-    * retired, before the marker clears). The chaos spec drives every
-    * boundary and asserts a re-run converges to the identical split.
-    */
+  /** [[splitShard]] with the [[InjectedSplitCrash]] seam. */
   private[graft] def splitShardImpl(spark: SparkSession, parent: String,
                                     child0: String, child1: String,
                                     shardIndex: Int, nShards: Int,
-                                    failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new InjectedSplitCrash(i)
-    require(nShards >= 1 && shardIndex >= 0 && shardIndex < nShards,
-      s"splitShard: shardIndex $shardIndex out of range for $nShards shards")
-    GraftFunctions.ensureRegistered(spark)
-    val marker = s"${parent}_splitdone"
-    if (!tableExists(spark, marker)) {
-      require(tableExists(spark, parent),
-        s"splitShard: $parent does not exist (and no _splitdone marker " +
-          "— nothing to resume)")
-      healFold(spark, parent)
-      bm25FoldTombstones(spark, parent)
-      boundary(0)
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(parent))
-        .bucketSpec.map(_.numBuckets).getOrElse(8)
-      val first = Sharding.staysInFirstChild(col("doc_id"), shardIndex,
-        nShards)
-      def build(child: String, pred: org.apache.spark.sql.Column): Unit = {
-        BucketedJoin.writeBucketed(spark.table(parent).filter(pred),
-          child, "term", buckets)
-        // derived tables recompute from the WRITTEN child postings —
-        // one consistent source, the rebuildDerived exprs verbatim
-        val cp = spark.table(child)
-        BucketedJoin.writeBucketed(
-          cp.groupBy("term").agg(count(lit(1)).as("df")),
-          s"${child}_terms", "term", buckets)
-        BucketedJoin.writeBucketed(
-          cp.select("doc_id", "dl").distinct()
-            .agg(count(lit(1)).as("n_docs"),
-              coalesce(sum("dl"), lit(0L)).as("dl_sum")),
-          s"${child}_stats", "n_docs", 1)
-        if (tableExists(spark, s"${parent}_pos"))
-          BucketedJoin.writeBucketed(
-            spark.table(s"${parent}_pos").filter(pred),
-            s"${child}_pos", "term", buckets)
-        Tombstones.clear(spark, child)
-      }
-      build(child0, first)
-      boundary(1)
-      build(child1, !first)
-      boundary(2)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(3)
-    }
-    for (s <- Seq("", "_terms", "_stats", "_pos"); t = parent + s
-         if tableExists(spark, t))
-      BucketedJoin.dropWithLocation(spark, t)
-    // retire the parent's tombstone set too (the Dedup/Similarity split
-    // discipline): a tombstone added between the pre-build fold and this
-    // retire would otherwise linger under the dead table name
-    Tombstones.clear(spark, parent)
-    boundary(4)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+                                    failAt: Int): Unit =
+    Sharding.split(spark, reshard, parent, child0, child1, shardIndex,
+      nShards, failAt)
 
   /** The inverse of [[splitShard]] — fold two doc-disjoint BM25 shards
     * into one (the SHRINK path: after takedowns leave a family's
     * shards underfull, merging halves the per-query leg count and the
-    * open-file surface). Both parents' tombstones fold first, then the
-    * merged postings/positional tables are the row UNIONS rebucketed
-    * and the derived tables recompute from the merged postings —
-    * doc-disjointness makes the union exact, and sharded serving over
-    * the family with the parents replaced by the merged table is the
-    * identical ranking (global stats are placement-blind; the t40
-    * argument run backwards). Positions merge iff BOTH parents carry
-    * them (a mixed pair is rejected loudly — a silently positional-less
-    * merge would break phrase serving). Same build → marker → retire
-    * crash protocol as [[splitShard]] (marker on `merged`; a re-run
-    * resumes, never rebuilds from half-dropped parents).
+    * open-file surface). Both parents' tombstones fold first; postings
+    * and positions are the row UNIONS, the derived tables recompute
+    * from the merged postings — doc-disjointness makes the union
+    * exact, and serving over the family with the parents replaced by
+    * the merged table is the identical ranking (global stats are
+    * placement-blind; the t40 argument run backwards). A pair that
+    * disagrees on positions is rejected loudly (a silently
+    * positional-less merge would break phrase serving).
     */
   def mergeShards(spark: SparkSession, parent0: String, parent1: String,
                   merged: String): Unit =
     mergeShardsImpl(spark, parent0, parent1, merged, failAt = -1)
 
-  /** [[mergeShards]] with the [[InjectedSplitCrash]] seam — boundaries
-    * 0 (tombstone folds), 1 (merged tables built), 2 (marker), 3
-    * (parents retired, before the marker clears). */
+  /** [[mergeShards]] with the [[InjectedSplitCrash]] seam. */
   private[graft] def mergeShardsImpl(spark: SparkSession, parent0: String,
                                      parent1: String, merged: String,
-                                     failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new InjectedSplitCrash(i)
-    GraftFunctions.ensureRegistered(spark)
-    GraftFunctions.unionGuard(spark)
-    val marker = s"${merged}_mergedone"
-    if (!tableExists(spark, marker)) {
-      require(tableExists(spark, parent0) && tableExists(spark, parent1),
-        s"mergeShards: both $parent0 and $parent1 must exist " +
-          "(no _mergedone marker — nothing to resume)")
-      val pos0 = tableExists(spark, s"${parent0}_pos")
-      val pos1 = tableExists(spark, s"${parent1}_pos")
-      require(pos0 == pos1,
-        s"mergeShards: $parent0 and $parent1 disagree on positional " +
-          "tables — merging would silently drop phrase serving for one " +
-          "side's docs; rebuild the positional side or split the other")
-      Seq(parent0, parent1).foreach { p =>
-        healFold(spark, p); bm25FoldTombstones(spark, p)
+                                     failAt: Int): Unit =
+    Sharding.merge(spark, reshard, parent0, parent1, merged, failAt)
+
+  /** The BM25 family's reshard layout. Postings and positions split by
+    * doc and merge by union in their source's layout (blk-sorted
+    * postings and doc-sorted positions keep their fine pages); the
+    * dictionary and stats recompute from the written postings. A
+    * block-max source keeps its layout — `_blkmax` recomputed from the
+    * target's postings, `_blkmeta` carried over — when every source
+    * shares one block width; otherwise (a merge of mixed layouts) the
+    * target is the plain layout, `blk` dropped.
+    */
+  private[graft] object reshard extends Sharding.Family("", Seq(
+      Sharding.Part("", "term", Sharding.Rows("doc_id"), blockMaxWriteOptions),
+      Sharding.Part("_terms", "term"), Sharding.Part("_stats", "n_docs"),
+      Sharding.Part("_pos", "term", Sharding.Rows("doc_id"),
+        blockMaxWriteOptions),
+      Sharding.Part("_blkmax", "term"), Sharding.Part("_blkmeta", "block_w"))) {
+    override def prepare(spark: SparkSession, table: String): Unit =
+      bm25FoldTombstones(spark, table)
+    private def width(spark: SparkSession, parents: Seq[String]) =
+      parents.map(blockMeta(spark, _)).distinct match {
+        case Seq(w) => w
+        case _ => None
       }
-      boundary(0)
-      val buckets = BucketedJoin.mergedBucketCount(spark, parent0, parent1)
-      BucketedJoin.writeBucketed(
-        spark.table(parent0).unionByName(spark.table(parent1)),
-        merged, "term", buckets)
-      val mp = spark.table(merged)
-      BucketedJoin.writeBucketed(
-        mp.groupBy("term").agg(count(lit(1)).as("df")),
-        s"${merged}_terms", "term", buckets)
-      BucketedJoin.writeBucketed(
-        mp.select("doc_id", "dl").distinct()
-          .agg(count(lit(1)).as("n_docs"),
-            coalesce(sum("dl"), lit(0L)).as("dl_sum")),
-        s"${merged}_stats", "n_docs", 1)
-      if (pos0)
-        BucketedJoin.writeBucketed(
-          spark.table(s"${parent0}_pos")
-            .unionByName(spark.table(s"${parent1}_pos")),
-          s"${merged}_pos", "term", buckets)
-      Tombstones.clear(spark, merged)
-      boundary(1)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(2)
+    override def rows(spark: SparkSession, parents: Seq[String],
+                      df: DataFrame): DataFrame =
+      if (width(spark, parents).isDefined) df else df.drop("blk")
+    override def derive(spark: SparkSession, table: String,
+                        parents: Seq[String], buckets: Int): Unit = {
+      val p = spark.table(table)
+      BucketedJoin.writeBucketed(dictOf(p), s"${table}_terms", "term",
+        buckets)
+      BucketedJoin.writeBucketed(statsOf(p), s"${table}_stats", "n_docs", 1)
+      width(spark, parents).foreach { w =>
+        BucketedJoin.writeBucketed(blkBounds(p), s"${table}_blkmax", "term",
+          buckets)
+        import spark.implicits._
+        BucketedJoin.writeBucketed(Seq(w).toDF("block_w"),
+          s"${table}_blkmeta", "block_w", 1)
+      }
     }
-    for (p <- Seq(parent0, parent1); s <- Seq("", "_terms", "_stats", "_pos");
-         t = p + s if tableExists(spark, t))
-      BucketedJoin.dropWithLocation(spark, t)
-    // clear the retired parents' tombstone sets (see splitShardImpl)
-    Seq(parent0, parent1).foreach(Tombstones.clear(spark, _))
-    boundary(3)
-    BucketedJoin.dropWithLocation(spark, marker)
   }
 }

@@ -613,15 +613,15 @@ object Similarity {
   }
 
   /** Grow one IVF shard into two doc-disjoint children under the
-    * hierarchical router ([[Sharding.staysInFirstChild]] — the
-    * [[Retrieval.splitShard]] reshard contract applied to the vector
-    * family). The inverted-list rows rehash by `nid` into the
-    * children; both children REUSE the parent's coarse quantizer
-    * (`_cents` copied verbatim — the frozen-quantizer contract
-    * [[ivfAppend]] already proves) and inherit its `_stats` drift
-    * reference, so the standing drift watch keeps firing against the
-    * same baseline and the eventual cure is the usual per-child
-    * [[ivfRetrain]]. Cost O(parent shard); other shards untouched.
+    * hierarchical router ([[Sharding.staysInFirstChild]]) through the
+    * one reshard protocol and its crash contract ([[Sharding]]). The
+    * inverted-list rows rehash by `nid` into the children; both
+    * children REUSE the parent's coarse quantizer (`_cents` copied
+    * verbatim — the frozen-quantizer contract [[ivfAppend]] already
+    * proves) and inherit its `_stats` drift reference, so the standing
+    * drift watch keeps firing against the same baseline and the
+    * eventual cure is the usual per-child [[ivfRetrain]]. Cost
+    * O(parent shard); other shards untouched.
     *
     * EXACT at any probe setting: a query against the family with the
     * parent replaced by its children probes the SAME centroid set per
@@ -629,14 +629,9 @@ object Similarity {
     * merge re-ranks under the identical order — so
     * [[ivfShardedQuery]] post-split ≡ pre-split row for row (not just
     * at probeFrac = 1.0; spec-pinned). Tombstoned parent rows are
-    * dropped during the rehash (children are born clean).
-    *
-    * Crash contract: the [[Retrieval.splitShard]] build-then-retire
-    * shape — children build completely (idempotent overwrites), a
-    * `<parent>_splitdone` marker lands, then the parent retires; a
-    * re-run resumes from the marker. A parent mid-[[ivfRetrain]]
-    * (live `_retrainsrc`) is rejected loudly — finish or heal the
-    * retrain first.
+    * dropped during the rehash (children are born clean). A parent
+    * mid-[[ivfRetrain]] (live `_retrainsrc`) is rejected loudly —
+    * finish or heal the retrain first.
     */
   def splitShard(spark: org.apache.spark.sql.SparkSession, parent: String,
                  child0: String, child1: String,
@@ -644,62 +639,13 @@ object Similarity {
     splitShardImpl(spark, parent, child0, child1, shardIndex, nShards,
       failAt = -1)
 
-  /** [[splitShard]] with the [[Retrieval.InjectedSplitCrash]] chaos
-    * seam — boundaries 0 (entry heal), 1 (child0 built), 2 (child1
-    * built), 3 (marker landed), 4 (parent retired). */
+  /** [[splitShard]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def splitShardImpl(spark: org.apache.spark.sql.SparkSession,
                                     parent: String, child0: String,
                                     child1: String, shardIndex: Int,
-                                    nShards: Int, failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    require(nShards >= 1 && shardIndex >= 0 && shardIndex < nShards,
-      s"splitShard: shardIndex $shardIndex out of range for $nShards shards")
-    GraftFunctions.ensureRegistered(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    require(!exists(s"${parent}_retrainsrc"),
-      s"splitShard: $parent has a live retrain rename-aside " +
-        s"(${parent}_retrainsrc) — finish or heal the retrain first")
-    val marker = s"${parent}_splitdone"
-    if (!exists(marker)) {
-      require(exists(parent),
-        s"splitShard: $parent does not exist (and no _splitdone marker " +
-          "— nothing to resume)")
-      Seq(parent, s"${parent}_cents", s"${parent}_stats")
-        .foreach(BucketedJoin.recoverCompacted(spark, _))
-      boundary(0)
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(parent))
-        .bucketSpec.map(_.numBuckets).getOrElse(8)
-      val first = Sharding.staysInFirstChild(col("nid"), shardIndex,
-        nShards)
-      def build(child: String, pred: org.apache.spark.sql.Column): Unit = {
-        BucketedJoin.writeBucketed(
-          Tombstones.filterOut(spark, parent, spark.table(parent), "nid")
-            .filter(pred),
-          child, "cid", buckets)
-        BucketedJoin.writeBucketed(spark.table(s"${parent}_cents"),
-          s"${child}_cents", "cid", 1)
-        if (exists(s"${parent}_stats"))
-          BucketedJoin.writeBucketed(spark.table(s"${parent}_stats"),
-            s"${child}_stats", "built_n", 1)
-        Tombstones.clear(spark, child)
-      }
-      build(child0, first)
-      boundary(1)
-      build(child1, !first)
-      boundary(2)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(3)
-    }
-    for (s <- Seq("", "_cents", "_stats"); t = parent + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Tombstones.clear(spark, parent)
-    boundary(4)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+                                    nShards: Int, failAt: Int): Unit =
+    Sharding.split(spark, ivfReshard, parent, child0, child1, shardIndex,
+      nShards, failAt)
 
   /** Persisted LSH bucket index — the EMBEDDING twin of the MinHash
     * band index (`Dedup.minhashIndexBuild`), and the scalable
@@ -823,8 +769,8 @@ object Similarity {
     * `_vecs`/`_buckets` rows rehash by id under the hierarchical
     * router, tombstones fold first, and
     * [[lshDedupAgainstSharded]] over the post-split family finds
-    * exactly the pre-split pairs. Same build → marker → retire crash
-    * protocol and boundaries.
+    * exactly the pre-split pairs. The one reshard protocol
+    * ([[Sharding]]).
     */
   def splitLshShard(spark: org.apache.spark.sql.SparkSession,
                     parent: String, child0: String, child1: String,
@@ -836,157 +782,75 @@ object Similarity {
   private[graft] def splitLshShardImpl(
       spark: org.apache.spark.sql.SparkSession, parent: String,
       child0: String, child1: String, shardIndex: Int, nShards: Int,
-      failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    require(nShards >= 1 && shardIndex >= 0 && shardIndex < nShards,
-      s"splitLshShard: shardIndex $shardIndex out of range for $nShards shards")
-    GraftFunctions.ensureRegistered(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${parent}_splitdone"
-    if (!exists(marker)) {
-      require(exists(s"${parent}_vecs"),
-        s"splitLshShard: ${parent}_vecs does not exist (and no " +
-          "_splitdone marker — nothing to resume)")
-      lshFoldTombstones(spark, parent)
-      boundary(0)
-      val buckets = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(s"${parent}_vecs"))
-        .bucketSpec.map(_.numBuckets).getOrElse(8)
-      val first = Sharding.staysInFirstChild(col("id"), shardIndex, nShards)
-      def build(child: String, pred: org.apache.spark.sql.Column): Unit = {
-        BucketedJoin.writeBucketed(
-          spark.table(s"${parent}_vecs").filter(pred),
-          s"${child}_vecs", "id", buckets)
-        BucketedJoin.writeBucketed(
-          spark.table(s"${parent}_buckets").filter(pred),
-          s"${child}_buckets", "bkey", buckets)
-        Tombstones.clear(spark, child)
-      }
-      build(child0, first)
-      boundary(1)
-      build(child1, !first)
-      boundary(2)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(3)
-    }
-    for (s <- Seq("_vecs", "_buckets"); t = parent + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Tombstones.clear(spark, parent)
-    boundary(4)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+      failAt: Int): Unit =
+    Sharding.split(spark, lshReshard, parent, child0, child1, shardIndex,
+      nShards, failAt)
 
   /** The inverse of [[splitLshShard]] — fold two vec-disjoint LSH
     * admission shards into one: tombstones fold first, then the
     * merged `_vecs`/`_buckets` are the row unions rebucketed
     * (per-vector facts; the same signatures hash to the same bucket
     * keys, so the sharded check over the merged family is identical).
-    * Same build → marker → retire protocol.
     */
   def mergeLshShards(spark: org.apache.spark.sql.SparkSession,
                      parent0: String, parent1: String,
                      merged: String): Unit =
     mergeLshShardsImpl(spark, parent0, parent1, merged, failAt = -1)
 
-  /** [[mergeLshShards]] with the [[Retrieval.InjectedSplitCrash]] seam —
-    * boundaries 0 (tombstone folds), 1 (merged tables built), 2
-    * (marker landed), 3 (parents retired, before the marker clears). */
+  /** [[mergeLshShards]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def mergeLshShardsImpl(
       spark: org.apache.spark.sql.SparkSession, parent0: String,
-      parent1: String, merged: String, failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    GraftFunctions.ensureRegistered(spark)
-    GraftFunctions.unionGuard(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${merged}_mergedone"
-    if (!exists(marker)) {
-      require(exists(s"${parent0}_vecs") && exists(s"${parent1}_vecs"),
-        s"mergeLshShards: both $parent0 and $parent1 must exist " +
-          "(no _mergedone marker — nothing to resume)")
-      Seq(parent0, parent1).foreach(lshFoldTombstones(spark, _))
-      boundary(0)
-      val buckets = BucketedJoin.mergedBucketCount(spark,
-        s"${parent0}_vecs", s"${parent1}_vecs")
-      BucketedJoin.writeBucketed(
-        spark.table(s"${parent0}_vecs")
-          .unionByName(spark.table(s"${parent1}_vecs")),
-        s"${merged}_vecs", "id", buckets)
-      BucketedJoin.writeBucketed(
-        spark.table(s"${parent0}_buckets")
-          .unionByName(spark.table(s"${parent1}_buckets")),
-        s"${merged}_buckets", "bkey", buckets)
-      Tombstones.clear(spark, merged)
-      boundary(1)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(2)
-    }
-    for (p <- Seq(parent0, parent1); s <- Seq("_vecs", "_buckets");
-         t = p + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Seq(parent0, parent1).foreach(Tombstones.clear(spark, _))
-    boundary(3)
-    BucketedJoin.dropWithLocation(spark, marker)
-  }
+      parent1: String, merged: String, failAt: Int): Unit =
+    Sharding.merge(spark, lshReshard, parent0, parent1, merged, failAt)
 
   /** Merge two IVF shards by RETRAINING on the union — the honest form
     * for the quantized family: the parents' centroid families differ,
     * so a row union would mix incompatible coarse spaces; instead the
     * parents' (deduplicated) vectors union and [[ivfBuild]] trains the
-    * merged index whole (nlist re-derives as ⌈√(2N)⌉, fresh drift
-    * reference). O(merged corpus) — a maintenance-cadence operation,
-    * like [[ivfRetrain]], with the same resume story: the union reads
-    * the LIVE parents, the marker gates the retire, and a re-run after
-    * any kill converges. Tombstoned rows drop in the union.
+    * merged index whole at its defaults (nlist re-derives as ⌈√(2N)⌉,
+    * fresh drift reference). O(merged corpus) — a maintenance-cadence
+    * operation, like [[ivfRetrain]]. Tombstoned rows drop in the union.
     */
   def mergeIvfShards(spark: org.apache.spark.sql.SparkSession,
-                     parent0: String, parent1: String, merged: String,
-                     nassign: Int = 2, seed: Long = 42L): Unit =
-    mergeIvfShardsImpl(spark, parent0, parent1, merged, nassign, seed,
-      failAt = -1)
+                     parent0: String, parent1: String, merged: String): Unit =
+    mergeIvfShardsImpl(spark, parent0, parent1, merged, failAt = -1)
 
-  /** [[mergeIvfShards]] with the [[Retrieval.InjectedSplitCrash]] seam —
-    * boundaries 0 (entry checks), 1 (merged index retrained), 2 (marker
-    * landed), 3 (parents retired, before the marker clears). */
+  /** [[mergeIvfShards]] with the [[Retrieval.InjectedSplitCrash]] seam. */
   private[graft] def mergeIvfShardsImpl(
       spark: org.apache.spark.sql.SparkSession, parent0: String,
-      parent1: String, merged: String, nassign: Int, seed: Long,
-      failAt: Int): Unit = {
-    def boundary(i: Int): Unit =
-      if (failAt == i) throw new Retrieval.InjectedSplitCrash(i)
-    GraftFunctions.ensureRegistered(spark)
-    GraftFunctions.unionGuard(spark)
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val marker = s"${merged}_mergedone"
-    if (!exists(marker)) {
-      require(exists(parent0) && exists(parent1),
-        s"mergeIvfShards: both $parent0 and $parent1 must exist " +
-          "(no _mergedone marker — nothing to resume)")
-      boundary(0)
-      val buckets = BucketedJoin.mergedBucketCount(spark, parent0, parent1)
-      val corpus = Seq(parent0, parent1).map { p =>
-        Tombstones.filterOut(spark, p, spark.table(p), "nid")
-          .select("nid", "nvec").dropDuplicates("nid")
-      }.reduce(_.unionByName(_))
-      ivfBuild(corpus, "nid", "nvec", merged, nassign = nassign,
-        buckets = buckets, seed = seed)
-      boundary(1)
-      BucketedJoin.writeBucketed(spark.range(1).toDF("done"), marker,
-        "done", 1)
-      boundary(2)
-    }
-    for (p <- Seq(parent0, parent1); s <- Seq("", "_cents", "_stats");
-         t = p + s if exists(t))
-      BucketedJoin.dropWithLocation(spark, t)
-    Seq(parent0, parent1).foreach(Tombstones.clear(spark, _))
-    boundary(3)
-    BucketedJoin.dropWithLocation(spark, marker)
+      parent1: String, merged: String, failAt: Int): Unit =
+    Sharding.merge(spark, ivfReshard, parent0, parent1, merged, failAt)
+
+  /** The IVF family's reshard layout: list rows split by `nid`, the
+    * quantizer and drift reference copy; a merge retrains on the
+    * union ([[mergeIvfShards]]). */
+  private[graft] object ivfReshard extends Sharding.Family("", Seq(
+      Sharding.Part("", "cid", Sharding.Rows("nid")),
+      Sharding.Part("_cents", "cid", Sharding.Copy),
+      Sharding.Part("_stats", "built_n", Sharding.Copy))) {
+    override def prepare(spark: org.apache.spark.sql.SparkSession,
+                         table: String): Unit =
+      require(!Sharding.exists(spark, s"${table}_retrainsrc"),
+        s"$table has a live retrain rename-aside (${table}_retrainsrc) " +
+          "— finish or heal the retrain first")
+    override def buildMerged(spark: org.apache.spark.sql.SparkSession,
+                             parents: Seq[String], merged: String,
+                             buckets: Int): Unit =
+      ivfBuild(parents.map { p =>
+          Tombstones.filterOut(spark, p, spark.table(p), "nid")
+            .select("nid", "nvec").dropDuplicates("nid")
+        }.reduce(_.unionByName(_)),
+        "nid", "nvec", merged, buckets = buckets)
+  }
+
+  /** The LSH admission family's reshard layout: both tables are
+    * per-vector rows; tombstones fold before a split or merge. */
+  private[graft] object lshReshard extends Sharding.Family("_vecs", Seq(
+      Sharding.Part("_vecs", "id", Sharding.Rows("id")),
+      Sharding.Part("_buckets", "bkey", Sharding.Rows("id")))) {
+    override def prepare(spark: org.apache.spark.sql.SparkSession,
+                         table: String): Unit =
+      lshFoldTombstones(spark, table)
   }
 
   /** Absorb `batch` into a standing [[lshIndexBuild]] index at O(batch)

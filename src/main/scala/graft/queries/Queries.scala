@@ -953,7 +953,7 @@ object Queries {
     val t0 = s"dd13a_${d.hashCode & Int.MaxValue}"
     val t1 = s"dd13b_${d.hashCode & Int.MaxValue}"
     val (c0, c1) = (s"${t0}x", s"${t0}y")
-    BucketedJoin.dropWithLocation(s, s"${t0}_splitdone")
+    BucketedJoin.dropWithLocation(s, Sharding.splitMarker(t0))
     Dedup.minhashIndexBuild(
       base.filter(Sharding.shardOf(col("doc_id"), 2) === 0),
       "text", "doc_id", t0)
@@ -987,7 +987,7 @@ object Queries {
     val t0 = s"dd14a_${d.hashCode & Int.MaxValue}"
     val t1 = s"dd14b_${d.hashCode & Int.MaxValue}"
     val m = s"dd14m_${d.hashCode & Int.MaxValue}"
-    BucketedJoin.dropWithLocation(s, s"${m}_mergedone")
+    BucketedJoin.dropWithLocation(s, Sharding.mergeMarker(m))
     Dedup.minhashIndexBuild(
       base.filter(Sharding.shardOf(col("doc_id"), 2) === 0),
       "text", "doc_id", t0)
@@ -1681,7 +1681,7 @@ object Queries {
     val (c0, c1) = (s"${t0}a", s"${t0}b")
     // defensive: a crashed prior run's resume marker would make the
     // split skip rebuilding the children from THIS run's fresh parent
-    BucketedJoin.dropWithLocation(s, s"${t0}_splitdone")
+    BucketedJoin.dropWithLocation(s, Sharding.splitMarker(t0))
     Retrieval.bm25Build(docs(s, d)
         .filter(Sharding.shardOf(col("doc_id"), 2) === 0),
       "doc_id", "text", t0)
@@ -1706,7 +1706,7 @@ object Queries {
     val t0 = s"spll0_${d.hashCode & Int.MaxValue}"
     val t1 = s"spll1_${d.hashCode & Int.MaxValue}"
     val (c0, c1) = (s"${t0}a", s"${t0}b")
-    BucketedJoin.dropWithLocation(s, s"${t0}_splitdone")
+    BucketedJoin.dropWithLocation(s, Sharding.splitMarker(t0))
     val slice0 = docs(s, d).filter(Sharding.shardOf(col("doc_id"), 2) === 0)
     LangModel.train(slice0, "doc_id", "text", t0)
     LangModel.train(docs(s, d)
@@ -1730,7 +1730,7 @@ object Queries {
     val t0 = s"mrgg0_${d.hashCode & Int.MaxValue}"
     val t1 = s"mrgg1_${d.hashCode & Int.MaxValue}"
     val m = s"mrggm_${d.hashCode & Int.MaxValue}"
-    BucketedJoin.dropWithLocation(s, s"${m}_mergedone")
+    BucketedJoin.dropWithLocation(s, Sharding.mergeMarker(m))
     Retrieval.bm25Build(docs(s, d)
         .filter(Sharding.shardOf(col("doc_id"), 2) === 0),
       "doc_id", "text", t0)
@@ -1754,7 +1754,7 @@ object Queries {
     val t0 = s"mrgl0_${d.hashCode & Int.MaxValue}"
     val t1 = s"mrgl1_${d.hashCode & Int.MaxValue}"
     val m = s"mrglm_${d.hashCode & Int.MaxValue}"
-    BucketedJoin.dropWithLocation(s, s"${m}_mergedone")
+    BucketedJoin.dropWithLocation(s, Sharding.mergeMarker(m))
     LangModel.train(docs(s, d)
         .filter(Sharding.shardOf(col("doc_id"), 2) === 0),
       "doc_id", "text", t0)
@@ -2397,7 +2397,7 @@ object Queries {
     val t0 = s"splv0_${d.hashCode & Int.MaxValue}"
     val t1 = s"splv1_${d.hashCode & Int.MaxValue}"
     val (c0, c1) = (s"${t0}a", s"${t0}b")
-    BucketedJoin.dropWithLocation(s, s"${t0}_splitdone")
+    BucketedJoin.dropWithLocation(s, Sharding.splitMarker(t0))
     Similarity.ivfBuild(emb.filter(Sharding.shardOf(col("vec_id"), 2) === 0),
       "vec_id", "embedding", t0)
     Similarity.ivfBuild(emb.filter(Sharding.shardOf(col("vec_id"), 2) === 1),
@@ -2425,7 +2425,7 @@ object Queries {
     val t0 = s"mrgv0_${d.hashCode & Int.MaxValue}"
     val t1 = s"mrgv1_${d.hashCode & Int.MaxValue}"
     val m = s"mrgvm_${d.hashCode & Int.MaxValue}"
-    BucketedJoin.dropWithLocation(s, s"${m}_mergedone")
+    BucketedJoin.dropWithLocation(s, Sharding.mergeMarker(m))
     Similarity.ivfBuild(emb.filter(Sharding.shardOf(col("vec_id"), 2) === 0),
       "vec_id", "embedding", t0)
     Similarity.ivfBuild(emb.filter(Sharding.shardOf(col("vec_id"), 2) === 1),

@@ -58,37 +58,35 @@ object ShardFamily {
       Sharding.shardOf(id, nShards) === shardIndex
   }
 
-  /** The index-family dispatch: which tables signal liveness and which
-    * operator implements split/merge. LM split needs the parent's
-    * corpus slice (counts carry no doc attribution) — pass it through
+  /** The index-family dispatch: the family's reshard layout (its probe
+    * table signals liveness) run through the one reshard protocol
+    * ([[graft.operators.Sharding]]). LM split needs the parent's corpus
+    * slice (counts carry no doc attribution) — pass it through
     * [[ShardFamily.requestSplit]]'s `lmDocs`.
     */
-  sealed trait Kind {
-    private[streaming] def probe(table: String): String = table
+  sealed abstract class Kind(family: Sharding.Family) {
+    private[streaming] def probe(table: String): String =
+      table + family.probe
     private[streaming] def split(spark: SparkSession, parent: String,
                                  child0: String, child1: String,
                                  shardIndex: Int, nShards: Int,
                                  lmDocs: Option[(DataFrame, String, String)])
-        : Unit
+        : Unit =
+      Sharding.split(spark, family, parent, child0, child1, shardIndex,
+        nShards)
     private[streaming] def merge(spark: SparkSession, parent0: String,
-                                 parent1: String, merged: String): Unit
+                                 parent1: String, merged: String): Unit =
+      Sharding.merge(spark, family, parent0, parent1, merged)
   }
 
   /** BM25 lexical serving shards ([[graft.operators.Retrieval]]). */
-  case object Bm25 extends Kind {
-    private[streaming] def split(spark: SparkSession, parent: String,
-        c0: String, c1: String, i: Int, n: Int,
-        lmDocs: Option[(DataFrame, String, String)]): Unit =
-      Retrieval.splitShard(spark, parent, c0, c1, i, n)
-    private[streaming] def merge(spark: SparkSession, p0: String,
-        p1: String, m: String): Unit = Retrieval.mergeShards(spark, p0, p1, m)
-  }
+  case object Bm25 extends Kind(Retrieval.reshard)
 
   /** Bigram-LM serving shards ([[graft.operators.LangModel]]) — split
     * requires the parent's corpus slice via `lmDocs`. */
-  case object Lm extends Kind {
-    private[streaming] def split(spark: SparkSession, parent: String,
-        c0: String, c1: String, i: Int, n: Int,
+  case object Lm extends Kind(LangModel.reshard) {
+    private[streaming] override def split(spark: SparkSession,
+        parent: String, c0: String, c1: String, i: Int, n: Int,
         lmDocs: Option[(DataFrame, String, String)]): Unit = {
       val (docs, idCol, textCol) = lmDocs.getOrElse(throw
         new IllegalArgumentException("ShardFamily(Lm).requestSplit needs " +
@@ -97,56 +95,21 @@ object ShardFamily {
           "the children from the corpus (LangModel.splitShard contract)"))
       LangModel.splitShard(spark, parent, c0, c1, docs, idCol, textCol, i, n)
     }
-    private[streaming] def merge(spark: SparkSession, p0: String,
-        p1: String, m: String): Unit = LangModel.mergeShards(spark, p0, p1, m)
   }
 
   /** IVF vector serving shards ([[graft.operators.Similarity]]). */
-  case object Ivf extends Kind {
-    private[streaming] def split(spark: SparkSession, parent: String,
-        c0: String, c1: String, i: Int, n: Int,
-        lmDocs: Option[(DataFrame, String, String)]): Unit =
-      Similarity.splitShard(spark, parent, c0, c1, i, n)
-    private[streaming] def merge(spark: SparkSession, p0: String,
-        p1: String, m: String): Unit =
-      Similarity.mergeIvfShards(spark, p0, p1, m)
-  }
+  case object Ivf extends Kind(Similarity.ivfReshard)
 
   /** IVFPQ vector serving shards ([[graft.operators.ProductQuant]]). */
-  case object IvfPq extends Kind {
-    private[streaming] def split(spark: SparkSession, parent: String,
-        c0: String, c1: String, i: Int, n: Int,
-        lmDocs: Option[(DataFrame, String, String)]): Unit =
-      ProductQuant.splitShard(spark, parent, c0, c1, i, n)
-    private[streaming] def merge(spark: SparkSession, p0: String,
-        p1: String, m: String): Unit =
-      ProductQuant.mergeShards(spark, p0, p1, m)
-  }
+  case object IvfPq extends Kind(ProductQuant.reshard)
 
   /** MinHash ADMISSION shards ([[graft.operators.Dedup]] — the
     * `indexShards` family of [[RefreshLoop.minhashRefresh]]). */
-  case object MinhashAdmission extends Kind {
-    private[streaming] override def probe(table: String) = s"${table}_sigs"
-    private[streaming] def split(spark: SparkSession, parent: String,
-        c0: String, c1: String, i: Int, n: Int,
-        lmDocs: Option[(DataFrame, String, String)]): Unit =
-      Dedup.splitShard(spark, parent, c0, c1, i, n)
-    private[streaming] def merge(spark: SparkSession, p0: String,
-        p1: String, m: String): Unit = Dedup.mergeShards(spark, p0, p1, m)
-  }
+  case object MinhashAdmission extends Kind(Dedup.reshard)
 
   /** LSH ADMISSION shards ([[graft.operators.Similarity]] — the
     * `indexShards` family of [[RefreshLoop.embeddingRefresh]]). */
-  case object LshAdmission extends Kind {
-    private[streaming] override def probe(table: String) = s"${table}_vecs"
-    private[streaming] def split(spark: SparkSession, parent: String,
-        c0: String, c1: String, i: Int, n: Int,
-        lmDocs: Option[(DataFrame, String, String)]): Unit =
-      Similarity.splitLshShard(spark, parent, c0, c1, i, n)
-    private[streaming] def merge(spark: SparkSession, p0: String,
-        p1: String, m: String): Unit =
-      Similarity.mergeLshShards(spark, p0, p1, m)
-  }
+  case object LshAdmission extends Kind(Similarity.lshReshard)
 
   /** A canonical S-shard family: table i owns residue class i mod S. */
   def apply(kind: Kind, tables: Seq[String]): ShardFamily =
@@ -215,7 +178,8 @@ final class ShardFamily private (val kind: ShardFamily.Kind,
       // heal the retire-before-swap crash window: a completed split
       // (parent probe gone, no resumable marker, children present)
       // applies only the slot transform
-      if (exists(kind.probe(parent)) || exists(s"${parent}_splitdone"))
+      if (exists(kind.probe(parent)) ||
+          exists(Sharding.splitMarker(parent)))
         kind.split(spark, parent, child0, child1, slot.shardIndex,
           slot.nShards, lmDocs)
       else require(exists(kind.probe(child0)) && exists(kind.probe(child1)),
@@ -251,7 +215,7 @@ final class ShardFamily private (val kind: ShardFamily.Kind,
       val loTable = if (s0.shardIndex == lo) table0 else table1
       val hiTable = if (s0.shardIndex == lo) table1 else table0
       if (exists(kind.probe(loTable)) || exists(kind.probe(hiTable)) ||
-          exists(s"${merged}_mergedone"))
+          exists(Sharding.mergeMarker(merged)))
         kind.merge(spark, loTable, hiTable, merged)
       else require(exists(kind.probe(merged)),
         s"requestMerge: $table0/$table1 are retired but $merged is " +

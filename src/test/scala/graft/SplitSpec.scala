@@ -28,6 +28,131 @@ class SplitSpec extends AnyFunSuite {
       concat_ws(" ", slice(graft.operators.TextOps.tokens(
         lower($"text")), 1, 3)).as("qtext"))
 
+  /** Tables left under retired shard names: the name itself or any
+    * `<name>_…` table (its layout, tombstone set, split marker). */
+  private def leftovers(names: String*): Seq[String] =
+    spark.sessionState.catalog.listTables("default").map(_.table)
+      .filter(t => names.map(_.toLowerCase)
+        .exists(n => t == n || t.startsWith(n + "_")))
+
+  /** After a converged split/merge: no table of the retired shards and
+    * no merge marker remain. */
+  private def assertRetired(parents: Seq[String],
+                            merged: Option[String] = None): Unit = {
+    assert(leftovers(parents: _*).isEmpty,
+      s"reshard must retire the parents; left: ${leftovers(parents: _*)}")
+    merged.foreach(m => assert(!spark.sessionState.catalog.tableExists(
+      org.apache.spark.sql.catalyst.TableIdentifier(Sharding.mergeMarker(m))),
+      s"merge marker of $m survives"))
+  }
+
+  /** Split chaos: for each boundary, build a fresh parent `<prefix>b<b>`
+    * (the split consumes it), kill `split(p, c0, c1, failAt = b)`, and
+    * re-run with failAt -1 (the public entry's call). `rows(tables)`
+    * serves a table list together with the rest of the family: the
+    * children must serve what the parent did, and no table of the
+    * parent may survive. */
+  private def splitChaos(name: String, prefix: String, build: String => Unit,
+                         rows: Seq[String] => Any)
+                        (split: (String, String, String, Int) => Unit)
+      : Unit =
+    for (b <- 0 to 4) {
+      val p = s"${prefix}b$b"
+      build(p)
+      val pre = rows(Seq(p))
+      val (c0, c1) = (s"${p}x", s"${p}y")
+      intercept[Retrieval.InjectedSplitCrash](split(p, c0, c1, b))
+      split(p, c0, c1, -1) // re-run heals
+      assert(rows(Seq(c0, c1)) === pre,
+        s"$name split diverged after crash at boundary $b")
+      assertRetired(Seq(p))
+    }
+
+  /** Merge chaos, the same drill: fresh parents `<prefix>{0,1}b<b>` from
+    * `build(shardIndex, table)`, a kill after each boundary, a re-run;
+    * `rows(merged)` must equal `pre` and both parents must retire. */
+  private def mergeChaos(name: String, prefix: String,
+                         build: (Int, String) => Unit, rows: String => Any,
+                         pre: Any)
+                        (merge: (String, String, String, Int) => Unit)
+      : Unit =
+    for (b <- 0 to 3) {
+      val (p0, p1, mt) = (s"${prefix}0b$b", s"${prefix}1b$b", s"${prefix}mb$b")
+      build(0, p0)
+      build(1, p1)
+      intercept[Retrieval.InjectedSplitCrash](merge(p0, p1, mt, b))
+      merge(p0, p1, mt, -1)
+      assert(rows(mt) === pre, s"$name merge diverged after crash at boundary $b")
+      assertRetired(Seq(p0, p1), Some(mt))
+    }
+
+  /** The clustered 8-d embeddings of the vector specs. */
+  private lazy val clusteredEmb = {
+    def vec(i: Long): Seq[Double] = {
+      val c = (i % 4).toInt
+      val base = Array.fill(8)(0.05)
+      base(c * 2) = 1.0; base(c * 2 + 1) = 0.7
+      Array.tabulate(8)(j => base(j) + 0.01 * (((i * 31 + j * 7) % 11) - 5)).toSeq
+    }
+    (0L until 80L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+  }
+
+  test("block-max BM25 reshard: no parent table survives, children and " +
+       "merges keep the layout and accept bm25Append, serving as a whole " +
+       "build") {
+    val id = n
+    val (p, c0, c1, m) =
+      (s"spl_bx_$id", s"spl_bxa_$id", s"spl_bxb_$id", s"spl_bxm_$id")
+    // two held-out docs routed to child 0: one appends to the child,
+    // the other to the merged table
+    val held = corpus.filter(Sharding.shardOf($"doc_id", 2) === 0)
+      .select($"doc_id").as[Long].collect().sorted.take(2)
+    def without(ids: Long*) = corpus.filter(!$"doc_id".isin(ids: _*))
+    def only(i: Long) = corpus.filter($"doc_id" === i)
+    Retrieval.bm25Build(without(held: _*), "doc_id", "text", p,
+      blockMax = true, blockWidth = 16)
+    Retrieval.splitShard(spark, p, c0, c1)
+    assertRetired(Seq(p))
+    Retrieval.bm25Append(spark, c0, only(held(0)), "doc_id", "text")
+    def whole(t: String, docs: org.apache.spark.sql.DataFrame) = {
+      Retrieval.bm25Build(docs, "doc_id", "text", t)
+      Retrieval.bm25Query(spark, t, queries, "qid", "qtext", 3)
+        .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
+    }
+    val want = whole(s"spl_bxw_$id", without(held(1)))
+    assert(Retrieval.bm25ShardedQuery(spark, Seq(c0, c1), queries,
+        "qid", "qtext", 3)
+      .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
+      === want, "post-append split family diverged (exact)")
+    assert(Retrieval.bm25ShardedQueryMaxScore(spark, Seq(c0, c1), queries,
+        "qid", "qtext", 3)
+      .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
+      === want, "post-append split family diverged (MaxScore)")
+    // the children share one width, so the merge keeps the layout too
+    Retrieval.mergeShards(spark, c0, c1, m)
+    assertRetired(Seq(c0, c1), Some(m))
+    assert(spark.table(s"${m}_blkmeta").as[Long].collect().toSeq == Seq(16L),
+      "the merged table lost the block-max layout")
+    Retrieval.bm25Append(spark, m, only(held(1)), "doc_id", "text")
+    val wantAll = whole(s"spl_bxv_$id", corpus)
+    assert(Retrieval.bm25QueryMaxScore(spark, m, queries, "qid", "qtext", 3)
+      .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
+      === wantAll, "post-append merged table diverged")
+    // mixed layouts (one plain parent) merge to the plain layout
+    val (x0, x1, xm) = (s"spl_bxp0_$id", s"spl_bxp1_$id", s"spl_bxpm_$id")
+    Retrieval.bm25Build(shard(0, 2), "doc_id", "text", x0, blockMax = true,
+      blockWidth = 16)
+    Retrieval.bm25Build(shard(1, 2), "doc_id", "text", x1)
+    Retrieval.mergeShards(spark, x0, x1, xm)
+    assertRetired(Seq(x0, x1), Some(xm))
+    assert(!spark.table(xm).columns.contains("blk") &&
+      leftovers(xm).forall(t => !t.endsWith("_blkmeta") && !t.endsWith("_blkmax")),
+      "a mixed-layout merge must write the plain layout")
+    assert(Retrieval.bm25QueryMaxScore(spark, xm, queries, "qid", "qtext", 3)
+      .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
+      === wantAll, "mixed-layout merge diverged")
+  }
+
   test("BM25 split: post-split family serves row-identical (bag + phrase), " +
        "doubling both shards yields the canonical 2S family") {
     val id = n
@@ -186,18 +311,6 @@ class SplitSpec extends AnyFunSuite {
         "text", "doc_id")
       .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet,
       "sharded admission check diverged from the whole-built index")
-    // chaos: kill at every boundary, re-run converges
-    for (b <- 0 to 4) {
-      val p = s"spl_mhb${b}_$id"
-      Dedup.minhashIndexBuild(shard(0, 2), "text", "doc_id", p)
-      val (c0, c1) = (s"${p}x", s"${p}y")
-      intercept[graft.operators.Retrieval.InjectedSplitCrash] {
-        Dedup.splitShardImpl(spark, p, c0, c1, 0, 2, failAt = b)
-      }
-      Dedup.splitShard(spark, p, c0, c1, 0, 2)
-      assert(mrows(Seq(c0, c1, m1)) == pre,
-        s"minhash admission split diverged after crash at boundary $b")
-    }
 
     // LSH admission family (vectors)
     def vec(i: Long): Seq[Double] =
@@ -221,6 +334,17 @@ class SplitSpec extends AnyFunSuite {
       nShards = 2)
     assert(lrows(Seq(lc0, lc1, l1)) == lpre,
       "LSH admission split diverged")
+    // chaos: kill at every boundary, re-run converges
+    splitChaos("minhash admission", s"spl_mh_$id",
+        Dedup.minhashIndexBuild(shard(0, 2), "text", "doc_id", _),
+        ts => mrows(ts :+ m1)) {
+      (p, c0, c1, f) => Dedup.splitShardImpl(spark, p, c0, c1, 0, 2, f)
+    }
+    splitChaos("LSH admission", s"spl_lsh_$id",
+        Similarity.lshIndexBuild(eshard(0), "vec_id", "embedding", _),
+        ts => lrows(ts :+ l1)) {
+      (p, c0, c1, f) => Similarity.splitLshShardImpl(spark, p, c0, c1, 0, 2, f)
+    }
   }
 
   test("mergeShards: the shrink path — merged families serve identically " +
@@ -238,23 +362,6 @@ class SplitSpec extends AnyFunSuite {
     Retrieval.bm25Build(shard(1, 2), "doc_id", "text", bp, positions = true)
     intercept[IllegalArgumentException] {
       Retrieval.mergeShards(spark, b0, bp, s"mrg_bad_$id")
-    }
-    // chaos on the real merge: kill at every boundary, re-run converges
-    for (b <- 0 to 3) {
-      val (p0, p1) = (s"mrg_ch0${b}_$id", s"mrg_ch1${b}_$id")
-      Retrieval.bm25Build(shard(0, 2), "doc_id", "text", p0)
-      Retrieval.bm25Build(shard(1, 2), "doc_id", "text", p1)
-      val mt = s"mrg_chm${b}_$id"
-      intercept[Retrieval.InjectedSplitCrash] {
-        Retrieval.mergeShardsImpl(spark, p0, p1, mt, failAt = b)
-      }
-      Retrieval.mergeShards(spark, p0, p1, mt)
-      assert(Retrieval.bm25Query(spark, mt, queries, "qid", "qtext", 3)
-        .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
-        === pre, s"BM25 merge diverged after crash at boundary $b")
-      assert(!spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(p0)),
-        "merge must retire the parents")
     }
 
     // ---- LM: additive union, stats recomputed, memo refolds
@@ -284,6 +391,29 @@ class SplitSpec extends AnyFunSuite {
     assert(Dedup.minhashDedupAgainst(spark, mm, batch, "text", "doc_id")
       .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet
       == mhPre, "merged minhash admission diverged")
+
+    // chaos on the real merges: kill at every boundary, re-run converges
+    mergeChaos("BM25", s"mrg_ch_$id",
+        (i, t) => Retrieval.bm25Build(shard(i, 2), "doc_id", "text", t),
+        Retrieval.bm25Query(spark, _, queries, "qid", "qtext", 3)
+          .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq,
+        pre) {
+      (p0, p1, m, f) => Retrieval.mergeShardsImpl(spark, p0, p1, m, f)
+    }
+    mergeChaos("LM", s"mrg_lch_$id",
+        (i, t) => LangModel.train(shard(i, 2), "doc_id", "text", t),
+        LangModel.score(spark, _, corpus, "doc_id", "text")
+          .orderBy("id").as[(Long, Long, Long)].collect().toSeq,
+        lmPre) {
+      (p0, p1, m, f) => LangModel.mergeShardsImpl(spark, p0, p1, m, f)
+    }
+    mergeChaos("minhash", s"mrg_mch_$id",
+        (i, t) => Dedup.minhashIndexBuild(shard(i, 2), "text", "doc_id", t),
+        Dedup.minhashDedupAgainst(spark, _, batch, "text", "doc_id")
+          .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet,
+        mhPre) {
+      (p0, p1, m, f) => Dedup.mergeShardsImpl(spark, p0, p1, m, f)
+    }
 
     // ---- LSH admission + IVF retrain-on-union
     def vec(i: Long): Seq[Double] =
@@ -337,8 +467,6 @@ class SplitSpec extends AnyFunSuite {
     val q = emb.filter($"vec_id" % 10 === 3)
     val vbatch = emb.filter($"vec_id" % 5 === 0)
       .select(($"vec_id" + 1000L).as("vec_id"), $"embedding")
-    def exists(t: String) = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
 
     // ---- LSH admission: the merged check must reproduce the sharded one
     val (e0, e1) = (s"mch_le0_$id", s"mch_le1_$id")
@@ -347,21 +475,12 @@ class SplitSpec extends AnyFunSuite {
     val lshPre = Similarity.lshDedupAgainstSharded(spark, Seq(e0, e1),
         vbatch, "vec_id", "embedding")
       .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet
-    for (b <- 0 to 3) {
-      val (p0, p1) = (s"mch_l0${b}_$id", s"mch_l1${b}_$id")
-      Similarity.lshIndexBuild(eshard(0), "vec_id", "embedding", p0)
-      Similarity.lshIndexBuild(eshard(1), "vec_id", "embedding", p1)
-      val mt = s"mch_lm${b}_$id"
-      intercept[Retrieval.InjectedSplitCrash] {
-        Similarity.mergeLshShardsImpl(spark, p0, p1, mt, failAt = b)
-      }
-      Similarity.mergeLshShards(spark, p0, p1, mt)
-      assert(Similarity.lshDedupAgainst(spark, mt, vbatch, "vec_id",
-          "embedding")
-        .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet
-        == lshPre, s"LSH merge diverged after crash at boundary $b")
-      assert(!exists(s"${p0}_vecs") && !exists(s"${p1}_vecs"),
-        "merge must retire the parents")
+    mergeChaos("LSH", s"mch_l_$id",
+        (i, t) => Similarity.lshIndexBuild(eshard(i), "vec_id", "embedding", t),
+        Similarity.lshDedupAgainst(spark, _, vbatch, "vec_id", "embedding")
+          .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet,
+        lshPre) {
+      (p0, p1, m, f) => Similarity.mergeLshShardsImpl(spark, p0, p1, m, f)
     }
 
     // ---- IVF: full probe is exhaustive, so the healed retrain-on-union
@@ -374,23 +493,14 @@ class SplitSpec extends AnyFunSuite {
     val ivfPre = Similarity.ivfShardedQuery(spark, Seq(iv0, iv1), q,
         "vec_id", "embedding", 3, probeFrac = 1.0)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
-    for (b <- 0 to 3) {
-      val (p0, p1) = (s"mch_i0${b}_$id", s"mch_i1${b}_$id")
-      Similarity.ivfBuild(eshard(0), "vec_id", "embedding", p0, nlist = 6,
-        buckets = 2)
-      Similarity.ivfBuild(eshard(1), "vec_id", "embedding", p1, nlist = 6,
-        buckets = 2)
-      val mt = s"mch_im${b}_$id"
-      intercept[Retrieval.InjectedSplitCrash] {
-        Similarity.mergeIvfShardsImpl(spark, p0, p1, mt, nassign = 2,
-          seed = 42L, failAt = b)
-      }
-      Similarity.mergeIvfShards(spark, p0, p1, mt)
-      assert(Similarity.ivfQuery(spark, mt, q, "vec_id", "embedding", 3,
-          probeFrac = 1.0)
-        .select("qid", "nid").as[(Long, Long)].collect().toSet == ivfPre,
-        s"IVF merge diverged after crash at boundary $b")
-      assert(!exists(p0) && !exists(p1), "merge must retire the parents")
+    mergeChaos("IVF", s"mch_i_$id",
+        (i, t) => Similarity.ivfBuild(eshard(i), "vec_id", "embedding", t,
+          nlist = 6, buckets = 2),
+        Similarity.ivfQuery(spark, _, q, "vec_id", "embedding", 3,
+            probeFrac = 1.0)
+          .select("qid", "nid").as[(Long, Long)].collect().toSet,
+        ivfPre) {
+      (p0, p1, m, f) => Similarity.mergeIvfShardsImpl(spark, p0, p1, m, f)
     }
 
     // ---- IVFPQ: full probe + covering refine re-ranks on exact cosines,
@@ -403,69 +513,66 @@ class SplitSpec extends AnyFunSuite {
     val pqPre = ProductQuant.ivfPqShardedQuery(spark, Seq(pq0, pq1), q,
         "vec_id", "embedding", 3, probeFrac = 1.0, refineK = 64)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
-    for (b <- 0 to 3) {
-      val (p0, p1) = (s"mch_p0${b}_$id", s"mch_p1${b}_$id")
-      ProductQuant.ivfPqBuild(eshard(0), "vec_id", "embedding", p0,
-        m = 2, ksub = 4, nlist = 6, buckets = 2)
-      ProductQuant.ivfPqBuild(eshard(1), "vec_id", "embedding", p1,
-        m = 2, ksub = 4, nlist = 6, buckets = 2)
-      val mt = s"mch_pm${b}_$id"
-      intercept[Retrieval.InjectedSplitCrash] {
-        ProductQuant.mergeShardsImpl(spark, p0, p1, mt, m = 0,
-          nassign = 2, seed = 42L, pqIters = 3, failAt = b)
-      }
-      ProductQuant.mergeShards(spark, p0, p1, mt)
-      assert(ProductQuant.ivfPqQuery(spark, mt, q, "vec_id", "embedding",
-          3, probeFrac = 1.0, refineK = 64)
-        .select("qid", "nid").as[(Long, Long)].collect().toSet == pqPre,
-        s"IVFPQ merge diverged after crash at boundary $b")
-      assert(!exists(s"${p0}_vecs") && !exists(s"${p1}_vecs"),
-        "merge must retire the parents")
+    mergeChaos("IVFPQ", s"mch_p_$id",
+        (i, t) => ProductQuant.ivfPqBuild(eshard(i), "vec_id", "embedding", t,
+          m = 2, ksub = 4, nlist = 6, buckets = 2),
+        ProductQuant.ivfPqQuery(spark, _, q, "vec_id", "embedding", 3,
+            probeFrac = 1.0, refineK = 64)
+          .select("qid", "nid").as[(Long, Long)].collect().toSet,
+        pqPre) {
+      (p0, p1, m, f) => ProductQuant.mergeShardsImpl(spark, p0, p1, m, f)
     }
   }
 
   test("split chaos: a kill after EVERY boundary converges on re-run " +
        "(BM25 and LM), serving bit-identical") {
     val id = n
-    val s1 = s"spl_ch1_$id"
+    val (s1, l1) = (s"spl_ch1_$id", s"spl_chl1_$id")
     Retrieval.bm25Build(shard(1, 2), "doc_id", "text", s1)
-    // BM25: fresh parent per boundary (the split consumes its parent)
-    for (b <- 0 to 4) {
-      val p = s"spl_chb${b}_$id"
-      Retrieval.bm25Build(shard(0, 2), "doc_id", "text", p)
-      val pre = Retrieval.bm25ShardedQuery(spark, Seq(p, s1), queries,
-          "qid", "qtext", 3)
-        .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
-      val (c0, c1) = (s"spl_chb${b}a_$id", s"spl_chb${b}b_$id")
-      intercept[Retrieval.InjectedSplitCrash] {
-        Retrieval.splitShardImpl(spark, p, c0, c1, 0, 2, failAt = b)
-      }
-      Retrieval.splitShard(spark, p, c0, c1, 0, 2) // re-run heals
-      assert(Retrieval.bm25ShardedQuery(spark, Seq(c0, c1, s1), queries,
-          "qid", "qtext", 3)
-        .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq
-        === pre, s"BM25 split diverged after crash at boundary $b")
+    splitChaos("BM25", s"spl_chb_$id",
+        Retrieval.bm25Build(shard(0, 2), "doc_id", "text", _),
+        ts => Retrieval.bm25ShardedQuery(spark, ts :+ s1, queries,
+            "qid", "qtext", 3)
+          .orderBy("qid", "rnk").as[(Long, Long, Long, Int)].collect().toSeq) {
+      (p, c0, c1, f) => Retrieval.splitShardImpl(spark, p, c0, c1, 0, 2, f)
     }
     // LM: same drill through the corpus-retrain split
-    val l1 = s"spl_chl1_$id"
     LangModel.train(shard(1, 2), "doc_id", "text", l1)
-    for (b <- 0 to 4) {
-      val p = s"spl_chlb${b}_$id"
-      LangModel.train(shard(0, 2), "doc_id", "text", p)
-      val pre = LangModel.scoreSharded(spark, Seq(p, l1), corpus,
-          "doc_id", "text")
-        .orderBy("id").as[(Long, Long, Long)].collect().toSeq
-      val (c0, c1) = (s"spl_chlb${b}a_$id", s"spl_chlb${b}b_$id")
-      intercept[Retrieval.InjectedSplitCrash] {
-        LangModel.splitShardImpl(spark, p, c0, c1, shard(0, 2),
-          "doc_id", "text", 0, 2, failAt = b)
-      }
-      LangModel.splitShard(spark, p, c0, c1, shard(0, 2), "doc_id", "text",
-        0, 2)
-      assert(LangModel.scoreSharded(spark, Seq(c0, c1, l1), corpus,
-          "doc_id", "text")
-        .orderBy("id").as[(Long, Long, Long)].collect().toSeq
-        === pre, s"LM split diverged after crash at boundary $b")
+    splitChaos("LM", s"spl_chlb_$id",
+        LangModel.train(shard(0, 2), "doc_id", "text", _),
+        ts => LangModel.scoreSharded(spark, ts :+ l1, corpus,
+            "doc_id", "text")
+          .orderBy("id").as[(Long, Long, Long)].collect().toSeq) {
+      (p, c0, c1, f) => LangModel.splitShardImpl(spark, p, c0, c1,
+        shard(0, 2), "doc_id", "text", 0, 2, f)
+    }
+    // IVF and IVFPQ: row-identical at a partial probe (covering refine
+    // for IVFPQ — see the IVF + IVFPQ split spec)
+    def eshard(i: Int) =
+      clusteredEmb.filter(Sharding.shardOf($"vec_id", 2) === i)
+    val q = clusteredEmb.filter($"vec_id" % 10 === 3)
+    val (iv1, pq1) = (s"spl_chi1_$id", s"spl_chq1_$id")
+    def ivfBuild(i: Int, t: String) =
+      Similarity.ivfBuild(eshard(i), "vec_id", "embedding", t, nlist = 6,
+        buckets = 2)
+    def pqBuild(i: Int, t: String) =
+      ProductQuant.ivfPqBuild(eshard(i), "vec_id", "embedding", t,
+        m = 2, ksub = 4, nlist = 6, buckets = 2)
+    ivfBuild(1, iv1)
+    pqBuild(1, pq1)
+    splitChaos("IVF", s"spl_chi_$id", ivfBuild(0, _),
+        ts => Similarity.ivfShardedQuery(spark, ts :+ iv1, q, "vec_id",
+            "embedding", 3, probeFrac = 0.34)
+          .orderBy("qid", "rank").as[(Long, Long, Double, Int)].collect()
+          .toSeq) {
+      (p, c0, c1, f) => Similarity.splitShardImpl(spark, p, c0, c1, 0, 2, f)
+    }
+    splitChaos("IVFPQ", s"spl_chq_$id", pqBuild(0, _),
+        ts => ProductQuant.ivfPqShardedQuery(spark, ts :+ pq1, q, "vec_id",
+            "embedding", 3, probeFrac = 0.34, refineK = 64)
+          .orderBy("qid", "rank").as[(Long, Long, Double, Int)].collect()
+          .toSeq) {
+      (p, c0, c1, f) => ProductQuant.splitShardImpl(spark, p, c0, c1, 0, 2, f)
     }
   }
 }
