@@ -255,25 +255,22 @@ object Dedup {
                           table: String, batch: DataFrame,
                           textCol: String, idCol: String,
                           threshold: Double = 0.5, k: Int = 3,
-                          numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val (bsig, bband) = batchSigFrames(batch, textCol, idCol, k,
-      numHashes, bands)
-    minhashCheckShard(spark, table, bsig, bband, numHashes, threshold)
-  }
+                          numHashes: Int = 64, bands: Int = 16): DataFrame =
+    minhashDedupAgainstSharded(spark, Seq(table), batch, textCol, idCol,
+      threshold, k, numHashes, bands)
 
-  /** [[minhashDedupAgainst]] over a DOC-DISJOINT family of admission
-    * shard indexes — the layout when the standing ADMISSION index
-    * outgrows one table (the serving indexes got this form in round
-    * 15; at 10⁹ admitted docs the signature/band tables are the next
-    * single-table wall). The batch is shingled/hashed ONCE (the same
-    * id-partitioned exchange feeds every shard's banding and
-    * verification arms through exchange reuse); each shard's check is
-    * the single-index plan verbatim (co-located bucketed joins,
-    * per-shard tombstones), and the union is exact — corpus ids are
-    * disjoint across shards, so no pair can appear twice. Cost ≡
-    * Σ per-shard checks on one box, max + batch-hash on a cluster.
+  /** [[minhashDedupAgainst]] over a DOC-DISJOINT family of S ≥ 1
+    * admission shard indexes (a single index is the one-shard family) —
+    * the layout when the standing ADMISSION index outgrows one table
+    * (the serving indexes got this form in round 15; at 10⁹ admitted
+    * docs the signature/band tables are the next single-table wall).
+    * The batch is shingled/hashed ONCE (the same id-partitioned
+    * exchange feeds every shard's banding and verification arms
+    * through exchange reuse); each shard's check is the single-index
+    * plan verbatim (co-located bucketed joins, per-shard tombstones),
+    * and the union is exact — corpus ids are disjoint across shards,
+    * so no pair can appear twice. Cost ≡ Σ per-shard checks on one
+    * box, max + batch-hash on a cluster.
     */
   def minhashDedupAgainstSharded(spark: org.apache.spark.sql.SparkSession,
                                  tables: Seq[String], batch: DataFrame,
@@ -285,17 +282,16 @@ object Dedup {
       "minhashDedupAgainstSharded needs at least one shard")
     require(numHashes % bands == 0, "bands must divide numHashes")
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    graft.functions.GraftFunctions.unionGuard(spark)
+    if (tables.size > 1) graft.functions.GraftFunctions.unionGuard(spark)
     val (bsig, bband) = batchSigFrames(batch, textCol, idCol, k,
       numHashes, bands)
     tables.map(minhashCheckShard(spark, _, bsig, bband, numHashes,
       threshold)).reduce(_.unionByName(_))
   }
 
-  /** The batch's signature and band frames, shared by the single and
-    * sharded checks: one id-partitioned exchange for the signatures,
-    * reused by the banding arm and the verification re-join (and by
-    * every shard's arms in the sharded form). */
+  /** The batch's signature and band frames: one id-partitioned
+    * exchange for the signatures, reused by the banding arm and the
+    * verification re-join of every shard. */
   private def batchSigFrames(batch: DataFrame, textCol: String,
                              idCol: String, k: Int, numHashes: Int,
                              bands: Int): (DataFrame, DataFrame) = {

@@ -30,6 +30,35 @@ import org.apache.spark.sql.functions._
   * The 100 TB story lives in the legs: the BM25 leg serves off the
   * term-bucketed pushed-scan index, the vector leg off IVF probes —
   * both measured sublinear (BASELINE.md round-12/13 serving curves).
+  *
+  * ONE HYBRID CORE. The four hybrid entries ([[hybridQuery]],
+  * [[hybridShardedQuery]], [[hybridSnippets]], [[hybridShardedSnippets]])
+  * are thin wrappers over one private core serving doc-disjoint
+  * families of S ≥ 1 tables on both legs — a single index is the
+  * one-shard family, the way a one-reducer job is not a separate code
+  * path. The core runs:
+  *  - the lexical leg: one [[Retrieval.bm25Family]] call (exact, or
+  *    MaxScore at the `lexMaxScore` dials; `planPar` > 0 executes it in
+  *    eager shard groups), top `kPerLeg` per query, `maxDfFrac` as its
+  *    stop-term dial;
+  *  - the vector leg: exactly one of a standing IVFPQ family
+  *    ([[ProductQuant.ivfPqShardedQuery]] — the memory-budget path,
+  *    `refineK` exact re-rank), a standing IVF family
+  *    ([[Similarity.ivfShardedQuery]]) or brute-force corpus shards
+  *    ([[Similarity.bruteForceShardedTopK]], exact), `probeFrac` to
+  *    whichever ANN leg serves. Passing more than one source is
+  *    rejected — a silent preference would mask a misconfiguration. At
+  *    S = 1 [[Similarity.mergeShardTopK]] hands the one leg back
+  *    unchanged, so the one-index plan is the single-index plan;
+  *  - the fusion tail: [[rrf]] or [[linear]] over the two bounded
+  *    `kPerLeg` lists (`kPerLeg` rows per query per leg is the whole
+  *    fusion working set — RRF quality saturates at a few × k);
+  *  - for the snippet entries, the passage pass
+  *    ([[Retrieval.attachBestTermSnippets]]) over the fused top-k. It
+  *    takes the query terms, pushed terms and family stats from the
+  *    lexical leg's control read, so it reads none of its own, and it
+  *    touches only the fused top-k docs: the corpus text joins strictly
+  *    AFTER fusion, k·|queries| rows, never corpus mass.
   */
 object Fusion {
 
@@ -86,31 +115,12 @@ object Fusion {
     */
   def rrf(legs: Seq[(DataFrame, Double)], k: Int, rrfK: Int = 60): DataFrame = {
     require(legs.nonEmpty, "rrf needs at least one leg")
-    require(k > 0, s"k must be positive, got $k")
     require(rrfK >= 0, s"rrfK must be non-negative, got $rrfK")
-    requireWeights(legs.map(_._2))
-    graft.functions.GraftFunctions.ensureRegistered(legs.head._1.sparkSession)
-    val contribs = legs.map { case (df, w) =>
+    fuse(legs, k) { (df, w) =>
       df.select(col("qid"), col("id"),
         floor(lit(w * 1e6) / (lit(rrfK).cast("double") + col("rank").cast("double"))
           + lit(0.5)).cast("long").as("c"))
-    }.reduce(_.unionByName(_))
-    // round 21 (guide §2.4 "two operations keyed the same way share one
-    // exchange"): partition the tiny union by qid ONCE — qid clustering
-    // satisfies both the (qid, id) fused sum AND the downstream
-    // rankTopK's per-qid aggregate, so the fusion tail pays one
-    // exchange instead of two (the union is ≤ legs·kPerLeg rows/query;
-    // map-side partial aggregation loses nothing because each (leg,
-    // qid, id) contribution is already a single row).
-    val fused = contribs.repartition(col("qid"))
-      .groupBy("qid", "id").agg(sum("c").as("fused"))
-    // fused_micro < 2^53 for any sane legs/weights, so the double round
-    // trip through the shared bounded top-k aggregate is exact
-    Similarity.rankTopK(
-        fused.select(col("qid"), col("id").as("nid"),
-          col("fused").cast("double").as("cos")), k)
-      .select(col("qid"), col("nid").as("id"),
-        col("cos").cast("long").as("fused_micro"), col("rank").as("rnk"))
+    }
   }
 
   /** Weighted linear score fusion with per-(leg, qid) min-max
@@ -134,10 +144,7 @@ object Fusion {
     */
   def linear(legs: Seq[(DataFrame, Double)], k: Int): DataFrame = {
     require(legs.nonEmpty, "linear fusion needs at least one leg")
-    require(k > 0, s"k must be positive, got $k")
-    requireWeights(legs.map(_._2))
-    graft.functions.GraftFunctions.ensureRegistered(legs.head._1.sparkSession)
-    val contribs = legs.map { case (df, w) =>
+    fuse(legs, k) { (df, w) =>
       val ext = df.groupBy("qid")
         .agg(min(col("score").cast("double")).as("_mn"),
              max(col("score").cast("double")).as("_mx"))
@@ -148,11 +155,30 @@ object Fusion {
               .otherwise((col("score").cast("double") - col("_mn")) /
                          (col("_mx") - col("_mn")))
             + lit(0.5)).cast("long").as("c"))
-    }.reduce(_.unionByName(_))
-    // one qid-keyed exchange serves both tail aggregates (round 21 —
-    // the rrf form's note)
-    val fused = contribs.repartition(col("qid"))
+    }
+  }
+
+  /** The fusion tail shared by [[rrf]] and [[linear]]: each weighted
+    * leg's per-(qid, id) integer-micro contribution `c`, summed across
+    * legs and ranked top `k` per qid under (fused_micro desc, id asc).
+    */
+  private def fuse(legs: Seq[(DataFrame, Double)], k: Int)(
+      contrib: (DataFrame, Double) => DataFrame): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    requireWeights(legs.map(_._2))
+    graft.functions.GraftFunctions.ensureRegistered(legs.head._1.sparkSession)
+    // round 21 (guide §2.4 "two operations keyed the same way share one
+    // exchange"): partition the tiny union by qid ONCE — qid clustering
+    // satisfies both the (qid, id) fused sum AND the downstream
+    // rankTopK's per-qid aggregate, so the fusion tail pays one
+    // exchange instead of two (the union is ≤ legs·kPerLeg rows/query;
+    // map-side partial aggregation loses nothing because each (leg,
+    // qid, id) contribution is already a single row).
+    val fused = legs.map(contrib.tupled).reduce(_.unionByName(_))
+      .repartition(col("qid"))
       .groupBy("qid", "id").agg(sum("c").as("fused"))
+    // fused_micro < 2^53 (requireWeights), so the double round trip
+    // through the shared bounded top-k aggregate is exact
     Similarity.rankTopK(
         fused.select(col("qid"), col("id").as("nid"),
           col("fused").cast("double").as("cos")), k)
@@ -160,40 +186,18 @@ object Fusion {
         col("cos").cast("long").as("fused_micro"), col("rank").as("rnk"))
   }
 
-  /** Hybrid lexical+vector retrieval over a standing BM25 index and a
-    * vector leg, fused with [[rrf]] (`mode = "rrf"`, default) or
-    * [[linear]] (`mode = "linear"`).
-    *
-    * `queries` carries `qidCol` (integral id), `textCol` (the lexical
-    * query string) and `vecCol` (the query embedding). The vector leg
-    * is served from exactly ONE source (passing more than one — any
-    * combination, standing index or corpus — is rejected: a silent
-    * preference would mask a misconfiguration):
-    * a standing IVFPQ index
-    * when `pqIndex` is given ([[ProductQuant.ivfPqQuery]] — the 100 TB
-    * memory-budget path: PQ codes are ~m·8/(dim·32) the raw vector
-    * bytes, with `refineK` exact re-ranking on the raw vectors of the
-    * quantized top candidates), else a standing IVF index when
-    * `vecIndex` is given ([[Similarity.ivfQuery]], `probeFrac` dial —
-    * the raw-vector at-scale path), else exact brute-force over
-    * `vecCorpus` (`embIdCol`/`embVecCol` columns; the small-corpus /
-    * oracle path). `kPerLeg` bounds each leg's candidate list (RRF
-    * quality saturates at a few × k; kPerLeg rows per query per leg is
-    * the entire fusion working set), `maxDfFrac` passes through to the
-    * BM25 leg's stop-term dial, `probeFrac` to whichever ANN leg
-    * serves.
-    *
-    * `lexMaxScore` routes the lexical leg through
-    * [[Retrieval.bm25QueryMaxScore]] (the round-17 exact MaxScore
-    * pruning) at the given dials — bit-identical fused output (the
-    * pruned leg equals [[Retrieval.bm25Query]] by construction, gated
-    * at t44/t46), but a query batch mixing rare and head terms stops
-    * pushing the head terms' full posting lists through the scoring
-    * leg that the round-17 adjudication named as the hybrid's dominant
-    * lexical cost. EAGER when set (the MaxScore control plane collects
-    * its bounded (qid, term, df) and threshold rows at call time, like
-    * `planPar` on the sharded form); None keeps the lazy single-plan
-    * composition.
+  /** Hybrid lexical+vector retrieval over a standing BM25 index and
+    * one vector leg, fused with [[rrf]] (`mode = "rrf"`, default) or
+    * [[linear]] (`mode = "linear"`): the one-index family of the hybrid
+    * core (see the object doc). `queries` carries `qidCol` (integral
+    * id), `textCol` (the lexical query string) and `vecCol` (the query
+    * embedding). The vector leg is EXACTLY ONE of `pqIndex` (standing
+    * IVFPQ, [[ProductQuant.ivfPqQuery]], `refineK` exact re-rank),
+    * `vecIndex` (standing IVF, [[Similarity.ivfQuery]]) or `vecCorpus`
+    * (exact brute force over its `embIdCol`/`embVecCol` columns);
+    * `probeFrac` passes to whichever ANN leg serves. `lexMaxScore`
+    * serves the lexical leg through the MaxScore plan at the given dials
+    * (bit-identical fused output, EAGER control plane).
     */
   def hybridQuery(spark: SparkSession, bm25Table: String, queries: DataFrame,
                   qidCol: String, textCol: String, vecCol: String, k: Int,
@@ -208,62 +212,23 @@ object Fusion {
                   pqIndex: Option[String] = None,
                   refineK: Int = 0,
                   lexMaxScore: Option[Retrieval.MaxScoreDials] = None)
-      : DataFrame = {
-    require(Seq(pqIndex, vecIndex, vecCorpus).count(_.nonEmpty) == 1,
-      "hybridQuery needs EXACTLY ONE vector leg: pqIndex (standing " +
-        "IVFPQ), vecIndex (standing IVF) or vecCorpus (brute-force) — " +
-        "a silent preference among several would mask a misconfiguration")
-    require(mode == "rrf" || mode == "linear",
-      s"""mode must be "rrf" or "linear", got "$mode"""")
-    val lex = (lexMaxScore match {
-      case Some(dl) =>
-        Retrieval.bm25QueryMaxScore(spark, bm25Table, queries, qidCol,
-          textCol, kPerLeg, maxDfFrac = maxDfFrac,
-          essentialDfFrac = dl.essentialDfFrac,
-          maxCandBroadcast = dl.maxCandBroadcast,
-          gateMinHeadMass = dl.gateMinHeadMass,
-          gateCandFrac = dl.gateCandFrac)
-      case None =>
-        Retrieval.bm25Query(spark, bm25Table, queries, qidCol, textCol,
-          kPerLeg, maxDfFrac = maxDfFrac)
-    }).select(col("qid"), col("doc_id").as("id"), col("rnk").as("rank"),
-        col("score_micro").cast("double").as("score"))
-    val vec = ((pqIndex, vecIndex) match {
-      case (Some(t), _) =>
-        ProductQuant.ivfPqQuery(spark, t, queries, qidCol, vecCol, kPerLeg,
-          probeFrac = probeFrac, refineK = refineK)
-      case (None, Some(t)) =>
-        Similarity.ivfQuery(spark, t, queries, qidCol, vecCol, kPerLeg,
-          probeFrac = probeFrac)
-      case (None, None) =>
-        Similarity.bruteForceTopK(
-          vecCorpus.get.select(col(embIdCol).as("_vid"), col(embVecCol).as("_vv")),
-          queries.select(col(qidCol).as("_vid"), col(vecCol).as("_vv")),
-          "_vid", "_vv", kPerLeg)
-    }).select(col("qid"), col("nid").as("id"), col("rank"),
-        col("cos").as("score"))
-    if (mode == "linear") linear(Seq(lex -> wLex, vec -> wVec), k)
-    else rrf(Seq(lex -> wLex, vec -> wVec), k, rrfK)
-  }
+      : DataFrame =
+    hybrid(spark, "hybridQuery", OneIndexLegs, Seq(bm25Table), queries,
+      qidCol, textCol, vecCol, k, kPerLeg, rrfK, wLex, wVec,
+      pqIndex.map(Seq(_)), vecIndex.map(Seq(_)), vecCorpus.map(Seq(_)),
+      embIdCol, embVecCol, probeFrac, maxDfFrac, mode, refineK, 0,
+      lexMaxScore)
 
-  /** [[hybridQuery]] over DOC-DISJOINT shard indexes on BOTH legs —
-    * hybrid serving at the scale where neither the lexical index nor
-    * the vector corpus fits one table/box (the round-15 sharded layout
-    * end-to-end: BASELINE.md measures one 10⁷-doc positional BM25 shard
-    * at 5.85 GB, so 10⁸ docs shard or die). The lexical leg is
-    * [[Retrieval.bm25ShardedQuery]] (global (N, avgdl, df) folded
-    * across shard dictionaries — exactly the whole-index ranking); the
-    * vector leg is exactly ONE of: sharded IVFPQ
-    * ([[ProductQuant.ivfPqShardedQuery]], the memory-budget path),
-    * sharded IVF ([[Similarity.ivfShardedQuery]], raw vectors), or
-    * sharded brute force ([[Similarity.bruteForceShardedTopK]] over
-    * `vecShards`, exact). Both legs hand fusion the same bounded
-    * kPerLeg lists as the single-index form — since sharded BM25 is
-    * exact and sharded brute force is exact, the fused result with
-    * `vecShards` is EXACTLY [[hybridQuery]]'s on the union corpus
-    * (oracle-gated at t36); the shard split shows up only in where the
-    * legs' work runs. The fusion itself is the identical [[rrf]]/
-    * [[linear]] tail: shard count never touches scores.
+  /** [[hybridQuery]] over DOC-DISJOINT shard families on BOTH legs —
+    * hybrid serving where neither the lexical index nor the vector
+    * corpus fits one table (BASELINE.md measures one 10⁷-doc positional
+    * BM25 shard at 5.85 GB, so 10⁸ docs shard or die). The vector leg
+    * is EXACTLY ONE of `pqIndexes`, `vecIndexes` or `vecShards`; with
+    * `vecShards` both legs are exact, so the fused rows are EXACTLY
+    * [[hybridQuery]]'s on the union corpus (oracle-gated at t36).
+    * `planPar` > 0 plans the lexical leg in ⌈S/planPar⌉ shard groups on
+    * driver threads (EAGER); 0 keeps the lazy single plan; it composes
+    * with `lexMaxScore`.
     */
   def hybridShardedQuery(spark: SparkSession, bm25Tables: Seq[String],
                          queries: DataFrame, qidCol: String,
@@ -281,64 +246,21 @@ object Fusion {
                          refineK: Int = 0,
                          planPar: Int = 0,
                          lexMaxScore: Option[Retrieval.MaxScoreDials] = None)
-      : DataFrame = {
-    require(bm25Tables.nonEmpty,
-      "hybridShardedQuery needs at least one BM25 shard")
-    require(planPar >= 0, s"planPar must be >= 0, got $planPar")
-    require(Seq(pqIndexes, vecIndexes, vecShards).count(_.nonEmpty) == 1,
-      "hybridShardedQuery needs EXACTLY ONE vector leg: pqIndexes " +
-        "(standing IVFPQ shards), vecIndexes (standing IVF shards) or " +
-        "vecShards (brute-force corpus shards) — a silent preference " +
-        "among several would mask a misconfiguration")
-    require(mode == "rrf" || mode == "linear",
-      s"""mode must be "rrf" or "linear", got "$mode"""")
-    // the lexical leg: bit-identical rows on every route (t45/t47/t48).
-    // planPar > 0 plans it in ⌈S/planPar⌉ shard groups on driver threads
-    // (the high-S form, EAGER: kPerLeg·|queries| rows per group through
-    // the driver); 0 keeps the lazy single-plan composition. lexMaxScore
-    // prunes head terms per shard leg; the two dials compose.
-    val lex = Retrieval.bm25Family(spark, bm25Tables, queries, qidCol,
-        textCol, kPerLeg, maxDfFrac = maxDfFrac, maxScore = lexMaxScore,
-        parallelism = Some(planPar).filter(_ > 0))
-      .select(col("qid"), col("doc_id").as("id"), col("rnk").as("rank"),
-        col("score_micro").cast("double").as("score"))
-    val vec = ((pqIndexes, vecIndexes) match {
-      case (Some(ts), _) =>
-        ProductQuant.ivfPqShardedQuery(spark, ts, queries, qidCol, vecCol,
-          kPerLeg, probeFrac = probeFrac, refineK = refineK)
-      case (None, Some(ts)) =>
-        Similarity.ivfShardedQuery(spark, ts, queries, qidCol, vecCol,
-          kPerLeg, probeFrac = probeFrac)
-      case (None, None) =>
-        Similarity.bruteForceShardedTopK(
-          vecShards.get.map(_.select(col(embIdCol).as("_vid"),
-            col(embVecCol).as("_vv"))),
-          queries.select(col(qidCol).as("_vid"), col(vecCol).as("_vv")),
-          "_vid", "_vv", kPerLeg)
-    }).select(col("qid"), col("nid").as("id"), col("rank"),
-        col("cos").as("score"))
-    if (mode == "linear") linear(Seq(lex -> wLex, vec -> wVec), k)
-    else rrf(Seq(lex -> wLex, vec -> wVec), k, rrfK)
-  }
+      : DataFrame =
+    hybrid(spark, "hybridShardedQuery", ShardedLegs, bm25Tables, queries,
+      qidCol, textCol, vecCol, k, kPerLeg, rrfK, wLex, wVec, pqIndexes,
+      vecIndexes, vecShards, embIdCol, embVecCol, probeFrac, maxDfFrac, mode,
+      refineK, planPar, lexMaxScore)
 
   /** [[hybridQuery]] + passage extraction — what a RAG consumer
     * actually reads: each fused top-k hit carries the first occurrence
     * of its best-scoring lexical query term and the ±`context`-token
     * window around it, sliced from `docs` (`docIdCol`/`docTextCol`: the
-    * corpus text, which no index stores). Reuses the bag-of-words span
-    * machinery ([[Retrieval.attachBestTermSnippets]], the t29 path)
-    * against the BM25 index's positional table, so the index must be
-    * built with `positions = true`.
-    *
-    * A hit retrieved by the VECTOR leg alone may contain no lexical
-    * query term — it keeps its fused rank with null `start`/`snippet`
-    * (no lexical passage exists; dropping or re-snipping it would
-    * misreport the fusion). Plan discipline: the span pass touches only
-    * the fused top-k docs (broadcast semi-join before any positional
-    * probe) and the corpus text joins strictly AFTER fusion —
-    * k·|queries| rows, never corpus mass.
-    *
-    * Output: (qid, id, fused_micro, rnk, start, snippet).
+    * corpus text, which no index stores). The index must be built with
+    * `positions = true`. A hit retrieved by the vector leg alone may
+    * contain no lexical query term: it keeps its fused rank with null
+    * `start`/`snippet`. Output: (qid, id, fused_micro, rnk, start,
+    * snippet).
     */
   def hybridSnippets(spark: SparkSession, bm25Table: String,
                      queries: DataFrame, qidCol: String, textCol: String,
@@ -356,34 +278,18 @@ object Fusion {
                      pqIndex: Option[String] = None,
                      refineK: Int = 0,
                      lexMaxScore: Option[Retrieval.MaxScoreDials] = None)
-      : DataFrame = {
-    require(context >= 0, s"context must be non-negative, got $context")
-    val fused = hybridQuery(spark, bm25Table, queries, qidCol, textCol,
-        vecCol, k, kPerLeg, rrfK, wLex, wVec, vecIndex, vecCorpus,
-        embIdCol, embVecCol, probeFrac, maxDfFrac, mode, pqIndex, refineK,
-        lexMaxScore)
-      .select(col("qid"), col("id").as("doc_id"), col("fused_micro"),
-        col("rnk"))
-    val qt = queries
-      .select(col(qidCol).as("qid"),
-        explode(TextOps.tokens(lower(col(textCol)))).as("term"))
-      .distinct()
-    val qterms = Retrieval.pushableTerms(spark, qt)
-    Retrieval.attachBestTermSnippets(spark, bm25Table, qt, fused, docs,
-        docIdCol, docTextCol, context, k1 = 1.2, b = 0.75, maxDfFrac,
-        qterms)
-      .select(col("qid"), col("doc_id").as("id"), col("fused_micro"),
-        col("rnk"), col("start"), col("snippet"))
-  }
+      : DataFrame =
+    hybrid(spark, "hybridSnippets", OneIndexLegs, Seq(bm25Table), queries,
+      qidCol, textCol, vecCol, k, kPerLeg, rrfK, wLex, wVec,
+      pqIndex.map(Seq(_)), vecIndex.map(Seq(_)), vecCorpus.map(Seq(_)),
+      embIdCol, embVecCol, probeFrac, maxDfFrac, mode, refineK, 0,
+      lexMaxScore, Some(Passages(docs, docIdCol, docTextCol, context)))
 
-  /** [[hybridSnippets]] over doc-disjoint shards on both legs — the
-    * RAG read path for a sharded deployment: [[hybridShardedQuery]]'s
-    * fusion plus passage extraction through
-    * [[Retrieval.attachBestTermSnippetsSharded]] (argmax terms chosen
-    * against the GLOBAL stats fold, so the passages are exactly the
-    * whole-index choices; positional lookups union per shard). Same
-    * null-span contract for vector-only hits, same text-joins-strictly-
-    * after-fusion discipline, same output schema as [[hybridSnippets]].
+  /** [[hybridSnippets]] over doc-disjoint shard families on both legs:
+    * [[hybridShardedQuery]]'s fusion plus the same passage pass, whose
+    * argmax terms score against the family stats, so the passages are
+    * exactly the whole-index choices. Same output schema as
+    * [[hybridSnippets]].
     */
   def hybridShardedSnippets(spark: SparkSession, bm25Tables: Seq[String],
                             queries: DataFrame, qidCol: String,
@@ -403,23 +309,70 @@ object Fusion {
                             refineK: Int = 0,
                             planPar: Int = 0,
                             lexMaxScore: Option[Retrieval.MaxScoreDials] =
-                              None): DataFrame = {
-    require(context >= 0, s"context must be non-negative, got $context")
-    val fused = hybridShardedQuery(spark, bm25Tables, queries, qidCol,
-        textCol, vecCol, k, kPerLeg, rrfK, wLex, wVec, vecIndexes,
-        vecShards, embIdCol, embVecCol, probeFrac, maxDfFrac, mode,
-        pqIndexes, refineK, planPar, lexMaxScore)
-      .select(col("qid"), col("id").as("doc_id"), col("fused_micro"),
-        col("rnk"))
-    val qt = queries
-      .select(col(qidCol).as("qid"),
-        explode(TextOps.tokens(lower(col(textCol)))).as("term"))
-      .distinct()
-    val qterms = Retrieval.pushableTerms(spark, qt)
-    Retrieval.attachBestTermSnippetsSharded(spark, bm25Tables, qt, fused,
-        docs, docIdCol, docTextCol, context, k1 = 1.2, b = 0.75,
-        maxDfFrac, qterms)
-      .select(col("qid"), col("doc_id").as("id"), col("fused_micro"),
-        col("rnk"), col("start"), col("snippet"))
+                              None): DataFrame =
+    hybrid(spark, "hybridShardedSnippets", ShardedLegs, bm25Tables, queries,
+      qidCol, textCol, vecCol, k, kPerLeg, rrfK, wLex, wVec, pqIndexes,
+      vecIndexes, vecShards, embIdCol, embVecCol, probeFrac, maxDfFrac, mode,
+      refineK, planPar, lexMaxScore,
+      Some(Passages(docs, docIdCol, docTextCol, context)))
+
+  private val OneIndexLegs = "pqIndex (standing IVFPQ), vecIndex " +
+    "(standing IVF) or vecCorpus (brute-force)"
+  private val ShardedLegs = "pqIndexes (standing IVFPQ shards), vecIndexes " +
+    "(standing IVF shards) or vecShards (brute-force corpus shards)"
+
+  /** The corpus text a hybrid call slices passages from. */
+  private final case class Passages(docs: DataFrame, idCol: String,
+                                    textCol: String, context: Int)
+
+  /** THE hybrid core (see the object doc): `caller` names the entry in
+    * errors and `legNames` its vector-leg arguments. */
+  private def hybrid(spark: SparkSession, caller: String, legNames: String,
+                     bm25Tables: Seq[String], queries: DataFrame,
+                     qidCol: String, textCol: String, vecCol: String, k: Int,
+                     kPerLeg: Int, rrfK: Int, wLex: Double, wVec: Double,
+                     pq: Option[Seq[String]], ivf: Option[Seq[String]],
+                     corpus: Option[Seq[DataFrame]], embIdCol: String,
+                     embVecCol: String, probeFrac: Double, maxDfFrac: Double,
+                     mode: String, refineK: Int, planPar: Int,
+                     lexMaxScore: Option[Retrieval.MaxScoreDials],
+                     passages: Option[Passages] = None): DataFrame = {
+    passages.foreach(p => require(p.context >= 0,
+      s"context must be non-negative, got ${p.context}"))
+    require(bm25Tables.nonEmpty, s"$caller needs at least one BM25 shard")
+    require(planPar >= 0, s"planPar must be >= 0, got $planPar")
+    require(Seq(pq, ivf, corpus).count(_.nonEmpty) == 1,
+      s"$caller needs EXACTLY ONE vector leg: $legNames — a silent " +
+        "preference among several would mask a misconfiguration")
+    require(mode == "rrf" || mode == "linear",
+      s"""mode must be "rrf" or "linear", got "$mode"""")
+    val lex = Retrieval.bm25Family(spark, bm25Tables, queries, qidCol,
+      textCol, kPerLeg, maxDfFrac = maxDfFrac, maxScore = lexMaxScore,
+      parallelism = Some(planPar).filter(_ > 0))
+    val vec = ((pq, ivf) match {
+      case (Some(ts), _) =>
+        ProductQuant.ivfPqShardedQuery(spark, ts, queries, qidCol, vecCol,
+          kPerLeg, probeFrac = probeFrac, refineK = refineK)
+      case (None, Some(ts)) =>
+        Similarity.ivfShardedQuery(spark, ts, queries, qidCol, vecCol,
+          kPerLeg, probeFrac = probeFrac)
+      case (None, None) =>
+        Similarity.bruteForceShardedTopK(
+          corpus.get.map(_.select(col(embIdCol).as("_vid"),
+            col(embVecCol).as("_vv"))),
+          queries.select(col(qidCol).as("_vid"), col(vecCol).as("_vv")),
+          "_vid", "_vv", kPerLeg)
+    }).select(col("qid"), col("nid").as("id"), col("rank"),
+        col("cos").as("score"))
+    val legs = Seq(lex.ranked.select(col("qid"), col("doc_id").as("id"),
+        col("rnk").as("rank"), col("score_micro").cast("double").as("score"))
+      -> wLex, vec -> wVec)
+    val fused = if (mode == "linear") linear(legs, k) else rrf(legs, k, rrfK)
+    passages.fold(fused) { p =>
+      Retrieval.attachBestTermSnippets(spark, caller, bm25Tables, lex,
+          fused.withColumnRenamed("id", "doc_id"), p.docs, p.idCol,
+          p.textCol, p.context, k1 = 1.2, b = 0.75, maxDfFrac)
+        .withColumnRenamed("doc_id", "id")
+    }
   }
 }

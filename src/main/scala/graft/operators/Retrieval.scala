@@ -502,7 +502,7 @@ object Retrieval {
                 k1: Double = 1.2, b: Double = 0.75,
                 maxDfFrac: Double = 1.0): DataFrame =
     bm25Family(spark, Seq(table), queries, qidCol, textCol, k, k1, b,
-      maxDfFrac)
+      maxDfFrac).ranked
 
   /** The MaxScore dial bundle — the four cost dials of the pruned
     * entry points as one value, and the dial value of [[bm25Family]].
@@ -570,15 +570,10 @@ object Retrieval {
                         essentialDfFrac: Double = DefaultEssentialDfFrac,
                         maxCandBroadcast: Long = DefaultMaxCandBroadcast,
                         gateMinHeadMass: Long = DefaultGateMinHeadMass,
-                        gateCandFrac: Double = DefaultGateCandFrac): DataFrame = {
-    require(gateMinHeadMass >= 0,
-      s"gateMinHeadMass must be non-negative, got $gateMinHeadMass")
-    require(gateCandFrac > 0.0,
-      s"gateCandFrac must be positive, got $gateCandFrac")
+                        gateCandFrac: Double = DefaultGateCandFrac): DataFrame =
     bm25Family(spark, Seq(table), queries, qidCol, textCol, k, k1, b,
       maxDfFrac, Some(MaxScoreDials(essentialDfFrac, maxCandBroadcast,
-        gateMinHeadMass, gateCandFrac)))
-  }
+        gateMinHeadMass, gateCandFrac))).ranked
 
   /** Multi-shard BM25 serving — the layout for a corpus whose index
     * cannot live in one table (measured: BASELINE.md round-15 — at 10⁸
@@ -601,7 +596,8 @@ object Retrieval {
                        k: Int, k1: Double = 1.2, b: Double = 0.75,
                        maxDfFrac: Double = 1.0): DataFrame = {
     require(tables.nonEmpty, "bm25ShardedQuery needs at least one shard")
-    bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac)
+    bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b,
+      maxDfFrac).ranked
   }
 
   /** [[bm25ShardedQuery]] with the MaxScore two-pass pruning of
@@ -624,7 +620,7 @@ object Retrieval {
       "bm25ShardedQueryMaxScore needs at least one shard")
     bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac,
       Some(MaxScoreDials(essentialDfFrac, maxCandBroadcast,
-        gateMinHeadMass, gateCandFrac)))
+        gateMinHeadMass, gateCandFrac))).ranked
   }
 
   /** [[bm25ShardedQuery]] with the S shard legs PLANNED AND EXECUTED in
@@ -656,7 +652,7 @@ object Retrieval {
                               parallelism: Int = 8): DataFrame = {
     require(tables.nonEmpty, "bm25ShardedQueryGrouped needs at least one shard")
     bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac,
-      parallelism = Some(parallelism))
+      parallelism = Some(parallelism)).ranked
   }
 
   /** [[bm25ShardedQueryMaxScore]] × [[bm25ShardedQueryGrouped]] — the
@@ -689,7 +685,7 @@ object Retrieval {
       "bm25ShardedQueryMaxScoreGrouped needs at least one shard")
     bm25Family(spark, tables, queries, qidCol, textCol, k, k1, b, maxDfFrac,
       Some(MaxScoreDials(essentialDfFrac, maxCandBroadcast,
-        gateMinHeadMass, gateCandFrac)), Some(parallelism))
+        gateMinHeadMass, gateCandFrac)), Some(parallelism)).ranked
   }
 
   /** THE bag-of-words serving core: every entry above is a thin wrapper
@@ -777,6 +773,10 @@ object Retrieval {
     * hang at S = 32, BASELINE.md round-18). The head-mass gate scales
     * with S: each leg prunes only its 1/S share of a head list while
     * paying its own two-pass overhead (DevShardGrowth `ms`, 1e6 × S=32).
+    *
+    * Returns the ranked frame with what the control read already
+    * established ([[BowServed]]), so a passage pass over the same
+    * batch ([[attachBestTermSnippets]]) reads nothing twice.
     */
   private[operators] def bm25Family(spark: SparkSession, tables: Seq[String],
                                     queries: DataFrame, qidCol: String,
@@ -785,13 +785,17 @@ object Retrieval {
                                     maxDfFrac: Double = 1.0,
                                     maxScore: Option[MaxScoreDials] = None,
                                     parallelism: Option[Int] = None)
-      : DataFrame = {
+      : BowServed = {
     require(tables.nonEmpty, "a BM25 family needs at least one index")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     maxScore.foreach { d =>
       require(d.essentialDfFrac > 0.0 && d.essentialDfFrac <= 1.0,
         s"essentialDfFrac must be in (0, 1], got ${d.essentialDfFrac}")
+      require(d.gateMinHeadMass >= 0,
+        s"gateMinHeadMass must be non-negative, got ${d.gateMinHeadMass}")
+      require(d.gateCandFrac > 0.0,
+        s"gateCandFrac must be positive, got ${d.gateCandFrac}")
       require(k >= 1, s"k must be positive, got $k")
     }
     val passes = Passes(tables.size, parallelism)
@@ -813,7 +817,7 @@ object Retrieval {
     val d = maxScore match {
       case None =>
         val (qterms, stats) = ctrlTermsStats(spark, tables, qt)
-        return exact(qt, qterms, stats)
+        return BowServed(exact(qt, qterms, stats), qt, qterms, stats)
       case Some(d) => d
     }
     val qterms = pushableTerms(spark, qt)
@@ -822,8 +826,10 @@ object Retrieval {
     val softCap = maxControlRows * msOverflowFactor
     val (ctrlRows, stats) =
       controlRead(spark, Seq(tables -> qdf), softCap, maxDfFrac).head
-    if (ctrlRows.isEmpty) return exact(qt, qterms, None) // nothing indexed
-    if (ctrlRows.length > softCap) return exact(qt, qterms, stats)
+    def served(ranked: DataFrame) = BowServed(ranked, qt, qterms, stats)
+    if (ctrlRows.isEmpty) // nothing indexed
+      return served(exact(qt, qterms, None))
+    if (ctrlRows.length > softCap) return served(exact(qt, qterms, stats))
     val (nDocs, dlSum) = stats.get
     require(nDocs > 0, emptyMsg(tables))
     val avgdl = dlSum.toDouble / nDocs.toDouble
@@ -971,7 +977,7 @@ object Retrieval {
           else safe.unionByName(scored(g, otherRows)))
       }
     }
-    if (capped.length <= maxControlRows)
+    served(if (capped.length <= maxControlRows)
       twoPass(capped, () => exact(qt, qterms, stats))
     else {
       val (chunks, exactRows) = chunkRowsByQid(capped, maxControlRows)
@@ -983,8 +989,17 @@ object Retrieval {
       (fanOut(spark, chunks, 4)(c => twoPass(c, () => chunkExact(c))) ++
           Some(exactRows).filter(_.nonEmpty).map(chunkExact))
         .reduce(_.unionByName(_))
-    }
+    })
   }
+
+  /** What one bag-of-words serve hands back: the ranked top-k and what
+    * its control read established — the query-term frame, the pushed
+    * terms and the family's corrected (N, Σdl) (None when the read
+    * returned no row). */
+  private[operators] final case class BowServed(ranked: DataFrame,
+                                                qt: DataFrame,
+                                                qterms: Option[Seq[String]],
+                                                stats: Option[(Long, Long)])
 
   /** The bounded `(term, blk) → (max_tf, min_dl)` control slice behind
     * the block-UB refinement ([[bm25Family]]): the `_blkmax` deltas of
@@ -1350,6 +1365,12 @@ object Retrieval {
     if (tableExists(spark, s"${table}_foldlock"))
       bm25FoldTombstones(spark, table)
 
+  private def requirePositional(spark: SparkSession, tables: Seq[String],
+                                caller: String): Unit =
+    tables.foreach(t => require(tableExists(spark, s"${t}_pos"),
+      s"$caller: $t has no positional table — build the index with " +
+        "positions = true"))
+
   /** The query batch's distinct terms as literals for scan pruning, or
     * None past `maxPushTerms` (adversarially huge batches fall back to
     * the full-scan plan). The index tables are bucketed AND sorted by
@@ -1363,8 +1384,8 @@ object Retrieval {
     * discipline. The per-value regime needs the threshold raise of
     * [[raiseInFilterThreshold]], which the serving entry has made.
     */
-  private[operators] def pushableTerms(spark: SparkSession, qt: DataFrame,
-                                       maxPushTerms: Int = 1 << 12)
+  private def pushableTerms(spark: SparkSession, qt: DataFrame,
+                            maxPushTerms: Int = 1 << 12)
       : Option[Seq[String]] = {
     val terms = qt.select("term").distinct().limit(maxPushTerms + 1)
       .collect().map(_.getString(0)).toSeq
@@ -2118,15 +2139,11 @@ object Retrieval {
     * table (`bm25Build` with `positions = true`) for the occurrence
     * offsets.
     *
-    * Plan shape: ranking is the [[bm25Query]] pipeline with the one
-    * bounded control collect shared across scoring AND the span pass
-    * (the pushed-term discipline); per-term partials are recomputed
-    * only for the top-k docs (a broadcast semi-join narrows the
-    * postings probe to k·|queries| documents), the argmax runs on that
-    * tiny frame, and the first occurrence reads the head of the
-    * delta-encoded position list (the first element is stored
-    * absolute — no decode). The text join runs strictly after top-k.
-    * Output: (qid, doc_id, score_micro, rnk, start, snippet).
+    * Plan shape: ranking is the one-index [[bm25Family]] and the
+    * passages its [[attachBestTermSnippets]] pass, which reuses the
+    * ranking's one bounded control collect. The text join runs
+    * strictly after top-k. Output: (qid, doc_id, score_micro, rnk,
+    * start, snippet).
     */
   def bm25Snippets(spark: SparkSession, table: String, queries: DataFrame,
                    qidCol: String, textCol: String, docs: DataFrame,
@@ -2134,115 +2151,58 @@ object Retrieval {
                    context: Int = 3, k1: Double = 1.2, b: Double = 0.75,
                    maxDfFrac: Double = 1.0): DataFrame = {
     require(context >= 0, s"context must be non-negative, got $context")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    GraftFunctions.ensureRegistered(spark)
-    raiseInFilterThreshold(spark, maxInPushValues)
-    healFold(spark, table)
-    require(tableExists(spark, s"${table}_pos"),
-      s"bm25Snippets: $table has no positional table — " +
-        "build the index with positions = true")
-    val qt = queries
-      .select(col(qidCol).as("qid"), explode(toks(col(textCol))).as("term"))
-      .distinct()
-    // FUSED control read (round 20): one job for the pushed terms +
-    // corrected stats, shared by BOTH scoring passes (ranking and the
-    // snippet argmax) — pre-fusion this entry paid three driver
-    // actions (pushableTerms + two stats reads)
-    val (qterms, stats) = ctrlTermsStats(spark, Seq(table), qt)
-    val c = consts(spark, Seq(table), qterms, maxDfFrac, stats)
-    val ranked = rankOut(sumParts(partialsWith(spark, table, qt, k1, b,
-      c.nDocs, c.avgdl, c.dict, qterms, None, broadcastDocs = false)), k)
-    attachBestTermSnippets(spark, table, qt, ranked, docs, docIdCol,
-      docTextCol, context, k1, b, maxDfFrac, qterms, stats)
+    val lex = bm25Family(spark, Seq(table), queries, qidCol, textCol, k, k1,
+      b, maxDfFrac)
+    attachBestTermSnippets(spark, "bm25Snippets", Seq(table), lex,
+      lex.ranked, docs, docIdCol, docTextCol, context, k1, b, maxDfFrac)
   }
 
-  /** The best-term passage pass behind [[bm25Snippets]] — and, via
-    * [[Fusion.hybridSnippets]], behind fused hybrid results: given an
-    * ALREADY-RANKED frame carrying (qid, doc_id, …payload columns…),
-    * attach `(start, snippet)` — the first occurrence of that (query,
-    * doc)'s best-scoring query term and the ±`context`-token window
-    * around it. LEFT-join semantics: a ranked document containing NO
-    * query term (possible for a vector-leg hybrid hit) keeps its row
-    * with null start/snippet — no lexical passage exists, and dropping
-    * the hit would silently unrank it.
+  /** The best-term passage pass behind [[bm25Snippets]] and the
+    * [[Fusion]] hybrid passages, over the doc-disjoint family `tables`
+    * (S ≥ 1) that served `lex`: given an ALREADY-RANKED frame carrying
+    * (qid, doc_id, …payload columns…), attach `(start, snippet)` — the
+    * first occurrence of that (query, doc)'s best-scoring query term
+    * and the ±`context`-token window around it. LEFT-join semantics: a
+    * ranked document containing NO query term (possible for a
+    * vector-leg hybrid hit) keeps its row with null start/snippet — no
+    * lexical passage exists, and dropping the hit would silently
+    * unrank it.
     *
-    * Plan shape (the [[bm25Snippets]] discipline): per-term partials
-    * recompute only for the broadcast-semi-joined ranked docs, the
-    * argmax runs on that tiny frame, the first occurrence reads the
-    * delta-encoded position list's head (stored absolute — no decode),
-    * and the corpus text join runs strictly after ranking, k·|queries|
-    * rows against `docs`.
+    * The argmax term must match the whole-index choice EXACTLY, so the
+    * partials score against the family's (N, avgdl, df) from `lex`'s
+    * control read (no read of its own), never per-shard stats; a doc's
+    * positions live in its own shard, so the positional lookups union
+    * per shard. Plan shape: the ranked frame collects once (bounded)
+    * and every consumer reads the literal; per-term partials recompute
+    * only for the broadcast-semi-joined ranked docs, whose ids also
+    * push into each positional scan ([[prunedByDocs]] against the
+    * family N); the first occurrence reads the delta-encoded position
+    * list's head (stored absolute — no decode); the corpus text join
+    * runs strictly after ranking, k·|queries| rows against `docs`.
     */
   private[operators] def attachBestTermSnippets(
-      spark: SparkSession, table: String, qt: DataFrame, ranked: DataFrame,
-      docs: DataFrame, docIdCol: String, docTextCol: String,
-      context: Int, k1: Double, b: Double, maxDfFrac: Double,
-      qterms: Option[Seq[String]],
-      stats: Option[(Long, Long)] = None): DataFrame = {
-    require(tableExists(spark, s"${table}_pos"),
-      s"snippet extraction: $table has no positional table — " +
-        "build the index with positions = true")
-    raiseInFilterThreshold(spark, maxInPushValues)
-    // round 21 (VERDICT r20 ask #4): one scored frame, many consumers —
-    // the ranked plan fed the output spine AND the rankedDocs broadcast
-    // gating the partials recompute, re-executing the whole ranking per
-    // consumer. Literal re-injection shares it, and the collected ids
-    // push into the span pass's positional scan (page-skip on the
-    // (term, doc_id)-sorted layout).
-    val (rankedL, rankedRows) = literalizeBounded(spark, ranked)
-    val rankedDocs = rankedL.select("doc_id").distinct()
-    val c = consts(spark, Seq(table), qterms, maxDfFrac, stats)
-    val partials = partialsWith(spark, table, qt, k1, b, c.nDocs, c.avgdl,
-      c.dict, qterms, Some(rankedDocs), broadcastDocs = true)
-    val docIdx = ranked.schema.fieldIndex("doc_id")
-    val pos = Tombstones.filterOut(spark, table,
-      rankedRows.fold(pruneToTerms(spark.table(s"${table}_pos"), qterms))(
-        rs => prunedByDocs(
-          pruneToTerms(spark.table(s"${table}_pos"), qterms),
-          rs.map(_.get(docIdx)).toSeq.distinct,
-          stats.map(_._1).getOrElse(0L))), "doc_id")
-    snippetsFromPartials(partials, pos, rankedL, docs, docIdCol,
-      docTextCol, context)
-  }
-
-  /** [[attachBestTermSnippets]] over doc-disjoint shards — the snippet
-    * leg of the sharded serving family. The argmax term per (qid, doc)
-    * must match the whole-index choice EXACTLY for the sharded-snippet
-    * gates to answer the single-index oracles, so the partials come
-    * from [[partialsWith]] against the GLOBAL (N, avgdl, df) fold (the
-    * [[bm25ShardedQuery]] discipline), never per-shard stats; the
-    * positional lookups union per shard (a doc's positions live in
-    * exactly its own shard). Costs stay ranked-doc-bounded per shard:
-    * every shard's partials pass is doc-gated by the SAME broadcast
-    * ranked set before any aggregate.
-    */
-  private[operators] def attachBestTermSnippetsSharded(
-      spark: SparkSession, tables: Seq[String], qt: DataFrame,
-      ranked: DataFrame, docs: DataFrame, docIdCol: String,
+      spark: SparkSession, caller: String, tables: Seq[String],
+      lex: BowServed, ranked: DataFrame, docs: DataFrame, docIdCol: String,
       docTextCol: String, context: Int, k1: Double, b: Double,
-      maxDfFrac: Double, qterms: Option[Seq[String]]): DataFrame = {
-    tables.foreach(t => require(tableExists(spark, s"${t}_pos"),
-      s"snippet extraction: $t has no positional table — " +
-        "build the index with positions = true"))
-    raiseInFilterThreshold(spark, maxInPushValues)
-    // same literal-sharing as the single-index form (round 21) — here
-    // the lazy ranked plan was re-executed per SHARD leg (S partials
-    // legs each embedding the rankedDocs broadcast), so the literal
-    // keeps the span pass O(S) total instead of O(S × ranking)
+      maxDfFrac: Double): DataFrame = {
+    requirePositional(spark, tables, caller)
+    // round 21 (VERDICT r20 ask #4): one scored frame, many consumers —
+    // as a lazy plan the ranking re-executed for the output spine and
+    // for every shard leg's rankedDocs broadcast; the literal keeps the
+    // pass O(S) total instead of O(S × ranking)
     val (rankedL, rankedRows) = literalizeBounded(spark, ranked)
     val rankedDocs = rankedL.select("doc_id").distinct()
-    val c = consts(spark, tables, qterms, maxDfFrac, None)
-    val partials = tables.map(partialsWith(spark, _, qt, k1, b, c.nDocs,
-        c.avgdl, c.dict, qterms, Some(rankedDocs), true))
+    val c = consts(spark, tables, lex.qterms, maxDfFrac, lex.stats)
+    val partials = tables.map(partialsWith(spark, _, lex.qt, k1, b, c.nDocs,
+        c.avgdl, c.dict, lex.qterms, Some(rankedDocs), broadcastDocs = true))
       .reduce(_.unionByName(_))
     val docIdx = ranked.schema.fieldIndex("doc_id")
-    val pos = tables.map(t => Tombstones.filterOut(spark, t,
-        rankedRows.fold(pruneToTerms(spark.table(s"${t}_pos"), qterms))(
-          rs => prunedByDocs(
-            pruneToTerms(spark.table(s"${t}_pos"), qterms),
-            rs.map(_.get(docIdx)).toSeq.distinct, c.nDocs)), "doc_id"))
-      .reduce(_.unionByName(_))
+    val pos = tables.map { t =>
+      val scan = pruneToTerms(spark.table(s"${t}_pos"), lex.qterms)
+      Tombstones.filterOut(spark, t, rankedRows.fold(scan)(rs =>
+        prunedByDocs(scan, rs.map(_.get(docIdx)).toSeq.distinct, c.nDocs)),
+        "doc_id")
+    }.reduce(_.unionByName(_))
     snippetsFromPartials(partials, pos, rankedL, docs, docIdCol,
       docTextCol, context)
   }
@@ -2354,11 +2314,8 @@ object Retrieval {
     val passes = Passes(tables.size, parallelism)
     GraftFunctions.ensureRegistered(spark)
     raiseInFilterThreshold(spark, maxInPushValues)
-    tables.foreach { t =>
-      healFold(spark, t)
-      require(tableExists(spark, s"${t}_pos"), s"$caller: $t has no " +
-        "positional table — build the index with positions = true")
-    }
+    tables.foreach(healFold(spark, _))
+    requirePositional(spark, tables, caller)
     // phrase probes carry every token's offset; NEAR probes the
     // distinct terms (proximity is a distinct-term predicate)
     val probe = near match {

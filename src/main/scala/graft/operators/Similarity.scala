@@ -565,13 +565,18 @@ object Similarity {
     * per-shard top-k over a doc-disjoint partition: each global top-k
     * winner is inside its own shard's top-k, so the union contains
     * every winner (the classic distributed top-k argument); ties
-    * resolve identically because the comparator is the same. */
-  private[graft] def mergeShardTopK(legs: Seq[DataFrame], k: Int): DataFrame = {
-    legs.headOption.foreach(l => GraftFunctions.unionGuard(l.sparkSession))
-    rankTopK(
-      legs.map(_.select(col("qid"), col("nid"), col("cos")))
-        .reduce(_.unionByName(_)), k)
-  }
+    * resolve identically because the comparator is the same. A single
+    * leg is already a [[rankTopK]] output at this k, so it returns
+    * unchanged: the one-shard family keeps the single-index plan and
+    * leaves the session's union conf alone. */
+  private[graft] def mergeShardTopK(legs: Seq[DataFrame], k: Int): DataFrame =
+    if (legs.size == 1) legs.head
+    else {
+      GraftFunctions.unionGuard(legs.head.sparkSession)
+      rankTopK(
+        legs.map(_.select(col("qid"), col("nid"), col("cos")))
+          .reduce(_.unionByName(_)), k)
+    }
 
   /** Exact cosine top-k over a DOC-DISJOINT sharded corpus — the
     * brute-force leg for embedding sets too large for one table/box
@@ -702,19 +707,17 @@ object Similarity {
                       table: String, batch: DataFrame,
                       idCol: String, vecCol: String,
                       threshold: Double = 0.999, nBits: Int = 16,
-                      nTables: Int = 8, seed: Long = 42L): DataFrame = {
-    GraftFunctions.ensureRegistered(spark)
-    val (bv, bb) = batchLshFrames(batch, idCol, vecCol, nBits, nTables,
-      seed)
-    lshCheckShard(spark, table, bv, bb, threshold)
-  }
+                      nTables: Int = 8, seed: Long = 42L): DataFrame =
+    lshDedupAgainstSharded(spark, Seq(table), batch, idCol, vecCol,
+      threshold, nBits, nTables, seed)
 
-  /** [[lshDedupAgainst]] over a VEC-DISJOINT family of admission shard
-    * indexes — the vector twin of
-    * [[Dedup.minhashDedupAgainstSharded]]: the batch hashes once, each
-    * shard's check is the single-index plan verbatim, and the union is
-    * exact (corpus ids disjoint across shards — no pair twice). The
-    * layout when the LSH admission index outgrows one table. */
+  /** [[lshDedupAgainst]] over a VEC-DISJOINT family of S ≥ 1 admission
+    * shard indexes (a single index is the one-shard family) — the
+    * vector twin of [[Dedup.minhashDedupAgainstSharded]]: the batch
+    * hashes once, each shard's check is the single-index plan verbatim,
+    * and the union is exact (corpus ids disjoint across shards — no
+    * pair twice). The layout when the LSH admission index outgrows one
+    * table. */
   def lshDedupAgainstSharded(spark: org.apache.spark.sql.SparkSession,
                              tables: Seq[String], batch: DataFrame,
                              idCol: String, vecCol: String,
@@ -723,17 +726,16 @@ object Similarity {
                              seed: Long = 42L): DataFrame = {
     require(tables.nonEmpty, "lshDedupAgainstSharded needs at least one shard")
     GraftFunctions.ensureRegistered(spark)
-    GraftFunctions.unionGuard(spark)
+    if (tables.size > 1) GraftFunctions.unionGuard(spark)
     val (bv, bb) = batchLshFrames(batch, idCol, vecCol, nBits, nTables,
       seed)
     tables.map(lshCheckShard(spark, _, bv, bb, threshold))
       .reduce(_.unionByName(_))
   }
 
-  /** The batch's vector and bucket frames, shared by the single and
-    * sharded checks: one id-partitioned exchange for the batch
-    * vectors, reused by the bucket arm and the verification re-join
-    * (and by every shard's arms in the sharded form). */
+  /** The batch's vector and bucket frames: one id-partitioned
+    * exchange for the batch vectors, reused by the bucket arm and the
+    * verification re-join of every shard. */
   private def batchLshFrames(batch: DataFrame, idCol: String,
                              vecCol: String, nBits: Int, nTables: Int,
                              seed: Long): (DataFrame, DataFrame) = {

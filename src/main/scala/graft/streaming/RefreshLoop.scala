@@ -279,12 +279,9 @@ object RefreshLoop {
             k, numHashes, bands, threshold)
           .select(col("idb").as("batch_id"), col("ida").as("match_id"),
             col("est_jaccard"), lit("batch").as("source"))
-        val inter0 = admSlots
-          .map(sl => Dedup.minhashDedupAgainstSharded(spark,
-            sl.map(_.table), b, textCol, idCol, threshold, k, numHashes,
-            bands))
-          .getOrElse(Dedup.minhashDedupAgainst(spark, table, b,
-            textCol, idCol, threshold, k, numHashes, bands))
+        val inter0 = Dedup.minhashDedupAgainstSharded(spark,
+          admSlots.map(_.map(_.table)).getOrElse(Seq(table)), b, textCol,
+          idCol, threshold, k, numHashes, bands)
         // a replay of an epoch whose ledger holds id rows sees an index
         // that may already hold rows this epoch absorbed — exclude
         // exactly those, so the replay reproduces the original run's
@@ -648,12 +645,9 @@ object RefreshLoop {
             threshold, nBits, nTables, seed)
           .select(col("idb").as("batch_id"), col("ida").as("match_id"),
             col("cos"), lit("batch").as("source"))
-        val inter0 = admSlots
-          .map(sl => Similarity.lshDedupAgainstSharded(spark,
-            sl.map(_.table), b, idCol, vecCol, threshold, nBits, nTables,
-            seed))
-          .getOrElse(Similarity.lshDedupAgainst(spark, table, b, idCol,
-            vecCol, threshold, nBits, nTables, seed))
+        val inter0 = Similarity.lshDedupAgainstSharded(spark,
+          admSlots.map(_.map(_.table)).getOrElse(Seq(table)), b, idCol,
+          vecCol, threshold, nBits, nTables, seed)
         // repairMode, not decided — see the minhashBatch note (legacy
         // uncommitted epochs must exclude recorded ids too)
         val interAdj = if (repairMode)

@@ -103,9 +103,9 @@ class ChunkedMaxScoreSpec extends AnyFunSuite {
     // tiny maxPosMass budget, so the truncation dial ENGAGES and the
     // effective cap derives from the (N, avgdl) dial facts — which
     // must be tombstone-corrected on BOTH the single-index (fused
-    // stats) and sharded (batched shardStatRows) paths, or the two
-    // would sample different candidate sets (round 21, VERDICT r20
-    // ask #6)
+    // stats) and sharded (per-shard stats of the one control read)
+    // paths, or the two would sample different candidate sets (round
+    // 21, VERDICT r20 ask #6)
     val docs = (0 until 80).map { i =>
       (i.toLong, s"alpha beta gamma w${i % 9} pad$i filler${i % 3}")
     }.toDF("doc_id", "text")

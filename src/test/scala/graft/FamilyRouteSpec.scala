@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Retrieval, Sharding}
+import graft.operators.{Fusion, Retrieval, Sharding}
 import graft.operators.Retrieval.MaxScoreDials
 
 /** The bag-of-words serving core's route matrix: results must never
@@ -186,5 +186,44 @@ class FamilyRouteSpec extends AnyFunSuite {
     val seen = groups.asScala.toSeq
     assert(seen.size >= 5 && seen.forall(_ == "fanout-spec"),
       s"workers' jobs lost the caller's job group: $seen")
+  }
+
+  test("MaxScore dial checks reject on every route, before any read") {
+    // the tables do not exist: a route that skips the checks fails on
+    // the missing index instead, with another exception
+    val q = Seq((1L, "aaa bbb", Array(1.0f))).toDF("qid", "qtext", "qvec")
+    val fam = Seq("route_nope_0", "route_nope_1")
+    for ((d, msg) <- Seq(
+        MaxScoreDials(gateCandFrac = 0.0) -> "gateCandFrac must be positive",
+        MaxScoreDials(gateMinHeadMass = -1L) ->
+          "gateMinHeadMass must be non-negative")) {
+      val calls: Seq[(String, () => DataFrame)] = Seq(
+        "bm25QueryMaxScore" -> (() => Retrieval.bm25QueryMaxScore(spark,
+          fam.head, q, "qid", "qtext", 3, gateMinHeadMass = d.gateMinHeadMass,
+          gateCandFrac = d.gateCandFrac)),
+        "bm25ShardedQueryMaxScore" -> (() =>
+          Retrieval.bm25ShardedQueryMaxScore(spark, fam, q, "qid", "qtext", 3,
+            gateMinHeadMass = d.gateMinHeadMass,
+            gateCandFrac = d.gateCandFrac)),
+        "bm25ShardedQueryMaxScoreGrouped" -> (() =>
+          Retrieval.bm25ShardedQueryMaxScoreGrouped(spark, fam, q, "qid",
+            "qtext", 3, gateMinHeadMass = d.gateMinHeadMass,
+            gateCandFrac = d.gateCandFrac, parallelism = 2)),
+        "hybridQuery" -> (() => Fusion.hybridQuery(spark, fam.head, q, "qid",
+          "qtext", "qvec", 3, vecCorpus = Some(q), lexMaxScore = Some(d))),
+        "hybridShardedQuery" -> (() => Fusion.hybridShardedQuery(spark, fam,
+          q, "qid", "qtext", "qvec", 3, vecShards = Some(Seq(q)),
+          lexMaxScore = Some(d))),
+        "hybridSnippets" -> (() => Fusion.hybridSnippets(spark, fam.head, q,
+          "qid", "qtext", "qvec", q, "qid", "qtext", 3, vecCorpus = Some(q),
+          lexMaxScore = Some(d))),
+        "hybridShardedSnippets" -> (() => Fusion.hybridShardedSnippets(spark,
+          fam, q, "qid", "qtext", "qvec", q, "qid", "qtext", 3,
+          vecShards = Some(Seq(q)), lexMaxScore = Some(d))))
+      for ((name, call) <- calls) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      }
+    }
   }
 }

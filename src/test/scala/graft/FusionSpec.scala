@@ -295,6 +295,60 @@ class FusionSpec extends AnyFunSuite {
     assert(got.map(r => (r._1, r._2, r._3, r._4)).toSeq === fused.toSeq)
   }
 
+  test("S = 1: the one-shard family ≡ the one-index entry for every " +
+       "vector leg × lexical route; mergeShardTopK keeps a single leg") {
+    import graft.operators.{ProductQuant, Similarity}
+    val corpus = Seq(
+      (1L, "alpha beta gamma"),
+      (2L, "alpha beta delta"),
+      (3L, "epsilon zeta eta"),
+      (4L, "alpha theta iota")).toDF("doc_id", "text")
+    val emb = Seq(
+      (1L, Array(1.0f, 0.0f, 0.1f, 0.2f)),
+      (2L, Array(1.0f, 0.05f, 0.1f, 0.0f)),
+      (3L, Array(0.0f, 1.0f, 0.0f, 0.3f)),
+      (4L, Array(0.5f, 0.5f, 0.0f, 0.1f))).toDF("vec_id", "embedding")
+    val n = System.nanoTime()
+    val (bt, vt, pt) = (s"fus_s1_bm_$n", s"fus_s1_ivf_$n", s"fus_s1_pq_$n")
+    Retrieval.bm25Build(corpus, "doc_id", "text", bt, buckets = 2,
+      positions = true)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", vt, nlist = 2,
+      buckets = 2)
+    ProductQuant.ivfPqBuild(emb, "vec_id", "embedding", pt, m = 2,
+      nlist = 2, buckets = 2)
+    val q = Seq((1L, "alpha beta"), (3L, "zeta alpha")).toDF("qid", "qtext")
+      .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qvec")),
+        "qid")
+    val forced = Retrieval.MaxScoreDials(essentialDfFrac = 0.9,
+      gateMinHeadMass = 1L, gateCandFrac = 1e6)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("qid", "rnk").collect().toSeq
+    for (leg <- Seq("corpus", "ivf", "pq"); ms <- Seq(None, Some(forced))) {
+      def on[A](name: String, a: A) = Some(a).filter(_ => leg == name)
+      val one = rows(Fusion.hybridQuery(spark, bt, q, "qid", "qtext", "qvec",
+        3, kPerLeg = 3, vecIndex = on("ivf", vt), vecCorpus = on("corpus", emb),
+        pqIndex = on("pq", pt), probeFrac = 1.0, lexMaxScore = ms))
+      val sh = rows(Fusion.hybridShardedQuery(spark, Seq(bt), q, "qid",
+        "qtext", "qvec", 3, kPerLeg = 3, vecIndexes = on("ivf", Seq(vt)),
+        vecShards = on("corpus", Seq(emb)), pqIndexes = on("pq", Seq(pt)),
+        probeFrac = 1.0, lexMaxScore = ms))
+      assert(one.nonEmpty && sh === one, s"hybrid leg=$leg ms=$ms")
+      val oneSnip = rows(Fusion.hybridSnippets(spark, bt, q, "qid", "qtext",
+        "qvec", corpus, "doc_id", "text", 3, kPerLeg = 3,
+        vecIndex = on("ivf", vt), vecCorpus = on("corpus", emb),
+        pqIndex = on("pq", pt), probeFrac = 1.0, lexMaxScore = ms))
+      val shSnip = rows(Fusion.hybridShardedSnippets(spark, Seq(bt), q, "qid",
+        "qtext", "qvec", corpus, "doc_id", "text", 3, kPerLeg = 3,
+        vecIndexes = on("ivf", Seq(vt)), vecShards = on("corpus", Seq(emb)),
+        pqIndexes = on("pq", Seq(pt)), probeFrac = 1.0, lexMaxScore = ms))
+      assert(oneSnip.exists(!_.isNullAt(5)) && shSnip === oneSnip,
+        s"hybrid snippets leg=$leg ms=$ms")
+    }
+    val leg = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 2)
+    assert(Similarity.mergeShardTopK(Seq(leg), 2).collect().toSet ===
+      leg.collect().toSet)
+  }
+
   test("hybridShardedQuery(vecShards) == hybridQuery on the union corpus") {
     val docs = spark.read.parquet(s"${SharedSpark.sfDir}/documents.parquet")
       .select(col("doc_id"), col("text"))
