@@ -166,10 +166,39 @@ object Aggregators {
       ExpressionEncoder[Seq[(Double, Long)]]()
   }
 
+  /** Bounded posting list: the typed reference for the native
+    * [[CappedIdsAgg]] (`capped_ids`), asserted equal to it in
+    * AggregatorsSpec. Every row counts toward `cap`, a null id included;
+    * a group of at most `cap` rows finishes as its non-null ids sorted
+    * ascending (duplicates kept), a larger group as null. The buffer is
+    * (rows counted, ids) and drops its ids the moment the count passes
+    * `cap`. `cap = Int.MaxValue` is "no cap".
+    */
+  final case class CappedIds(cap: Int)
+      extends Aggregator[java.lang.Long, (Long, Seq[Long]), Seq[Long]] {
+    require(cap > 0, s"cap must be positive, got $cap")
+    override def zero: (Long, Seq[Long]) = (0L, Vector.empty)
+    private def add(b: (Long, Seq[Long]), rows: Long,
+                    ids: Seq[Long]): (Long, Seq[Long]) =
+      if (b._1 > cap) b
+      else if (b._1 + rows > cap) (cap + 1L, Vector.empty)
+      else (b._1 + rows, b._2 ++ ids)
+    override def reduce(b: (Long, Seq[Long]), v: java.lang.Long): (Long, Seq[Long]) =
+      add(b, 1L, if (v == null) Nil else Seq(v.longValue))
+    override def merge(x: (Long, Seq[Long]), y: (Long, Seq[Long])): (Long, Seq[Long]) =
+      add(x, y._1, y._2)
+    override def finish(b: (Long, Seq[Long])): Seq[Long] =
+      if (b._1 > cap) null else b._2.sorted
+    override def bufferEncoder: Encoder[(Long, Seq[Long])] =
+      ExpressionEncoder[(Long, Seq[Long])]()
+    override def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
+  }
+
   /** Column-ready UDAFs. */
   def cappedDistinct(cap: Int) = udaf(CappedDistinct(cap))
   val valueHistogram = udaf(new ValueHistogram)
   val valueHistogramDetail = udaf(new ValueHistogramDetail)
   def topKByScore(k: Int) =
     udaf(TopKByScore(k), ExpressionEncoder[(Long, Double)]())
+  def cappedIds(cap: Int) = udaf(CappedIds(cap), Encoders.LONG)
 }

@@ -41,6 +41,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("qcos_upper", es => GraftFunctions.QuantizedCosineUpper(es.head, es(1)))
     inject("topk_score", es => TopKScoreAgg(es.head, es(1),
       es(2).eval().asInstanceOf[Number].intValue()))
+    inject("capped_ids", es => CappedIdsAgg(es.head,
+      es(1).eval().asInstanceOf[Number].intValue()))
+    inject("id_pairs", es => GraftFunctions.IdPairs(es.head))
     inject("ivf_top_cents", es => GraftFunctions.IvfTopCents(es.head, es(1),
       es(2).eval().asInstanceOf[Number].intValue()))
     inject("l2_argmin", es => GraftFunctions.L2Argmin(es.head, es(1)))

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, GenericInternalRow, SpecificInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -306,6 +306,61 @@ object GraftFunctions {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = "word_shingles"
+  }
+
+  /** The emit step of the near-dup Jaccard kernel: from one posting
+    * list (`array<bigint>`, a [[CappedIdsAgg]] result; null emits
+    * nothing) it emits (ida, idb) = (min, max) for every pair of list
+    * positions holding different ids, plus one (id, id) row per
+    * position. Counting the rows by (ida, idb) then yields each pair's
+    * shared-shingle count (ida < idb) and each id's kept-shingle count
+    * (ida = idb) from the same exchange. A list of n ids emits at most
+    * n(n+1)/2 rows, streamed: an interpreted `transform(sequence(…))`
+    * + `explode` would evaluate a lambda per position and materialize
+    * every list's pair array first.
+    */
+  case class IdPairs(child: Expression)
+      extends UnaryExpression with Generator with CodegenFallback {
+    override def elementSchema: StructType = StructType(Seq(
+      StructField("ida", LongType, nullable = false),
+      StructField("idb", LongType, nullable = false)))
+
+    // one reused output row: the Generate operator projects each row
+    // before it asks for the next, so a pair costs no allocation
+    @transient private lazy val out =
+      new SpecificInternalRow(Seq[DataType](LongType, LongType))
+
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val v = child.eval(input)
+      if (v == null) return Iterator.empty
+      val ids = v.asInstanceOf[ArrayData].toLongArray()
+      val n = ids.length
+      val row = out
+      new Iterator[InternalRow] {
+        private var i = 0
+        private var j = 0 // j == i: the (id, id) row of position i
+        private def advance(): Unit = {
+          j += 1
+          if (j >= n) { i += 1; j = i }
+          // skip later positions holding the same id as position i
+          while (i < n && j > i && ids(j) == ids(i)) {
+            j += 1
+            if (j >= n) { i += 1; j = i }
+          }
+        }
+        override def hasNext: Boolean = i < n
+        override def next(): InternalRow = {
+          val (a, b) = (ids(i), ids(j))
+          row.setLong(0, math.min(a, b)); row.setLong(1, math.max(a, b))
+          advance()
+          row
+        }
+      }
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+    override def prettyName: String = "id_pairs"
   }
 
   /** Gap-encode a sorted `array<int>`: first element absolute, every
@@ -953,6 +1008,9 @@ object GraftFunctions {
     put("qcos_upper")(es => QuantizedCosineUpper(es.head, es(1)))
     put("topk_score")(es => TopKScoreAgg(es.head, es(1),
       es(2).eval().asInstanceOf[Number].intValue()))
+    put("capped_ids")(es => CappedIdsAgg(es.head,
+      es(1).eval().asInstanceOf[Number].intValue()))
+    put("id_pairs")(es => IdPairs(es.head))
     put("ivf_top_cents")(es => IvfTopCents(es.head, es(1),
       es(2).eval().asInstanceOf[Number].intValue()))
     put("l2_argmin")(es => L2Argmin(es.head, es(1)))
@@ -1014,6 +1072,9 @@ object GraftFunctions {
   def qcosUpper(a: Column, b: Column): Column = call_function("qcos_upper", a, b)
   def topkScore(nid: Column, cos: Column, k: Int): Column =
     call_function("topk_score", nid, cos, lit(k))
+  def cappedIds(id: Column, cap: Int): Column =
+    call_function("capped_ids", id, lit(cap))
+  def idPairs(ids: Column): Column = call_function("id_pairs", ids)
   def ivfTopCents(vec: Column, cents: Column, n: Int): Column =
     call_function("ivf_top_cents", vec, cents, lit(n))
   def l2Argmin(vec: Column, cb: Column): Column =

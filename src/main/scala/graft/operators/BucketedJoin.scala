@@ -117,7 +117,10 @@ object BucketedJoin {
 
   /** Fold a bucketed table's accumulated append file sets back to one
     * file per bucket. O(table) once, instead of every batch paying it:
-    * run on the compaction cadence, not the ingest cadence.
+    * run on the compaction cadence, not the ingest cadence. A table
+    * whose listing already shows at most one file per bucket id (e.g.
+    * right after a [[rewriteBucketed]] fold) is left as it is — no
+    * Spark job, no rewrite.
     *
     * Crash-safe swap: the rewrite stages into `<table>_compacting`, the
     * original renames aside to `<table>_old`, the staged table renames
@@ -129,8 +132,29 @@ object BucketedJoin {
     * from the catalog (readers in that window retry after recovery);
     * data files are never at risk.
     */
-  def compactBucketed(spark: SparkSession, table: String, key: String): Unit =
-    rewriteBucketed(spark, table, key)(identity)
+  def compactBucketed(spark: SparkSession, table: String, key: String): Unit = {
+    recoverCompacted(spark, table)
+    if (!oneFilePerBucket(spark, table)) rewriteBucketed(spark, table, key)(identity)
+  }
+
+  /** True when every data file of `table` carries a bucket id in its
+    * name and no bucket id repeats — a driver-side listing, no job.
+    */
+  private def oneFilePerBucket(spark: SparkSession, table: String): Boolean = {
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def bucketIds = fs.listStatus(loc).toSeq
+      .filterNot(f => f.getPath.getName.startsWith("_") ||
+        f.getPath.getName.startsWith("."))
+      .map(f => if (f.isFile) BucketingUtils.getBucketId(f.getPath.getName) else None)
+    fs.exists(loc) && {
+      val ids = bucketIds
+      ids.forall(_.isDefined) && ids.distinct.size == ids.size
+    }
+  }
 
   /** The compaction swap, generalized: replace a bucketed table with
     * `transform` of itself through the same crash-safe
@@ -174,7 +198,15 @@ object BucketedJoin {
       .filter(outCols)
     val tmp = s"${table}_compacting"
     val old = s"${table}_old"
-    writeBucketed(transform(spark.table(table)), tmp, key, n, sortTail)
+    // all rows of a bucket in one task → one file per non-empty bucket.
+    // Partitioned on pmod(hash(key), n), not on `key`: over the table's
+    // own bucketed scan an exchange on `key` is planned away (the scan
+    // already satisfies it), the scan is then de-bucketed as unneeded,
+    // and every task writes a file for every bucket it sees.
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    writeBucketed(transform(spark.table(table))
+        .repartition(n, pmod(hash(col(key)), lit(n))),
+      tmp, key, n, sortTail)
     boundary(0)
     // clear stale debris (a forgotten catalog entry or orphaned dir
     // would make the rename-aside collide)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training-data pipelines:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash. All shuffle only on
@@ -28,56 +29,66 @@ object Dedup {
   def shingles(text: Column, k: Int = 3): Column =
     graft.functions.GraftFunctions.wordShingles(TextOps.tokens(text), k)
 
-  /** Exact n-gram Jaccard near-dup pairs (a < b, jaccard ≥ threshold).
-    * Inverted-index join: explode shingles → self-join per shingle →
-    * count intersections → Jaccard from set sizes. The per-shingle join
-    * means only documents sharing ≥1 shingle ever meet — no n² pair
-    * enumeration. Hot shingles are the skew risk at scale; cap their
-    * fan-out with `maxShingleFreq` (drop shingles more frequent than the
-    * cap — standard stopword-shingle suppression). Measured behavior:
-    * the cap turns a DENSE shingle space (every shingle hot) into a
-    * cheap no-op instead of a quadratic join — cost peaks when typical
-    * frequencies sit near the cap, and the cap bounds it there.
+  /** Exact n-gram Jaccard near-dup pairs: (ida, idb, jaccard) for every
+    * a < b with jaccard ≥ threshold, where jaccard = i / (na + nb − i)
+    * over word k-shingle sets (i shared shingles, na and nb set sizes).
+    *
+    * Hot-shingle cap: a shingle held by more than `maxShingleFreq`
+    * (id, shingle) rows is dropped before anything is counted, so it
+    * counts toward neither the intersection nor either set size —
+    * Jaccard over the post-cap shingle universe (stop-word shingle
+    * suppression; a dense shingle space becomes a cheap no-op instead
+    * of a quadratic join). `Int.MaxValue` means no cap.
+    *
+    * The posting-list form of the MapReduce set-similarity join
+    * (Vernica et al., SIGMOD 2010), with ONE shingle exchange:
+    *  1. tokenize, shingle and explode the corpus once;
+    *  2. group by shingle into a bounded id list (the native
+    *     `capped_ids`, [[graft.functions.CappedIdsAgg]]): at most
+    *     `maxShingleFreq` ids per buffer, a hot shingle overflows to a
+    *     marker — its cost is O(cap), never O(freq);
+    *  3. emit from each kept list one (a, b) row per id pair and one
+    *     (a, a) row per id (the native `id_pairs` generator) and count
+    *     rows by (a, b): a < b rows are intersections, a = b rows are
+    *     set sizes — both from the same exchange;
+    *  4. attach na, then nb, to each pair row with two window passes
+    *     (partitioned by a, then by b — each holds that id's size row)
+    *     and filter on Jaccard: no self-join and no size joins.
+    * Only documents sharing a kept shingle ever meet — no n² pair
+    * enumeration. The id column must be integral; it is carried as
+    * bigint and cast back on output.
     */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         k: Int = 3, threshold: Double = 0.8,
                         maxShingleFreq: Int = 1000): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val sh = docs
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), k)).as("sh"))
-    // Materialize ONE sh-partitioned exchange of the shingle table. The
-    // tokenize→shingle→explode pipeline runs exactly once; every
-    // consumer below reuses the exchange (ReusedExchange), and hash(sh)
-    // is exactly the co-partitioning the inverted-index join wants at
-    // scale.
-    val shP = sh.repartition(col("sh"))
-    // Hot-shingle suppression (skew guard): per-shingle frequency is a
-    // partition-local aggregate on the already-sh-partitioned exchange
-    // (no new shuffle), and the keep-set semi-join is co-partitioned —
-    // the cap costs one extra pass over the partitioned data, not a
-    // Window shuffle+sort.
-    val capped =
-      if (maxShingleFreq == Int.MaxValue) shP
-      else {
-        val keep = shP.groupBy("sh").agg(count(lit(1)).as("freq"))
-          .filter(col("freq") <= maxShingleFreq).select("sh")
-        shP.join(keep, Seq("sh"), "left_semi")
-      }
-    // Set sizes from the CAPPED table: suppressed shingles are excluded
-    // from both the intersection and the denominator, i.e. Jaccard over
-    // the post-cap shingle universe (the documented cap semantics).
-    val sizes = capped.groupBy("id").agg(count(lit(1)).as("n"))
-    val inter = capped.as("a").join(capped.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("ida"), col("b.id").as("idb"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.withColumnRenamed("id", "ida").withColumnRenamed("n", "na"), "ida")
-      .join(sizes.withColumnRenamed("id", "idb").withColumnRenamed("n", "nb"), "idb")
+    import graft.functions.GraftFunctions.{cappedIds, ensureRegistered, idPairs}
+    ensureRegistered(docs.sparkSession)
+    val idType = docs.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"ngramJaccardPairs needs an integral id column, $idCol is ${idType.simpleString}")
+    // a's size rides the row (a, a): counted in the partition that
+    // holds every (a, ·) row, then b's in the partition of every (·, b).
+    // Both exchanges are sized to the session's shuffle partitions: a
+    // coalesced single task would run each window serially.
+    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
+    def sizeOver(part: String) = max(when(col("ida") === col("idb"), col("i")))
+      .over(org.apache.spark.sql.expressions.Window.partitionBy(part))
+    docs
+      .select(col(idCol).cast("long").as("id"),
+        explode(shingles(col(textCol), k)).as("sh"))
+      .groupBy("sh").agg(cappedIds(col("id"), maxShingleFreq).as("ids"))
+      .select(idPairs(col("ids")))
+      .repartition(parts, col("ida"))
+      .groupBy("ida", "idb").agg(count(lit(1)).as("i"))
+      .withColumn("na", sizeOver("ida"))
+      .repartition(parts, col("idb"))
+      .withColumn("nb", sizeOver("idb"))
+      .filter(col("ida") < col("idb"))
       .withColumn("jaccard",
         col("i").cast("double") / (col("na") + col("nb") - col("i")))
       .filter(col("jaccard") >= threshold)
-      .select(col("ida"), col("idb"), col("jaccard"))
+      .select(col("ida").cast(idType).as("ida"),
+        col("idb").cast(idType).as("idb"), col("jaccard"))
   }
 
   /** MinHash signatures: one 64-bit base hash per shingle, then

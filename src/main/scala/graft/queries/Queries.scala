@@ -1065,8 +1065,13 @@ object Queries {
     // winner's payload through the digest shuffle, replacing the
     // groupBy→join-back-on-id shape (second corpus scan + an id
     // exchange; measured ~0.5 s slower at sf0.1, and at 100 TB a whole
-    // extra wide shuffle)
-    val uniq = base.groupBy(md5(col("text")).as("digest"))
+    // extra wide shuffle). The winner stage also tokenizes and shingles
+    // every winner for the near-dup pass, so its exchange is sized to
+    // the session's shuffle partitions: AQE would coalesce a small
+    // corpus's digest exchange into one serial task.
+    val uniq = base.withColumn("digest", md5(col("text")))
+      .repartition(s.sessionState.conf.numShufflePartitions, col("digest"))
+      .groupBy("digest")
       .agg(min_by(struct(col("doc_id"), col("text")), col("doc_id")).as("w"))
       .select(col("w.doc_id").as("doc_id"), col("w.text").as("text"))
     val dropped = Dedup.ngramJaccardPairs(uniq, "text", "doc_id",

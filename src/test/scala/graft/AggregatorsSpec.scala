@@ -146,4 +146,82 @@ class AggregatorsSpec extends AnyFunSuite {
       .as[Long].collect().toSeq
     assert(native == Seq(11L, 12L) && reference == Seq(11L, 12L))
   }
+
+  test("native capped_ids ≡ typed CappedIds reference on a DataFrame") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    // group g holds g rows (g = 1..12), a duplicate id in every group of
+    // ≥ 4 rows and a null id in every group divisible by 3, shuffled
+    // across partitions so partial/merge/serialize paths all run
+    val rows: Seq[(Long, java.lang.Long)] = for {
+      g <- 1L to 12L; i <- 0L until g
+      id = if (g % 3 == 0 && i == 0) null
+           else java.lang.Long.valueOf(if (g >= 4 && i == 1) g * 100 else g * 100 + i)
+    } yield (g, id)
+    val df = scala.util.Random.shuffle(rows).toDF("g", "id").repartition(5)
+    for (cap <- Seq(1, 3, 5, Int.MaxValue)) {
+      def lists(agg: org.apache.spark.sql.Column) =
+        df.groupBy("g").agg(agg.as("ids")).as[(Long, Option[Seq[Long]])]
+          .collect().toMap
+      val native = lists(graft.functions.GraftFunctions.cappedIds(col("id"), cap))
+      val reference = lists(Aggregators.cappedIds(cap)(col("id")))
+      assert(native == reference, s"cap=$cap")
+      for ((g, l) <- native) {
+        val ids = rows.filter(_._1 == g).flatMap(r => Option(r._2)).map(_.longValue)
+        assert(l == (if (g > cap) None else Some(ids.sorted)), s"cap=$cap g=$g")
+      }
+    }
+  }
+
+  test("capped_ids buffer holds at most cap + 1 ids under any update/merge order") {
+    import graft.functions.CappedIdsAgg
+    val rnd = new scala.util.Random(7)
+    for (cap <- Seq(1, 2, 5, 9); trial <- 0 until 200) {
+      val agg = CappedIdsAgg(org.apache.spark.sql.catalyst.expressions
+        .BoundReference(0, org.apache.spark.sql.types.LongType, nullable = true), cap)
+      val n = rnd.nextInt(2 * cap + 3)
+      val input: Seq[java.lang.Long] = Seq.fill(n)(
+        if (rnd.nextInt(6) == 0) null else java.lang.Long.valueOf(rnd.nextInt(4).toLong))
+      def bounded(b: CappedIdsAgg.Buf): CappedIdsAgg.Buf = {
+        assert(b.size <= cap + 1 && b.ids.length <= cap + 1,
+          s"cap=$cap size=${b.size} alloc=${b.ids.length}")
+        b
+      }
+      // random partial buffers, each round-tripped through serialize,
+      // then merged in a random tree order
+      var parts = input.grouped(1 + rnd.nextInt(3)).map { chunk =>
+        val b = agg.createAggregationBuffer()
+        chunk.foreach(v => bounded(agg.update(b,
+          org.apache.spark.sql.catalyst.InternalRow(v))))
+        bounded(agg.deserialize(agg.serialize(b)))
+      }.toVector
+      if (parts.isEmpty) parts = Vector(agg.createAggregationBuffer())
+      while (parts.size > 1) {
+        val i = rnd.nextInt(parts.size - 1)
+        val merged = bounded(agg.merge(parts(i), parts(i + 1)))
+        parts = parts.patch(i, Seq(merged), 2)
+      }
+      val got = Option(agg.eval(parts.head))
+        .map(_.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq)
+      val want = if (n > cap) None else Some(input.flatMap(Option(_)).map(_.longValue).sorted)
+      assert(got == want, s"cap=$cap input=$input")
+    }
+  }
+
+  test("capped_ids: merging two overflowed buffers stays overflowed") {
+    import graft.functions.CappedIdsAgg
+    val agg = CappedIdsAgg(org.apache.spark.sql.catalyst.expressions
+      .BoundReference(0, org.apache.spark.sql.types.LongType, nullable = true), 2)
+    def over(ids: Long*): CappedIdsAgg.Buf = {
+      val b = agg.createAggregationBuffer()
+      ids.foreach(i => agg.update(b, org.apache.spark.sql.catalyst.InternalRow(i)))
+      assert(b.overflowed && b.size == 0)
+      b
+    }
+    val merged = agg.merge(over(1L, 2L, 3L), over(4L, 5L, 6L))
+    assert(merged.overflowed && merged.size == 0 && agg.eval(merged) == null)
+    // and after a serialize round trip, into an empty buffer, and back
+    val rt = agg.deserialize(agg.serialize(merged))
+    assert(rt.overflowed && agg.eval(agg.merge(agg.createAggregationBuffer(), rt)) == null)
+    assert(agg.eval(agg.merge(rt, agg.createAggregationBuffer())) == null)
+  }
 }

@@ -77,8 +77,38 @@ class BucketedJoinSpec extends AnyFunSuite {
     assert(before > 4, s"appends should accumulate per-append files, saw $before")
     val sumBefore = spark.table("bjc_tbl").agg(sum("v")).as[Long].head()
     BucketedJoin.compactBucketed(spark, "bjc_tbl", "k")
-    assert(dataFiles().size <= before,
-      "compaction must not grow the file count")
+    val bucketIds = dataFiles().map(f => org.apache.spark.sql.execution
+      .datasources.BucketingUtils.getBucketId(f.getName))
+    assert(bucketIds.forall(_.isDefined) && bucketIds.distinct.size == bucketIds.size &&
+      bucketIds.size <= 4, s"compaction must leave at most one file per bucket: $bucketIds")
+    // a second compaction of a compact table fires no job and keeps the files
+    val names = dataFiles().map(_.getName).sorted
+    // job starts by group; a sentinel job posted after the call is seen
+    // only after every earlier job start (the bus delivers in order)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("bjc-compact", "second compaction")
+      BucketedJoin.compactBucketed(spark, "bjc_tbl", "k")
+      sc.setJobGroup("bjc-sentinel", "sentinel")
+      sc.parallelize(1 to 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("bjc-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("bjc-sentinel"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = seen.toArray.count(_ == "bjc-compact")
+    assert(jobs == 0, s"compacting a compact table fired $jobs jobs")
+    assert(dataFiles().map(_.getName).sorted == names)
     assert(spark.table("bjc_tbl").agg(sum("v")).as[Long].head() == sumBefore)
     assert(spark.table("bjc_tbl").count() == 3500)
     val joinedAfter = spark.table("bjc_tbl")

@@ -289,6 +289,88 @@ class DedupSpec extends AnyFunSuite {
       s"missing=${(whole -- sharded).take(5)} extra=${(sharded -- whole).take(5)}")
   }
 
+  /** Seeded corpus: 9-word vocabulary (shingles repeat across docs),
+    * lengths 0–13 words (some shorter than k), 6 exact copies, 10 near
+    * copies (one word swapped, double spaces), a 4-word phrase planted
+    * in exactly 5 docs and another in exactly 6.
+    */
+  private def jaccardCorpus(seed: Long): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.tabulate(9)(i => s"w$i")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.length)))
+    val base = (0 until 48).map(i => (i * 3L + 1, words(rnd.nextInt(14))))
+    val planted = base.zipWithIndex.map { case ((id, w), i) =>
+      val extra = if (i >= 20 && i < 25) Seq("pa", "pb", "pc", "pd")
+        else if (i >= 25 && i < 31) Seq("qa", "qb", "qc", "qd") else Nil
+      (id, w ++ extra)
+    }
+    val exact = planted.take(6).map { case (id, w) => (id + 1000, w) }
+    val near = planted.slice(6, 16).map { case (id, w) =>
+      val v = if (w.isEmpty) w else w.updated(rnd.nextInt(w.size), vocab(rnd.nextInt(9)))
+      (id + 2000, v)
+    }
+    rnd.shuffle(planted.map(p => (p._1, p._2.mkString(" "))) ++
+      exact.map(p => (p._1, p._2.mkString(" "))) ++
+      near.map(p => (p._1, p._2.mkString("  "))))
+  }
+
+  /** Plain-RDD reference from the documented semantics: a shingle is
+    * kept when its (id, shingle) row count ≤ cap; i counts kept shared
+    * shingles, set sizes count kept shingles; jaccard = i / (na + nb − i).
+    */
+  private def jaccardReference(rows: Seq[(Long, String)], k: Int, cap: Int,
+                               threshold: Double): (Seq[(Long, Long, Double)], Map[Int, Int]) = {
+    val sh = spark.sparkContext.parallelize(rows, 3).flatMap { case (id, t) =>
+      t.split("\\s+").filter(_.nonEmpty).sliding(k).filter(_.length == k)
+        .map(_.mkString(" ")).toSeq.distinct.map(_ -> id)
+    }
+    val freqHist = sh.map(_._1 -> 1).reduceByKey(_ + _).map(_._2 -> 1)
+      .reduceByKey(_ + _).collect().toMap
+    val kept = sh.groupByKey().flatMap { case (s, ids) =>
+      if (ids.size <= cap) ids.map(s -> _) else Nil
+    }
+    val sizes = kept.map { case (_, id) => id -> 1L }.reduceByKey(_ + _)
+    val inter = kept.groupByKey().flatMap { case (_, ids) =>
+      val v = ids.toSeq.sorted
+      for (i <- v.indices; j <- i + 1 until v.size if v(i) < v(j)) yield (v(i), v(j)) -> 1L
+    }.reduceByKey(_ + _)
+    val pairs = inter.map { case ((a, b), i) => a -> (b, i) }.join(sizes)
+      .map { case (a, ((b, i), na)) => b -> (a, i, na) }.join(sizes)
+      .map { case (b, ((a, i, na), nb)) => (a, b, i.toDouble / (na + nb - i).toDouble) }
+      .filter(_._3 >= threshold).collect().toSeq.sorted
+    (pairs, freqHist)
+  }
+
+  test("ngram jaccard ≡ plain RDD reference: caps {1,2,5,∞} × k {2,3}, bit-identical") {
+    for (seed <- Seq(11L, 12L); k <- Seq(2, 3); cap <- Seq(1, 2, 5, Int.MaxValue)) {
+      val rows = jaccardCorpus(seed)
+      val df = rows.toDF("doc_id", "text").repartition(4)
+      val (want, freqHist) = jaccardReference(rows, k, cap, 0.0)
+      if (cap != Int.MaxValue)
+        assert(freqHist.contains(cap) && freqHist.keys.exists(_ > cap),
+          s"corpus must hold shingles at and above cap=$cap: $freqHist")
+      val got = Dedup.ngramJaccardPairs(df, "text", "doc_id",
+          k = k, threshold = 0.0, maxShingleFreq = cap)
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+      // cap 1 keeps only single-doc shingles: no pair can share one
+      assert(want.nonEmpty == (cap > 1), s"seed=$seed k=$k cap=$cap: ${want.size} pairs")
+      assert(got == want, s"seed=$seed k=$k cap=$cap: " +
+        s"missing=${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
+      // doubles compared bit for bit, not within a tolerance
+      assert(got.map(p => java.lang.Double.doubleToRawLongBits(p._3)) ==
+        want.map(p => java.lang.Double.doubleToRawLongBits(p._3)))
+    }
+    // the threshold filter, and an int id column keeps its type
+    val rows = jaccardCorpus(13L)
+    val (want, _) = jaccardReference(rows, 3, 5, 0.8)
+    val intDf = rows.toDF("doc_id", "text").select(col("doc_id").cast("int"), col("text"))
+    val got = Dedup.ngramJaccardPairs(intDf, "text", "doc_id",
+      k = 3, threshold = 0.8, maxShingleFreq = 5)
+    assert(got.schema.map(_.dataType.simpleString) == Seq("int", "int", "double"))
+    assert(got.as[(Int, Int, Double)].collect().toSeq.sorted
+      .map(p => (p._1.toLong, p._2.toLong, p._3)) == want)
+  }
+
   test("hot-shingle cap drops high-frequency shingles from candidates") {
     // 3 docs sharing one hot shingle; cap=2 suppresses it entirely
     val hot = Seq((1L, "x y z a"), (2L, "x y z b"), (3L, "x y z c"))

@@ -68,14 +68,14 @@ object DevPlans {
       "o1_sort" -> "Range-partitioned global sort (sampled bounds): each of the 32 partitions sorts independently; at 1000 executors the same plan holds with more range splits.",
       "o2_secsort" -> "One exchange on the grouping key with an intra-partition composite sort — the secondary order rides the same shuffle, never a second one.",
       "dd3_simhash" -> "Codegen'd simhash64 + band explode: candidates come from band-bucket joins (sort-free), pairs verified by Hamming popcount — never all-pairs.",
-      "dd4_ngram" -> "Inverted-index join on shingles with the hot-shingle cap: the skew guard bounds any single shingle's candidate blowup, so worst-case documents can't quadratic the join.",
+      "dd4_ngram" -> "One shingle exchange: the capped_ids posting lists combine map-side, so a hot shingle ships an overflow marker — O(cap) shuffle and memory, never O(freq); id_pairs emits each kept list's pairs plus one (a, a) size row per id, and two window exchanges (on ida, then idb) attach both set sizes — no self-join, no size joins, one shingle Generate.",
       "dd2_minhash" -> "minhash_sigs is a single codegen'd kernel (hashing fused in); LSH band keys bucket-join so the shuffle carries (id, bandkey) pairs, not signatures×signatures.",
       "sim2_lsh" -> "LSH buckets prune the candidate space; the cosine verify touches only colliding pairs — query cost tracks collisions, flat in corpus size.",
       "sim3_ivf" -> "Probes shuffle TO the cid-bucketed lists (index never moves); scoring is per-probed-list, so query cost is probeFrac×corpus at worst, not corpus.",
       "sim4_neardup" -> "LSH-blocked near-dup with quantized refine: blocking keys bound candidates, the exact cosine runs only inside blocks — measured to 1e7 vectors.",
       "sim8_lshindex" -> "Persisted admission index: the batch's bucket keys re-bucket into the standing layout, checks are co-located bucket joins — O(batch), flat as the corpus grows.",
       "mf1_lookup" -> "The IN-list pushes into the parquet scan (PushedFilters) — a point lookup reads row-group stats, not the table.",
-      "p1_clean" -> "One corpus scan, one digest shuffle: the winner row rides min_by inside the digest aggregation (no join-back), so the pipeline is two stages at any scale.",
+      "p1_clean" -> "One corpus scan: the digest winner rides min_by inside the digest aggregation (no join-back), the near-dup pass is dd4's one-shingle-exchange kernel over the winners, and the loser ids anti-join back — exchanges on digest, shingle, ida and idb plus the final sort, whatever the corpus size.",
       "t5_commonality" -> "Token explode → partial agg → broadcast the tiny dictionary back: the per-doc rarity join broadcasts vocabulary stats, never re-shuffles the corpus.",
       "sim9_ivfpq" -> "ADC tables ride a qid-keyed broadcast (chunked under a byte cap), code lists stay cid-bucketed; refine re-ranks only refineK rows/query from the id-bucketed raw table.",
       "sim10_pqappend" -> "Frozen-quantizer absorb: batch rows encode against standing centroids+codebook and re-bucket into the standing layout — O(batch), nothing existing rewrites.",

@@ -27,16 +27,12 @@ object DevProfile {
       explode(Dedup.shingles(col("text"), 3)).as("sh"))
     time("shingle explode")(sh.count())
     time("shingle explode again")(sh.count())
-    val shP = sh.repartition(col("sh"))
-    val keep = shP.groupBy("sh").agg(count(lit(1)).as("freq"))
-      .filter(col("freq") <= 5).select("sh")
-    val capped = shP.join(keep, Seq("sh"), "left_semi")
-    time("capped")(capped.count())
-    val inter = capped.as("a").join(capped.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("ida"), col("b.id").as("idb"))
-      .agg(count(lit(1)).as("i"))
-    time("inter")(inter.count())
+    val lists = sh.groupBy("sh")
+      .agg(graft.functions.GraftFunctions.cappedIds(col("id"), 5).as("ids"))
+    time("capped posting lists")(lists.count())
+    val pairs = lists.select(graft.functions.GraftFunctions.idPairs(col("ids")))
+    time("pair rows")(pairs.count())
+    time("pair counts")(pairs.groupBy("ida", "idb").count().count())
     time("full dd4")(Dedup.ngramJaccardPairs(docs, "text", "doc_id",
       3, 0.8, 5).count())
     time("full dd4 again")(Dedup.ngramJaccardPairs(docs, "text", "doc_id",
