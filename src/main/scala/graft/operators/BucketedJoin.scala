@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
 /** Bucketed co-located join — the faithful Spark analog of the
   * reference's map-side merge join precondition
@@ -79,15 +80,28 @@ object BucketedJoin {
 
   /** Append `df` to an existing bucketed table, preserving the layout:
     * rows are re-bucketed by the table's OWN bucket spec (read from the
-    * catalog, so a caller can't silently mis-bucket), each append adds
-    * one sorted file per bucket, and later co-located joins still see
-    * one partition per bucket with NO Exchange — at most a LOCAL
+    * catalog, so a caller can't silently mis-bucket) and written with
+    * the table's own sort spec and write options (its page geometry),
+    * merged under `options`. Later co-located joins still see one
+    * partition per bucket with NO Exchange — at most a LOCAL
     * per-partition sort re-merges the per-append sorted runs. Append
     * cost is O(df), never O(table): this is the incremental half of the
     * pay-the-shuffle-once contract ([[writeBucketed]] being the
     * build-once half, [[compactBucketed]] the occasional fold of
     * accumulated append files). Falls back to a fresh [[writeBucketed]]
     * when the table doesn't exist yet.
+    *
+    * The write: the rows shuffle on their bucket id
+    * `pmod(hash(key), n)` with NO fixed partition count, so every
+    * bucket's rows share one shuffle partition — one new file per
+    * non-empty bucket, whatever partitioning `df` arrives with — while
+    * adaptive execution may coalesce a small delta's partitions into
+    * few write tasks (a one-bucket table merges into one partition,
+    * no shuffle). A crash mid-write leaves the table as it was (the
+    * job commit publishes the files) or with this append's files
+    * landed; callers whose appends are not row-idempotent repair by
+    * anti-join ([[Retrieval.bm25Append]], which lands several tables'
+    * appends as one concurrent wave).
     */
   def appendBucketed(df: DataFrame, table: String, key: String,
                      defaultBuckets: Int = 8,
@@ -98,21 +112,33 @@ object BucketedJoin {
     if (!cat.tableExists(ident))
       writeBucketed(df, table, key, defaultBuckets, options = options)
     else {
-      val spec = cat.getTableMetadata(ident).bucketSpec
+      val meta = cat.getTableMetadata(ident)
+      val spec = meta.bucketSpec
       val n = spec.map(_.numBuckets).getOrElse(defaultBuckets)
       // the table's OWN sort spec (key + any secondary layout columns),
       // so appends preserve e.g. a block-max (term, blk, doc_id) layout
       val sortCols = spec.map(_.sortColumnNames).filter(_.nonEmpty)
         .getOrElse(Seq(key))
-      // pre-partition on the bucket hash so each task owns exactly one
-      // bucket → exactly n new files per append, not tasks×n
-      df.repartition(n, org.apache.spark.sql.functions.col(key))
+      byBucket(df, key, n, fixed = false)
         .write.mode("append")
-        .options(options)
+        .options(meta.storage.properties ++ options)
         .bucketBy(n, key).sortBy(sortCols.head, sortCols.tail: _*)
         .format("parquet")
         .saveAsTable(table)
     }
+  }
+
+  /** `df` with each of `n` buckets' rows in one partition: shuffled
+    * on the bucket id Spark's bucketed writer assigns (`fixed`: into
+    * exactly n partitions; else into the session's count, which
+    * adaptive execution may coalesce), or, for one bucket, merged into
+    * one partition with no shuffle. */
+  private def byBucket(df: DataFrame, key: String, n: Int,
+                       fixed: Boolean): DataFrame = {
+    val id = pmod(hash(col(key)), lit(n))
+    if (n == 1) df.coalesce(1)
+    else if (fixed) df.repartition(n, id)
+    else df.repartition(id)
   }
 
   /** Fold a bucketed table's accumulated append file sets back to one
@@ -157,11 +183,20 @@ object BucketedJoin {
   }
 
   /** The compaction swap, generalized: replace a bucketed table with
-    * `transform` of itself through the same crash-safe
-    * stage → rename-aside → rename-in → drop-old sequence (see
-    * [[compactBucketed]] for the recovery states). Used for
-    * filtered rewrites — e.g. retention pruning of an append-only
-    * ledger — where the rewrite must never risk the only copy.
+    * `transform` of itself in two steps (see [[compactBucketed]] for
+    * the recovery states):
+    *  1. STAGE: `transform` of the live rows lands as
+    *     `<table>_compacting` in the table's own layout — bucket count,
+    *     the sort columns the output still carries, and the table's
+    *     write options (its parquet page geometry), all read back from
+    *     the catalog. A kill here leaves the original untouched and a
+    *     partial stage that recovery drops.
+    *  2. SWAP: rename-aside → rename-in → drop-old; a kill between the
+    *     renames rolls forward (a staged table is only renamed once
+    *     complete), before the first rolls back.
+    * Used for filtered rewrites — e.g. retention pruning of an
+    * append-only ledger — where the rewrite must never risk the only
+    * copy. [[rewriteAll]] runs several tables' stages as one wave.
     */
   def rewriteBucketed(spark: SparkSession, table: String, key: String)
                      (transform: DataFrame => DataFrame): Unit =
@@ -186,28 +221,77 @@ object BucketedJoin {
     def boundary(i: Int): Unit =
       if (failAt == i) throw new InjectedRewriteCrash(i)
     recoverCompacted(spark, table)
-    val cat = spark.sessionState.catalog
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    val spec = cat.getTableMetadata(ident).bucketSpec
+    stage(spark, Rewrite(table, key, transform))
+    boundary(0)
+    swapStaged(spark, table, boundary)
+  }
+
+  /** Crash injected by a stage wave's seam (see [[rewriteAll]]). */
+  private[graft] final class InjectedStageCrash(val table: String)
+    extends RuntimeException(s"injected crash after staging $table")
+
+  /** One table's rewrite: `transform` of its live rows, bucketed by
+    * `key`. */
+  private[graft] final case class Rewrite(table: String, key: String,
+                                          transform: DataFrame => DataFrame)
+
+  /** Rewrite several tables as ONE stage wave, then the swaps: every
+    * interrupted swap rolls first (so no stage reads a table a sibling
+    * is renaming), every stage then runs concurrently
+    * ([[Retrieval.fanOut]]), and only once ALL have landed does each
+    * table swap, in `rewrites` order. Transforms may read any of the
+    * tables: every stage sees the pre-rewrite state. `afterStage` runs
+    * on the staging thread once a table's stage has landed and
+    * `afterSwap` after each swap (crash seams; no-ops in production).
+    * A kill during the wave leaves every original untouched and staged
+    * debris that the next rewrite (or [[recoverCompacted]]) drops; a
+    * kill between swaps leaves a prefix of `rewrites` swapped in and
+    * the rest staged, which the next rewrite drops and restages.
+    */
+  private[graft] def rewriteAll(spark: SparkSession, rewrites: Seq[Rewrite],
+                                afterStage: String => Unit = _ => (),
+                                afterSwap: String => Unit = _ => ()): Unit = {
+    rewrites.foreach(r => recoverCompacted(spark, r.table))
+    Retrieval.fanOut(spark, rewrites, rewrites.size) { r =>
+      stage(spark, r)
+      afterStage(r.table)
+    }
+    rewrites.foreach { r =>
+      swapStaged(spark, r.table, _ => ())
+      afterSwap(r.table)
+    }
+  }
+
+  /** Land `transform` of `table`'s live rows as `<table>_compacting`
+    * in the table's own layout (see [[rewriteBucketed]]). */
+  private def stage(spark: SparkSession, r: Rewrite): Unit = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(r.table))
+    val spec = meta.bucketSpec
     val n = spec.map(_.numBuckets).getOrElse(8)
+    val out = r.transform(spark.table(r.table))
     // preserve secondary sort layout columns across the rewrite — but
     // only those the transform's output still carries (a derived-table
     // rewrite may emit a different schema with its own plain layout)
-    val outCols = transform(spark.table(table)).columns.toSet
     val sortTail = spec.map(_.sortColumnNames.drop(1)).getOrElse(Nil)
-      .filter(outCols)
+      .filter(out.columns.toSet)
+    // all rows of a bucket in one task → one file per non-empty bucket.
+    // Partitioned on the bucket id, not on `key`: over the table's own
+    // bucketed scan an exchange on `key` is planned away (the scan
+    // already satisfies it), the scan is then de-bucketed as unneeded,
+    // and every task writes a file for every bucket it sees. The count
+    // is fixed at n: a whole-table rewrite keeps n write tasks
+    writeBucketed(byBucket(out, r.key, n, fixed = true),
+      s"${r.table}_compacting", r.key, n, sortTail, meta.storage.properties)
+  }
+
+  /** Swap a staged `<table>_compacting` in: clear debris, rename the
+    * original aside, rename the stage in, drop the original;
+    * `boundary(i)` runs after step i (1–4 of [[rewriteBucketedImpl]]). */
+  private def swapStaged(spark: SparkSession, table: String,
+                         boundary: Int => Unit): Unit = {
     val tmp = s"${table}_compacting"
     val old = s"${table}_old"
-    // all rows of a bucket in one task → one file per non-empty bucket.
-    // Partitioned on pmod(hash(key), n), not on `key`: over the table's
-    // own bucketed scan an exchange on `key` is planned away (the scan
-    // already satisfies it), the scan is then de-bucketed as unneeded,
-    // and every task writes a file for every bucket it sees.
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    writeBucketed(transform(spark.table(table))
-        .repartition(n, pmod(hash(col(key)), lit(n))),
-      tmp, key, n, sortTail)
-    boundary(0)
     // clear stale debris (a forgotten catalog entry or orphaned dir
     // would make the rename-aside collide)
     dropWithLocation(spark, old)

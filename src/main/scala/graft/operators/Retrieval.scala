@@ -215,12 +215,14 @@ object Retrieval {
     * rows per page the same term is ~150 pages per bucket and a sparse
     * candidate set skips the overwhelming majority. Page-header and
     * column-index overhead is a few bytes per page — noise against a
-    * serving-optimized layout. Appends use the same geometry;
-    * a tombstone-fold compaction rewrites at the session default
-    * (coarser pages — a cost regression only, healed by rebuilding).
+    * serving-optimized layout. The options are stored with the table,
+    * so appends, folds and compactions read them back from the catalog
+    * ([[BucketedJoin.appendBucketed]], [[BucketedJoin.rewriteBucketed]])
+    * and keep the geometry.
     */
   private val blockMaxWriteOptions =
-    Map("parquet.page.row.count.limit" -> "2048")
+    Map("parquet.page.row.count.limit" -> "2048",
+      "parquet.writer.version" -> "v2")
 
   /** The block-max layout marker: the block width when `<table>_blkmeta`
     * exists (one-row control read), None for the plain layout. */
@@ -291,65 +293,107 @@ object Retrieval {
     * [[Similarity.lshIndexAppend]] contract — run the dedup admission
     * check first in refresh flows).
     *
+    * The batch tokenizes ONCE ([[termDocs]]: one per-(term, doc) delta
+    * with tf, dl and, when `<table>_pos` exists, positions), and that
+    * delta is persisted and computed once; every table's rows are
+    * projections of it. The writes:
+    *  1. block-max indexes only: the `_blkmax` bounds delta lands
+    *     FIRST, alone — a crash after it leaves bounds covering
+    *     postings that never landed (slack, never a wrong prune); the
+    *     reverse order could leave postings in blocks the refinement
+    *     believes empty;
+    *  2. ONE write wave ([[fanOut]]): the postings, `_terms`, `_stats`
+    *     and `_pos` deltas append concurrently. A crash in the wave can
+    *     leave ANY subset of the four landed.
+    *
     * `repair = true` completes a CRASHED absorb of this same batch
-    * (recovery path only, the refresh-loop replay contract): postings
-    * append only the (term, doc_id) rows not already landed, and the
+    * (recovery path only, the refresh-loop replay contract): whatever
+    * subset landed, postings and positions append only the
+    * (term, doc_id) rows not already landed (one wave), and the
     * derived dictionary/stats tables are then REBUILT from the
-    * postings ([[rebuildDerived]]) — a crashed run can leave a posting
-    * row landed with its df delta missing or vice versa, and deltas
-    * are not row-level repairable (the same term legitimately carries
-    * one delta per epoch), so recomputing the derived state from the
-    * one authoritative table is the only exact completion. O(index),
-    * paid only on the crash-recovery epoch.
+    * postings ([[rebuildDerived]]) — deltas are not row-level
+    * repairable (the same term legitimately carries one delta per
+    * epoch), so recomputing the derived state from the one
+    * authoritative table is the only exact completion; `_blkmax` is
+    * recomputed the same way before the wave. O(index), paid only on
+    * the crash-recovery epoch.
     */
   def bm25Append(spark: SparkSession, table: String, docs: DataFrame,
                  idCol: String, textCol: String,
-                 repair: Boolean = false): Unit = {
-    val (postings0, dfDelta, statsDelta) = indexRows(docs, idCol, textCol)
-    // block-max twin: appended postings carry their blk, and the
-    // `_blkmax` delta lands BEFORE the postings — a crash between the
-    // two leaves bounds covering postings that never landed (slack,
-    // never a wrong prune); the reverse order could leave postings in
-    // blocks the refinement believes empty
-    val blkW = blockMeta(spark, table)
-    val postings = blkW.map(w => postings0.withColumn("blk",
-      expr(s"CAST(doc_id AS BIGINT) div $w"))).getOrElse(postings0)
-    if (repair && tableExists(spark, table)) {
-      val missing = postings.join(
-        spark.table(table).select("term", "doc_id"),
-        Seq("term", "doc_id"), "left_anti")
-      if (blkW.isDefined)
-        // deltas are not row-level repairable (same argument as the
-        // dictionary below) — recompute the bounds from the one
-        // authoritative table; exact, O(index), crash-recovery only
-        BucketedJoin.rewriteBucketed(spark, s"${table}_blkmax", "term") {
-          _ => blkBounds(spark.table(table).unionByName(missing))
+                 repair: Boolean = false): Unit =
+    bm25AppendImpl(spark, table, docs, idCol, textCol, repair, _ => true)
+
+  /** [[bm25Append]] with a crash seam: the wave lands only the tables
+    * whose suffix (`""` postings, `_terms`, `_stats`, `_pos`) `lands`
+    * accepts — the state a crash inside the wave can leave. Production
+    * calls accept every table. */
+  private[graft] def bm25AppendImpl(spark: SparkSession, table: String,
+                                    docs: DataFrame, idCol: String,
+                                    textCol: String, repair: Boolean,
+                                    lands: String => Boolean): Unit = {
+    val positional = tableExists(spark, s"${table}_pos")
+    // computed once, by the first write that reads it: concurrent
+    // readers of a persisted partition wait for its one computation
+    val delta = termDocs(docs, idCol, textCol, positional).persist()
+    try {
+      val blkW = blockMeta(spark, table)
+      val postings = blkW.foldLeft(delta.select("term", "doc_id", "tf", "dl")) {
+        (p, w) => p.withColumn("blk", expr(s"CAST(doc_id AS BIGINT) div $w"))
+      }
+      def landed(t: String) =
+        spark.table(t).select("term", "doc_id")
+      val repairing = repair && tableExists(spark, table)
+      val rows =
+        if (repairing) {
+          val missing = postings.join(landed(table), Seq("term", "doc_id"),
+            "left_anti")
+          // bounds are deltas too: recompute them from the one
+          // authoritative table plus what is about to land
+          if (blkW.isDefined)
+            BucketedJoin.rewriteBucketed(spark, s"${table}_blkmax", "term") {
+              _ => blkBounds(spark.table(table).unionByName(missing))
+            }
+          Seq(("", missing, "term"))
+        } else {
+          if (blkW.isDefined)
+            BucketedJoin.appendBucketed(blkBounds(postings),
+              s"${table}_blkmax", "term")
+          Seq(("", postings, "term"), ("_terms", dictOf(postings), "term"),
+            ("_stats", statsOf(postings), "n_docs"))
         }
-      BucketedJoin.appendBucketed(missing, table, "term")
-      rebuildDerived(spark, table)
-    } else {
-      if (blkW.isDefined)
-        BucketedJoin.appendBucketed(blkBounds(postings),
-          s"${table}_blkmax", "term")
-      BucketedJoin.appendBucketed(postings, table, "term",
-        options = if (blkW.isDefined) blockMaxWriteOptions else Map.empty)
-      BucketedJoin.appendBucketed(dfDelta, s"${table}_terms", "term")
-      BucketedJoin.appendBucketed(statsDelta, s"${table}_stats", "n_docs")
-    }
-    // positional twin rides the same absorb (row-level anti-join under
-    // repair — positions are per-(term, doc) facts, not deltas, so
-    // partial landings repair like postings, no derived rebuild needed)
-    if (tableExists(spark, s"${table}_pos")) {
-      val pr = posRows(docs, idCol, textCol)
-      val rows = if (repair)
-        pr.join(spark.table(s"${table}_pos").select("term", "doc_id"),
-          Seq("term", "doc_id"), "left_anti")
-      else pr
-      // fine pages on the append files too (the sort spec itself is
-      // preserved from the catalog by appendBucketed)
-      BucketedJoin.appendBucketed(rows, s"${table}_pos", "term",
-        options = blockMaxWriteOptions)
-    }
+      // positions are per-(term, doc) facts, not deltas: a partial
+      // landing repairs by anti-join like the postings
+      val pos = if (!positional) Nil else {
+        val pr = delta.select("term", "doc_id", "positions")
+        Seq(("_pos", if (repair) pr.join(landed(s"${table}_pos"),
+          Seq("term", "doc_id"), "left_anti") else pr, "term"))
+      }
+      val wave = (rows ++ pos).filter { case (s, _, _) => lands(s) }
+      fanOut(spark, wave, wave.size) { case (s, df, key) =>
+        BucketedJoin.appendBucketed(df, s"$table$s", key)
+      }
+      if (repairing) rebuildDerived(spark, table)
+    } finally delta.unpersist()
+  }
+
+  /** One tokenization of a batch: a row per (term, doc) with its `tf`,
+    * the doc's length `dl` (= Σ tf over the doc) and, when `positions`,
+    * the doc's delta-encoded offsets of the term (the [[posRows]]
+    * payload). The docs shuffle once, on the doc id, so the per-(term,
+    * doc) aggregate and the per-doc length window reuse that exchange.
+    * Rows and values equal what [[indexRows]] and [[posRows]] derive
+    * from the same batch. */
+  private def termDocs(docs: DataFrame, idCol: String, textCol: String,
+                       positions: Boolean): DataFrame = {
+    val perDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
+    val pos = GraftFunctions.deltaEnc(sort_array(collect_list(col("pos"))))
+      .as("positions")
+    docs.select(col(idCol).as("doc_id"), col(textCol))
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), posexplode(toks(col(textCol))))
+      .groupBy(col("col").as("term"), col("doc_id"))
+      .agg(count(lit(1)).as("tf"), (if (positions) Seq(pos) else Nil): _*)
+      .withColumn("dl", sum("tf").over(perDoc))
   }
 
   /** Rebuild the derived dictionary/stats tables from the postings —
@@ -357,16 +401,15 @@ object Retrieval {
     * what the accumulated deltas sum to. Tombstoned rows (if any) stay
     * INCLUDED, matching the delta tables' convention: the query-time
     * correction subtracts `postings ∩ tombstones` from either form
-    * consistently. Crash-safe per table; idempotent.
+    * consistently. One stage wave, then both swaps
+    * ([[BucketedJoin.rewriteAll]]); crash-safe per table; idempotent.
     */
-  private def rebuildDerived(spark: SparkSession, table: String): Unit = {
-    BucketedJoin.rewriteBucketed(spark, s"${table}_terms", "term") { _ =>
-      dictOf(spark.table(table))
-    }
-    BucketedJoin.rewriteBucketed(spark, s"${table}_stats", "n_docs") { _ =>
-      statsOf(spark.table(table))
-    }
-  }
+  private def rebuildDerived(spark: SparkSession, table: String): Unit =
+    BucketedJoin.rewriteAll(spark, Seq(
+      BucketedJoin.Rewrite(s"${table}_terms", "term",
+        _ => dictOf(spark.table(table))),
+      BucketedJoin.Rewrite(s"${table}_stats", "n_docs",
+        _ => statsOf(spark.table(table)))))
 
   /** The derived rows of a postings frame: the dictionary (df = posting
     * rows per term), the one-row stats (n_docs, dl_sum over distinct
@@ -399,22 +442,32 @@ object Retrieval {
   /** Physically fold the tombstones: the dictionary and stats tables
     * are RECOMPUTED from the retained postings (df = posting rows per
     * term; stats = distinct (doc, dl) — identical to what the deltas
-    * sum to, minus the deleted docs), then the postings rewrite drops
-    * the tombstoned rows, then the set clears. The recompute-then-
-    * filter order is what makes a kill at any point re-runnable: every
-    * derived table is a pure function of (postings, tombstones), and
-    * re-running after the postings rewrite sees an empty intersection.
-    * O(index) like any compaction — run on the compaction cadence.
+    * sum to, minus the deleted docs), the postings and positions drop
+    * the tombstoned rows, then the set clears. O(index) like any
+    * compaction — run on the compaction cadence.
     *
-    * Crash window: between the first derived-table rewrite and the
-    * postings rewrite, the derived tables already EXCLUDE the deleted
-    * docs while [[bm25Query]]'s query-time correction would subtract
+    * Stage, then swap ([[BucketedJoin.rewriteAll]]):
+    *  1. the set is read once ([[Tombstones.snapshot]]);
+    *  2. ONE stage wave lands `_terms`, `_stats`, postings and `_pos`
+    *     into their `_compacting` tables concurrently, every one
+    *     computed from the UNFOLDED postings;
+    *  3. under the `<table>_foldlock` marker the staged tables swap in,
+    *     in that order, and the set clears.
+    * Every table is a pure function of (postings, tombstones), so a
+    * kill at any point re-runs cleanly: a kill in the wave leaves every
+    * table untouched (the re-run drops the staged debris and restages);
+    * a kill between swaps leaves a prefix swapped in, and the re-run
+    * recomputes the same rows — the derived tables from postings that
+    * still hold the deleted docs or no longer do, with the same result.
+    *
+    * Crash window: between the `_terms` swap and the postings swap,
+    * the derived tables already EXCLUDE the deleted docs while
+    * [[bm25Query]]'s query-time correction would subtract
     * `postings ∩ tombstones` a second time (double-subtracted
-    * df/N/avgdl → wrong scores). A `<table>_foldlock` marker brackets
-    * the fold; [[bm25Query]] heals an abandoned lock by completing the
-    * idempotent fold before serving — the [[BucketedJoin
-    * .recoverCompacted]] heal-on-first-read discipline, lifted to the
-    * multi-table fold.
+    * df/N/avgdl → wrong scores). The foldlock brackets the swaps;
+    * [[bm25Query]] heals an abandoned lock by completing the idempotent
+    * fold before serving — the [[BucketedJoin.recoverCompacted]]
+    * heal-on-first-read discipline, lifted to the multi-table fold.
     */
   def bm25FoldTombstones(spark: SparkSession, table: String): Unit =
     foldTombstonesImpl(spark, table, failAt = -1)
@@ -425,48 +478,47 @@ object Retrieval {
 
   /** [[bm25FoldTombstones]] with a crash-injection seam: `failAt` ≥ 0
     * throws [[InjectedFoldCrash]] immediately AFTER the numbered
-    * rewrite boundary — 0 lock write, 1 `_terms` rewrite, 2 `_stats`
-    * rewrite, 3 postings rewrite, 4 `_pos` rewrite, 5 tombstone clear
-    * (before lock release). The chaos spec drives every boundary in a
-    * loop and asserts [[bm25Query]] heals to bit-identical scores;
-    * production calls pass -1 (no injection).
+    * boundary — 0 lock write, then after the swap of 1 `_terms`,
+    * 2 `_stats`, 3 postings, 4 `_pos`, 5 tombstone clear (before lock
+    * release). `failStaged` names a table (`""` postings, `_terms`,
+    * `_stats`, `_pos`) whose stage throws once landed — a kill inside
+    * the wave, before any swap. The chaos spec drives every boundary
+    * and asserts [[bm25Query]] heals to bit-identical scores;
+    * production calls pass -1 and None (no injection).
     */
   private[graft] def foldTombstonesImpl(spark: SparkSession, table: String,
-                                        failAt: Int): Unit = {
+                                        failAt: Int,
+                                        failStaged: Option[String] = None)
+      : Unit = {
     def boundary(i: Int): Unit =
       if (failAt == i) throw new InjectedFoldCrash(i)
     val lock = s"${table}_foldlock"
-    def lockExists = spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(lock))
-    Tombstones.idSet(spark, table) match {
+    Tombstones.snapshot(spark, table) match {
       case None =>
         // a fold that died between clearing the set and releasing the
         // lock already rewrote everything — just release
-        if (lockExists) BucketedJoin.dropWithLocation(spark, lock)
-      case Some(_) =>
-        if (!lockExists)
-          BucketedJoin.writeBucketed(
-            spark.range(1).toDF("locked"), lock, "locked", 1)
+        if (tableExists(spark, lock)) BucketedJoin.dropWithLocation(spark, lock)
+      case Some(ids) =>
+        if (!tableExists(spark, lock)) {
+          // presence is the marker: an empty table, no Spark job
+          BucketedJoin.dropWithLocation(spark, lock)
+          spark.sql(s"CREATE TABLE $lock (locked BIGINT) USING parquet")
+        }
         boundary(0)
-        def retained() = Tombstones.filterOut(spark, table,
-          spark.table(table), "doc_id")
-        BucketedJoin.rewriteBucketed(spark, s"${table}_terms", "term") { _ =>
-          dictOf(retained())
-        }
-        boundary(1)
-        BucketedJoin.rewriteBucketed(spark, s"${table}_stats", "n_docs") { _ =>
-          statsOf(retained())
-        }
-        boundary(2)
-        BucketedJoin.rewriteBucketed(spark, table, "term") { df =>
-          Tombstones.filterOut(spark, table, df, "doc_id")
-        }
-        boundary(3)
-        if (tableExists(spark, s"${table}_pos"))
-          BucketedJoin.rewriteBucketed(spark, s"${table}_pos", "term") { df =>
-            Tombstones.filterOut(spark, table, df, "doc_id")
-          }
-        boundary(4)
+        val drop = (df: DataFrame) => Tombstones.without(df, "doc_id", ids)
+        val parts = Seq(
+          ("_terms", "term", (_: DataFrame) => dictOf(drop(spark.table(table)))),
+          ("_stats", "n_docs", (_: DataFrame) => statsOf(drop(spark.table(table)))),
+          ("", "term", drop), ("_pos", "term", drop))
+        // boundary i + 1 follows part i's swap, present or not
+        val swapped = parts.map(p => s"$table${p._1}")
+        BucketedJoin.rewriteAll(spark,
+          parts.collect { case (s, key, f) if tableExists(spark, s"$table$s") =>
+            BucketedJoin.Rewrite(s"$table$s", key, f) },
+          afterStage = t => if (failStaged.exists(s => t == s"$table$s"))
+            throw new BucketedJoin.InjectedStageCrash(t),
+          afterSwap = t => boundary(swapped.indexOf(t) + 1))
+        boundary(4) // an index without `_pos` reaches it here
         Tombstones.clear(spark, table)
         boundary(5)
         BucketedJoin.dropWithLocation(spark, lock)
@@ -1499,8 +1551,10 @@ object Retrieval {
     * properties are inherited untouched, so outside job attribution
     * still sees the work), and the first failed item cancels the
     * siblings' jobs (`cancelJobsWithTag`) and interrupts their threads
-    * (`shutdownNow`) before its exception is rethrown. There is no
-    * timeout: a bounded wait would be one more dial. */
+    * (`shutdownNow`), and waits for them to wind down, before its
+    * exception is rethrown — so no sibling still writes once the call
+    * has failed (a staging wave's caller heals right after). There is
+    * no timeout: a bounded wait would be one more dial. */
   private[graft] def fanOut[A, B](spark: SparkSession, items: Seq[A],
                                   threads: Int)(body: A => B): Seq[B] =
     if (items.size <= 1) items.map(body)
@@ -1527,6 +1581,8 @@ object Retrieval {
         case e: Throwable =>
           sc.cancelJobsWithTag(tag)
           pool.shutdownNow()
+          pool.awaitTermination(Long.MaxValue,
+            java.util.concurrent.TimeUnit.NANOSECONDS)
           throw e
       } finally pool.shutdown()
     }

@@ -94,33 +94,45 @@ object Tombstones {
     */
   private[operators] def filterOut(spark: SparkSession, table: String,
                                    df: DataFrame, c: String): DataFrame =
-    idSet(spark, table) match {
-      case Some(ts) =>
-        df.join(broadcast(ts), df(c) === ts("id"), "left_anti")
-      case None => df
+    idSet(spark, table).fold(df)(without(df, c, _))
+
+  /** The tombstone set read ONCE: its ids collected to the driver and
+    * handed back as a local frame (the same bytes a broadcast of the
+    * table would ship), or None when no id is tombstoned. A fold
+    * filters every table against this one snapshot instead of
+    * re-scanning the set per table.
+    */
+  private[operators] def snapshot(spark: SparkSession,
+                                  table: String): Option[DataFrame] =
+    idSet(spark, table).map { ts =>
+      import spark.implicits._
+      ts.as[Long].collect().toSeq.toDF("id")
     }
 
-  /** Physically fold the tombstones into the index: each `(tableName,
-    * idColumn, bucketKey)` target is rewritten without the tombstoned
-    * rows through [[BucketedJoin.rewriteBucketed]]'s crash-safe swap,
-    * and the set is cleared afterwards. Idempotent — a kill between
-    * targets re-runs cleanly (already-filtered tables lose nothing,
-    * the set is only cleared once every target is rewritten).
+  /** `df` without rows whose `c` column is in `ids` (a [[snapshot]]). */
+  private[operators] def without(df: DataFrame, c: String,
+                                 ids: DataFrame): DataFrame =
+    df.join(broadcast(ids), df(c) === ids("id"), "left_anti")
+
+  /** Physically fold the tombstones into the index: the set is read
+    * once ([[snapshot]]), every present `(tableName, idColumn,
+    * bucketKey)` target stages its copy without the tombstoned rows as
+    * ONE wave, the staged copies swap in target order
+    * ([[BucketedJoin.rewriteAll]]), and the set is cleared afterwards.
+    * Idempotent — a kill during the wave leaves every target untouched
+    * plus staged debris the re-run drops; a kill between swaps leaves
+    * some targets filtered, which the re-run filters again at no loss;
+    * the set is only cleared once every target has swapped.
     */
   def fold(spark: SparkSession, table: String,
-           targets: Seq[(String, String, String)]): Unit = {
-    idSet(spark, table) match {
-      case Some(_) =>
-        for ((t, idc, key) <- targets; if exists(spark, t))
-          BucketedJoin.rewriteBucketed(spark, t, key) { df =>
-            // re-read the set inside the transform: rewriteBucketed
-            // stages from the live catalog state
-            filterOut(spark, table, df, idc)
-          }
-        clear(spark, table)
-      case None => ()
+           targets: Seq[(String, String, String)]): Unit =
+    snapshot(spark, table).foreach { ids =>
+      BucketedJoin.rewriteAll(spark, targets.collect {
+        case (t, idc, key) if exists(spark, t) =>
+          BucketedJoin.Rewrite(t, key, without(_, idc, ids))
+      })
+      clear(spark, table)
     }
-  }
 
   /** Drop the tombstone set (after a successful fold). */
   def clear(spark: SparkSession, table: String): Unit =

@@ -355,14 +355,13 @@ object RefreshLoop {
               (bm25Table.toSeq ++
                 rotateShard(bm25Slots.map(_.map(_.table)), epoch,
                   compactEvery)).foreach { t =>
-                BucketedJoin.compactBucketed(spark, t, "term")
-                BucketedJoin.compactBucketed(spark, s"${t}_terms", "term")
-                BucketedJoin.compactBucketed(spark, s"${t}_stats", "n_docs")
-                // positional twin (present only for positions = true
-                // indexes; bm25Append maintains it automatically)
-                if (spark.sessionState.catalog.tableExists(
-                    org.apache.spark.sql.catalyst.TableIdentifier(s"${t}_pos")))
-                  BucketedJoin.compactBucketed(spark, s"${t}_pos", "term")
+                // every present table of the family layout: postings,
+                // dictionary, stats, and the optional positional and
+                // block-max tables bm25Append maintains
+                for (p <- Retrieval.reshard.parts; pt = t + p.suffix
+                     if spark.sessionState.catalog.tableExists(
+                       org.apache.spark.sql.catalyst.TableIdentifier(pt)))
+                  BucketedJoin.compactBucketed(spark, pt, p.key)
               }
               // LangModel.compact folds all four LM tables (bigram
               // deltas, counted vocab, stats ledger, generation) itself

@@ -60,6 +60,41 @@ class BucketedJoinSpec extends AnyFunSuite {
     assert(spark.table("bjs_spec").count() == 2000)
   }
 
+  test("appendBucketed lands at most one file per bucket per append, whatever the input partitioning") {
+    val t = "bjo_tbl"
+    BucketedJoin.writeBucketed(spark.range(0, 1000)
+      .select(col("id").as("k"), col("id").as("v")), t, "k", 4)
+    // a bucketed scan of another key layout (8 buckets, pre-clustered
+    // on k), a 7-way round-robin frame, and a single partition
+    BucketedJoin.writeBucketed(spark.range(1000, 3000)
+      .select(col("id").as("k"), col("id").as("v")), "bjo_src", "k", 8)
+    val inputs = Seq(spark.table("bjo_src"),
+      spark.range(3000, 5000).select(col("id").as("k"), col("id").as("v"))
+        .repartition(7),
+      spark.range(5000, 5100).select(col("id").as("k"), col("id").as("v"))
+        .coalesce(1))
+    def files(): Set[String] = {
+      val loc = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t)).location.getPath
+      new java.io.File(loc).listFiles().toSeq.map(_.getName)
+        .filter(_.endsWith(".parquet")).toSet
+    }
+    for (in <- inputs) {
+      val before = files()
+      BucketedJoin.appendBucketed(in, t, "k")
+      val ids = (files() -- before).toSeq.map(f => org.apache.spark.sql
+        .execution.datasources.BucketingUtils.getBucketId(f))
+      assert(ids.nonEmpty && ids.forall(_.isDefined) &&
+        ids.distinct.size == ids.size && ids.size <= 4,
+        s"one append landed more than one file in a bucket: $ids")
+    }
+    assert(spark.table(t).count() == 5100)
+    val joined = spark.table(t)
+      .join(spark.table(t).select(col("k"), col("v").as("v2")), "k")
+    assert(!BucketedJoin.hasJoinShuffle(joined),
+      "appended table must still be bucketed")
+  }
+
   test("compactBucketed folds append files to one per bucket, content intact") {
     val a = spark.range(0, 2000).select(col("id").as("k"), (col("id") * 3).as("v"))
     BucketedJoin.writeBucketed(a, "bjc_tbl", "k", 4)

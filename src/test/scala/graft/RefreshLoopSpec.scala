@@ -410,6 +410,47 @@ class RefreshLoopSpec extends AnyFunSuite {
     assert(spark.table("bm25cr_bm").filter($"doc_id" === 110L).count() == 8)
   }
 
+  test("bm25 twin with block-max: every compaction cadence folds _blkmax to one file per bucket") {
+    import graft.operators.Retrieval
+    val base = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely different text about spark query engines today"),
+      (3L, "a third document on lexical retrieval and block bounds"))
+      .toDF("doc_id", "text")
+    Dedup.minhashIndexBuild(base, "text", "doc_id", "bm25bx_idx")
+    Retrieval.bm25Build(base, "doc_id", "text", "bm25bx_bm", buckets = 4,
+      blockMax = true, blockWidth = 2)
+    val fn = RefreshLoop.minhashBatch("bm25bx_idx", "text", "doc_id",
+      threshold = 0.3, bm25Table = Some("bm25bx_bm"),
+      compactEvery = 1) { (_, _, _) => }
+    val batches = Seq(
+      Seq((110L, "entirely novel content that matches nothing else here"),
+        (111L, "fresh words about query planning and bounds")),
+      Seq((120L, "yet another unrelated text mentioning catalyst rules"),
+        (121L, "final batch document about parquet pages and blocks")))
+    for ((b, epoch) <- batches.zipWithIndex) {
+      fn(b.toDF("doc_id", "text"), epoch.toLong)
+      val loc = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("bm25bx_bm_blkmax"))
+        .location.getPath
+      val ids = new java.io.File(loc).listFiles().toSeq.map(_.getName)
+        .filter(_.endsWith(".parquet")).map(org.apache.spark.sql.execution
+          .datasources.BucketingUtils.getBucketId)
+      assert(ids.nonEmpty && ids.forall(_.isDefined) &&
+        ids.distinct.size == ids.size,
+        s"epoch $epoch: _blkmax kept more than one file per bucket: $ids")
+    }
+    // the compacted block-max index still serves like one built whole
+    Retrieval.bm25Build(base.unionByName(batches.flatten.toDF("doc_id", "text")),
+      "doc_id", "text", "bm25bx_oracle", buckets = 4, blockMax = true,
+      blockWidth = 2)
+    val q = Seq((1L, "novel query bounds"), (2L, "catalyst parquet blocks"))
+      .toDF("qid", "qtext")
+    def run(t: String) = Retrieval.bm25Query(spark, t, q, "qid", "qtext", 3)
+      .as[(Long, Long, Long, Int)].collect().toSet
+    assert(run("bm25bx_bm") == run("bm25bx_oracle"))
+  }
+
   test("legacy ledger (pre-noveldone): commit implies decided on replay") {
     import graft.operators.BucketedJoin
     Dedup.minhashIndexBuild(

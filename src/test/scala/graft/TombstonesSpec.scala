@@ -303,6 +303,104 @@ class TombstonesSpec extends AnyFunSuite {
     }
   }
 
+  test("bm25 fold stage chaos: a kill after each staged table, before any swap, heals to exact scores") {
+    import graft.operators.BucketedJoin
+    val d = docs(100)
+    val queries = d.filter(col("doc_id") % 25 === 1)
+      .select(col("doc_id").as("qid"),
+        concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("qtext"))
+    val oracle = "ts_stage_oracle"
+    Retrieval.bm25Build(d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
+      oracle, positions = true)
+    def bag(t: String) = Retrieval.bm25Query(spark, t, queries,
+      "qid", "qtext", 5).as[(Long, Long, Long, Int)].collect().toSet
+    def phrase(t: String) = Retrieval.bm25PhraseQuery(spark, t, queries,
+      "qid", "qtext", 5).as[(Long, Long, Long, Int)].collect().toSet
+    val (refBag, refPhrase) = (bag(oracle), phrase(oracle))
+    assert(refBag.nonEmpty && refPhrase.nonEmpty)
+    for ((s, i) <- Seq("_terms", "_stats", "", "_pos").zipWithIndex) {
+      val table = s"ts_stage_$i"
+      val tables = Seq("", "_terms", "_stats", "_pos").map(table + _)
+      Retrieval.bm25Build(d, "doc_id", "text", table, positions = true)
+      Retrieval.bm25Delete(spark, table,
+        d.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
+      val rows = tables.map(spark.table(_).count())
+      val e = intercept[BucketedJoin.InjectedStageCrash] {
+        Retrieval.foldTombstonesImpl(spark, table, failAt = -1,
+          failStaged = Some(s))
+      }
+      assert(e.table == table + s)
+      // nothing swapped: every table holds its pre-fold rows, the set
+      // and the lock stand
+      assert(tables.map(spark.table(_).count()) == rows,
+        s"stage kill '$s': a table swapped before the wave finished")
+      assert(exists(s"${table}_tombstones") && exists(s"${table}_foldlock"))
+      assert(bag(table) == refBag, s"stage kill '$s': bag scores diverge")
+      assert(!exists(s"${table}_foldlock") && !exists(s"${table}_tombstones"),
+        s"stage kill '$s': heal did not complete the fold")
+      assert(phrase(table) == refPhrase, s"stage kill '$s': phrase diverges")
+      for (t <- tables)
+        assert(!exists(s"${t}_compacting") && !exists(s"${t}_old"),
+          s"stage kill '$s': $t left staging debris")
+    }
+  }
+
+  test("fold and compaction keep the positional table's fine pages") {
+    import graft.operators.BucketedJoin
+    // 1,500 docs of 8 distinct terms → ~6,000 positional rows per bucket
+    // at 2 buckets, well past one 2,048-row page
+    val d = (0 until 1500).map { i =>
+      (i.toLong, (0 until 8).map(j => s"p${(i * 13 + j * 17) % 300}")
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+    val table = "ts_pages_bm"
+    Retrieval.bm25Build(d.filter(col("doc_id") < 1400), "doc_id", "text",
+      table, buckets = 2, positions = true)
+    val pos = s"${table}_pos"
+    def pages(): Seq[(Long, Long)] = { // (file rows, largest page's rows)
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import scala.jdk.CollectionConverters._
+      val conf = spark.sparkContext.hadoopConfiguration
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(pos))
+        .location)
+      loc.getFileSystem(conf).listStatus(loc).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet")).map { f =>
+          val r = ParquetFileReader.open(
+            HadoopInputFile.fromPath(f.getPath, conf))
+          try {
+            val blocks = r.getFooter.getBlocks.asScala.toSeq
+            (blocks.map(_.getRowCount).sum, blocks.flatMap { b =>
+              b.getColumns.asScala.map { c =>
+                val oi = r.readOffsetIndex(c)
+                (0 until oi.getPageCount).map(i =>
+                  oi.getLastRowIndex(i, b.getRowCount) -
+                    oi.getFirstRowIndex(i) + 1).max
+              }
+            }.max)
+          } finally r.close()
+        }
+    }
+    // the append lands, a compaction folds the append files, then
+    // the tombstone fold rewrites every table: fine pages throughout
+    Retrieval.bm25Append(spark, table, d.filter(col("doc_id") >= 1400),
+      "doc_id", "text")
+    BucketedJoin.compactBucketed(spark, pos, "term")
+    val compacted = pages()
+    assert(compacted.size == 2 && compacted.forall(_._1 > 2048),
+      s"precondition: one file per bucket past one page, got $compacted")
+    assert(compacted.forall(_._2 <= 2048),
+      s"compaction coarsened the positional pages: $compacted")
+    Retrieval.bm25Delete(spark, table,
+      d.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
+    Retrieval.bm25FoldTombstones(spark, table)
+    val folded = pages()
+    assert(folded.nonEmpty && folded.exists(_._1 > 2048))
+    assert(folded.forall(_._2 <= 2048),
+      s"the fold coarsened the positional pages: $folded")
+  }
+
   test("fold is idempotent and a no-op without tombstones") {
     val v = vecs(40)
     val table = "ts_noop_idx"
