@@ -226,9 +226,10 @@ object BucketedJoin {
     swapStaged(spark, table, boundary)
   }
 
-  /** Crash injected by a stage wave's seam (see [[rewriteAll]]). */
-  private[graft] final class InjectedStageCrash(val table: String)
-    extends RuntimeException(s"injected crash after staging $table")
+  /** Crash injected by a [[rewriteAll]] seam: after boundary `at` (of
+    * [[rewriteBucketedImpl]]'s numbering) of `table`'s rewrite. */
+  private[graft] final class InjectedWaveCrash(val table: String, val at: Int)
+    extends RuntimeException(s"injected crash in $table's rewrite after boundary $at")
 
   /** One table's rewrite: `transform` of its live rows, bucketed by
     * `key`. */
@@ -237,29 +238,33 @@ object BucketedJoin {
 
   /** Rewrite several tables as ONE stage wave, then the swaps: every
     * interrupted swap rolls first (so no stage reads a table a sibling
-    * is renaming), every stage then runs concurrently
-    * ([[Retrieval.fanOut]]), and only once ALL have landed does each
-    * table swap, in `rewrites` order. Transforms may read any of the
-    * tables: every stage sees the pre-rewrite state. `afterStage` runs
-    * on the staging thread once a table's stage has landed and
-    * `afterSwap` after each swap (crash seams; no-ops in production).
-    * A kill during the wave leaves every original untouched and staged
-    * debris that the next rewrite (or [[recoverCompacted]]) drops; a
-    * kill between swaps leaves a prefix of `rewrites` swapped in and
-    * the rest staged, which the next rewrite drops and restages.
+    * is renaming, and a table a killed swap left absent is back before
+    * presence is judged), a table still absent is skipped (an optional
+    * table the index does not have), every stage then runs
+    * concurrently ([[Retrieval.fanOut]]), and only once ALL have
+    * landed does each table swap, in `rewrites` order. Transforms may
+    * read any of the tables: every stage sees the pre-rewrite state.
+    * `seam(table, i)` runs after boundary i of that table's rewrite
+    * (0 on the staging thread once its stage has landed, 1–4 the swap
+    * steps of [[rewriteBucketedImpl]]; a crash seam, a no-op in
+    * production). A kill during the wave leaves every original
+    * untouched and staged debris that the next rewrite (or
+    * [[recoverCompacted]]) drops; a kill during the swaps leaves a
+    * prefix of `rewrites` swapped in, at most one table mid-swap (its
+    * complete stage rolls forward) and the rest staged, which the next
+    * rewrite drops and restages.
     */
   private[graft] def rewriteAll(spark: SparkSession, rewrites: Seq[Rewrite],
-                                afterStage: String => Unit = _ => (),
-                                afterSwap: String => Unit = _ => ()): Unit = {
+                                seam: (String, Int) => Unit = (_, _) => ())
+      : Unit = {
     rewrites.foreach(r => recoverCompacted(spark, r.table))
-    Retrieval.fanOut(spark, rewrites, rewrites.size) { r =>
+    val present = rewrites.filter(r => spark.sessionState.catalog
+      .tableExists(org.apache.spark.sql.catalyst.TableIdentifier(r.table)))
+    Retrieval.fanOut(spark, present, present.size) { r =>
       stage(spark, r)
-      afterStage(r.table)
+      seam(r.table, 0)
     }
-    rewrites.foreach { r =>
-      swapStaged(spark, r.table, _ => ())
-      afterSwap(r.table)
-    }
+    present.foreach(r => swapStaged(spark, r.table, seam(r.table, _)))
   }
 
   /** Land `transform` of `table`'s live rows as `<table>_compacting`

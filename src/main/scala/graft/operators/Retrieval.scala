@@ -59,52 +59,12 @@ object Retrieval {
   private def toks(text: org.apache.spark.sql.Column) =
     TextOps.tokens(lower(text))
 
-  /** Per-batch index rows: postings (term, doc_id, tf, dl), dictionary
-    * deltas (term, df), one stats delta row (n_docs, dl_sum).
-    */
-  private def indexRows(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val t = docs.select(col(idCol).as("doc_id"),
-        explode(toks(col(textCol))).as("term"))
-    val tf = t.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // dl via a window over the tf rows would re-shuffle; a second
-    // aggregate on the same exchange is cheaper and AQE-reusable
-    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    val postings = tf.join(dl, Seq("doc_id"))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-    val dfDelta = dictOf(tf)
-    val statsDelta = dl.agg(count(lit(1)).as("n_docs"),
-      coalesce(sum("dl"), lit(0L)).as("dl_sum"))
-    (postings, dfDelta, statsDelta)
-  }
-
-  /** Per-batch positional rows `(term, doc_id, positions)` — sorted
-    * 0-based token offsets stored DELTA-ENCODED (first element
-    * absolute, rest gaps — [[GraftFunctions.DeltaEncode]]), the payload
-    * of the OPTIONAL `<table>_pos` table behind [[bm25PhraseQuery]].
-    * Raw offsets are near-unique ints that defeat parquet dictionary
-    * encoding; their gaps are small and repetitive, cutting the
-    * positional build's dominant write volume (the measured +40%
-    * positions tax at 10⁷ docs, BASELINE.md round-12 addendum). The
-    * phrase query decodes with [[GraftFunctions.DeltaDecode]] — results
-    * are bit-identical to the absolute-offset format. Kept separate
-    * from the scoring postings so bag-of-words indexes never pay for
-    * phrases they don't serve.
-    */
-  private def posRows(docs: DataFrame, idCol: String, textCol: String)
-      : DataFrame =
-    docs.select(col(idCol).as("doc_id"), posexplode(toks(col(textCol))))
-      .groupBy(col("col"), col("doc_id"))
-      .agg(GraftFunctions.deltaEnc(sort_array(collect_list(col("pos"))))
-        .as("positions"))
-      .select(col("col").as("term"), col("doc_id"), col("positions"))
-
-  /** Build the persisted index. One tokenize scan; the postings land
-    * bucketed by term so every later query joins co-located. A build is
-    * a fresh index: any tombstone set left by a PRIOR index under the
-    * same name is cleared AFTER the new tables have landed — otherwise
-    * stale tombstones would silently delete ids from the new corpus at
-    * query time. Clearing last (not first) means a build that FAILS
+  /** Build the persisted index. One tokenization ([[termDocs]]); the
+    * postings land bucketed by term so every later query joins
+    * co-located. A build is a fresh index: any tombstone set left by a
+    * PRIOR index under the same name is cleared AFTER the new tables
+    * have landed — otherwise stale tombstones would silently delete ids
+    * from the new corpus at query time. Clearing last (not first) means a build that FAILS
     * midway — a malformed corpus frame, a write error — cannot
     * un-delete documents on the still-standing old index: the old
     * tables and their tombstones survive an aborted build together.
@@ -148,7 +108,8 @@ object Retrieval {
     val spark = docs.sparkSession
     GraftFunctions.ensureRegistered(spark)
     require(blockWidth >= 1, s"blockWidth must be >= 1, got $blockWidth")
-    val (postings, dfDelta, statsDelta) = indexRows(docs, idCol, textCol)
+    val delta = termDocs(docs, idCol, textCol, positions)
+    val postings = delta.select("term", "doc_id", "tf", "dl")
     if (blockMax) {
       val idType = postings.schema("doc_id").dataType
       require(idType == org.apache.spark.sql.types.LongType ||
@@ -181,8 +142,10 @@ object Retrieval {
         BucketedJoin.dropWithLocation(spark, t)
       BucketedJoin.writeBucketed(postings, table, "term", buckets)
     }
-    BucketedJoin.writeBucketed(dfDelta, s"${table}_terms", "term", buckets)
-    BucketedJoin.writeBucketed(statsDelta, s"${table}_stats", "n_docs", 1)
+    BucketedJoin.writeBucketed(dictOf(postings), s"${table}_terms", "term",
+      buckets)
+    BucketedJoin.writeBucketed(statsOf(postings), s"${table}_stats", "n_docs",
+      1)
     if (positions)
       // round 21 (guide §6 "partitioning and sort order on write"):
       // positional lists sort (term, doc_id) within buckets at the
@@ -193,7 +156,7 @@ object Retrieval {
       // min/max ranges). Layout is COST-ONLY: results are
       // bit-identical on either layout; appends preserve the sort spec
       // from the catalog ([[BucketedJoin.appendBucketed]]).
-      BucketedJoin.writeBucketed(posRows(docs, idCol, textCol),
+      BucketedJoin.writeBucketed(delta.select("term", "doc_id", "positions"),
         s"${table}_pos", "term", buckets,
         sortCols = Seq("doc_id"), options = blockMaxWriteOptions)
     else if (tableExists(spark, s"${table}_pos"))
@@ -216,9 +179,10 @@ object Retrieval {
     * candidate set skips the overwhelming majority. Page-header and
     * column-index overhead is a few bytes per page — noise against a
     * serving-optimized layout. The options are stored with the table,
-    * so appends, folds and compactions read them back from the catalog
-    * ([[BucketedJoin.appendBucketed]], [[BucketedJoin.rewriteBucketed]])
-    * and keep the geometry.
+    * so appends, folds, compactions and reshards read them back from
+    * the catalog ([[BucketedJoin.appendBucketed]],
+    * [[BucketedJoin.rewriteBucketed]], [[Sharding]]) and keep the
+    * geometry.
     */
   private val blockMaxWriteOptions =
     Map("parquet.page.row.count.limit" -> "2048",
@@ -376,13 +340,24 @@ object Retrieval {
     } finally delta.unpersist()
   }
 
-  /** One tokenization of a batch: a row per (term, doc) with its `tf`,
-    * the doc's length `dl` (= Σ tf over the doc) and, when `positions`,
-    * the doc's delta-encoded offsets of the term (the [[posRows]]
-    * payload). The docs shuffle once, on the doc id, so the per-(term,
-    * doc) aggregate and the per-doc length window reuse that exchange.
-    * Rows and values equal what [[indexRows]] and [[posRows]] derive
-    * from the same batch. */
+  /** One tokenization of a batch — the ONE definition of what an
+    * index row holds, shared by [[bm25Build]] and [[bm25Append]]: a row
+    * per (term, doc) with its `tf`, the doc's length `dl` (= Σ tf over
+    * the doc; empty documents yield no rows) and, when `positions`, the
+    * payload of the OPTIONAL `<table>_pos` table behind
+    * [[bm25PhraseQuery]] — the doc's sorted 0-based offsets of the term
+    * stored DELTA-ENCODED (first element absolute, rest gaps —
+    * [[GraftFunctions.DeltaEncode]]). Raw offsets are near-unique ints
+    * that defeat parquet dictionary encoding; their gaps are small and
+    * repetitive, cutting the positional build's dominant write volume
+    * (the measured +40% positions tax at 10⁷ docs, BASELINE.md
+    * round-12 addendum). The phrase query decodes with
+    * [[GraftFunctions.DeltaDecode]] — results are bit-identical to the
+    * absolute-offset format. Positions live apart from the scoring
+    * postings so bag-of-words indexes never pay for phrases they don't
+    * serve; a projection without `positions` prunes its aggregate. The
+    * docs shuffle once, on the doc id, so the per-(term, doc) aggregate
+    * and the per-doc length window reuse that exchange. */
   private def termDocs(docs: DataFrame, idCol: String, textCol: String,
                        positions: Boolean): DataFrame = {
     val perDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
@@ -447,7 +422,8 @@ object Retrieval {
     * compaction — run on the compaction cadence.
     *
     * Stage, then swap ([[BucketedJoin.rewriteAll]]):
-    *  1. the set is read once ([[Tombstones.snapshot]]);
+    *  1. every interrupted swap rolls, so a table a killed fold left
+    *     mid-swap is back before anything reads or skips it;
     *  2. ONE stage wave lands `_terms`, `_stats`, postings and `_pos`
     *     into their `_compacting` tables concurrently, every one
     *     computed from the UNFOLDED postings;
@@ -456,9 +432,11 @@ object Retrieval {
     * Every table is a pure function of (postings, tombstones), so a
     * kill at any point re-runs cleanly: a kill in the wave leaves every
     * table untouched (the re-run drops the staged debris and restages);
-    * a kill between swaps leaves a prefix swapped in, and the re-run
-    * recomputes the same rows — the derived tables from postings that
-    * still hold the deleted docs or no longer do, with the same result.
+    * a kill during the swaps leaves a prefix swapped in and at most one
+    * table mid-swap (absent, its complete stage rolled forward by the
+    * re-run), and the re-run recomputes the same rows — the derived
+    * tables from postings that still hold the deleted docs or no longer
+    * do, with the same result.
     *
     * Crash window: between the `_terms` swap and the postings swap,
     * the derived tables already EXCLUDE the deleted docs while
@@ -480,20 +458,23 @@ object Retrieval {
     * throws [[InjectedFoldCrash]] immediately AFTER the numbered
     * boundary — 0 lock write, then after the swap of 1 `_terms`,
     * 2 `_stats`, 3 postings, 4 `_pos`, 5 tombstone clear (before lock
-    * release). `failStaged` names a table (`""` postings, `_terms`,
-    * `_stats`, `_pos`) whose stage throws once landed — a kill inside
-    * the wave, before any swap. The chaos spec drives every boundary
-    * and asserts [[bm25Query]] heals to bit-identical scores;
-    * production calls pass -1 and None (no injection).
+    * release). `failIn = (s, i)` throws
+    * [[BucketedJoin.InjectedWaveCrash]] after boundary i of table `s`'s
+    * rewrite (`""` postings, `_terms`, `_stats`, `_pos`; i of
+    * [[BucketedJoin.rewriteBucketedImpl]]'s numbering — 0 its stage
+    * landed, a kill inside the wave before any swap; 2 renamed aside,
+    * a kill between the renames of its swap). The chaos spec drives
+    * every boundary and asserts [[bm25Query]] heals to bit-identical
+    * scores; production calls pass -1 and None (no injection).
     */
   private[graft] def foldTombstonesImpl(spark: SparkSession, table: String,
                                         failAt: Int,
-                                        failStaged: Option[String] = None)
+                                        failIn: Option[(String, Int)] = None)
       : Unit = {
     def boundary(i: Int): Unit =
       if (failAt == i) throw new InjectedFoldCrash(i)
     val lock = s"${table}_foldlock"
-    Tombstones.snapshot(spark, table) match {
+    Tombstones.idSet(spark, table) match {
       case None =>
         // a fold that died between clearing the set and releasing the
         // lock already rewrote everything — just release
@@ -513,11 +494,13 @@ object Retrieval {
         // boundary i + 1 follows part i's swap, present or not
         val swapped = parts.map(p => s"$table${p._1}")
         BucketedJoin.rewriteAll(spark,
-          parts.collect { case (s, key, f) if tableExists(spark, s"$table$s") =>
+          parts.map { case (s, key, f) =>
             BucketedJoin.Rewrite(s"$table$s", key, f) },
-          afterStage = t => if (failStaged.exists(s => t == s"$table$s"))
-            throw new BucketedJoin.InjectedStageCrash(t),
-          afterSwap = t => boundary(swapped.indexOf(t) + 1))
+          seam = (t, i) => {
+            if (failIn.exists { case (s, at) => t == s"$table$s" && at == i })
+              throw new BucketedJoin.InjectedWaveCrash(t, i)
+            if (i == 4) boundary(swapped.indexOf(t) + 1)
+          })
         boundary(4) // an index without `_pos` reaches it here
         Tombstones.clear(spark, table)
         boundary(5)
@@ -2670,10 +2653,9 @@ object Retrieval {
     * target is the plain layout, `blk` dropped.
     */
   private[graft] object reshard extends Sharding.Family("", Seq(
-      Sharding.Part("", "term", Sharding.Rows("doc_id"), blockMaxWriteOptions),
+      Sharding.Part("", "term", Sharding.Rows("doc_id")),
       Sharding.Part("_terms", "term"), Sharding.Part("_stats", "n_docs"),
-      Sharding.Part("_pos", "term", Sharding.Rows("doc_id"),
-        blockMaxWriteOptions),
+      Sharding.Part("_pos", "term", Sharding.Rows("doc_id")),
       Sharding.Part("_blkmax", "term"), Sharding.Part("_blkmeta", "block_w"))) {
     override def prepare(spark: SparkSession, table: String): Unit =
       bm25FoldTombstones(spark, table)

@@ -92,14 +92,12 @@ object Sharding {
   private[graft] case object Derived extends Role
 
   /** Table `<shard><suffix>` of a family layout, bucketed by `key`.
-    * `sortedOptions` are the write options of the table's
-    * secondary-sorted layout (fine parquet pages); a reshard writes
-    * the target in its source's layout — bucket count, and the prefix
-    * of the secondary sort columns the written rows still carry — and
-    * applies these options only when such a sort survives. */
+    * A reshard writes the target in its source's layout — bucket
+    * count, the prefix of the secondary sort columns the written rows
+    * still carry, and, when such a sort survives, the source's write
+    * options (its page geometry), all read back from the catalog. */
   private[graft] final case class Part(
-      suffix: String, key: String, role: Role = Derived,
-      sortedOptions: Map[String, String] = Map.empty)
+      suffix: String, key: String, role: Role = Derived)
 
   /** An index family as the reshard protocol sees it: `parts` is its
     * FULL table layout (what a retire drops), `probe` the suffix of
@@ -273,12 +271,13 @@ object Sharding {
   private def writeLike(spark: SparkSession, df: DataFrame, src: String,
                         dst: String, part: Part,
                         buckets: Option[Int]): Unit = {
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(src)).bucketSpec
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(src))
+    val spec = meta.bucketSpec
     val sortTail = spec.map(_.sortColumnNames.drop(1)).getOrElse(Nil)
       .takeWhile(df.columns.toSet)
     BucketedJoin.writeBucketed(df, dst, part.key,
       buckets.getOrElse(spec.map(_.numBuckets).getOrElse(1)), sortTail,
-      if (sortTail.isEmpty) Map.empty else part.sortedOptions)
+      if (sortTail.isEmpty) Map.empty else meta.storage.properties)
   }
 }

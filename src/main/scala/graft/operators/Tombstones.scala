@@ -96,40 +96,27 @@ object Tombstones {
                                    df: DataFrame, c: String): DataFrame =
     idSet(spark, table).fold(df)(without(df, c, _))
 
-  /** The tombstone set read ONCE: its ids collected to the driver and
-    * handed back as a local frame (the same bytes a broadcast of the
-    * table would ship), or None when no id is tombstoned. A fold
-    * filters every table against this one snapshot instead of
-    * re-scanning the set per table.
-    */
-  private[operators] def snapshot(spark: SparkSession,
-                                  table: String): Option[DataFrame] =
-    idSet(spark, table).map { ts =>
-      import spark.implicits._
-      ts.as[Long].collect().toSeq.toDF("id")
-    }
-
-  /** `df` without rows whose `c` column is in `ids` (a [[snapshot]]). */
+  /** `df` without rows whose `c` column is in `ids` (an [[idSet]]). */
   private[operators] def without(df: DataFrame, c: String,
                                  ids: DataFrame): DataFrame =
     df.join(broadcast(ids), df(c) === ids("id"), "left_anti")
 
-  /** Physically fold the tombstones into the index: the set is read
-    * once ([[snapshot]]), every present `(tableName, idColumn,
-    * bucketKey)` target stages its copy without the tombstoned rows as
-    * ONE wave, the staged copies swap in target order
+  /** Physically fold the tombstones into the index: every `(tableName,
+    * idColumn, bucketKey)` target present once its interrupted swap
+    * has rolled stages its copy without the tombstoned rows as ONE
+    * wave, the staged copies swap in target order
     * ([[BucketedJoin.rewriteAll]]), and the set is cleared afterwards.
     * Idempotent — a kill during the wave leaves every target untouched
-    * plus staged debris the re-run drops; a kill between swaps leaves
-    * some targets filtered, which the re-run filters again at no loss;
-    * the set is only cleared once every target has swapped.
+    * plus staged debris the re-run drops; a kill during the swaps
+    * leaves some targets filtered (one perhaps mid-swap, which the
+    * re-run rolls forward), and the re-run filters them again at no
+    * loss; the set is only cleared once every target has swapped.
     */
   def fold(spark: SparkSession, table: String,
            targets: Seq[(String, String, String)]): Unit =
-    snapshot(spark, table).foreach { ids =>
-      BucketedJoin.rewriteAll(spark, targets.collect {
-        case (t, idc, key) if exists(spark, t) =>
-          BucketedJoin.Rewrite(t, key, without(_, idc, ids))
+    idSet(spark, table).foreach { ids =>
+      BucketedJoin.rewriteAll(spark, targets.map { case (t, idc, key) =>
+        BucketedJoin.Rewrite(t, key, without(_, idc, ids))
       })
       clear(spark, table)
     }

@@ -214,10 +214,13 @@ object RefreshLoop {
         }
       (bm25Table.toSeq ++
         bm25Family.map(_.tables).orElse(bm25Shards).getOrElse(Nil)).foreach { t =>
-        BucketedJoin.recoverCompacted(spark, t)
-        BucketedJoin.recoverCompacted(spark, s"${t}_terms")
-        BucketedJoin.recoverCompacted(spark, s"${t}_stats")
-        BucketedJoin.recoverCompacted(spark, s"${t}_pos")
+        // every table of the family layout — the set the compaction
+        // cadence rewrites: a crash inside a `_blkmax` swap would
+        // otherwise leave it absent, the next append would CREATE a
+        // fresh one holding only its own bounds, and the refinement
+        // would prune blocks whose bounds were lost
+        Retrieval.reshard.parts.foreach(p =>
+          BucketedJoin.recoverCompacted(spark, t + p.suffix))
       }
       (lmTable.toSeq ++
         lmFamily.map(_.tables).orElse(lmShards).getOrElse(Nil)).foreach { t =>

@@ -451,6 +451,52 @@ class RefreshLoopSpec extends AnyFunSuite {
     assert(run("bm25bx_bm") == run("bm25bx_oracle"))
   }
 
+  test("bm25 twin with block-max: a kill inside a _blkmax compaction swap heals at the next epoch") {
+    import graft.operators.{BucketedJoin, Retrieval}
+    val base = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely different text about spark query engines today"),
+      (3L, "a third document on lexical retrieval and block bounds"))
+      .toDF("doc_id", "text")
+    Dedup.minhashIndexBuild(base, "text", "doc_id", "bm25bk_idx")
+    Retrieval.bm25Build(base, "doc_id", "text", "bm25bk_bm", buckets = 4,
+      blockMax = true, blockWidth = 2)
+    val fn = RefreshLoop.minhashBatch("bm25bk_idx", "text", "doc_id",
+      threshold = 0.3, bm25Table = Some("bm25bk_bm"),
+      compactEvery = 1) { (_, _, _) => }
+    val batches = Seq(
+      Seq((110L, "entirely novel content that matches nothing else here"),
+        (111L, "fresh words about query planning and bounds")),
+      Seq((120L, "yet another unrelated text mentioning catalyst rules"),
+        (121L, "final batch document about parquet pages and blocks")))
+    fn(batches(0).toDF("doc_id", "text"), 0L)
+    // a compaction of _blkmax killed between its rename-aside and its
+    // rename-in: the table absent, its complete copy staged
+    intercept[BucketedJoin.InjectedRewriteCrash] {
+      BucketedJoin.rewriteBucketedImpl(spark, "bm25bk_bm_blkmax", "term",
+        failAt = 2)(identity)
+    }
+    def exists(t: String) = spark.sessionState.catalog.tableExists(
+      org.apache.spark.sql.catalyst.TableIdentifier(t))
+    assert(!exists("bm25bk_bm_blkmax") && exists("bm25bk_bm_blkmax_compacting"))
+    fn(batches(1).toDF("doc_id", "text"), 1L)
+    assert(!exists("bm25bk_bm_blkmax_compacting") && !exists("bm25bk_bm_blkmax_old"))
+    // every bound survives: the healed index matches one built whole
+    Retrieval.bm25Build(base.unionByName(batches.flatten.toDF("doc_id", "text")),
+      "doc_id", "text", "bm25bk_oracle", buckets = 4, blockMax = true,
+      blockWidth = 2)
+    def bounds(t: String) = spark.table(s"${t}_blkmax")
+      .groupBy("term", "blk").agg(max("max_tf"), min("min_dl"))
+      .as[(String, Long, Long, Long)].collect().toSet
+    assert(bounds("bm25bk_bm") == bounds("bm25bk_oracle"),
+      "block bounds lost across the killed _blkmax swap")
+    val q = Seq((1L, "novel query bounds"), (2L, "quick brown fox"),
+      (3L, "catalyst parquet blocks")).toDF("qid", "qtext")
+    def run(t: String) = Retrieval.bm25QueryMaxScore(spark, t, q, "qid",
+      "qtext", 3).as[(Long, Long, Long, Int)].collect().toSet
+    assert(run("bm25bk_bm") == run("bm25bk_oracle"))
+  }
+
   test("legacy ledger (pre-noveldone): commit implies decided on replay") {
     import graft.operators.BucketedJoin
     Dedup.minhashIndexBuild(

@@ -303,45 +303,77 @@ class TombstonesSpec extends AnyFunSuite {
     }
   }
 
-  test("bm25 fold stage chaos: a kill after each staged table, before any swap, heals to exact scores") {
+  // the wave chaos cases: a positional index of docs(100) folds away
+  // every fifth doc, killed inside its rewrite wave; the reference is
+  // the index built without those docs
+  private lazy val waveQueries = docs(100).filter(col("doc_id") % 25 === 1)
+    .select(col("doc_id").as("qid"),
+      concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("qtext"))
+  private def bag(t: String) = Retrieval.bm25Query(spark, t, waveQueries,
+    "qid", "qtext", 5).as[(Long, Long, Long, Int)].collect().toSet
+  private def phrase(t: String) = Retrieval.bm25PhraseQuery(spark, t,
+    waveQueries, "qid", "qtext", 5).as[(Long, Long, Long, Int)].collect().toSet
+  private lazy val waveRef = {
+    Retrieval.bm25Build(docs(100).filter(col("doc_id") % 5 =!= 0), "doc_id",
+      "text", "ts_wave_oracle", positions = true)
+    val ref = (bag("ts_wave_oracle"), phrase("ts_wave_oracle"))
+    assert(ref._1.nonEmpty && ref._2.nonEmpty)
+    ref
+  }
+
+  /** Build `table`, delete every fifth doc and run its fold with a
+    * kill after boundary `at` of table `s`'s rewrite; `killed` checks
+    * the crash state (given the four tables and their pre-fold row
+    * counts), then the next query must heal the fold to the reference
+    * scores and leave no debris. */
+  private def waveKill(table: String, s: String, at: Int)
+                      (killed: (Seq[String], Seq[Long]) => Unit): Unit = {
     import graft.operators.BucketedJoin
+    val (refBag, refPhrase) = waveRef
     val d = docs(100)
-    val queries = d.filter(col("doc_id") % 25 === 1)
-      .select(col("doc_id").as("qid"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("qtext"))
-    val oracle = "ts_stage_oracle"
-    Retrieval.bm25Build(d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-      oracle, positions = true)
-    def bag(t: String) = Retrieval.bm25Query(spark, t, queries,
-      "qid", "qtext", 5).as[(Long, Long, Long, Int)].collect().toSet
-    def phrase(t: String) = Retrieval.bm25PhraseQuery(spark, t, queries,
-      "qid", "qtext", 5).as[(Long, Long, Long, Int)].collect().toSet
-    val (refBag, refPhrase) = (bag(oracle), phrase(oracle))
-    assert(refBag.nonEmpty && refPhrase.nonEmpty)
-    for ((s, i) <- Seq("_terms", "_stats", "", "_pos").zipWithIndex) {
-      val table = s"ts_stage_$i"
-      val tables = Seq("", "_terms", "_stats", "_pos").map(table + _)
-      Retrieval.bm25Build(d, "doc_id", "text", table, positions = true)
-      Retrieval.bm25Delete(spark, table,
-        d.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
-      val rows = tables.map(spark.table(_).count())
-      val e = intercept[BucketedJoin.InjectedStageCrash] {
-        Retrieval.foldTombstonesImpl(spark, table, failAt = -1,
-          failStaged = Some(s))
+    val tables = Seq("", "_terms", "_stats", "_pos").map(table + _)
+    Retrieval.bm25Build(d, "doc_id", "text", table, positions = true)
+    Retrieval.bm25Delete(spark, table,
+      d.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
+    val rows = tables.map(spark.table(_).count())
+    val e = intercept[BucketedJoin.InjectedWaveCrash] {
+      Retrieval.foldTombstonesImpl(spark, table, failAt = -1,
+        failIn = Some((s, at)))
+    }
+    assert(e.table == table + s && e.at == at)
+    assert(exists(s"${table}_tombstones") && exists(s"${table}_foldlock"))
+    killed(tables, rows)
+    assert(bag(table) == refBag, s"kill in '$s' at $at: bag scores diverge")
+    assert(!exists(s"${table}_foldlock") && !exists(s"${table}_tombstones"),
+      s"kill in '$s' at $at: heal did not complete the fold")
+    assert(phrase(table) == refPhrase, s"kill in '$s' at $at: phrase diverges")
+    for (t <- tables) {
+      assert(!exists(s"${t}_compacting") && !exists(s"${t}_old"),
+        s"kill in '$s' at $at: $t left staging debris")
+      if (spark.table(t).columns.contains("doc_id"))
+        assert(spark.table(t).filter(col("doc_id") % 5 === 0).count() == 0,
+          s"kill in '$s' at $at: deleted rows survived in $t")
+    }
+  }
+
+  test("bm25 fold stage chaos: a kill after each staged table, before any swap, heals to exact scores") {
+    for ((s, i) <- Seq("_terms", "_stats", "", "_pos").zipWithIndex)
+      waveKill(s"ts_stage_$i", s, at = 0) { (tables, rows) =>
+        // nothing swapped: every table holds its pre-fold rows
+        assert(tables.map(spark.table(_).count()) == rows,
+          s"stage kill '$s': a table swapped before the wave finished")
       }
-      assert(e.table == table + s)
-      // nothing swapped: every table holds its pre-fold rows, the set
-      // and the lock stand
-      assert(tables.map(spark.table(_).count()) == rows,
-        s"stage kill '$s': a table swapped before the wave finished")
-      assert(exists(s"${table}_tombstones") && exists(s"${table}_foldlock"))
-      assert(bag(table) == refBag, s"stage kill '$s': bag scores diverge")
-      assert(!exists(s"${table}_foldlock") && !exists(s"${table}_tombstones"),
-        s"stage kill '$s': heal did not complete the fold")
-      assert(phrase(table) == refPhrase, s"stage kill '$s': phrase diverges")
-      for (t <- tables)
-        assert(!exists(s"${t}_compacting") && !exists(s"${t}_old"),
-          s"stage kill '$s': $t left staging debris")
+  }
+
+  test("bm25 fold swap chaos: a kill between the renames of each swap heals to exact scores") {
+    for ((s, i) <- Seq("_terms", "_stats", "", "_pos").zipWithIndex) {
+      val table = s"ts_swap_$i"
+      waveKill(table, s, at = 2) { (_, _) =>
+        // mid-swap: the table renamed aside, its complete stage not yet
+        // renamed in
+        assert(!exists(table + s) && exists(s"$table${s}_compacting"),
+          s"swap kill '$s': not between the renames")
+      }
     }
   }
 
